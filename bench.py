@@ -287,10 +287,11 @@ def imageshard_workload(spark, cpus: int) -> dict:
 
 def ann_10k_queries(spark) -> dict:
     """PQ-ADC top-k at Q = 10^4 (corpus-vs-corpus retrieval shape) — the
-    round-5 verdict's large-Q bench point.  Q > q_max auto-dispatches to
-    the DISTRIBUTED path (broadcast query matrix, per-task numpy LUTs,
-    task-local top-k pre-reduction); the driver path at this Q would build
-    10^4 pure-python LUTs (~10^8 float ops) in the closure.  Queries are
+    round-5 verdict's large-Q bench point.  At this Q the lookup tables
+    (8·Q·m·kc bytes, ~164 MB at kc=256) exceed the ADC replication budget,
+    so the codes are collected once and broadcast, and tasks score their
+    own query slices (per-slice numpy LUTs, task-local top-k
+    pre-reduction).  Queries are
     the corpus replicated with fresh ids — content repetition is fine,
     the cost driver is Q itself.  Index build (train + encode) is
     UNTIMED: that's the build-once half of the persisted-index split."""

@@ -105,24 +105,30 @@ def probe_adc(spark, which):
         _timed(spark, "adc.full",
                lambda: _noop(SIM.pq_adc_topk(codes, cb, q, k=3)))
     if which in ("parts", "all"):
-        # attribute the full-path seconds: query collect, the qdist
-        # dispatch probe, the corpus collect, and the score stage alone
+        # attribute the full-path seconds: query collect, the bounded
+        # codes collect, and the query-axis score stage alone
         holder = {}
+        m = len(cb)
+        rows = SIM.ADC_REPLICATION_BUDGET // (8 + 4 * m)
 
         def _qc():
             holder["qids"], holder["Qm"] = SIM._collect_queries(
-                q, "query_id", "embedding")
+                q, "query_id", "embedding", m * len(cb[0][0]))
+
+        def _cc():
+            cpdf = codes.select("vec_id", "codes").limit(rows + 1).toPandas()
+            holder["ids"] = cpdf["vec_id"].to_numpy(dtype="int64")
+            holder["C"] = SIM._codes_matrix(cpdf["codes"], m)
+
+        def _score():
+            _noop(SIM._adc_query_axis(
+                spark, cb, SIM._adc_normsq(cb), holder["qids"], holder["Qm"],
+                holder["ids"], holder["C"], 3))
+
         _timed(spark, "adc.collect_queries", _qc)
-        _timed(spark, "adc.dispatch_count",
-               lambda: codes.limit(SIM._ADC_QDIST_MAX_CODES + 1).count())
-        _timed(spark, "adc.codes_topandas",
-               lambda: codes.select("vec_id", "codes").toPandas())
-        _timed(spark, "adc.qdist_score", lambda: _noop(
-            SIM._pq_adc_topk_qdist(codes, cb, holder["qids"], holder["Qm"],
-                                   3, "vec_id")))
-        _timed(spark, "adc.qdist_score2", lambda: _noop(
-            SIM._pq_adc_topk_qdist(codes, cb, holder["qids"], holder["Qm"],
-                                   3, "vec_id")))
+        _timed(spark, "adc.codes_topandas", _cc)
+        _timed(spark, "adc.qdist_score", _score)
+        _timed(spark, "adc.qdist_score2", _score)
     codes.unpersist()
     q.unpersist()
 

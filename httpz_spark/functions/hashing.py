@@ -132,11 +132,6 @@ def hash64_str_batch(s: pd.Series, seed: int = 0) -> pd.Series:
     return pd.Series(out, dtype="Int64")
 
 
-def hash64_bytes_batch(s: pd.Series, seed: int = 0) -> pd.Series:
-    out = [None if v is None else hash64_low(bytes(v), seed) for v in s]
-    return pd.Series(out, dtype="Int64")
-
-
 def favicon_hash_batch(s: pd.Series) -> pd.Series:
     """Reference favicon-hash semantics (``parsers.py:247-250``):
     empty/None content -> None; hash value 0 -> None; else str(signed int64)."""

@@ -62,20 +62,6 @@ def robots_star_group(txt: Column) -> Column:
     return F.regexp_extract(cleaned, _GROUP_RE, 1)
 
 
-def robots_disallow(txt: Column) -> Column:
-    """array<string> of Disallow patterns from the ``*`` record."""
-    return F.regexp_extract_all(
-        robots_star_group(txt), F.lit(r"(?im)^disallow:[ \t]*(\S+)[ \t]*$"), 1
-    )
-
-
-def robots_allow(txt: Column) -> Column:
-    """array<string> of Allow patterns from the ``*`` record."""
-    return F.regexp_extract_all(
-        robots_star_group(txt), F.lit(r"(?im)^allow:[ \t]*(\S+)[ \t]*$"), 1
-    )
-
-
 def robots_sitemaps(txt: Column) -> Column:
     """array<string> of ``Sitemap:`` URLs — GLOBAL lines per sitemaps.org
     (position-independent, outside any user-agent group, case-insensitive
@@ -87,19 +73,6 @@ def robots_sitemaps(txt: Column) -> Column:
     return F.array_distinct(
         F.regexp_extract_all(
             cleaned, F.lit(r"(?im)^sitemap:[ \t]*(\S+)[ \t]*$"), 1
-        )
-    )
-
-
-def robots_crawl_delay_ms(txt: Column, default_ms: int = 1000) -> Column:
-    """Crawl-delay of the ``*`` record in ms; ``default_ms`` if absent OR
-    malformed (the cast of a malformed capture can only arise if the
-    extract regex and the cast disagree — coalesce keeps the invariant
-    ``crawl_delay_ms IS NOT NULL`` unconditionally)."""
-    raw = F.regexp_extract(robots_star_group(txt), _DELAY_RE, 1)
-    return F.when(raw == "", F.lit(default_ms)).otherwise(
-        F.coalesce(
-            F.round(raw.cast("double") * 1000).cast("int"), F.lit(default_ms)
         )
     )
 

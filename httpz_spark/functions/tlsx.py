@@ -9,8 +9,6 @@ this parser runs over it in an Arrow-batched pandas UDF.
 
 from __future__ import annotations
 
-import pandas as pd
-
 TLS_SCHEMA = (
     "fingerprint string, subject string, issuer string, email string, "
     "alt_names array<string>, not_before string, not_after string"
@@ -68,19 +66,3 @@ def parse_cert_der(cert_der: bytes | None) -> dict | None:
         }
     except Exception:
         return None
-
-
-def parse_cert_batch(s: pd.Series) -> pd.Series:
-    """Series[bytes|None] -> Series[dict|None], with an in-batch cache —
-    many hosts share certs, so parse-once-per-distinct-DER."""
-    cache: dict[int, dict | None] = {}
-    out = []
-    for der in s:
-        if der is None:
-            out.append(None)
-            continue
-        key = hash(bytes(der))
-        if key not in cache:
-            cache[key] = parse_cert_der(der)
-        out.append(cache[key])
-    return pd.Series(out, dtype="object")

@@ -41,6 +41,15 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _topk_window(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, score) rows by (score
+    desc, neighbor_id asc), numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -61,13 +70,7 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"),
         cosine_expr(F.col(vec_col), F.col("_qv")).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk_window(scored, "cos_sim", k)
 
 
 def _hyperplanes(planes: int, dim: int, seed: int) -> np.ndarray:
@@ -129,8 +132,7 @@ def lsh_ann_topk(
     if multi_probe:
         # a corpus vector can match several probe buckets of one query
         scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_window(scored, "cos_sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -335,8 +337,7 @@ def ivf_ann_topk(
         F.col(id_col).alias("neighbor_id"),
         cosine_expr(F.col(vec_col), F.col("_qv")).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _topk_window(scored, "cos_sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -356,10 +357,10 @@ def ivf_ann_topk(
 # Determinism discipline (the golden-oracle requirement): encoding
 # accumulates distances dim-by-dim in explicit order (numpy elementwise
 # ops == the same IEEE sequence as a scalar loop), the ADC lookup tables
-# are built on the DRIVER in pure-python float arithmetic, and executor
+# are built with numpy in that same per-dim scalar order, and executor
 # scoring gathers + adds them in fixed subspace order — so an independent
 # pure-python reimplementation reproduces every bit (argmin ties -> first
-# index on both paths).
+# index on both sides).
 # ---------------------------------------------------------------------------
 
 def pq_codebooks_fixed(corpus: DataFrame, id_col: str = "vec_id",
@@ -472,10 +473,11 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     ``approx_cos`` estimates cosine as ``ip(q, x̂) / (|q|·|x̂|)`` where x̂
     is the code's reconstruction; ``|x̂|²`` is the sum of per-subspace
     centroid norms (subspaces are an orthogonal decomposition).  Lookup
-    tables are built per query on the driver (queries are the bounded
-    broadcast set, as in the other top-k operators) in pure-python float
-    order; executors do m gathers + adds per row — no per-row vector math,
-    no shuffle before the final tiny per-query top-k."""
+    tables are built per query with numpy in scalar float order (queries
+    are the bounded broadcast set, as in the other top-k operators);
+    executors do m gathers + adds per (row, query) — no per-row vector
+    math, and each task pre-reduces to its local top-k before the final
+    tiny per-query window (see :func:`pq_adc_topk`)."""
     if codebooks is None:
         codebooks = (train_pq_codebooks(corpus, id_col, vec_col, m, kc)
                      if train else
@@ -487,10 +489,11 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
 
 def _adc_normsq(codebooks: list) -> list:
     """Per-code squared reconstruction norms, pure-python sequential order
-    (shared by the driver and distributed ADC paths)."""
+    (one ``(kc,)`` float64 array per subspace)."""
     sub = len(codebooks[0][0])
     return [
-        [sum(c[j] * c[j] for j in range(sub)) for c in book]
+        np.asarray([sum(c[j] * c[j] for j in range(sub)) for c in book],
+                   dtype=np.float64)
         for book in codebooks
     ]
 
@@ -498,9 +501,10 @@ def _adc_normsq(codebooks: list) -> list:
 def _np_query_luts(Qm: "np.ndarray", codebooks: list):
     """``(qnorm (q,), ip [m x (q, kc)])`` — the per-query ADC lookup
     tables, vectorized ACROSS queries but with the exact accumulation
-    order of the pure-python driver path (left-to-right adds per dim, one
-    ``** 0.5``), so both paths are bit-identical.  Runs executor-side in
-    the distributed path."""
+    order of a scalar per-query loop (left-to-right adds per dim, one
+    ``** 0.5``), so an independent pure-python model reproduces every
+    bit.  Rows are per-query independent: a slice of queries yields
+    exactly that slice of the full tables."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     if Qm.shape[1] != m * sub:  # trailing-dim truncation must fail loudly
@@ -518,9 +522,9 @@ def _np_query_luts(Qm: "np.ndarray", codebooks: list):
         # vectorized over BOTH q and kc (sub elementwise passes, not
         # kc*sub) — each (qi, ki) cell still accumulates its sub terms
         # left-to-right on a float64, so bit-equality with the scalar
-        # driver path is preserved while the build drops from O(kc*sub)
+        # model is preserved while the build drops from O(kc*sub)
         # numpy dispatches to O(sub) (measured 5.0 -> 0.05 s at Q=10^4,
-        # kc=256 — this runs once per task in the distributed path)
+        # kc=256)
         B = np.asarray(codebooks[mi], dtype=np.float64)  # (kc, sub)
         t = np.zeros((q, kc), dtype=np.float64)
         tmp = np.empty((q, kc), dtype=np.float64)
@@ -528,12 +532,8 @@ def _np_query_luts(Qm: "np.ndarray", codebooks: list):
         # doubles, ~1 MB at the default block) stays cache-resident
         # across the sub j-passes: the unblocked form streamed the full
         # (q, kc) buffer through DRAM 3*sub times per subspace (~5 GB at
-        # Q=10^4), and with every reused Python worker building its LUT
-        # concurrently the memory bus — not the FLOPs — was the
-        # distributed-ADC stage's bottleneck (measured 472 core-s for a
-        # ~2 core-s-of-arithmetic build+score).  The per-cell
-        # accumulation order is unchanged (left-to-right over j), so
-        # bit-equality with the scalar driver path is preserved.
+        # Q=10^4).  The per-cell accumulation order is unchanged
+        # (left-to-right over j), so bit-equality is preserved.
         blk = max(1, (1 << 17) // max(kc, 1))
         for lo in range(0, q, blk):
             hi = min(lo + blk, q)
@@ -546,90 +546,14 @@ def _np_query_luts(Qm: "np.ndarray", codebooks: list):
     return qnorm, ip
 
 
-_LUT_CACHE: dict = {}
-_LUT_CACHE_MAX = 2
+# Per-worker replication budget of the ADC dispatch, in bytes: the query
+# lookup tables are broadcast to every worker when they fit it, else the
+# (id, codes) matrix when that fits, else the tables regardless; the tasks
+# split the other operand.  2.5 MiB is 65,536 rows of (int64 id, m=8
+# int32 codes).
+ADC_REPLICATION_BUDGET = 65_536 * (8 + 4 * 8)
 
-_LUT_PUB_DIR: list = []          # lazy singleton [tempdir], process-lifetime
-_LUT_PUB: dict = {}              # key -> (qn_path, ip_path), insertion-ordered
-_LUT_PUB_MAX = 2                 # bounded disk: evicted entries are unlinked
-
-
-def _publish_query_luts(sc, Qm: "np.ndarray", codebooks: list):
-    """Local-mode LUT sharing: build the ADC lookup tables ONCE on the
-    driver and publish them as ``.npy`` files every executor worker on
-    this machine mmaps — page-cache-shared, zero per-worker build.  The
-    per-worker build was the distributed-ADC stage's bottleneck AFTER the
-    blocked-build fix: 32 reused workers each re-deriving the same
-    O(m·Q·kc) tables concurrently saturated the memory bus (measured:
-    the full bench ADC query drops 4.5 -> 1.2 s once workers hold the
-    LUT).  Returns ``(key, paths_or_None)``; ``None`` (non-local master,
-    where executors cannot see the driver's filesystem) keeps today's
-    per-worker memoized build — unchanged cluster behavior.  Published
-    files hold the byte-exact :func:`_np_query_luts` output, so the mmap
-    path is bit-identical to the worker-built path.  Disk is bounded at
-    ``_LUT_PUB_MAX`` published queries (older files are unlinked; a
-    late re-execution that misses its files falls back to building)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    key = uuid.uuid4().hex
-    if not sc.master.startswith("local"):
-        return key, None
-    if not _LUT_PUB_DIR:
-        d = tempfile.mkdtemp(prefix="httpz_adc_lut_")
-        _LUT_PUB_DIR.append(d)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    qn, ip = _np_query_luts(Qm, codebooks)
-    qn_path = os.path.join(_LUT_PUB_DIR[0], f"{key}_qn.npy")
-    ip_path = os.path.join(_LUT_PUB_DIR[0], f"{key}_ip.npy")
-    np.save(qn_path, qn)
-    np.save(ip_path, np.stack(ip))  # (m, Q, kc)
-    _LUT_PUB[key] = (qn_path, ip_path)
-    while len(_LUT_PUB) > _LUT_PUB_MAX:
-        old = _LUT_PUB.pop(next(iter(_LUT_PUB)))
-        for p in old:
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-    return key, (qn_path, ip_path)
-
-
-def _cached_query_luts(key: str, Qm: "np.ndarray", codebooks: list,
-                       paths: tuple | None = None):
-    """Per-worker-process memo of the ADC lookup tables keyed by the
-    query's plan-build uuid: Spark reuses Python workers across tasks
-    (spark.python.worker.reuse), so a P-partition scan pays the O(Q·kc·m)
-    LUT build once per WORKER instead of once per TASK.  When the driver
-    published the tables (``paths`` — see :func:`_publish_query_luts`)
-    they are READ instead of rebuilt: a sequential load from the page
-    cache (the driver just wrote them) costs ~3x less memory-bus traffic
-    than the 3·sub-pass build, and the expensive derivation runs once
-    per machine instead of once per worker.  (A read-only mmap was
-    measured SLOWER here: the score loop's column gathers fault the
-    whole table in 4 KB pages — ~1.3 s of scattered minor faults across
-    32 workers vs ~0.3 s of bulk copy.)  Any read failure (missing file
-    after eviction, cluster executor on another machine) falls back to
-    building locally.  Bounded at ``_LUT_CACHE_MAX`` entries (the tables
-    are O(m·Q·kc) floats)."""
-    hit = _LUT_CACHE.get(key)
-    if hit is None:
-        if paths is not None:
-            try:
-                qn = np.load(paths[0])
-                ips = np.load(paths[1])
-                hit = (qn, [ips[mi] for mi in range(ips.shape[0])])
-            except Exception:
-                hit = None
-        if hit is None:
-            hit = _np_query_luts(Qm, codebooks)
-        _LUT_CACHE[key] = hit
-        while len(_LUT_CACHE) > _LUT_CACHE_MAX:
-            _LUT_CACHE.pop(next(iter(_LUT_CACHE)))
-    return hit
+_ADC_SCHEMA = "query_id long, neighbor_id long, approx_cos double"
 
 
 def _select_topk(qrows: "np.ndarray", ids: "np.ndarray",
@@ -644,6 +568,12 @@ def _select_topk(qrows: "np.ndarray", ids: "np.ndarray",
     return qr[keep], iD[keep], sc_[keep]
 
 
+def _merge_topk(parts: list, k: int):
+    """Exact top-k of the union of ``(qrows, ids, scores)`` partials."""
+    return _select_topk(*(np.concatenate([p[i] for p in parts])
+                          for i in range(3)), k)
+
+
 def _matrix_topk(S: "np.ndarray", ids: "np.ndarray", k: int):
     """Exact per-row top-k over a dense (Q x n) score matrix: prune each
     row to its candidates with ``np.partition`` (everything >= the k-th
@@ -651,9 +581,8 @@ def _matrix_topk(S: "np.ndarray", ids: "np.ndarray", k: int):
     (score desc, id asc) exactly with :func:`_select_topk` over the
     ~Q*k survivors.  Replaces lexsorting all Q*n triples, which at
     Q=10^4 was one 4M-element 3-key sort PER CHUNK and dominated the
-    distributed-ADC task profile.  NaN scores (zero-norm rows) are
-    excluded from candidacy, matching the old sort order that placed
-    them last."""
+    ADC task profile.  NaN scores (zero-norm rows) are excluded from
+    candidacy, matching the old sort order that placed them last."""
     q, n = S.shape
     if n <= k:
         qrows = np.repeat(np.arange(q, dtype=np.int64), n)
@@ -666,151 +595,141 @@ def _matrix_topk(S: "np.ndarray", ids: "np.ndarray", k: int):
                         S[mask], k)
 
 
-def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
-    """One Arrow transfer of the query frame -> (ids int64, Qm float64).
-    Both ADC paths start here: the driver path builds python LUTs from
-    it; the distributed path broadcasts the raw matrix (8*Q*d bytes — a
-    10^6 x 64-d query set is ~0.5 GB, the practical ceiling) and builds
-    LUTs executor-side."""
+def _code_sum(tables: list, C: "np.ndarray", rows=Ellipsis, init=None):
+    """``init + Σ_mi tables[mi][rows, C[:, mi]]``, added left to right in
+    subspace order — the one gather-add behind every ADC norm and score.
+    ``rows=Ellipsis`` gathers a 1-d table per code, or every row of a
+    (Q, kc) table (a (Q, n) result); an index array pairs one table row
+    with each code."""
+    s = init
+    for mi, t in enumerate(tables):
+        g = t[rows, C[:, mi]]
+        s = g if s is None else s + g
+    return s
+
+
+def _adc_block_topk(C: "np.ndarray", ids: "np.ndarray", qn: "np.ndarray",
+                    ip: list, normsq: list, k: int):
+    """THE ADC scoring kernel: every query row of the lookup tables
+    ``(qn, ip)`` against one block of codes ``C`` -> the block's exact
+    top-k per query by (score desc, id asc), as ``(qrows, ids, scores)``
+    with ``qrows`` indexing ``qn``.  The (Q x chunk) score matrix is
+    built ~32 MB at a time."""
+    rnorm = np.sqrt(_code_sum(normsq, C))
+    chunk = max(1, (1 << 22) // max(len(qn), 1))
+    parts = []
+    for lo in range(0, len(ids), chunk):
+        hi = min(lo + chunk, len(ids))
+        S = _code_sum(ip, C[lo:hi]) / (qn[:, None] * rnorm[None, lo:hi])
+        parts.append(_matrix_topk(S, ids[lo:hi], k))
+    return _merge_topk(parts, k)
+
+
+def _adc_frame(query_ids, neighbor_ids, scores) -> pd.DataFrame:
+    return pd.DataFrame({"query_id": query_ids, "neighbor_id": neighbor_ids,
+                         "approx_cos": scores})
+
+
+def _codes_matrix(codes: pd.Series, m: int) -> "np.ndarray":
+    return np.asarray([list(c) for c in codes],
+                      dtype=np.int64).reshape(len(codes), m)
+
+
+def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str,
+                     dim: int):
+    """One Arrow transfer of the query frame -> (ids int64 ascending,
+    Qm float64 (Q, dim)).  Every ADC call starts here: the driver builds
+    the lookup tables from Qm (or the query axis broadcasts Qm itself —
+    8*Q*d bytes, so a 10^6 x 64-d query set is ~0.5 GB, the practical
+    ceiling).  A query dimension other than ``dim`` (= m*sub of the
+    codebooks) raises here, before any scoring job."""
     qpdf = queries.select(query_id_col, vec_col).orderBy(query_id_col).toPandas()
     qids = qpdf[query_id_col].to_numpy(dtype=np.int64)
     Qm = (np.asarray([list(map(float, v)) for v in qpdf[vec_col]],
                      dtype=np.float64)
-          if len(qpdf) else np.zeros((0, 0), dtype=np.float64))
+          if len(qpdf) else np.zeros((0, dim), dtype=np.float64))
+    if Qm.shape[1] != dim:  # trailing-dim truncation must fail loudly
+        raise ValueError(f"query dim {Qm.shape[1]} != m*sub = {dim} of the codebooks")
     return qids, Qm
 
 
 def pq_adc_topk(codes: DataFrame, codebooks: list, queries: DataFrame,
                 k: int = 3, id_col: str = "vec_id",
                 vec_col: str = "embedding",
-                query_id_col: str = "query_id",
-                q_max: int = 1024,
-                distributed: bool | None = None) -> DataFrame:
+                query_id_col: str = "query_id") -> DataFrame:
     """ADC scoring over an EXISTING codes frame — the query-time half of
     :func:`pq_ann_topk`, usable directly against a persisted index
     (:mod:`httpz_spark.operators.simindex`): the corpus embeddings are
     never touched, only the m-small-ints codes.
 
-    Two bit-identical execution paths, switched on ``q_max``:
+    One scoring kernel (:func:`_adc_block_topk`) on one of two
+    distribution axes, chosen by bytes against
+    ``ADC_REPLICATION_BUDGET`` — whichever operand fits is broadcast:
 
-    * **driver path** (Q <= q_max, the FAISS few-queries/huge-corpus
-      shape): LUTs built on the driver in pure-python float order and
-      shipped in the task closure; executors do m gathers + adds per
-      (row, query).
-    * **distributed path** (Q > q_max, corpus-vs-corpus retrieval): the
-      raw query matrix is broadcast (torrent, not closure), LUTs are
-      built ONCE PER TASK inside the Arrow stage with numpy
-      (:func:`_np_query_luts` — same accumulation order, bit-equal), the
-      (q x batch) score matrix is computed chunk-wise with zero per-query
-      python loops, and each task pre-reduces to its LOCAL top-k per
-      query (exact, (score desc, id asc)) so the shuffle into the final
-      window is P*Q*k rows instead of Q*N.
+    * **codes axis** when the lookup tables (8·Q·m·kc bytes) fit: the
+      driver builds them once (:func:`_np_query_luts`) and broadcasts
+      them; tasks own code partitions and pre-reduce to their exact
+      local top-k per query, so the shuffle into the final window is
+      tasks·Q·k rows, never Q·N.  No probe job runs.
+    * **query axis** when they do not: one bounded collect of at most
+      ``budget // (8 + 4·m)`` + 1 codes rows.  If the codes fit, they
+      are broadcast and tasks own disjoint query slices, each building
+      only its slice of the tables — one table build in total, no
+      replication, and each query is fully scored in one task.
+    * codes axis again when neither fits (large Q against a large
+      corpus): every worker then holds the full tables.
 
-    ``distributed=None`` picks by comparing Q to ``q_max``; pass
-    True/False to force a path."""
-    qids, Qm = _collect_queries(queries, query_id_col, vec_col)
-    if distributed is None:
-        distributed = len(qids) > q_max
-    if distributed and len(qids):
-        return _pq_adc_topk_dist(codes, codebooks, qids, Qm, k, id_col)
-    return _pq_adc_topk_driver(codes, codebooks, qids, Qm, k, id_col)
-
-
-def _pq_adc_topk_driver(codes: DataFrame, codebooks: list,
-                        qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                        id_col: str) -> DataFrame:
-    import pandas as pd
-
+    Both axes produce identical output: same tables, same kernel, and
+    exact (score desc, id asc) top-k at every reduction."""
     m = len(codebooks)
-    sub = len(codebooks[0][0])
+    qids, Qm = _collect_queries(queries, query_id_col, vec_col,
+                                m * len(codebooks[0][0]))
     normsq = _adc_normsq(codebooks)
-    luts = []  # (query_id, qnorm, ip[mi][ki])
-    for qi in range(len(qids)):
-        qv = [float(x) for x in Qm[qi]]
-        if len(qv) != m * sub:  # trailing-dim truncation must fail loudly
-            raise ValueError(
-                f"query dim {len(qv)} != m*sub = {m}*{sub} of the codebooks"
-            )
-        qnorm = 0.0
-        for x in qv:
-            qnorm += x * x
-        qnorm = qnorm ** 0.5
-        ip = [
-            [sum(qv[mi * sub + j] * c[j] for j in range(sub))
-             for c in codebooks[mi]]
-            for mi in range(m)
-        ]
-        luts.append((int(qids[qi]), qnorm, ip))
+    if 8 * len(qids) * sum(map(len, codebooks)) > ADC_REPLICATION_BUDGET:
+        rows = ADC_REPLICATION_BUDGET // (8 + 4 * m)
+        cpdf = codes.select(id_col, "codes").limit(rows + 1).toPandas()
+        if len(cpdf) <= rows:
+            return _adc_query_axis(
+                codes.sparkSession, codebooks, normsq, qids, Qm,
+                cpdf[id_col].to_numpy(dtype=np.int64),
+                _codes_matrix(cpdf["codes"], m), k)
+    qn, ip = _np_query_luts(Qm, codebooks)
+    return _adc_codes_axis(codes, normsq, qids, qn, ip, k, id_col)
+
+
+def _adc_codes_axis(codes: DataFrame, normsq: list, qids: "np.ndarray",
+                    qn: "np.ndarray", ip: list, k: int,
+                    id_col: str) -> DataFrame:
+    """Tasks own code partitions and score them against the broadcast
+    lookup tables, folding each Arrow batch into one task-local top-k."""
+    m = len(normsq)
+    bl = codes.sparkSession.sparkContext.broadcast((qids, qn, ip))
 
     def score(batches):
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        np_luts = [(qid, qn, [np.asarray(t, dtype=np.float64) for t in ip])
-                   for qid, qn, ip in luts]
+        b_qids, b_qn, b_ip = bl.value
+        best = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
-            nsum = np_normsq[0][C[:, 0]]
-            for mi in range(1, m):
-                nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            out_q, out_id, out_s = [], [], []
-            for qid, qn, ip in np_luts:
-                s = ip[0][C[:, 0]]
-                for mi in range(1, m):
-                    s = s + ip[mi][C[:, mi]]
-                s = s / (qn * rnorm)
-                out_q.append(np.full(len(ids), qid, dtype=np.int64))
-                out_id.append(ids)
-                out_s.append(s)
-            yield pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_id),
-                "approx_cos": np.concatenate(out_s),
-            })
+            blk = _adc_block_topk(_codes_matrix(pdf["codes"], m),
+                                  pdf[id_col].to_numpy(dtype=np.int64),
+                                  b_qn, b_ip, normsq, k)
+            best = blk if best is None else _merge_topk([best, blk], k)
+        if best is not None:
+            yield _adc_frame(b_qids[best[0]], best[1], best[2])
 
-    scored = codes.mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    scored = codes.select(id_col, "codes").mapInPandas(score, _ADC_SCHEMA)
+    return _topk_window(scored, "approx_cos", k)
 
 
-_ADC_QDIST_MAX_CODES = 1 << 16
-
-
-def _pq_adc_topk_qdist(codes: DataFrame, codebooks: list,
-                       qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                       id_col: str) -> DataFrame:
-    """Query-distributed ADC for the many-queries / small-corpus shape
-    (Q > q_max but the codes frame fits comfortably on every executor —
-    corpus-vs-corpus retrieval against a compact index).  The
-    codes-distributed path replicates the full O(m·Q·kc) LUT into every
-    worker (~165 MB at Q=10^4, kc=256 — measured as the stage's entire
-    bottleneck when N is small: scoring is Q·N·m gathers, a fraction of
-    the LUT bytes).  Here the DISTRIBUTION AXIS flips: tasks own disjoint
-    query slices, each builds only its slice of the LUT
-    (:func:`_np_query_luts` rows are per-query independent, so slices
-    are bit-identical to the full build), and the tiny (id, codes)
-    matrix rides the broadcast instead.  Total LUT work across the stage
-    is exactly ONE build, perfectly parallel, zero replication — and
-    each query is fully scored in one task, so the pre-reduced exact
-    top-k needs no cross-task merge beyond the same final window."""
-    import pandas as pd
-
-    m = len(codebooks)
-    normsq = _adc_normsq(codebooks)
-    spark = codes.sparkSession
+def _adc_query_axis(spark, codebooks: list, normsq: list,
+                    qids: "np.ndarray", Qm: "np.ndarray", ids: "np.ndarray",
+                    C: "np.ndarray", k: int) -> DataFrame:
+    """Tasks own disjoint query slices, build that slice of the lookup
+    tables, and score it against the broadcast (id, codes) matrix."""
     sc = spark.sparkContext
-    cpdf = codes.select(id_col, "codes").toPandas()  # bounded by dispatch
-    ids_all = cpdf[id_col].to_numpy(dtype=np.int64)
-    C_all = (np.asarray([list(c) for c in cpdf["codes"]], dtype=np.int64)
-             if len(cpdf) else np.zeros((0, m), dtype=np.int64))
-    bcorpus = sc.broadcast((ids_all, C_all))
     bq = sc.broadcast((qids, Qm))
+    bcorpus = sc.broadcast((ids, C))
     Q = len(qids)
     # ~256 queries per slice floor keeps per-task numpy batches vectorized;
     # cap at defaultParallelism so one wave of tasks covers the stage
@@ -819,132 +738,18 @@ def _pq_adc_topk_qdist(codes: DataFrame, codebooks: list,
     def score(batches):
         b_qids, b_Qm = bq.value
         b_ids, b_C = bcorpus.value
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        n = len(b_ids)
         for pdf in batches:
             for s in pdf["id"]:
                 lo, hi = s * Q // n_slices, (s + 1) * Q // n_slices
-                if lo >= hi or n == 0:
+                if lo >= hi or len(b_ids) == 0:
                     continue
                 qn, ip = _np_query_luts(b_Qm[lo:hi], codebooks)
-                nsum = np_normsq[0][b_C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][b_C[:, mi]]
-                rnorm = np.sqrt(nsum)
-                chunk = max(1, (1 << 22) // max(hi - lo, 1))
-                acc = []
-                for clo in range(0, n, chunk):
-                    chi = min(clo + chunk, n)
-                    S = ip[0][:, b_C[clo:chi, 0]]
-                    for mi in range(1, m):
-                        S = S + ip[mi][:, b_C[clo:chi, mi]]
-                    S = S / (qn[:, None] * rnorm[None, clo:chi])
-                    acc.append(_matrix_topk(S, b_ids[clo:chi], k))
-                qr = np.concatenate([a[0] for a in acc])
-                iD = np.concatenate([a[1] for a in acc])
-                sc_ = np.concatenate([a[2] for a in acc])
-                qr, iD, sc_ = _select_topk(qr, iD, sc_, k)
-                yield pd.DataFrame({
-                    "query_id": b_qids[lo + qr],
-                    "neighbor_id": iD,
-                    "approx_cos": sc_,
-                })
+                qr, iD, sc_ = _adc_block_topk(b_C, b_ids, qn, ip, normsq, k)
+                yield _adc_frame(b_qids[lo + qr], iD, sc_)
 
     scored = spark.range(0, n_slices, 1, n_slices).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _pq_adc_topk_dist(codes: DataFrame, codebooks: list,
-                      qids: "np.ndarray", Qm: "np.ndarray", k: int,
-                      id_col: str) -> DataFrame:
-    """Distributed ADC: the raw query matrix rides a torrent broadcast,
-    each task builds the LUTs ONCE with :func:`_np_query_luts` (bit-equal
-    to the driver path), scores chunk-wise with a (Q x chunk) gather+add
-    matrix, and pre-reduces to its local exact top-k per query so the
-    shuffle into the final window is O(tasks * Q * k), never Q * N.
-
-    Dispatch: a corpus small enough to broadcast
-    (``_ADC_QDIST_MAX_CODES``, probed with an early-abort limit-count)
-    flips the distribution axis to :func:`_pq_adc_topk_qdist` — when N
-    is small the per-worker LUT replication, not scoring, is the entire
-    stage cost."""
-    import pandas as pd
-
-    if (codes.limit(_ADC_QDIST_MAX_CODES + 1).count()
-            <= _ADC_QDIST_MAX_CODES):
-        return _pq_adc_topk_qdist(codes, codebooks, qids, Qm, k, id_col)
-    m = len(codebooks)
-    normsq = _adc_normsq(codebooks)
-    sc = codes.sparkSession.sparkContext
-    # Scale-adaptive parallelism: a small/compacted codes frame (one
-    # parquet file, a fresh encode of a small corpus) arrives with fewer
-    # partitions than the session has cores, and the WHOLE Q x N scoring
-    # then runs in that many tasks (observed: 1 partition at the bench
-    # shape -> single-task scoring, 14+ s).  The scoring work is pure
-    # compute, so spread it; at production scale codes already carries
-    # >= defaultParallelism partitions and this is a no-op.
-    nparts = codes.rdd.getNumPartitions()
-    if nparts < sc.defaultParallelism:
-        codes = codes.repartition(sc.defaultParallelism)
-    bq = sc.broadcast((qids, Qm))
-    lut_key, lut_paths = _publish_query_luts(sc, Qm, codebooks)
-
-    def score(batches):
-        b_qids, b_Qm = bq.value
-        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks, lut_paths)
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        Q = len(b_qids)
-        # chunk the corpus so the (Q x chunk) score matrix stays ~32 MB
-        chunk = max(1, (1 << 22) // max(Q, 1))
-        acc = []  # [(qrow, id, score)] arrays, task-local top-k accumulator
-        acc_len = 0
-
-        def reduced():
-            qr = np.concatenate([a[0] for a in acc])
-            iD = np.concatenate([a[1] for a in acc])
-            sc_ = np.concatenate([a[2] for a in acc])
-            return _select_topk(qr, iD, sc_, k)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            nsum = np_normsq[0][C[:, 0]]
-            for mi in range(1, m):
-                nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            for lo in range(0, len(ids), chunk):
-                hi = min(lo + chunk, len(ids))
-                S = ip[0][:, C[lo:hi, 0]]
-                for mi in range(1, m):
-                    S = S + ip[mi][:, C[lo:hi, mi]]
-                S = S / (qn[:, None] * rnorm[None, lo:hi])
-                acc.append(_matrix_topk(S, ids[lo:hi], k))
-                acc_len += len(acc[-1][0])
-                if acc_len > 4 * Q * k:
-                    acc = [reduced()]
-                    acc_len = len(acc[0][0])
-        if acc_len:
-            qr, iD, sc_ = reduced()
-            yield pd.DataFrame({
-                "query_id": b_qids[qr],
-                "neighbor_id": iD,
-                "approx_cos": sc_,
-            })
-
-    scored = codes.mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+        score, _ADC_SCHEMA)
+    return _topk_window(scored, "approx_cos", k)
 
 
 def _seq_dot(a, b) -> float:
@@ -952,12 +757,6 @@ def _seq_dot(a, b) -> float:
     for x, y in zip(a, b):
         acc += float(x) * float(y)
     return acc
-
-
-def _seq_cos(a, b) -> float:
-    import math
-
-    return _seq_dot(a, b) / (math.sqrt(_seq_dot(a, a)) * math.sqrt(_seq_dot(b, b)))
 
 
 def _np_assign_cells(X: "np.ndarray", centroids: list) -> "np.ndarray":
@@ -1074,9 +873,7 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
                    codebooks: list | None = None, train: bool = False,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    query_id_col: str = "query_id",
-                   residual: bool = False,
-                   q_max: int = 1024,
-                   distributed: bool | None = None) -> DataFrame:
+                   residual: bool = False) -> DataFrame:
     """FAISS-IVFPQ composition: the coarse quantizer prunes the corpus to
     each query's ``nprobe`` nearest cells, and ADC over PQ codes scores
     ONLY those candidates — the two approximations multiply, and so do the
@@ -1086,10 +883,10 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     Plan shape: corpus -> cell assignment (native or numpy batch, no
     shuffle) + PQ encode (numpy batch, no shuffle) -> equi-join with the
     broadcast (query_id, cell) probe pairs -> per-row LUT scoring keyed by
-    query_id -> tiny per-query top-k window.  The probe ranking runs on
-    the driver in sequential pure-python float order (queries are the
-    bounded broadcast set), keeping the whole operator bit-reproducible by
-    an independent scalar reimplementation."""
+    query_id -> tiny per-query top-k window.  The probe ranking and lookup
+    tables are built once on the driver with numpy in scalar float order
+    (queries are the bounded broadcast set), keeping the whole operator
+    bit-reproducible by an independent scalar reimplementation."""
     if centroids is None:
         centroids = (train_centroids(corpus, n_centroids, id_col, vec_col)
                      if train else
@@ -1109,14 +906,13 @@ def ivfpq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 3,
     indexed = ivfpq_encode(corpus, centroids, codebooks, residual,
                            id_col, vec_col)
     return ivfpq_adc_topk(indexed, centroids, codebooks, queries, k, nprobe,
-                          id_col, vec_col, query_id_col, residual=residual,
-                          q_max=q_max, distributed=distributed)
+                          id_col, vec_col, query_id_col, residual=residual)
 
 
 def _np_query_cent_dots(Qm: "np.ndarray", centroids: list) -> "np.ndarray":
     """``(Q, n_centroids)`` inner products, vectorized ACROSS queries but
-    accumulating per dim left-to-right — bit-identical to the driver
-    path's ``_seq_dot(qv, c)`` per query.  Shared by probe ranking and
+    accumulating per dim left-to-right — bit-identical to a scalar
+    ``_seq_dot(qv, c)`` per query.  Shared by probe ranking and
     the residual ``<q, centroid>`` score term."""
     Q, d = Qm.shape
     dots = np.empty((Q, len(centroids)), dtype=np.float64)
@@ -1131,8 +927,8 @@ def _np_query_cent_dots(Qm: "np.ndarray", centroids: list) -> "np.ndarray":
 def _np_probe_cells(Qm: "np.ndarray", centroids: list, nprobe: int) -> "np.ndarray":
     """(Q, nprobe) nearest-centroid indices by cosine, ties -> lower index.
     Vectorized ACROSS queries with the per-dim left-to-right accumulation
-    order of the pure-python ``_seq_cos`` driver path, so the rankings are
-    bit-identical; stable argsort reproduces ``sorted((-cos, i))``."""
+    order of a scalar per-query cosine, so the rankings are bit-identical
+    to ``sorted((-cos, i))`` over it (stable argsort)."""
     import math
 
     Q, d = Qm.shape
@@ -1153,9 +949,7 @@ def ivfpq_adc_topk(indexed: DataFrame, centroids: list, codebooks: list,
                    queries: DataFrame, k: int = 3, nprobe: int = 4,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    query_id_col: str = "query_id",
-                   residual: bool = False,
-                   q_max: int = 1024,
-                   distributed: bool | None = None) -> DataFrame:
+                   residual: bool = False) -> DataFrame:
     """Query-time half of :func:`ivfpq_ann_topk` over an EXISTING
     ``(id, cell, codes)`` frame — usable directly against a persisted
     index (:mod:`httpz_spark.operators.simindex`); the corpus embeddings
@@ -1168,34 +962,63 @@ def ivfpq_adc_topk(indexed: DataFrame, centroids: list, codebooks: list,
     cross term into one precomputed ``(n_centroids x m x kc)`` table —
     O(tables) driver/closure cost, still zero embedding reads.
 
-    Same two bit-identical paths as :func:`pq_adc_topk`, switched on
-    ``q_max``: the driver path builds per-query LUTs in pure-python float
-    order and ships them in the closure (right at FAISS's
-    few-queries/huge-corpus shape); the distributed path broadcasts the
-    raw query matrix, ranks probe cells with :func:`_np_probe_cells`
-    (vectorized, bit-equal), and builds LUTs once per task inside the
-    Arrow stage, scoring candidates by a vectorized ``(qidx, code)``
-    gather — no per-query python loop anywhere, so 10^5+ query sets
-    (corpus-vs-corpus retrieval) neither sit on the driver nor bloat the
-    task closure."""
-    qids, Qm = _collect_queries(queries, query_id_col, vec_col)
-    if distributed is None:
-        distributed = len(qids) > q_max
-    if distributed and len(qids):
-        return _ivfpq_adc_topk_dist(indexed, centroids, codebooks, qids, Qm,
-                                    k, nprobe, id_col, residual)
-    return _ivfpq_adc_topk_driver(indexed, centroids, codebooks, qids, Qm,
-                                  k, nprobe, id_col, residual)
+    One path: the driver ranks probe cells (:func:`_np_probe_cells`) and
+    builds the lookup tables (:func:`_np_query_luts`) once, vectorized in
+    scalar float order; the tables ride a broadcast, the (query_id, cell)
+    probe pairs a broadcast join, and each candidate row is scored by a
+    vectorized ``(query_row, code)`` gather — no per-query python loop,
+    so 10^5+ query sets neither sit in python loops nor bloat the task
+    closure."""
+    m = len(codebooks)
+    qids, Qm = _collect_queries(queries, query_id_col, vec_col,
+                                m * len(codebooks[0][0]))
+    normsq = _adc_normsq(codebooks)
+    qn, ip = _np_query_luts(Qm, codebooks)
+    cnormsq = combo = qc = None
+    if residual:
+        cnormsq, combo = _residual_cell_tables(centroids, codebooks, normsq)
+        qc = _np_query_cent_dots(Qm, centroids)  # (Q, n_centroids)
+    cells = _np_probe_cells(Qm, centroids, nprobe)
+    probe_pairs = [(int(qids[qi]), int(c))
+                   for qi in range(len(qids)) for c in cells[qi]]
+    spark = indexed.sparkSession
+    probe_df = F.broadcast(
+        spark.createDataFrame(probe_pairs, "query_id long, cell int")
+    )
+    cand = indexed.join(probe_df, "cell")
+    bl = spark.sparkContext.broadcast((qids, qn, ip, qc))
+
+    def score(batches):
+        b_qids, b_qn, b_ip, b_qc = bl.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            C = _codes_matrix(pdf["codes"], m)
+            rq = pdf["query_id"].to_numpy(dtype=np.int64)
+            qidx = np.searchsorted(b_qids, rq)
+            if residual:
+                cell = pdf["cell"].to_numpy(dtype=np.int64)
+                nsum = _code_sum(combo, C, cell, cnormsq[cell])
+                # ⟨q, x̂⟩ = ⟨q, c⟩ + Σ_mi ⟨q_mi, r̂_mi⟩
+                s = _code_sum(b_ip, C, qidx, b_qc[qidx, cell])
+            else:
+                nsum = _code_sum(normsq, C)
+                s = _code_sum(b_ip, C, qidx)
+            yield _adc_frame(rq, pdf[id_col].to_numpy(),
+                             s / (b_qn[qidx] * np.sqrt(nsum)))
+
+    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
+    scored = cand.select(*sel).mapInPandas(score, _ADC_SCHEMA)
+    return _topk_window(scored, "approx_cos", k)
 
 
 def _residual_cell_tables(centroids: list, codebooks: list, normsq: list):
-    """``(cnormsq[cell], combo[mi][cell][ki])`` where combo folds the
-    reconstruction cross term: ``2·⟨c_mi, r̂_mi⟩ + |r̂_mi|²``.  Pure-python
-    scalar accumulation (left-to-right per dim), shared verbatim by the
-    driver and distributed residual paths."""
+    """``(cnormsq[cell], combo[mi][cell, ki])`` as float64 arrays, where
+    combo folds the reconstruction cross term: ``2·⟨c_mi, r̂_mi⟩ +
+    |r̂_mi|²``.  Pure-python scalar accumulation (left-to-right per dim)."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
-    cnormsq = [_seq_dot(c, c) for c in centroids]
+    cnormsq = np.asarray([_seq_dot(c, c) for c in centroids], dtype=np.float64)
     combo = []
     for mi in range(m):
         t = []
@@ -1207,184 +1030,5 @@ def _residual_cell_tables(centroids: list, codebooks: list, normsq: list):
                     acc += 2.0 * float(c[mi * sub + j]) * float(r[j])
                 row.append(acc + normsq[mi][ki])
             t.append(row)
-        combo.append(t)
+        combo.append(np.asarray(t, dtype=np.float64))
     return cnormsq, combo
-
-
-def _ivfpq_adc_topk_driver(indexed: DataFrame, centroids: list,
-                           codebooks: list, qids: "np.ndarray",
-                           Qm: "np.ndarray", k: int, nprobe: int,
-                           id_col: str, residual: bool = False) -> DataFrame:
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-
-    normsq = _adc_normsq(codebooks)
-    cell_tabs = (_residual_cell_tables(centroids, codebooks, normsq)
-                 if residual else None)
-    probe_pairs = []
-    luts = {}
-    for qi in range(len(qids)):
-        qid = int(qids[qi])
-        qv = [float(x) for x in Qm[qi]]
-        if len(qv) != m * sub:  # trailing-dim truncation must fail loudly
-            raise ValueError(
-                f"query dim {len(qv)} != m*sub = {m}*{sub} of the codebooks"
-            )
-        coss = [_seq_cos(qv, c) for c in centroids]
-        probed = [i for _, i in sorted((-c, i) for i, c in enumerate(coss))[:nprobe]]
-        probe_pairs.extend((qid, int(cell)) for cell in probed)
-        qn = 0.0
-        for x in qv:
-            qn += x * x
-        qn = qn ** 0.5
-        ip = [
-            [sum(qv[mi * sub + j] * c[j] for j in range(sub))
-             for c in codebooks[mi]]
-            for mi in range(m)
-        ]
-        qc = [_seq_dot(qv, c) for c in centroids] if residual else None
-        luts[qid] = (qn, ip, qc)
-
-    spark = indexed.sparkSession
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "query_id long, cell int")
-    )
-    cand = indexed.join(probe_df, "cell")
-
-    def score(batches):
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        if residual:
-            np_cnormsq = np.asarray(cell_tabs[0], dtype=np.float64)
-            np_combo = [np.asarray(t, dtype=np.float64) for t in cell_tabs[1]]
-        np_luts = {
-            qid: (qn,
-                  [np.asarray(t, dtype=np.float64) for t in ip],
-                  np.asarray(qc, dtype=np.float64) if qc is not None else None)
-            for qid, (qn, ip, qc) in luts.items()
-        }
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            qids = pdf["query_id"].to_numpy()
-            if residual:
-                # |x̂|² = |c|² + Σ_mi (2⟨c_mi, r̂_mi⟩ + |r̂_mi|²), per (cell, code)
-                cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
-                nsum = np_cnormsq[cells_arr] + np_combo[0][cells_arr, C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_combo[mi][cells_arr, C[:, mi]]
-            else:
-                nsum = np_normsq[0][C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            out = np.empty(len(C), dtype=np.float64)
-            for qid in np.unique(qids):
-                mask = qids == qid
-                qn, ip, qc = np_luts[int(qid)]
-                if residual:
-                    # ⟨q, x̂⟩ = ⟨q, c⟩ + Σ_mi ⟨q_mi, r̂_mi⟩
-                    s = qc[cells_arr[mask]] + ip[0][C[mask, 0]]
-                else:
-                    s = ip[0][C[mask, 0]]
-                for mi in range(1, m):
-                    s = s + ip[mi][C[mask, mi]]
-                out[mask] = s / (qn * rnorm[mask])
-            yield pd.DataFrame({
-                "query_id": qids,
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "approx_cos": out,
-            })
-
-    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
-    scored = cand.select(*sel).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _ivfpq_adc_topk_dist(indexed: DataFrame, centroids: list,
-                         codebooks: list, qids: "np.ndarray",
-                         Qm: "np.ndarray", k: int, nprobe: int,
-                         id_col: str, residual: bool = False) -> DataFrame:
-    """Distributed IVFPQ ADC: probe ranking is one vectorized numpy pass
-    on the driver (cheap — Q x n_centroids x d flops, no python loops),
-    the query matrix rides a torrent broadcast, and each task builds the
-    LUTs once with :func:`_np_query_luts`; candidate scoring is a fully
-    vectorized ``(query_row, code)`` fancy gather keyed by searchsorted
-    query ids — bit-identical to the driver path's per-qid masked loop.
-    ``residual=True`` adds the per-(query, cell) ``⟨q, c⟩`` gather and the
-    precomputed cell/combo tables, in the driver path's accumulation
-    order."""
-    import pandas as pd
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    if Qm.shape[1] != m * sub:  # trailing-dim truncation must fail loudly
-        raise ValueError(
-            f"query dim {Qm.shape[1]} != m*sub = {m}*{sub} of the codebooks"
-        )
-    normsq = _adc_normsq(codebooks)
-    cell_tabs = (_residual_cell_tables(centroids, codebooks, normsq)
-                 if residual else None)
-    cells = _np_probe_cells(Qm, centroids, nprobe)
-    probe_pairs = [(int(qids[qi]), int(c))
-                   for qi in range(len(qids)) for c in cells[qi]]
-    spark = indexed.sparkSession
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "query_id long, cell int")
-    )
-    cand = indexed.join(probe_df, "cell")
-    bq = spark.sparkContext.broadcast((qids, Qm))
-    lut_key, lut_paths = _publish_query_luts(spark.sparkContext, Qm, codebooks)
-
-    def score(batches):
-        b_qids, b_Qm = bq.value
-        qn, ip = _cached_query_luts(lut_key, b_Qm, codebooks, lut_paths)
-        np_normsq = [np.asarray(t, dtype=np.float64) for t in normsq]
-        if residual:
-            np_cnormsq = np.asarray(cell_tabs[0], dtype=np.float64)
-            np_combo = [np.asarray(t, dtype=np.float64) for t in cell_tabs[1]]
-            qc = _np_query_cent_dots(b_Qm, centroids)  # (Q, ncell)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.asarray([list(c) for c in pdf["codes"]], dtype=np.int64)
-            rq = pdf["query_id"].to_numpy(dtype=np.int64)
-            qidx = np.searchsorted(b_qids, rq)
-            if residual:
-                cells_arr = pdf["cell"].to_numpy(dtype=np.int64)
-                nsum = np_cnormsq[cells_arr] + np_combo[0][cells_arr, C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_combo[mi][cells_arr, C[:, mi]]
-            else:
-                nsum = np_normsq[0][C[:, 0]]
-                for mi in range(1, m):
-                    nsum = nsum + np_normsq[mi][C[:, mi]]
-            rnorm = np.sqrt(nsum)
-            if residual:
-                s = qc[qidx, cells_arr] + ip[0][qidx, C[:, 0]]
-            else:
-                s = ip[0][qidx, C[:, 0]]
-            for mi in range(1, m):
-                s = s + ip[mi][qidx, C[:, mi]]
-            out = s / (qn[qidx] * rnorm)
-            yield pd.DataFrame({
-                "query_id": rq,
-                "neighbor_id": pdf[id_col].to_numpy(),
-                "approx_cos": out,
-            })
-
-    sel = ["query_id", F.col(id_col), "codes"] + (["cell"] if residual else [])
-    scored = cand.select(*sel).mapInPandas(
-        score, schema="query_id long, neighbor_id long, approx_cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

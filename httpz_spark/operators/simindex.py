@@ -101,15 +101,14 @@ class PQIndex:
 
     # -- query ---------------------------------------------------------------
     def topk(self, queries: DataFrame, k: int = 3,
-             query_id_col: str = "query_id", q_max: int = 1024,
-             distributed: bool | None = None) -> DataFrame:
+             query_id_col: str = "query_id") -> DataFrame:
         """ADC top-k straight off the persisted codes — the corpus
-        embeddings are never read at query time.  ``q_max``/``distributed``
-        pick between the driver-LUT and broadcast-LUT execution paths
-        (bit-identical; see :func:`~httpz_spark.operators.similarity.pq_adc_topk`)."""
+        embeddings are never read at query time.  One scoring kernel; the
+        query lookup tables or the codes ride a broadcast, whichever fits
+        the replication byte budget (see
+        :func:`~httpz_spark.operators.similarity.pq_adc_topk`)."""
         return pq_adc_topk(self.codes(), self.codebooks, queries, k,
-                           self.id_col, self.vec_col, query_id_col,
-                           q_max=q_max, distributed=distributed)
+                           self.id_col, self.vec_col, query_id_col)
 
 
 class IVFPQIndex:
@@ -195,9 +194,11 @@ class IVFPQIndex:
         return df
 
     def topk(self, queries: DataFrame, k: int = 3, nprobe: int = 4,
-             query_id_col: str = "query_id", q_max: int = 1024,
-             distributed: bool | None = None) -> DataFrame:
+             query_id_col: str = "query_id") -> DataFrame:
+        """ADC top-k over the ``nprobe`` nearest cells of each query,
+        straight off the persisted rows: driver-built lookup tables ride
+        a broadcast and one vectorized gather scores every candidate (see
+        :func:`~httpz_spark.operators.similarity.ivfpq_adc_topk`)."""
         return ivfpq_adc_topk(self.rows(), self.centroids, self.codebooks,
                               queries, k, nprobe, self.id_col, self.vec_col,
-                              query_id_col, residual=self.residual,
-                              q_max=q_max, distributed=distributed)
+                              query_id_col, residual=self.residual)

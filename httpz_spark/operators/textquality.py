@@ -264,20 +264,6 @@ def top_bigram_char_frac(docs: DataFrame, text_col: str = "text",
                                out_col="top_bigram_char_frac")
 
 
-def dup_ngram_char_frac(docs: DataFrame, n: int = 5, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        out_col: str | None = None) -> DataFrame:
-    """(id, <out_col>) — fraction of characters carried by DUPLICATED
-    word n-grams: ``min(1, sum over grams with count>1 of count*len(gram)
-    / len(norm))`` (occurrences may overlap, hence the cap — the
-    documented convention; Gopher applies this for n = 5..10).  Docs with
-    < n words get 0.0."""
-    out = ngram_signal_frame(docs, top_ns=(), dup_ns=(n,), text_col=text_col,
-                             id_col=id_col)
-    return out.withColumnRenamed(f"dup_{n}gram_char_frac",
-                                 out_col or f"dup_{n}gram_char_frac")
-
-
 def gopher_quality_signals(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id",
                            top_ns: tuple = (2, 3, 4),

@@ -356,17 +356,6 @@ def robots_txt_bytes(host: str, cfg: FabricConfig) -> bytes:
     return (eol.join(lines) + eol).encode("utf-8")
 
 
-def sitemap_paths_for(host: str, cfg: FabricConfig) -> list:
-    """Which sitemap documents a host serves: ``/sitemap.xml`` always
-    exists as a route; hosts with ``hs % 3 == 0`` serve a
-    ``<sitemapindex>`` there pointing at ``/sitemap-0.xml`` and
-    ``/sitemap-1.xml``, the rest serve a flat ``<urlset>``."""
-    hs = h64(f"{cfg.seed}:sitemap:{host}")
-    if hs % 3 == 0:
-        return ["/sitemap.xml", "/sitemap-0.xml", "/sitemap-1.xml"]
-    return ["/sitemap.xml"]
-
-
 def sitemap_urls_for(host: str, part: str, cfg: FabricConfig) -> list:
     """The page URLs listed by one sitemap document (deterministic)."""
     hs = h64(f"{cfg.seed}:smurls:{host}:{part}")

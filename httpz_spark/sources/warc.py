@@ -33,7 +33,7 @@ import os
 import zlib
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from httpz_spark.functions.hashing import hash_partition_remap
@@ -91,6 +91,23 @@ def warc_file_assign(url_col, n_files: int, prefix: str = "part"):
     layout."""
     shard = F.pmod(F.xxhash64(url_col), F.lit(n_files))
     return F.concat(F.lit(prefix + "-"), F.lpad(shard.cast("string"), 5, "0"))
+
+
+def _file_route(warc_file: Column, n_files: int) -> Column:
+    """LongType hash-partitioning key that sends file ``part-<i>`` to
+    partition ``i`` of a ``repartition(n_files, ...)``: the trailing index
+    of the name, looked up in the murmur-inverse table of
+    :func:`hash_partition_remap`.  The key must be LONG — the table is
+    solved against Spark's ``hashLong``, and an int key is hashed with
+    ``hashInt`` instead, scattering files across the wrong partitions.
+    A name without trailing digits hashes the name itself."""
+    remap = hash_partition_remap(n_files)
+    idx = F.regexp_extract(warc_file, "([0-9]+)$", 1)
+    idx = F.when(idx != "", idx.cast("long")).otherwise(
+        F.pmod(F.xxhash64(warc_file), F.lit(n_files)))
+    return F.element_at(
+        F.array(*[F.lit(int(v)) for v in remap]),
+        (F.pmod(idx, F.lit(n_files)) + 1).cast("int")).cast("long")
 
 
 def write_warc(df: DataFrame, path: str, n_files: int = 8,
@@ -161,7 +178,12 @@ def write_records(rec: DataFrame, path: str, n_files: int,
     instead of payload+headers-framed-again bytes (~30% fewer shuffle
     bytes at WARC shapes: url/date/mime already ride the exchange as key
     columns and the framed record duplicated all of them plus the
-    body)."""
+    body).
+
+    The one-file-per-task fast path (``n_files <= _REMAP_MAX``) assumes
+    ``warc_file`` names end in an index in ``0..n_files-1``, as
+    :func:`warc_file_assign` names them.  Other names are still written
+    correctly, only hash-balanced instead of one file per task."""
     os.makedirs(path, exist_ok=True)
     keys = ["surt", "url", "date", "status", "mime", "digest", "warc_file"]
     if record is None:
@@ -183,19 +205,13 @@ def write_records(rec: DataFrame, path: str, n_files: int,
     # -file balance, ZERO extra jobs.  File CONTENT is placement-
     # independent (equal keys stay co-located and the per-file byte
     # layout comes from the total sort order), so a non-standard
-    # warc_file name — no trailing digits, an index beyond n_files —
-    # falls back to hashing the name itself: still correct, just
+    # warc_file name — no trailing digits (hashed), an index beyond
+    # n_files (wrapped modulo n_files) — is still correct, just
     # hash-balanced.  Beyond _REMAP_MAX files the literal lookup array
     # stops being a sane expression and range partitioning returns.
     if n_files <= _REMAP_MAX:
-        remap = hash_partition_remap(n_files)
-        idx = F.regexp_extract(F.col("warc_file"), "([0-9]+)$", 1)
-        idx = F.when(idx != "", idx.cast("long")).otherwise(
-            F.pmod(F.xxhash64(F.col("warc_file")), F.lit(n_files)))
-        route = F.element_at(
-            F.array(*[F.lit(int(v)) for v in remap]),
-            (F.pmod(idx, F.lit(n_files)) + 1).cast("int"))
-        rec = rec.repartition(n_files, route.alias("_route"))
+        rec = rec.repartition(
+            n_files, _file_route(F.col("warc_file"), n_files).alias("_route"))
     else:
         rec = rec.repartitionByRange(n_files, "warc_file")
     rec = rec.sortWithinPartitions("warc_file", "surt", "url", "date",

@@ -902,7 +902,7 @@ def golden_ivfpq_ann_topk_residual(k=3, n_centroids=16, nprobe=4, m=8, kc=16):
     the ivfpq golden's models composed with scalar residual subtraction,
     the 2*<c_mi, r_mi> + |r_mi|^2 cross-term table, and the <q, c> score
     term — every accumulation left-to-right per dim, matching
-    similarity._ivfpq_adc_topk_driver(residual=True) bit for bit."""
+    similarity.ivfpq_adc_topk(residual=True) bit for bit."""
     emb = load_embeddings()
     vecs = {vid: list(map(float, v)) for vid, v in emb}
     ids_sorted = sorted(vecs)

@@ -113,14 +113,14 @@ def test_hash_partition_remap_routes_exactly(spark):
 
 
 def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
-    # the direct-routed writer must still produce n_files files with the
-    # standard names and exactly one file's rows per task (no 1/e-empty
+    # the direct-routed writer must still produce n_files files, and its
+    # route must put exactly one file's rows in each task (no 1/e-empty
     # hash skew, no range-sampling double evaluation)
     import os
 
     from pyspark.sql import functions as F
 
-    from httpz_spark.sources.warc import write_warc
+    from httpz_spark.sources.warc import _file_route, write_warc
 
     n, n_files = 4000, 16
     src = spark.range(n).select(
@@ -136,8 +136,16 @@ def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
     assert cdx.count() == n
     files = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
     assert len(files) == n_files
-    # every row of one warc_file came from one task: per-file distinct
-    # partition count is 1 (spark_partition_id is gone by CDX time, so
-    # assert via the layout instead: filenames are the full 0..n-1 set)
-    assert files == [f"part-{i:05d}.warc.gz" for i in range(n_files)]
     cdx.unpersist()
+    # placement: the writer's own route expression sends every row of
+    # file part-<i> to partition i (spark_partition_id is gone by CDX
+    # time, so check the repartition the writer runs directly)
+    for n_files in (4, 16, 64):
+        names = spark.createDataFrame(
+            [(i, f"part-{i:05d}") for i in range(n_files) for _ in range(3)],
+            "i long, warc_file string")
+        placed = names.repartition(
+            n_files, _file_route(F.col("warc_file"), n_files)
+        ).select("i", F.spark_partition_id().alias("p")).collect()
+        wrong = sorted({r["i"] for r in placed if r["i"] != r["p"]})
+        assert not wrong, (n_files, wrong)
