@@ -1300,7 +1300,7 @@ def q_frontier_crawl(spark, sf_dir):
         eng = CrawlEngine(
             spark, S.images_df(spark, world, 2), S.dns_df(spark, world),
             S.robots_df(spark, world), ScanConfig.all_on(discover_links=True),
-            EngineConfig(partitions=8, per_host_budget=4, max_depth=1, salt_buckets=4),
+            EngineConfig(partitions=8, per_host_budget=4, max_depth=1),
             world, state_dir=state,
         )
         eng.init_frontier(S.seeds_df(spark, S.seed_url_lines(world)))

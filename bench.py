@@ -96,7 +96,7 @@ def crawl_workload(spark, cpus: int) -> dict:
             scan_cfg=ScanConfig.all_on(),
             engine_cfg=EngineConfig(
                 partitions=max(2 * cpus, 32), per_host_budget=1 << 30,
-                salt_buckets=8, use_bloom=False, include_payload=False,
+                include_payload=False,
             ),
             fabric_cfg=world, state_dir=state,
         )
@@ -104,8 +104,8 @@ def crawl_workload(spark, cpus: int) -> dict:
         frontier = eng.store.read("frontier").persist()
         frontier.count()
         t0 = time.time()
-        scheduled, _deferred = eng._schedule(frontier)
-        n_fetched = eng._fetch(scheduled, 0).count()
+        ranked = eng._schedule(frontier, seen_size=0)
+        n_fetched = eng._fetch(ranked.filter(F.col("scheduled")), 0).count()
         dt = time.time() - t0
         frontier.unpersist()
     finally:
@@ -737,6 +737,8 @@ def run_wavesize(cpus: int = 32) -> None:
     import shutil
     import tempfile
 
+    from pyspark.sql import functions as F
+
     from httpz_spark.config import EngineConfig, ScanConfig
     from httpz_spark.plans.frontier import CrawlEngine
     from httpz_spark.sources import fabric as FB
@@ -766,7 +768,6 @@ def run_wavesize(cpus: int = 32) -> None:
             eng = CrawlEngine(
                 spark, images, None, None, ScanConfig.all_on(),
                 EngineConfig(partitions=2 * cpus, per_host_budget=1 << 30,
-                             salt_buckets=8, use_bloom=False,
                              include_payload=False),
                 world, state_dir=state,
             )
@@ -776,8 +777,8 @@ def run_wavesize(cpus: int = 32) -> None:
             best = 0.0
             for _ in range(2):
                 t0 = time.time()
-                sched, _d = eng._schedule(frontier)
-                got = eng._fetch(sched, 0).count()
+                ranked = eng._schedule(frontier, seen_size=0)
+                got = eng._fetch(ranked.filter(F.col("scheduled")), 0).count()
                 best = max(best, got / (time.time() - t0))
             results[n] = best
             frontier.unpersist()

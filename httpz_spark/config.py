@@ -74,27 +74,24 @@ class EngineConfig:
     """Distributed-frontier knobs (new; no reference equivalent)."""
 
     partitions: int = 32             # url_hash shuffle width (cluster: cores*2+)
-    wave_limit: int | None = None    # global per-wave URL cap (O1 analogue)
     per_host_budget: int = 100       # politeness: max URLs per host per wave
     max_depth: int = 3               # frontier link-following depth cap
     hot_host_threshold: int = 64     # rows/host above which fetch salting kicks in
-    salt_buckets: int = 8            # fetch-stage salt fan-out for hot hosts
     politeness_pre_salt: int = 16    # salted local top-k fan-out before the
                                      # exact per-host window (hot-host guard;
                                      # `scheduled` stays exact — see
                                      # operators/politeness.py docstring)
     bloom_bits_per_key: int = 10     # per-partition bloom sizing (~1% FP)
     bloom_capacity_per_part: int = 1_000_000  # sizing assumption per pid
-    use_bloom: bool = True           # maintain the persisted seen-filter index
     seen_filter: str = "bloom"       # which index structure: "bloom" (10
                                      # bits/key, idempotent OR re-runs) or
                                      # "cuckoo" (~19 bits/key, supports
                                      # DELETE -> O(stale) recrawl
                                      # invalidation vs O(seen) bloom rebuild)
-    bloom_min_seen: int = 5_000_000  # probe through the bloom only once the
-                                     # seen table exceeds this (measured: the
+    bloom_min_seen: int = 5_000_000  # build + probe the seen filter once the
+                                     # seen table reaches this (measured: the
                                      # plain JVM anti-join wins below ~10^7
-                                     # keys; the bloom's value is avoiding
+                                     # keys; the filter's value is avoiding
                                      # seen-table scans when seen >> wave)
     include_payload: bool = True     # carry image payload columns into results
     trap_max_urls: int | None = None  # crawler-trap guard: cumulative

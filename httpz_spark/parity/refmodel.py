@@ -30,6 +30,8 @@ FAVICON_MAX_BYTES = 256 * 1024
 # scanner.py:50
 MAX_CNAME_CHAIN = 3
 
+# every error class a fetch row can carry: the scanner.py:189-203 ladder + PROCESS
+ERROR_TYPES = ("TIMEOUT", "CERT", "SSL", "CONN", "HTTP", "UNKNOWN", "PROCESS")
 # scanner.py:53-55 — CERT/SSL fall back to the other protocol but are not
 # retried on the same protocol.
 TRANSIENT_ERROR_TYPES = ("TIMEOUT", "CONN", "HTTP")

@@ -11,14 +11,17 @@ DataFrame waves (SURVEY.md §3.4):
 
 Exactly-once resume (north_rule "a killed job resumes exactly"):
 
-* each wave first materializes its full fetch output as an atomic staging
-  snapshot (``wave<k>_out`` / ``wave<k>_deferred``), THEN applies merges
-  *from the staging snapshot*;
+* each wave first stages two atomic snapshots — ``wave<k>_sched`` (the
+  seen-gated, politeness-ranked frontier: scheduled rows plus deferred
+  ones) and ``wave<k>_out`` (the fetch of its scheduled rows, read back
+  from ``wave<k>_sched``) — THEN applies merges *from the staging*;
+* the wave's counters are ``Observation``s on writes that run anyway,
+  committed in each table's manifest summary — no counting job;
 * the lineage row for wave k is the commit marker — written last;
-* a kill at any point re-runs wave k: staging is either rebuilt (the fetch
-  fabric is deterministic) or reused; merge_upsert on url_hash is
-  idempotent, so the final tables are byte-identical to an uninterrupted
-  run (tested in tests/test_frontier.py).
+* a kill at any point re-runs wave k: each staged table is reused if it
+  was committed, else rebuilt (the fetch fabric is deterministic);
+  merge_upsert on url_hash is idempotent, so the final tables are
+  byte-identical to an uninterrupted run (tested in tests/test_frontier.py).
 
 Deterministic crawl order = (wave_id, priority, url_hash); priority = depth
 (BFS).  All per-wave metrics land in the ``lineage`` table.
@@ -26,9 +29,11 @@ Deterministic crawl order = (wave_id, priority, url_hash); priority = depth
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from httpz_spark.config import EngineConfig, ScanConfig
@@ -39,13 +44,14 @@ from httpz_spark.operators.frontier_dedup import (
     CuckooIndex,
     dedup_unseen,
 )
-from httpz_spark.storage import release_local_checkpoint
 from httpz_spark.operators.traps import frontier_trap_split, url_path_template
 from httpz_spark.operators.politeness import (
     aimd_host_budgets,
     politeness_schedule,
     salted_repartition,
 )
+from httpz_spark.parity.refmodel import ERROR_TYPES
+from httpz_spark.storage import release_local_checkpoint
 from httpz_spark.plans.scan import META, PAYLOAD, make_url_hash64_udf
 from httpz_spark.plans.statestore import StateStore
 from httpz_spark.sources.fabric import FabricConfig
@@ -138,8 +144,6 @@ class CrawlEngine:
     # (tested in tests/test_frontier.py::test_cooperative_stop_*).
 
     def _stop_file(self) -> str:
-        import os
-
         return os.path.join(self.store.root, "_stop")
 
     def request_stop(self) -> None:
@@ -149,13 +153,9 @@ class CrawlEngine:
             f.write("stop")
 
     def stop_requested(self) -> bool:
-        import os
-
         return os.path.exists(self._stop_file())
 
     def clear_stop(self) -> None:
-        import os
-
         try:
             os.remove(self._stop_file())
         except FileNotFoundError:
@@ -164,11 +164,8 @@ class CrawlEngine:
     # -- lifecycle ------------------------------------------------------------
     def init_frontier(self, seed_urls: DataFrame, url_col: str = "raw") -> None:
         """Seeds -> frontier wave 0 (idempotent: no-op if state exists)."""
-        if self.store.exists("frontier"):
-            return
-        frontier = urls_to_frontier(seed_urls, url_col, depth=0, wave_id=0)
-        frontier = frontier.dropDuplicates(["url_hash"])
-        self.store.write("frontier", frontier)
+        if not self.store.exists("frontier"):
+            self.add_seeds(seed_urls, url_col)
 
     def add_seeds(self, seed_urls: DataFrame, url_col: str = "raw") -> None:
         """MERGE new seeds into a live frontier (recrawl re-seeding: feed
@@ -178,7 +175,7 @@ class CrawlEngine:
         fresh = urls_to_frontier(seed_urls, url_col, depth=0, wave_id=0)
         cur = self.store.read("frontier")
         if cur is None:
-            self.store.write("frontier", fresh.dropDuplicates(["url_hash"]))
+            self._write_frontier(fresh.dropDuplicates(["url_hash"]))
             return
         # deterministic cross-source dedup (same resolution as run_wave's
         # deferred-vs-discovered merge): a URL both queued and re-seeded
@@ -197,7 +194,13 @@ class CrawlEngine:
             .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in others])
             .select(*FRONTIER_COLS)
         )
-        self.store.write("frontier", merged)
+        self._write_frontier(merged)
+
+    def _write_frontier(self, frontier: DataFrame) -> None:
+        """Commit the frontier with its row count (the next wave's n_ready)."""
+        obs = Observation()
+        frontier = frontier.observe(obs, F.count(F.lit(1)).alias("n_ready"))
+        self.store.write("frontier", frontier, summary=(obs,))
 
     def committed_waves(self) -> set:
         lineage = self.store.read("lineage")
@@ -222,62 +225,38 @@ class CrawlEngine:
 
     # -- one wave ---------------------------------------------------------------
     def run_wave(self, wave_id: int) -> dict:
-        if wave_id in self.committed_waves():
+        # one lineage read per wave: the commit check and the seen-table
+        # size the dedup gate dispatches on (no table scan)
+        lineage = self.store.read("lineage")
+        done = ([] if lineage is None
+                else lineage.select("wave_id", "n_fetched").collect())
+        if any(r["wave_id"] == wave_id for r in done):
             return {"n_ready": -1, "skipped": True, "wave_id": wave_id}
 
         ecfg, scfg = self.engine_cfg, self.scan_cfg
         t0 = time.time()
-        frontier = self.store.read("frontier")
-        if frontier is None:
-            raise RuntimeError("init_frontier() first")
-
-        staging_out = f"wave{wave_id}_out"
-        staging_def = f"wave{wave_id}_deferred"
-        staging_meta = f"wave{wave_id}_meta"
-        if not self.store.exists(staging_out):
-            if self.stop_requested():
-                return {"n_ready": -1, "stopped": True, "wave_id": wave_id}
-            n_ready = frontier.count()
-            if n_ready == 0:
-                self._commit_lineage(wave_id, 0, 0, 0, 0, {}, t0)
-                return {"n_ready": 0, "wave_id": wave_id}
-            scheduled, deferred = self._schedule(frontier)
-            # deferred + the n_ready snapshot first; staging_out is the
-            # completion marker.  n_ready is snapshotted with the staging so
-            # a crash AFTER the frontier overwrite below still commits the
-            # lineage row of THIS wave's input, not the advanced frontier's.
-            self.store.write(staging_def, deferred.select(*FRONTIER_COLS))
-            self.store.write(
-                staging_meta,
-                self.spark.createDataFrame([(int(n_ready),)], "n_ready long"),
-            )
-            try:
-                self.store.write(staging_out, self._fetch(scheduled, wave_id))
-            except Exception:
-                if self.stop_requested():
-                    # in-UDF cooperative abort: staging never committed, so
-                    # a resumed run re-executes this wave exactly
-                    return {"n_ready": -1, "stopped": True, "wave_id": wave_id}
-                raise
-
+        stopped = {"n_ready": -1, "stopped": True, "wave_id": wave_id}
         if self.stop_requested():
-            # staged but unmerged: the resumed run reuses the staging and
-            # applies the (idempotent) merges — drain semantics without loss
-            return {"n_ready": -1, "stopped": True, "wave_id": wave_id}
+            return stopped
+        counts = self._stage(wave_id, sum(r["n_fetched"] for r in done))
+        if counts is None or self.stop_requested():
+            # a stop mid-fetch aborted the staging commit, so a resumed run
+            # re-executes the fetch exactly; a stop after staging returns
+            # before the merges, which the resumed run applies idempotently
+            return stopped
+        staging_sched, staging_out = f"wave{wave_id}_sched", f"wave{wave_id}_out"
+        staging_budgets = f"wave{wave_id}_budgets"
+        if counts["n_ready"] == 0:
+            return self._commit_lineage(wave_id, counts, t0)
 
-        meta = self.store.read(staging_meta)
-        if meta is not None:
-            n_ready = meta.collect()[0]["n_ready"]
-        else:  # staging from an older layout/partial write: degrade to the
-            n_ready = frontier.count()  # live count (metrics-only drift)
         out = self.store.read(staging_out)
-        deferred = self.store.read(staging_def)
+        deferred = (self.store.read(staging_sched)
+                    .filter(~F.col("scheduled")).select(*FRONTIER_COLS))
 
         # AIMD politeness update — STAGED before the state merge so a
         # crash-rerun replays the same (host, budget) rows instead of
         # recomputing from the already-updated state (which would halve a
         # slow host twice for one observed wave)
-        staging_budgets = f"wave{wave_id}_budgets"
         if ecfg.adaptive_politeness:
             if not self.store.exists(staging_budgets):
                 self.store.write(staging_budgets, aimd_host_budgets(
@@ -314,25 +293,20 @@ class CrawlEngine:
         # per-partition fetch lineage (north rule: partition-granular
         # metrics checkpoint next to the wave-level lineage): derived from
         # the STAGED wave output, so a crash-rerun re-derives byte-equal
-        # rows and the MERGE on (wave, partition) is idempotent.  Staging
-        # written by a pre-partition-lineage build lacks the column —
-        # degrade to wave-level lineage only (same discipline as the
-        # staging_meta fallback above) instead of wedging the resume.
-        if "fetch_part" in out.columns:
-            plineage = (
-                out.groupBy("fetch_part")
-                .agg(F.count(F.lit(1)).alias("n_rows"),
-                     F.count("error_type").alias("n_errors"),
-                     F.sum("latency_ms").alias("latency_ms_sum"),
-                     F.max("latency_ms").alias("latency_ms_max"))
-                .withColumn("wave_id", F.lit(wave_id).cast("int"))
-                .withColumn("wp_key", F.concat_ws(
-                    "\x00", F.lit(str(wave_id)),
-                    F.col("fetch_part").cast("string")))
-            )
-            self.store.merge_upsert("partition_lineage", plineage,
-                                    key="wp_key")
-            out = out.drop("fetch_part")
+        # rows and the MERGE on (wave, partition) is idempotent
+        plineage = (
+            out.groupBy("fetch_part")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.count("error_type").alias("n_errors"),
+                 F.sum("latency_ms").alias("latency_ms_sum"),
+                 F.max("latency_ms").alias("latency_ms_max"))
+            .withColumn("wave_id", F.lit(wave_id).cast("int"))
+            .withColumn("wp_key", F.concat_ws(
+                "\x00", F.lit(str(wave_id)),
+                F.col("fetch_part").cast("string")))
+        )
+        self.store.merge_upsert("partition_lineage", plineage, key="wp_key")
+        out = out.drop("fetch_part")
 
         # MERGE results + seen (idempotent on url_hash); fetch_part is a
         # lineage-only column — results keep their established schema
@@ -341,12 +315,13 @@ class CrawlEngine:
             "url_hash", "url_canon", F.lit(wave_id).alias("first_wave")
         )
         self.store.merge_upsert("seen", seen_rows, key="url_hash")
-        # OR this wave's keys into the persisted bloom index BEFORE the
+        # OR this wave's keys into the seen-filter index, once one exists
+        # (_schedule builds it when seen reaches bloom_min_seen), BEFORE the
         # lineage commit: a kill anywhere re-runs the wave and re-ORs, so
-        # the bloom never has false negatives vs the seen table
-        bloom = self._bloom()
-        if bloom is not None:
-            bloom.update(seen_rows)
+        # the index never has false negatives vs the seen table
+        index = self._bloom(create=False)
+        if index is not None:
+            index.update(seen_rows)
 
         # frontier(k+1) = deferred + discovered (depth-capped, in-wave deduped)
         next_frontier = deferred
@@ -373,76 +348,104 @@ class CrawlEngine:
             .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in others])
             .select(*FRONTIER_COLS)
         )
-        self.store.write("frontier", next_frontier)
+        self._write_frontier(next_frontier)
 
-        # one aggregation job yields both the error histogram and n_fetched
-        # (sum over all groups incl. the None/ok group) — not two passes
-        err_rows = out.groupBy("error_type").agg(F.count("*").alias("n")).collect()
-        errs = {r["error_type"]: r["n"] for r in err_rows if r["error_type"] is not None}
-        n_fetched = sum(r["n"] for r in err_rows)
-        n_deferred = deferred.count()
-        self._commit_lineage(wave_id, n_ready, n_fetched, n_deferred, n_fetched, errs, t0)
+        stats = self._commit_lineage(wave_id, counts, t0)
         # lineage row committed = wave durable; staging served its purpose
         # (idempotent re-run) and is GC'd so state-dir disk stays O(corpus),
-        # not O(waves x corpus)
-        for staging in (staging_out, staging_def, staging_meta,
-                        staging_budgets):
+        # not O(waves x corpus).  wave<k>_deferred/_meta: staging an older
+        # build wrote before a kill mid-fetch (this build re-stages the wave)
+        for staging in (staging_sched, staging_out, staging_budgets,
+                        f"wave{wave_id}_deferred", f"wave{wave_id}_meta"):
             self.store.drop(staging)
-        return {
-            "wave_id": wave_id, "n_ready": n_ready, "n_fetched": n_fetched,
-            "n_deferred": n_deferred, "errors": errs, "secs": time.time() - t0,
-        }
+        return stats
+
+    def _stage(self, wave_id: int, seen_size: int) -> dict | None:
+        """Stage the wave — ``wave<k>_sched`` (:meth:`_schedule`'s frame,
+        written once; snapshots the frontier's n_ready, which the merge
+        tail overwrites, and counts n_deferred), then ``wave<k>_out`` (the
+        fetch of its scheduled rows; counts n_fetched and each error
+        class) — reusing a table a killed run committed, and return the
+        counters.  None: a cooperative stop aborted the fetch uncommitted."""
+        sched, out = f"wave{wave_id}_sched", f"wave{wave_id}_out"
+        if not self.store.exists(sched):
+            if self.store.exists(out):
+                raise RuntimeError(
+                    f"{out} was staged by an older build without {sched}: finish "
+                    f"wave {wave_id} with that build, or drop {out}, "
+                    f"wave{wave_id}_deferred and wave{wave_id}_meta to re-run it")
+            frontier = self.store.read("frontier")
+            if frontier is None:
+                raise RuntimeError("init_frontier() first")
+            # counted on the frontier write, not here: a metric observed below
+            # the seen gate is lost when AQE prunes an empty gate result
+            n_ready = self.store.summary("frontier").get("n_ready")
+            if n_ready is None:  # a frontier committed by an older build
+                n_ready = frontier.count()
+            if n_ready == 0:
+                return {"n_ready": 0}
+            obs = Observation()
+            ranked = self._schedule(frontier, seen_size).observe(
+                obs, F.count_if(~F.col("scheduled")).alias("n_deferred"))
+            self.store.write(sched, ranked, summary=({"n_ready": n_ready}, obs))
+        if not self.store.exists(out):
+            obs = Observation()
+            scheduled = self.store.read(sched).filter(F.col("scheduled"))
+            fetched = self._fetch(scheduled, wave_id).observe(
+                obs, F.count(F.lit(1)).alias("n_fetched"),
+                *[F.count_if(F.col("error_type") == t).alias(t)
+                  for t in ERROR_TYPES])
+            try:
+                self.store.write(out, fetched, summary=(obs,))
+            except Exception:
+                if self.stop_requested():
+                    return None  # in-UDF cooperative abort: nothing committed
+                raise
+        return {**self.store.summary(sched), **self.store.summary(out)}
 
     # -- stages -------------------------------------------------------------------
-    def _bloom(self) -> "BloomIndex | CuckooIndex | None":
-        """The persisted seen-filter index (name kept from when bloom was
-        the only structure; ``EngineConfig.seen_filter`` picks bloom or
-        cuckoo — identical probe contract, see frontier_dedup).
-
-        Creating an index over ALREADY-POPULATED seen state (first wave
-        after flipping ``seen_filter``, or after an index dir was lost)
-        BACKFILLS it from the seen table in one job: a fresh filter over a
-        populated table would answer 'definitely unseen' for the whole
-        old corpus and re-crawl it."""
+    def _bloom(self, create: bool = True) -> "BloomIndex | CuckooIndex | None":
+        """The persisted seen-filter index (``EngineConfig.seen_filter``:
+        bloom or cuckoo — identical probe contract, see frontier_dedup), or
+        None when none exists and ``create`` is False.  A new index is
+        BACKFILLED from the seen table in one job (a fresh filter over a
+        populated table would answer 'definitely unseen' for the old
+        corpus and re-crawl it), in a side directory renamed into place so
+        a kill mid-backfill leaves no partial filter."""
         ecfg = self.engine_cfg
-        if not ecfg.use_bloom:
-            return None
         if ecfg.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(
                 f"EngineConfig.seen_filter must be 'bloom' or 'cuckoo', "
                 f"got {ecfg.seen_filter!r}"
             )
-        import os
-
+        cls, kw = ((CuckooIndex, {}) if ecfg.seen_filter == "cuckoo" else
+                   (BloomIndex, {"bits_per_key": ecfg.bloom_bits_per_key}))
+        kw.update(partitions=ecfg.partitions,
+                  capacity_per_part=ecfg.bloom_capacity_per_part)
         root = os.path.join(self.store.root, ecfg.seen_filter)
-        fresh = not os.path.exists(os.path.join(root, "meta.json"))
-        if ecfg.seen_filter == "cuckoo":
-            idx = CuckooIndex.open_or_create(
-                root,
-                partitions=ecfg.partitions,
-                capacity_per_part=ecfg.bloom_capacity_per_part,
-            )
-        else:
-            idx = BloomIndex.open_or_create(
-                root,
-                partitions=ecfg.partitions,
-                capacity_per_part=ecfg.bloom_capacity_per_part,
-                bits_per_key=ecfg.bloom_bits_per_key,
-            )
-        if fresh:
-            seen = self.store.read("seen")
-            if seen is not None:
-                idx.update(seen.select("url_hash"))
-        return idx
+        if os.path.exists(os.path.join(root, "meta.json")):
+            return cls.open_or_create(root, **kw)
+        if not create:
+            return None
+        build = root + ".build"
+        shutil.rmtree(build, ignore_errors=True)
+        idx = cls.open_or_create(build, **kw)
+        seen = self.store.read("seen")
+        if seen is not None:
+            idx.update(seen.select("url_hash"))
+        shutil.rmtree(root, ignore_errors=True)
+        os.rename(build, root)
+        return cls.open_or_create(root, **kw)
 
     def invalidate_seen(self, stale_keys: DataFrame) -> None:
         """Recrawl invalidation: remove stale URLs from the seen state so
         the frontier re-admits them (compose with recrawl_candidates'
         ``stale`` rows).  The seen table takes an O(stale) merge-on-read
-        tombstone delta either way; the filter index diverges — cuckoo
-        deletes exactly the stale keys (O(stale)), bloom cannot delete and
-        must REBUILD from the surviving seen table (O(seen) scan, the
-        documented cost of picking bloom on a recrawling deployment).
+        tombstone delta either way; an existing filter index diverges —
+        cuckoo deletes exactly the stale keys (O(stale)), bloom cannot
+        delete and must REBUILD from the surviving seen table (O(seen)
+        scan, the documented cost of picking bloom on a recrawling
+        deployment).
 
         ``stale_keys``: any frame with a ``url_hash`` column.  Keys are
         SEMI-JOINED against the current seen table first, so deleting a
@@ -465,45 +468,33 @@ class CrawlEngine:
         # dedup eager barriers)
         keys = keys.localCheckpoint(eager=True)
         try:
-            # open the index BEFORE the tombstone lands: a fresh index
-            # backfills from the seen table inside _bloom(), and that
-            # backfill must cover the keys we are about to delete
-            idx = self._bloom()
+            idx = self._bloom(create=False)
             self.store.merge_delete("seen", keys, key="url_hash")
             if isinstance(idx, CuckooIndex):
                 idx.delete(keys)
             elif idx is not None:
-                import os
-                import shutil
-
                 # blooms cannot delete: rebuild from the surviving seen
-                # table (the documented O(seen) cost of bloom on a
-                # recrawling deployment; _bloom() backfills the fresh dir)
-                shutil.rmtree(os.path.join(self.store.root, "bloom"),
-                              ignore_errors=True)
+                # table (_bloom() backfills the fresh index)
+                shutil.rmtree(idx.root, ignore_errors=True)
                 self._bloom()
         finally:
             release_local_checkpoint(keys)
 
-    def _seen_size(self) -> int:
-        """Seen-table cardinality from lineage counters (no table scan)."""
-        lineage = self.store.read("lineage")
-        if lineage is None:
-            return 0
-        return lineage.agg(F.sum("n_fetched")).collect()[0][0] or 0
-
-    def _schedule(self, frontier: DataFrame) -> tuple:
+    def _schedule(self, frontier: DataFrame, seen_size: int) -> DataFrame:
+        """The wave's one ranked frame: seen-gated rows with the politeness
+        window's ``scheduled`` and ``sched_rank``, plus the trap guard's
+        overflow rows with ``scheduled=false``.  ``seen_size`` (from
+        lineage) picks the dedup path."""
         ecfg = self.engine_cfg
         # the frontier is unique by url_hash BY CONSTRUCTION (init_frontier
         # dedupes; next_frontier is a groupBy(url_hash) output) — a per-wave
         # dropDuplicates here would re-shuffle the whole frontier for nothing
-        ready = frontier
         seen = self.store.read("seen")
         # adaptive dedup path: plain JVM anti-join until the seen table is
         # big enough that skipping its scan pays for the bloom probe
-        bloom = self._bloom() if self._seen_size() >= ecfg.bloom_min_seen else None
+        bloom = self._bloom() if seen_size >= ecfg.bloom_min_seen else None
         unseen = dedup_unseen(
-            ready, seen, ecfg.partitions,
+            frontier, seen, ecfg.partitions,
             bits_per_key=ecfg.bloom_bits_per_key, bloom=bloom,
         )
         # crawler-trap guard: templates whose CUMULATIVE fetched-URL count
@@ -532,16 +523,15 @@ class CrawlEngine:
             host_budgets=(self.store.read("host_budgets")
                           if ecfg.adaptive_politeness else None),
         )
-        # sched_rank stays on the scheduled side: _fetch salts hot hosts by
+        # sched_rank rides along: _fetch salts hot hosts by
         # floor((rank-1)/target) — free, perfectly balanced (politeness.py)
-        scheduled = ranked.filter(F.col("scheduled")).drop("scheduled")
-        deferred = ranked.filter(~F.col("scheduled")).drop("scheduled", "sched_rank")
+        ranked = ranked.select(*FRONTIER_COLS, "scheduled", "sched_rank")
         if trap_overflow is not None:
-            deferred = deferred.select(*FRONTIER_COLS).unionByName(
-                trap_overflow.select(*FRONTIER_COLS))
-        if ecfg.wave_limit is not None:
-            scheduled = scheduled.orderBy("priority", "url_hash").limit(ecfg.wave_limit)
-        return scheduled, deferred
+            ranked = ranked.unionByName(
+                trap_overflow.select(*FRONTIER_COLS)
+                .withColumn("scheduled", F.lit(False))
+                .withColumn("sched_rank", F.lit(None).cast("int")))
+        return ranked
 
     def _fetch(self, scheduled: DataFrame, wave_id: int) -> DataFrame:
         ecfg, scfg = self.engine_cfg, self.scan_cfg
@@ -586,11 +576,7 @@ class CrawlEngine:
         pass_names = [n for n, _t in passthrough]
         pass_schema = ", ".join(f"{n} {t}" for n, t in passthrough)
 
-        rank_col = "sched_rank" if "sched_rank" in df.columns else None
-        df = salted_repartition(
-            df, ecfg.partitions, ecfg.salt_buckets,
-            adaptive_target=ecfg.hot_host_threshold, rank_col=rank_col,
-        )
+        df = salted_repartition(df, ecfg.partitions, ecfg.hot_host_threshold)
         stage = make_fetch_stage(
             scfg, self.fabric_cfg, pass_names, stop_file=self._stop_file()
         )
@@ -613,12 +599,18 @@ class CrawlEngine:
             )
         return out.withColumn("wave_id", F.lit(wave_id).cast("int"))
 
-    def _commit_lineage(self, wave_id, n_ready, n_scheduled, n_deferred, n_fetched, errs, t0):
+    def _commit_lineage(self, wave_id: int, counts: dict, t0: float) -> dict:
+        """Append the wave's lineage row — its commit marker — from the
+        staged counters (every scheduled row is fetched: n_scheduled =
+        n_fetched); returns the wave's stats."""
+        n_ready, n_deferred = counts["n_ready"], counts.get("n_deferred", 0)
+        n_fetched = counts.get("n_fetched", 0)
+        errs = {t: counts[t] for t in ERROR_TYPES if counts.get(t)}
         t1 = time.time()
         row = [
             (
-                int(wave_id), int(n_ready), int(n_scheduled), int(n_deferred),
-                int(n_fetched), errs, float(t0), float(t1),
+                int(wave_id), n_ready, n_fetched, n_deferred, n_fetched, errs,
+                float(t0), float(t1),
                 float(n_fetched / (t1 - t0)) if t1 > t0 else 0.0,
             )
         ]
@@ -628,3 +620,5 @@ class CrawlEngine:
             "t_end double, urls_per_sec double"
         )
         self.store.append("lineage", self.spark.createDataFrame(row, schema))
+        return {"wave_id": wave_id, "n_ready": n_ready, "n_fetched": n_fetched,
+                "n_deferred": n_deferred, "errors": errs, "secs": t1 - t0}

@@ -38,7 +38,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -164,12 +164,23 @@ class StateStore:
         ).parquet(d)
         return os.path.basename(d)
 
-    def write(self, name: str, df: DataFrame) -> int:
-        """Full snapshot write (single-delta manifest + pointer swap)."""
+    def write(self, name: str, df: DataFrame, summary=()) -> int:
+        """Full snapshot write (single-delta manifest + pointer swap).
+        ``summary`` (Observations on ``df``, filled by this write, and/or
+        mappings) commits with the manifest — Iceberg's snapshot summary."""
         v = (self.latest_version(name) or 0) + 1
         delta = self._write_delta(name, df, v, "base")
-        self._commit(name, v, {"deltas": [delta], "key": None})
+        merged: dict = {}
+        for s in summary:
+            merged.update(s.get if isinstance(s, Observation) else s)
+        self._commit(name, v, {"deltas": [delta], "key": None, "summary": merged})
         return v
+
+    def summary(self, name: str) -> dict:
+        """The summary committed with the table's current snapshot ({} for
+        a missing table or one written without a summary)."""
+        v = self.latest_version(name)
+        return {} if v is None else self._read_manifest(name, v).get("summary", {})
 
     def merge_upsert(self, name: str, df: DataFrame, key: str) -> int:
         """MERGE keyed on ``key``: new rows shadow same-key rows of the

@@ -39,7 +39,7 @@ class StreamingSeedIngest:
             new = cur.select(*FRONTIER_COLS).unionByName(new)
         # already-crawled URLs re-submitted by the stream are dropped by the
         # wave's seen anti-join; here we only dedup within the frontier
-        store.write("frontier", new.dropDuplicates(["url_hash"]))
+        self.engine._write_frontier(new.dropDuplicates(["url_hash"]))
         self.n_batches += 1
 
     def start(self, seed_dir: str, checkpoint_dir: str, available_now: bool = True):

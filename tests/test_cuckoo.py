@@ -247,7 +247,7 @@ def _crawl_world(spark, state, seen_filter):
         scan_cfg=ScanConfig(),
         engine_cfg=EngineConfig(
             partitions=4, per_host_budget=100, include_payload=False,
-            use_bloom=True, seen_filter=seen_filter, bloom_min_seen=0,
+            seen_filter=seen_filter, bloom_min_seen=0,
             bloom_capacity_per_part=10_000,
         ),
         fabric_cfg=world, state_dir=state,
@@ -416,6 +416,39 @@ def test_seen_filter_flip_backfills_from_seen_table(spark):
         eng2.add_seeds(S.seeds_df(spark, S.seed_url_lines(world)))
         s1 = eng2.run_wave(1)
         assert s1.get("n_fetched", 0) == 0  # everything already seen
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
+
+
+def test_index_backfill_killed_midway_leaves_no_partial_filter(spark, monkeypatch):
+    # the index is built mid-crawl, once seen reaches bloom_min_seen, by a
+    # backfill from the seen table: a kill during that backfill must leave
+    # no index behind — a partial one would answer 'definitely unseen' for
+    # keys it never took and the next wave would re-crawl them
+    import dataclasses
+    import os
+
+    from httpz_spark.operators.frontier_dedup import BloomIndex
+
+    state = tempfile.mkdtemp(prefix="httpz_ckeng_")
+    try:
+        eng, world = _crawl_world(spark, state, "bloom")
+        eng.engine_cfg = dataclasses.replace(eng.engine_cfg, bloom_min_seen=10**9)
+        eng.init_frontier(S.seeds_df(spark, S.seed_url_lines(world)))
+        assert eng.run_wave(0)["n_fetched"] > 0
+        assert not os.path.exists(os.path.join(state, "bloom"))  # not yet probed
+
+        def killed(self, *args, **kwargs):
+            raise RuntimeError("killed mid-backfill")
+
+        eng.engine_cfg = dataclasses.replace(eng.engine_cfg, bloom_min_seen=0)
+        monkeypatch.setattr(BloomIndex, "update", killed)
+        with pytest.raises(RuntimeError, match="mid-backfill"):
+            eng._bloom()
+        monkeypatch.undo()
+        assert eng._bloom(create=False) is None
+        eng.add_seeds(S.seeds_df(spark, S.seed_url_lines(world)))
+        assert eng.run_wave(1)["n_fetched"] == 0  # everything already seen
     finally:
         shutil.rmtree(state, ignore_errors=True)
 

@@ -214,3 +214,25 @@ def test_connector_hygiene_kwargs():
                            limit_per_host=4)
     assert kw2["limit"] == 50 and kw2["limit_per_host"] == 4
     assert kw2["force_close"] is False
+
+
+def test_error_types_cover_every_emitted_class():
+    """ERROR_TYPES is the closed set the wave's error counters count: every
+    class the exception ladder, the row-containment path and the fabric's
+    injected failures emit must be a member (a class outside it would
+    vanish from lineage's errors_by_type)."""
+    from httpz_spark.operators.fetch import _process_row
+    from httpz_spark.parity.refmodel import (
+        ERROR_TYPES,
+        FALLBACK_ERROR_TYPES,
+        TRANSIENT_ERROR_TYPES,
+    )
+
+    ladder = {classify_exception(cls("x"), classes=_CLASSES)[0]
+              for cls in (*_CLASSES.values(), ValueError)}
+    assert ladder == {"TIMEOUT", "CERT", "SSL", "CONN", "HTTP", "UNKNOWN"}
+    emitted = ladder | {_process_row(ValueError("x"))["error_type"]}
+    emitted |= set(FB._FAIL_MESSAGES)
+    assert emitted <= set(ERROR_TYPES), emitted - set(ERROR_TYPES)
+    assert set(TRANSIENT_ERROR_TYPES) | set(FALLBACK_ERROR_TYPES) <= set(ERROR_TYPES)
+    assert len(set(ERROR_TYPES)) == len(ERROR_TYPES)

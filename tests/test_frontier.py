@@ -24,7 +24,7 @@ def make_engine(spark, world, state_dir, **eover):
     robots = S.robots_df(spark, world)
     scan_cfg = ScanConfig.all_on(discover_links=True)
     ecfg = EngineConfig(partitions=8, per_host_budget=4, max_depth=2,
-                        salt_buckets=4, state_dir=state_dir, **eover)
+                        state_dir=state_dir, **eover)
     return CrawlEngine(spark, images, dns, robots, scan_cfg, ecfg, world,
                        state_dir=state_dir)
 
@@ -36,6 +36,13 @@ def seed_df(spark, world):
 def table_fingerprint(df, cols):
     rows = [tuple(r) for r in df.select(*cols).collect()]
     return sorted(rows)
+
+
+def lineage_counters(eng):
+    return sorted(
+        (r["wave_id"], r["n_ready"], r["n_scheduled"], r["n_deferred"],
+         r["n_fetched"], sorted((r["errors_by_type"] or {}).items()))
+        for r in eng.store.read("lineage").collect())
 
 
 def test_bloom_dedup_equals_exact_antijoin(spark):
@@ -135,20 +142,58 @@ def test_crawl_waves_and_politeness(spark, world):
 
 
 def test_crawl_bloom_path_equals_plain(spark, world):
-    """Forcing the bloom dedup path (bloom_min_seen=0) produces the exact
-    same crawl as the default plain anti-join path."""
+    """Forcing the bloom dedup path (bloom_min_seen=0), or crossing
+    bloom_min_seen mid-crawl (wave 0 fetches 47 URLs, so the index is
+    built and backfilled at wave 1, then updated and probed), produces the
+    exact same crawl and lineage as the default plain anti-join path —
+    which never builds the index at all."""
+    import os
+
     base = tempfile.mkdtemp(prefix="httpz_bloomcrawl_")
     try:
-        fps = []
-        for sub, over in (("plain", {}), ("bloom", {"bloom_min_seen": 0})):
+        fps, lins, has_index = [], [], []
+        for sub, over in (("plain", {}), ("bloom", {"bloom_min_seen": 0}),
+                          ("cross", {"bloom_min_seen": 30})):
             eng = make_engine(spark, world, f"{base}/{sub}", **over)
             eng.init_frontier(seed_df(spark, world))
             eng.crawl(max_waves=3)
             fps.append(table_fingerprint(
                 eng.store.read("results"), ["url_hash", "status", "wave_id"]))
-        assert fps[0] == fps[1] and len(fps[0]) > 0
+            lins.append(lineage_counters(eng))
+            has_index.append(os.path.exists(f"{base}/{sub}/bloom/meta.json"))
+        assert fps[0] == fps[1] == fps[2] and len(fps[0]) > 0
+        assert lins[0] == lins[1] == lins[2]
+        assert lins[0][0][4] >= 30  # seen crosses bloom_min_seen after wave 0
+        assert has_index == [False, True, True]
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_lineage_counters_match_tables(spark, world, tmp_path):
+    """The counters that ride the staging writes are exact: per wave,
+    lineage n_ready is the frontier's row count before the wave, and
+    n_fetched / errors_by_type are a groupBy over that wave's results.
+    Only the committed tables remain: no staging table outlives its wave."""
+    import os
+
+    state = str(tmp_path / "counters")
+    eng = make_engine(spark, world, state)
+    eng.init_frontier(seed_df(spark, world))
+    for w in range(3):
+        n_frontier = eng.store.read("frontier").count()
+        stats = eng.run_wave(w)
+        row = eng.store.read("lineage").filter(F.col("wave_id") == w).collect()[0]
+        assert row["n_ready"] == stats["n_ready"] == n_frontier > 0
+        by_type = {
+            r["error_type"]: r["count"]
+            for r in eng.store.read("results").filter(F.col("wave_id") == w)
+            .groupBy("error_type").count().collect()
+        }
+        assert row["n_fetched"] == row["n_scheduled"] == sum(by_type.values())
+        assert dict(row["errors_by_type"]) == {
+            k: v for k, v in by_type.items() if k is not None}
+        assert stats["errors"] == dict(row["errors_by_type"])
+        assert not [d for d in os.listdir(state) if d.startswith("wave")]
 
 
 def test_resume_after_kill_is_exact(spark, world):
@@ -171,6 +216,8 @@ def test_resume_after_kill_is_exact(spark, world):
         eng_a = make_engine(spark, world, a_dir)
         eng_a.init_frontier(seed_df(spark, world))
         eng_a.run_wave(0)
+        # as an older build commits it: the frontier without a summary
+        eng_a.store.write("frontier", eng_a.store.read("frontier"))
         del eng_a  # "kill"
         eng_a2 = make_engine(spark, world, a_dir)
         eng_a2.crawl(max_waves=4)
@@ -178,20 +225,14 @@ def test_resume_after_kill_is_exact(spark, world):
             eng_a2.store.read("results"), ["url_hash", "status", "title", "wave_id"]
         ) == want_results
         assert table_fingerprint(eng_a2.store.read("seen"), ["url_hash", "first_wave"]) == want_seen
+        assert lineage_counters(eng_a2) == lineage_counters(eng_full)
 
         # (b) kill mid-wave: staging written, merges not applied
         b_dir = f"{base}/b"
         eng_b = make_engine(spark, world, b_dir)
         eng_b.init_frontier(seed_df(spark, world))
-        eng_b.run_wave(0)
-        frontier = eng_b.store.read("frontier")
-        scheduled, deferred = eng_b._schedule(frontier)
-        eng_b.store.write("wave1_deferred", deferred.select(*frontier.columns))
-        eng_b.store.write(
-            "wave1_meta",
-            spark.createDataFrame([(int(frontier.count()),)], "n_ready long"),
-        )
-        eng_b.store.write("wave1_out", eng_b._fetch(scheduled, 1))
+        s0 = eng_b.run_wave(0)
+        assert eng_b._stage(1, s0["n_fetched"])["n_fetched"] > 0
         del eng_b  # "kill" before merges/lineage
         eng_b2 = make_engine(spark, world, b_dir)
         eng_b2.crawl(max_waves=4)
@@ -199,6 +240,7 @@ def test_resume_after_kill_is_exact(spark, world):
             eng_b2.store.read("results"), ["url_hash", "status", "title", "wave_id"]
         ) == want_results
         assert table_fingerprint(eng_b2.store.read("seen"), ["url_hash", "first_wave"]) == want_seen
+        assert lineage_counters(eng_b2) == lineage_counters(eng_full)
 
         # re-calling crawl on a finished state is a no-op
         eng_a2.crawl(max_waves=4)
@@ -238,17 +280,31 @@ def test_cooperative_stop_and_resume_exact(spark, world):
         )
         assert got == want
 
-        # (b) stop lands while the fetch UDF is running: the staging job
-        # aborts before commit and run_wave reports stopped
+        # (b) stop lands while wave 1 stages: the schedule (no python
+        # stage) commits, the fetch UDF's sentinel aborts wave1_out before
+        # its commit, and run_wave reports stopped
         b_dir = f"{base}/b"
         eng_b = make_engine(spark, world, b_dir)
         eng_b.init_frontier(seed_df(spark, world))
-        eng_b.run_wave(0)
-        frontier = eng_b.store.read("frontier")
-        scheduled, _deferred = eng_b._schedule(frontier)
+        s0 = eng_b.run_wave(0)
         eng_b.request_stop()
-        with pytest.raises(Exception, match="cooperative stop"):
-            eng_b._fetch(scheduled, 1).count()  # in-UDF sentinel trips
+        failed = []  # (table, error) of each staging write that raised
+        write = eng_b.store.write
+
+        def spy(name, df, summary=()):
+            try:
+                return write(name, df, summary)
+            except Exception as e:
+                failed.append((name, str(e)))
+                raise
+
+        eng_b.store.write = spy
+        assert eng_b._stage(1, s0["n_fetched"]) is None
+        eng_b.store.write = write
+        # the abort _stage swallowed is the in-UDF sentinel's, on the fetch
+        assert [n for n, _e in failed] == ["wave1_out"], failed
+        assert "cooperative stop" in failed[0][1], failed
+        assert eng_b.store.exists("wave1_sched")
         stats = eng_b.run_wave(1)
         assert stats.get("stopped") is True
         assert not eng_b.store.exists("wave1_out")  # staging never committed
@@ -306,30 +362,28 @@ def test_partition_lineage_consistent_and_resume_exact(spark, world, tmp_path):
          "latency_ms_max"]) == want
 
 
-def test_resume_from_pre_partition_lineage_staging(spark, world, tmp_path):
-    """Cross-version resume: staging written by a build WITHOUT the
-    fetch_part column (pre-partition-lineage layout) must still merge —
-    degrade to wave lineage only, never wedge the resume."""
+def test_resume_from_older_build_staging_raises(spark, world, tmp_path):
+    """A wave staged by an older build (``wave<k>_out`` next to its
+    ``wave<k>_deferred``/``wave<k>_meta``, no ``wave<k>_sched``) carries
+    none of the counters the lineage row needs: run_wave raises a clear
+    error naming all three tables instead of degrading silently, and
+    merges nothing.  With ``wave<k>_out`` dropped (an older build killed
+    mid-fetch leaves exactly that), the wave re-stages, and its commit GCs
+    the older build's staging too."""
     state = str(tmp_path / "old_staging")
     eng = make_engine(spark, world, state)
     eng.init_frontier(seed_df(spark, world))
+    for name in ("wave0_deferred", "wave0_meta", "wave0_out"):
+        eng.store.write(name, spark.range(1))
 
-    # stage wave 0 the way run_wave does, but with the old output layout
-    frontier = eng.store.read("frontier")
-    n_ready = frontier.count()
-    scheduled, deferred = eng._schedule(frontier)
-    from httpz_spark.plans.frontier import FRONTIER_COLS
-    eng.store.write("wave0_deferred", deferred.select(*FRONTIER_COLS))
-    eng.store.write("wave0_meta", spark.createDataFrame(
-        [(int(n_ready),)], "n_ready long"))
-    eng.store.write("wave0_out", eng._fetch(scheduled, 0).drop("fetch_part"))
+    with pytest.raises(RuntimeError, match="older build") as err:
+        eng.run_wave(0)
+    for name in ("wave0_deferred", "wave0_meta", "wave0_out"):
+        assert name in str(err.value), err.value
+    assert eng.store.read("results") is None
+    assert eng.store.read("lineage") is None
 
-    summary = eng.run_wave(0)  # resume path: staging exists, no re-fetch
-    assert summary["n_fetched"] > 0
-    assert eng.store.read("results").count() == summary["n_fetched"]
-    assert eng.store.read("partition_lineage") is None  # degraded, not wedged
-
-    # the NEXT wave (fresh staging, new layout) records partition lineage
-    eng.run_wave(1)
-    pl = eng.store.read("partition_lineage")
-    assert pl is not None and all(r["wave_id"] == 1 for r in pl.collect())
+    eng.store.drop("wave0_out")
+    assert eng.run_wave(0)["n_fetched"] > 0
+    for name in ("wave0_deferred", "wave0_meta", "wave0_sched", "wave0_out"):
+        assert not eng.store.exists(name), name

@@ -21,7 +21,7 @@ def _engine(spark, state, trap_max_urls, trap_keep=2):
         spark, images, dns=None, robots=None,
         scan_cfg=ScanConfig(),  # no enrichment: scheduling is under test
         engine_cfg=EngineConfig(
-            partitions=4, per_host_budget=10, use_bloom=False,
+            partitions=4, per_host_budget=10,
             include_payload=False, trap_max_urls=trap_max_urls,
             trap_keep=trap_keep,
         ),

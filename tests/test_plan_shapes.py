@@ -117,14 +117,17 @@ def test_dedup_pair_plan_shapes_lazy(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # pre-barrier crawl pipeline (round-4 verdict #6): the wave loop
-# materializes _schedule/_fetch results, so their LAZY plans — the
-# interesting ones — are pinned here directly on the engine's own frames.
+# materializes its staging tables, so the LAZY plans written there — the
+# interesting ones — are pinned here on the exact frames _stage wrote.
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
 def crawl_frames(spark, tmp_path_factory):
-    """(scheduled, deferred, fetch_out) lazy frames of one engine wave
-    over a small fabric — built once, asserted on by the tests below."""
+    """(sched, fetch_out): the lazy frames one engine wave writes as
+    ``wave0_sched`` and ``wave0_out`` over a small fabric, with part of the
+    seeds already seen — staged once, asserted on by the tests below."""
+    from pyspark.sql import functions as F
+
     from httpz_spark.config import EngineConfig, ScanConfig
     from httpz_spark.plans.frontier import CrawlEngine
     from httpz_spark.sources import fabric as FB
@@ -145,22 +148,35 @@ def crawl_frames(spark, tmp_path_factory):
         spark, images, dns=None, robots=S.robots_df(spark, world),
         scan_cfg=ScanConfig.all_on(),
         engine_cfg=EngineConfig(partitions=8, per_host_budget=4,
-                                politeness_pre_salt=8, salt_buckets=4,
-                                hot_host_threshold=4, use_bloom=False,
+                                politeness_pre_salt=8,
+                                hot_host_threshold=4,
                                 include_payload=True),
         fabric_cfg=world, state_dir=state,
     )
     eng.init_frontier(seeds)
-    frontier = eng.store.read("frontier")
-    scheduled, deferred = eng._schedule(frontier)
-    return scheduled, deferred, eng._fetch(scheduled, 0)
+    eng.store.write("seen", eng.store.read("frontier").limit(8).select(
+        "url_hash", "url_canon", F.lit(0).alias("first_wave")))
+    written = {}
+    write = eng.store.write
+
+    def spy(name, df, summary=()):
+        written[name] = df
+        return write(name, df, summary)
+
+    eng.store.write = spy
+    eng._stage(0, seen_size=8)
+    return written["wave0_sched"], written["wave0_out"]
 
 
 def test_wave_has_exactly_one_python_stage(spark, crawl_frames):
-    """The whole wave (schedule + fetch + payload join) plans EXACTLY one
-    MapInPandas — the fetch stage.  Everything else (canonicalize,
-    politeness, salting, joins) stays JVM-side."""
-    _s, _d, out = crawl_frames
+    """The whole wave plans EXACTLY one MapInPandas — the fetch stage, in
+    the ``wave0_out`` write.  The ``wave0_sched`` write (seen gate,
+    politeness, trap guard) plans no python stage at all, and everything
+    else in the fetch write (salting, joins) stays JVM-side."""
+    sched, out = crawl_frames
+    ps = plan_of(sched, mode="simple")
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in ps, ps
     p = plan_of(out, mode="simple")  # one tree, no details section —
     # a single node appears exactly once
     assert p.count("MapInPandas fetch_batches") == 1, p
@@ -178,7 +194,7 @@ def test_payload_join_sits_after_fetch_stage(spark, crawl_frames):
     payload join is an ANCESTOR of the MapInPandas fetch stage (parents
     print before children in explain output), while the light-meta join
     rides below it — bytes never cross the pre-fetch shuffle."""
-    _s, _d, out = crawl_frames
+    _s, out = crawl_frames
 
     def walk(node):
         yield node
@@ -216,7 +232,7 @@ def test_politeness_window_input_is_salted(spark, crawl_frames):
     with pre_salt > 1 the rank window partitions on (host, priority
     bucket, hash bucket) — the _pb/_hb salt columns — and an exact-offset
     join restores global ranks."""
-    s, _d, _o = crawl_frames
+    s, _o = crawl_frames
     p = plan_of(s)
     w = [ln for ln in p.splitlines() if "row_number" in ln
          and "windowspecdefinition" in ln]
@@ -227,8 +243,8 @@ def test_politeness_window_input_is_salted(spark, crawl_frames):
 def test_fetch_stage_input_salted_by_rank(spark, crawl_frames):
     """The fetch repartition spreads hot hosts by the politeness rank
     (floor((rank-1)/target)) — deterministic, perfectly balanced, no
-    extra pass (adaptive mode of salted_repartition)."""
-    _s, _d, out = crawl_frames
+    extra pass (salted_repartition)."""
+    _s, out = crawl_frames
     p = plan_of(out)
     ex = [ln for ln in p.splitlines()
           if "hashpartitioning" in ln and "host" in ln]
@@ -236,16 +252,16 @@ def test_fetch_stage_input_salted_by_rank(spark, crawl_frames):
     assert any("sched_rank" in ln and "FLOOR" in ln.upper() for ln in ex), ex
 
 
-def test_scheduled_deferred_split_is_exact_filter(spark, crawl_frames):
-    """deferred is the same ranked frame filtered on NOT scheduled — no
-    recomputation of the window, no extra shuffle stage beyond the rank's
-    own (same Exchange signature in both plans)."""
-    s, d, _o = crawl_frames
-    ps, pd_ = plan_of(s), plan_of(d)
-    for p in (ps, pd_):
-        assert "CartesianProduct" not in p and "BatchEvalPython" not in p, p
-    # both sides carry the politeness window machinery
-    assert "windowspecdefinition" in ps and "windowspecdefinition" in pd_
+def test_fetch_reads_the_staged_schedule(spark, crawl_frames):
+    """The seen gate and the politeness window run once per wave, in the
+    ``wave<k>_sched`` write: the ``wave<k>_out`` plan reads that table back
+    and carries neither the rank window nor the url_hash anti-join."""
+    s, out = crawl_frames
+    ps, po = plan_of(s), plan_of(out)
+    assert "row_number" in ps and "LeftAnti" in ps, ps
+    assert "row_number" not in po and "windowspecdefinition" not in po, po
+    assert "LeftAnti" not in po, po
+    assert "CartesianProduct" not in ps and "BatchEvalPython" not in ps, ps
 
 
 def test_phash_and_gopher_plan_shapes(spark, sf_dir):

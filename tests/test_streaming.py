@@ -23,7 +23,7 @@ def make_engine(spark, world, state_dir):
     return CrawlEngine(
         spark, S.images_df(spark, world, 2), S.dns_df(spark, world),
         S.robots_df(spark, world), ScanConfig.all_on(),
-        EngineConfig(partitions=8, per_host_budget=8, max_depth=1, salt_buckets=2),
+        EngineConfig(partitions=8, per_host_budget=8, max_depth=1),
         world, state_dir=state_dir,
     )
 

@@ -345,7 +345,7 @@ def test_crawl_to_warc_archives_fetched_results(spark, tmp_path):
         S.dns_df(spark, world), S.robots_df(spark, world),
         ScanConfig.all_on(discover_links=True),
         EngineConfig(partitions=4, per_host_budget=4, max_depth=1,
-                     salt_buckets=2, state_dir=state),
+                     state_dir=state),
         world, state_dir=state)
     eng.init_frontier(S.seeds_df(spark, S.seed_url_lines(world)))
     eng.crawl(max_waves=2)
