@@ -295,63 +295,3 @@ def hash64_str_batch_np(s, seed: int = 0):
         res[~valid] = pd.NA
     return res
 
-
-_M32 = 0xFFFFFFFF
-
-
-def murmur3_32_hashlong(v: int, seed: int = 42) -> int:
-    """Spark's partition-routing hash of a LongType value: MurmurHash3
-    x86_32 ``hashLong`` (Austin Appleby's public-domain algorithm, the
-    two-int-block specialization Spark/Guava use), default seed 42 —
-    the value ``F.hash(longCol)`` and ``HashPartitioning`` compute.
-    Returns the SIGNED 32-bit result.  Exists so a driver can solve for
-    "which literal routes to partition i" without running a job (the
-    archive writer's direct-routing layout); bit-compat is pinned by a
-    test against ``F.hash`` itself."""
-
-    def _rotl32(x: int, r: int) -> int:
-        return ((x << r) | (x >> (32 - r))) & _M32
-
-    def _mixk1(k1: int) -> int:
-        k1 = (k1 * 0xCC9E2D51) & _M32
-        k1 = _rotl32(k1, 15)
-        return (k1 * 0x1B873593) & _M32
-
-    def _mixh1(h1: int, k1: int) -> int:
-        h1 ^= k1
-        h1 = _rotl32(h1, 13)
-        return (h1 * 5 + 0xE6546B64) & _M32
-
-    low = v & _M32
-    high = (v >> 32) & _M32
-    h1 = _mixh1(seed & _M32, _mixk1(low))
-    h1 = _mixh1(h1, _mixk1(high))
-    h1 ^= 8  # fmix(h1, len) with len = 8 bytes
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def hash_partition_remap(n: int, seed: int = 42) -> list:
-    """``remap`` such that hash-partitioning a LongType column holding
-    ``remap[i]`` over ``n`` partitions routes the row to partition ``i``
-    exactly (``pmod(murmur3_32_hashlong(remap[i]), n) == i``).  Lets a
-    writer whose key domain is a KNOWN 0..n-1 index get the one-task-per
-    -file layout from a plain hash repartition — no range-partitioner
-    sampling job (which re-evaluates the whole upstream once) and none
-    of the ~1/e empty-task skew of hashing the raw index.  Coupon-
-    collector search, ~n·ln(n) hash probes, driver-side and instant for
-    any sane file count."""
-    remap: list = [None] * n
-    found, j = 0, 0
-    while found < n:
-        h = murmur3_32_hashlong(j, seed)
-        i = ((h % n) + n) % n
-        if remap[i] is None:
-            remap[i] = j
-            found += 1
-        j += 1
-    return remap

@@ -61,6 +61,23 @@ FRONTIER_COLS = [
 ]
 
 
+def _merge_frontier(rows: DataFrame) -> DataFrame:
+    """One frontier row per url_hash: the min (priority, wave_id,
+    url_canon) row — deterministic cross-source dedup, where a bare
+    dropDuplicates would pick an arbitrary row and break bit-exact
+    resume/oracle comparisons."""
+    others = [c for c in FRONTIER_COLS if c != "url_hash"]
+    return (
+        rows.groupBy("url_hash")
+        .agg(F.min_by(
+            F.struct(*others),
+            F.struct("priority", "wave_id", "url_canon"),
+        ).alias("_r"))
+        .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in others])
+        .select(*FRONTIER_COLS)
+    )
+
+
 def urls_to_frontier(df: DataFrame, url_col: str, depth: int | DataFrame,
                      wave_id: int, priority=None) -> DataFrame:
     """Canonicalize raw URLs into frontier rows — all native expressions
@@ -177,24 +194,10 @@ class CrawlEngine:
         if cur is None:
             self._write_frontier(fresh.dropDuplicates(["url_hash"]))
             return
-        # deterministic cross-source dedup (same resolution as run_wave's
-        # deferred-vs-discovered merge): a URL both queued and re-seeded
-        # keeps the min (priority, wave_id, url_canon) row — a bare
-        # dropDuplicates would pick an arbitrary one and break bit-exact
-        # resume/oracle comparisons
-        others = [c for c in FRONTIER_COLS if c != "url_hash"]
-        merged = (
-            cur.select(*FRONTIER_COLS)
-            .unionByName(fresh.select(*FRONTIER_COLS))
-            .groupBy("url_hash")
-            .agg(F.min_by(
-                F.struct(*others),
-                F.struct("priority", "wave_id", "url_canon"),
-            ).alias("_r"))
-            .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in others])
-            .select(*FRONTIER_COLS)
-        )
-        self._write_frontier(merged)
+        # a URL both queued and re-seeded keeps the min row, as in run_wave
+        self._write_frontier(_merge_frontier(
+            cur.select(*FRONTIER_COLS).unionByName(
+                fresh.select(*FRONTIER_COLS))))
 
     def _write_frontier(self, frontier: DataFrame) -> None:
         """Commit the frontier with its row count (the next wave's n_ready)."""
@@ -334,21 +337,9 @@ class CrawlEngine:
                 discovered, "u", depth=F.col("_pd") + 1, wave_id=wave_id + 1
             )
             next_frontier = next_frontier.unionByName(disc_frontier)
-        # deterministic cross-source dedup: a URL that is BOTH deferred and
-        # freshly discovered keeps the shallowest (priority, wave_id,
-        # url_canon) row — dropDuplicates would pick an arbitrary one and
-        # break bit-exact resume/oracle comparisons
-        others = [c for c in FRONTIER_COLS if c != "url_hash"]
-        next_frontier = (
-            next_frontier.groupBy("url_hash")
-            .agg(F.min_by(
-                F.struct(*others),
-                F.struct("priority", "wave_id", "url_canon"),
-            ).alias("_r"))
-            .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in others])
-            .select(*FRONTIER_COLS)
-        )
-        self._write_frontier(next_frontier)
+        # a URL that is BOTH deferred and freshly discovered keeps the
+        # shallowest row
+        self._write_frontier(_merge_frontier(next_frontier))
 
         stats = self._commit_lineage(wave_id, counts, t0)
         # lineage row committed = wave durable; staging served its purpose

@@ -1,15 +1,16 @@
 """WARC archive IO — the crawl-tier sink/source pair (Common Crawl's
 interchange format, ISO 28500).
 
-* :func:`write_warc` — distributed archive writer: records are
-  hash-assigned to WARC files, each file's rows land in one partition
-  (repartition on the file key) pre-sorted in CDX order, and the Arrow
-  stage streams them to ``<file>.warc[.gz]`` on the executor while
-  emitting the CDX index rows (surt, offset, length, digest) for the
-  bytes it ACTUALLY wrote — index and archive cannot drift because they
-  are produced by the same pass.  ``.gz`` files use one gzip member per
-  record (the WARC-spec record-at-time compression), so a CDX offset is
-  directly seekable.
+* :func:`write_warc` — distributed archive writer: the record of ``url``
+  goes to file ``part-<pmod(hash(url), n_files)>``, the partition
+  ``repartition(n_files, "url")`` sends it to, so task i writes file i.
+  Rows are pre-sorted in CDX order and the Arrow stage streams them to
+  ``<file>.warc[.gz]`` on the executor while emitting the CDX index rows
+  (surt, offset, length, digest) for the bytes it ACTUALLY wrote — index
+  and archive cannot drift because they are produced by the same pass.
+  ``.gz`` files use one gzip member per record (the WARC-spec
+  record-at-time compression), so a CDX offset is directly seekable.
+  WET/WAT derivation and :func:`compact_warc` share that layout and loop.
 * :func:`read_warc` — archive source: ``binaryFile`` scan (one task per
   WARC file — exactly how Common Crawl jobs parallelize) + an Arrow
   stage running a clean-room ISO 28500 parser (header block,
@@ -28,7 +29,6 @@ the swap atomic).
 
 from __future__ import annotations
 
-import gzip
 import os
 import zlib
 from typing import Iterator
@@ -36,22 +36,22 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from httpz_spark.functions.hashing import hash_partition_remap
 from httpz_spark.functions.warcx import (mark_revisits, surt_key,
                                          warc_conversion_record,
                                          warc_metadata_record, warc_record,
                                          warc_record_auto)
-
-# direct-routing cap: the murmur-inverse lookup rides the plan as an
-# n_files-element literal array; past this it degrades the plan more than
-# the saved sampling job is worth and range partitioning takes over
-_REMAP_MAX = 4096
 
 CDX_SCHEMA = (
     "surt string, url string, date string, status int, mime string, "
     "digest string, warc_file string, offset long, length long, "
     "record_length long"
 )
+_CDX_COLS = [f.split()[0] for f in CDX_SCHEMA.split(",")]
+#: pyarrow types of the CDX_SCHEMA columns, in order
+_CDX_ARROW = ["string", "string", "string", "int32", "string", "string",
+              "string", "int64", "int64", "int64"]
+#: the CDX columns a writer's input carries through the exchange
+_CDX_KEYS = _CDX_COLS[:6]
 
 READ_SCHEMA = (
     "warc_file string, offset long, record_id string, warc_type string, "
@@ -77,37 +77,11 @@ def _gzip_member(raw: bytes, level: int = 6) -> bytes:
     retried task rewrites byte-identical files, preserving the
     exactly-once os.replace contract."""
     import struct
-    import zlib
 
     co = zlib.compressobj(level, zlib.DEFLATED, -zlib.MAX_WBITS, 1, 0)
     return (_GZ_HDR + co.compress(raw) + co.flush()
             + struct.pack("<II", zlib.crc32(raw) & 0xFFFFFFFF,
                           len(raw) & 0xFFFFFFFF))
-
-
-def warc_file_assign(url_col, n_files: int, prefix: str = "part"):
-    """Deterministic file assignment: ``part-00007`` style, hash of the
-    url — partitioning-independent, so resume re-derives the same
-    layout."""
-    shard = F.pmod(F.xxhash64(url_col), F.lit(n_files))
-    return F.concat(F.lit(prefix + "-"), F.lpad(shard.cast("string"), 5, "0"))
-
-
-def _file_route(warc_file: Column, n_files: int) -> Column:
-    """LongType hash-partitioning key that sends file ``part-<i>`` to
-    partition ``i`` of a ``repartition(n_files, ...)``: the trailing index
-    of the name, looked up in the murmur-inverse table of
-    :func:`hash_partition_remap`.  The key must be LONG — the table is
-    solved against Spark's ``hashLong``, and an int key is hashed with
-    ``hashInt`` instead, scattering files across the wrong partitions.
-    A name without trailing digits hashes the name itself."""
-    remap = hash_partition_remap(n_files)
-    idx = F.regexp_extract(warc_file, "([0-9]+)$", 1)
-    idx = F.when(idx != "", idx.cast("long")).otherwise(
-        F.pmod(F.xxhash64(warc_file), F.lit(n_files)))
-    return F.element_at(
-        F.array(*[F.lit(int(v)) for v in remap]),
-        (F.pmod(idx, F.lit(n_files)) + 1).cast("int")).cast("long")
 
 
 def write_warc(df: DataFrame, path: str, n_files: int = 8,
@@ -141,7 +115,6 @@ def write_warc(df: DataFrame, path: str, n_files: int = 8,
         F.col(status_col).cast("int").alias("status"),
         F.col(content_type_col).alias("mime"),
         F.md5(F.coalesce(F.col(body_col), F.lit(b""))).alias("digest"),
-        warc_file_assign(F.col(url_col), n_files).alias("warc_file"),
         F.col(body_col).alias("_body"),
     )
     if revisits:
@@ -155,71 +128,71 @@ def write_warc(df: DataFrame, path: str, n_files: int = 8,
         record = warc_record(F.col("url"), F.col("date"), F.col("status"),
                              F.col("mime"), F.col("_body"))
         src_cols = ["_body"]
-    # expression form: the exchange moves the raw body, framing happens
-    # in the writer stage below the shuffle (see write_records)
-    rec = base.select("surt", "url", "date", "status", "mime", "digest",
-                      "warc_file", *src_cols)
+    rec = base.select(*_CDX_KEYS, *src_cols)
     return write_records(rec, path, n_files=n_files, compress=compress,
                          ext=ext, record=record)
 
 
 def write_records(rec: DataFrame, path: str, n_files: int,
-                  compress: bool, ext: str,
-                  record=None) -> DataFrame:
-    """Shared archive-writer tail: rows are co-located per file, laid
-    out in CDX order, and streamed to disk by one Arrow stage that emits
-    the index rows for the bytes it actually wrote.
+                  compress: bool, ext: str, record: Column) -> DataFrame:
+    """Archive-writer tail shared by WARC, WET and WAT: lays ``rec`` out
+    as :func:`_write_files` does (file ``part-<pmod(hash(url),
+    n_files)>`` + ``ext``, written by task ``pmod(hash(url), n_files)``)
+    and writes one record per row, gzip-membered when ``compress``.
 
     ``rec`` carries the CDX key columns (surt, url, date, status, mime,
-    digest, warc_file) plus EITHER pre-framed BINARY ``record`` bytes,
-    or — when the ``record`` column EXPRESSION is passed — the framing
-    expression's raw source columns.  The expression form frames AFTER
-    the per-file repartition, so the exchange moves the raw payload
-    instead of payload+headers-framed-again bytes (~30% fewer shuffle
-    bytes at WARC shapes: url/date/mime already ride the exchange as key
-    columns and the framed record duplicated all of them plus the
-    body).
+    digest) plus the raw source columns of the ``record`` framing
+    expression.  Framing runs below the exchange, so the exchange moves
+    the raw payload instead of payload+headers-framed-again bytes (~30%
+    fewer shuffle bytes at WARC shapes: url/date/mime already ride the
+    exchange as key columns and a framed record duplicates all of them
+    plus the body)."""
 
-    The one-file-per-task fast path (``n_files <= _REMAP_MAX``) assumes
-    ``warc_file`` names end in an index in ``0..n_files-1``, as
-    :func:`warc_file_assign` names them.  Other names are still written
-    correctly, only hash-balanced instead of one file per task."""
+    def framed(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for rb in batches:
+            # the record column stays in Arrow: per-row memoryview slices
+            # over the shared data buffer instead of to_pylist()'s
+            # per-record bytes copies (the column is the batch's bulk —
+            # ~250 MB per 500k records — and zlib/crc32 consume buffers)
+            rcol = rb.column("record")
+            width = 8 if pa.types.is_large_binary(rcol.type) else 4
+            offs = np.frombuffer(rcol.buffers()[1], dtype=f"int{width * 8}",
+                                 count=len(rcol) + 1,
+                                 offset=rcol.offset * width)
+            data = memoryview(rcol.buffers()[2])
+            raws = (data[offs[j]:offs[j + 1]] for j in range(rb.num_rows))
+            yield rb, ((_gzip_member(r) if compress else r, len(r))
+                       for r in raws)
+
+    return _write_files(rec, path, n_files, F.lit(ext), framed,
+                        record.alias("record"))
+
+
+def _write_files(rec: DataFrame, path: str, n_files: int, ext: Column,
+                 members, *payload) -> DataFrame:
+    """The one archive layout and the one loop that streams it to disk;
+    returns the CDX frame of the bytes written.
+
+    Row ``url`` goes to file ``part-<pmod(hash(url), n_files)>`` + ``ext``
+    and to partition ``pmod(hash(url), n_files)`` of the repartition on
+    ``url`` (Spark's hash partitioning is that pmod), so task i writes
+    file ``part-<i>`` (one per extension) and no other.  Within a task
+    rows are in the total order
+    (file, surt, url, date, digest): a retried task rewrites
+    byte-identical files.
+
+    ``payload`` (columns of ``rec`` or expressions over them) is projected
+    after the sort; ``members(batches)`` yields, per Arrow batch, the
+    batch and an iterable of (member bytes, record_length) per row."""
     os.makedirs(path, exist_ok=True)
-    keys = ["surt", "url", "date", "status", "mime", "digest", "warc_file"]
-    if record is None:
-        rec = rec.select(*keys, "record")
-    # all rows of one file in one partition, contiguous in CDX order;
-    # (date, digest) break ties when one URL has several captures
-    # (multi-epoch/revisit archives) so the layout is a TOTAL order —
-    # a retried/speculative task re-sorts identically and os.replace
-    # swaps in byte-identical files.  Routing: warc_file has EXACTLY
-    # n_files distinct values, so a naive pmod(hash(v), n_files) leaves
-    # ~1/e of tasks empty while piling 2-3 files onto others (the
-    # too-few-distinct-keys skew class), and repartitionByRange fixes
-    # the balance but runs a range-SAMPLING job that re-evaluates the
-    # whole upstream once more (payload digests, SURT keys — or an
-    # entire fetched wave when the caller's frame is lazy).  Instead the
-    # file index (the digits warc_file_assign puts in the name) is
-    # remapped through a driver-solved murmur-inverse table so a plain
-    # hash repartition sends file i to partition i exactly: one-task-per
-    # -file balance, ZERO extra jobs.  File CONTENT is placement-
-    # independent (equal keys stay co-located and the per-file byte
-    # layout comes from the total sort order), so a non-standard
-    # warc_file name — no trailing digits (hashed), an index beyond
-    # n_files (wrapped modulo n_files) — is still correct, just
-    # hash-balanced.  Beyond _REMAP_MAX files the literal lookup array
-    # stops being a sane expression and range partitioning returns.
-    if n_files <= _REMAP_MAX:
-        rec = rec.repartition(
-            n_files, _file_route(F.col("warc_file"), n_files).alias("_route"))
-    else:
-        rec = rec.repartitionByRange(n_files, "warc_file")
-    rec = rec.sortWithinPartitions("warc_file", "surt", "url", "date",
-                                   "digest")
-    if record is not None:
-        # map-side framing below the exchange's consumer: a projection
-        # preserves the sort order and partitioning established above
-        rec = rec.select(*keys, record.alias("record"))
+    part = F.format_string("part-%05d", F.pmod(F.hash("url"), F.lit(n_files)))
+    rec = (rec.repartition(n_files, "url")
+           .withColumn("warc_file", F.concat(part, ext))
+           .sortWithinPartitions("warc_file", "surt", "url", "date", "digest")
+           .select(*_CDX_KEYS, "warc_file", *payload))
 
     def _write(batches):
         import pyarrow as pa
@@ -232,63 +205,35 @@ def write_records(rec: DataFrame, path: str, n_files: int,
         # rewrite is byte-identical by the total sort order)
         tc = TaskContext.get()
         tmp_sfx = f".inprogress-{tc.taskAttemptId()}" if tc else ".inprogress"
-        cur_name, cur_f, out_rows = None, None, []
+        cur_name, cur_f = None, None
+        cdx = {c: [] for c in _CDX_COLS}
 
         def flush():
-            if cur_name is None:
-                return
-            cur_f.close()
-            final = os.path.join(path, cur_name + ext)
-            os.replace(final + tmp_sfx, final)
+            if cur_name is not None:
+                cur_f.close()
+                final = os.path.join(path, cur_name)
+                os.replace(final + tmp_sfx, final)
 
-        for rb in batches:
-            cols = {n: rb.column(i).to_pylist()
-                    for i, n in enumerate(rb.schema.names)
-                    if n != "record"}
-            # the record column stays in Arrow: per-row memoryview slices
-            # over the shared data buffer instead of to_pylist()'s
-            # per-record bytes copies (the column is the batch's bulk —
-            # ~250 MB per 500k records — and zlib/crc32 consume buffers)
-            rcol = rb.column(rb.schema.names.index("record"))
-            width = 8 if pa.types.is_large_binary(rcol.type) else 4
-            dtype = "int64" if width == 8 else "int32"
-            import numpy as np
-
-            offs = np.frombuffer(rcol.buffers()[1], dtype=dtype,
-                                 count=len(rcol) + 1,
-                                 offset=rcol.offset * width)
-            rdata = memoryview(rcol.buffers()[2])
-            for j in range(rb.num_rows):
-                name = cols["warc_file"][j]
+        for rb, rows in members(batches):
+            for k in _CDX_KEYS:
+                cdx[k] += rb.column(k).to_pylist()
+            names = rb.column("warc_file").to_pylist()
+            for name, (member, record_length) in zip(names, rows):
                 if name != cur_name:
                     flush()
                     cur_name = name
                     # stream records straight to the temp file — executor
                     # memory stays O(record), never O(archive file)
-                    cur_f = open(os.path.join(path, name + ext)
-                                 + tmp_sfx, "wb")
-                raw = rdata[offs[j]:offs[j + 1]]
-                offset = cur_f.tell()
-                if compress:
-                    cur_f.write(_gzip_member(raw))
-                else:
-                    cur_f.write(raw)
-                out_rows.append((
-                    cols["surt"][j], cols["url"][j], cols["date"][j],
-                    cols["status"][j], cols["mime"][j], cols["digest"][j],
-                    name + ext, offset, cur_f.tell() - offset, len(raw),
-                ))
+                    cur_f = open(os.path.join(path, name) + tmp_sfx, "wb")
+                cdx["offset"].append(cur_f.tell())
+                cur_f.write(member)
+                cdx["length"].append(len(member))
+                cdx["record_length"].append(record_length)
+            cdx["warc_file"] += names
         flush()
-        if out_rows:
-            names = [f.strip().split(" ")[0]
-                     for f in CDX_SCHEMA.split(",")]
-            arrays = list(zip(*out_rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, type=t) for a, t in zip(arrays, [
-                    pa.string(), pa.string(), pa.string(), pa.int32(),
-                    pa.string(), pa.string(), pa.string(), pa.int64(),
-                    pa.int64(), pa.int64()])],
-                names=names)
+        if cdx["url"]:
+            yield pa.RecordBatch.from_pydict(cdx, schema=pa.schema(
+                [(c, getattr(pa, t)()) for c, t in zip(_CDX_COLS, _CDX_ARROW)]))
 
     return rec.mapInArrow(_write, CDX_SCHEMA)
 
@@ -393,12 +338,10 @@ def write_wet(records: DataFrame, path: str, n_files: int = 8,
         surt_key(F.col("url")).alias("surt"), "url", "date",
         F.lit(None).cast("int").alias("status"),
         F.lit("text/plain").alias("mime"),
-        F.md5(F.encode(F.col("text"), "UTF-8")).alias("digest"),
-        warc_file_assign(F.col("url"), n_files).alias("warc_file"),
-        warc_conversion_record(F.col("url"), F.col("date"),
-                               F.col("text")).alias("record"))
+        F.md5(F.encode(F.col("text"), "UTF-8")).alias("digest"), "text")
     return write_records(rec, path, n_files=n_files, compress=compress,
-                         ext=ext)
+                         ext=ext, record=warc_conversion_record(
+                             F.col("url"), F.col("date"), F.col("text")))
 
 
 WAT_STAGE_SCHEMA = "url string, date string, meta string"
@@ -479,12 +422,10 @@ def write_wat(records: DataFrame, path: str, n_files: int = 8,
         surt_key(F.col("url")).alias("surt"), "url", "date",
         F.lit(None).cast("int").alias("status"),
         F.lit("application/json").alias("mime"),
-        F.md5(F.encode(F.col("meta"), "UTF-8")).alias("digest"),
-        warc_file_assign(F.col("url"), n_files).alias("warc_file"),
-        warc_metadata_record(F.col("url"), F.col("date"),
-                             F.col("meta")).alias("record"))
+        F.md5(F.encode(F.col("meta"), "UTF-8")).alias("digest"), "meta")
     return write_records(rec, path, n_files=n_files, compress=compress,
-                         ext=ext)
+                         ext=ext, record=warc_metadata_record(
+                             F.col("url"), F.col("date"), F.col("meta")))
 
 
 def make_warc_batch_handler(path: str, n_files: int = 4,
@@ -537,101 +478,57 @@ def compact_warc(cdx: DataFrame, dst: str, n_files: int = 8) -> DataFrame:
     (offset, length) seek points — never decoded or re-framed — so
     record ids, digests, and byte content are preserved exactly, and
     gzip members remain individually seekable in the new files.  Rows
-    are co-located per destination file and laid out in CDX total order
-    (same keys as the writer), so compaction is deterministic: running
-    it twice produces byte-identical archives.  Returns the new CDX.
+    take the writer's layout (:func:`_write_files`: file
+    ``part-<pmod(hash(url), n_files)>``, written by that task, in CDX
+    total order), so compaction is deterministic: running it twice
+    produces byte-identical archives.  Returns the new CDX.
 
-    Scale shape: one shuffle keyed on the destination file; each task
+    Scale shape: one shuffle keyed on the url; each task
     streams O(record) bytes with an LRU of source file handles.  Source
     files must be reachable from executors (shared filesystem — the
     same requirement the writer already has)."""
-    os.makedirs(dst, exist_ok=True)
     # the destination EXTENSION is derived per row from its source file
-    # (".warc" + whatever follows — ".warc" or ".warc.gz") and rides the
-    # sort key: mixed-compression inputs land in distinct, correctly
-    # labeled destination files instead of being concatenated under the
-    # first row's extension (which read_warc would then mis-dispatch),
-    # and rows of one (file, ext) stay contiguous so the writer never
-    # reopens-and-truncates a destination it already flushed
-    ext_col = F.concat(
-        F.lit(".warc"), F.substring_index(F.col("src_path"), ".warc", -1)
-    )
-    rec = (cdx.select("surt", "url", "date", "status", "mime", "digest",
-                      "record_length", "src_path", "offset", "length",
-                      warc_file_assign(F.col("url"), n_files)
-                      .alias("new_file"),
-                      ext_col.alias("_ext"))
-              .repartition(n_files, "new_file")
-              .sortWithinPartitions("new_file", "_ext", "surt", "url",
-                                    "date", "digest"))
+    # (".warc" + whatever follows — ".warc" or ".warc.gz") and is part of
+    # the file name the layout sorts on: mixed-compression inputs land in
+    # distinct, correctly labeled destination files instead of being
+    # concatenated under the first row's extension (which read_warc would
+    # then mis-dispatch), and rows of one (file, ext) stay contiguous so
+    # the writer never reopens-and-truncates a destination it flushed
+    ext = F.concat(
+        F.lit(".warc"), F.substring_index(F.col("src_path"), ".warc", -1))
+    rec = cdx.select(*_CDX_KEYS, "record_length", "src_path", "offset",
+                     "length")
 
-    def _copy(batches):
+    def copied(batches):
         from collections import OrderedDict
 
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        tmp_sfx = f".inprogress-{tc.taskAttemptId()}" if tc else ".inprogress"
         handles: OrderedDict = OrderedDict()
 
-        def src(p):
+        def member(p, offset, length):
             # true LRU: refresh on access, evict the LEAST recently used
             # (dict.popitem() evicted the most recent, pinning 15 stale
             # handles forever and thrashing open/close past 16 sources)
-            h = handles.get(p)
-            if h is None:
+            f = handles.get(p)
+            if f is None:
                 if len(handles) >= 16:
                     handles.popitem(last=False)[1].close()
-                h = handles[p] = open(p, "rb")
+                f = handles[p] = open(p, "rb")
             else:
                 handles.move_to_end(p)
-            return h
+            f.seek(offset)
+            return f.read(length)
 
-        cur_name, cur_f, out_rows = None, None, []
+        try:
+            for rb in batches:
+                src = zip(*(rb.column(c).to_pylist() for c in (
+                    "src_path", "offset", "length", "record_length")))
+                yield rb, ((member(p, o, n), rl) for p, o, n, rl in src)
+        finally:
+            for f in handles.values():
+                f.close()
 
-        def flush():
-            if cur_name is None:
-                return
-            cur_f.close()
-            final = os.path.join(dst, cur_name)
-            os.replace(final + tmp_sfx, final)
-
-        for rb in batches:
-            cols = {n: rb.column(i).to_pylist()
-                    for i, n in enumerate(rb.schema.names)}
-            for j in range(rb.num_rows):
-                sp = cols["src_path"][j]
-                name = cols["new_file"][j] + cols["_ext"][j]
-                if name != cur_name:
-                    flush()
-                    cur_name = name
-                    cur_f = open(os.path.join(dst, name) + tmp_sfx,
-                                 "wb")
-                f = src(sp)
-                f.seek(cols["offset"][j])
-                member = f.read(cols["length"][j])
-                new_off = cur_f.tell()
-                cur_f.write(member)
-                out_rows.append((
-                    cols["surt"][j], cols["url"][j], cols["date"][j],
-                    cols["status"][j], cols["mime"][j], cols["digest"][j],
-                    name, new_off, len(member), cols["record_length"][j],
-                ))
-        flush()
-        for h in handles.values():
-            h.close()
-        if out_rows:
-            names = [f.strip().split(" ")[0] for f in CDX_SCHEMA.split(",")]
-            arrays = list(zip(*out_rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a, type=t) for a, t in zip(arrays, [
-                    pa.string(), pa.string(), pa.string(), pa.int32(),
-                    pa.string(), pa.string(), pa.string(), pa.int64(),
-                    pa.int64(), pa.int64()])],
-                names=names)
-
-    return rec.mapInArrow(_copy, CDX_SCHEMA)
+    return _write_files(rec, dst, n_files, ext, copied, "src_path", "offset",
+                        "length", "record_length")
 
 
 def fetch_record(path: str, warc_file: str, offset: int,

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from httpz_spark.plans.frontier import FRONTIER_COLS, CrawlEngine, urls_to_frontier
+from httpz_spark.plans.frontier import CrawlEngine
 from httpz_spark.storage import release_local_checkpoint
 
 
@@ -29,17 +29,11 @@ class StreamingSeedIngest:
         self.n_batches = 0
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink: canonicalize + hash the seeds and merge them
-        into the frontier (new-URL-wins is irrelevant — rows are identical
-        by construction, so the merge is a pure dedup)."""
-        store = self.engine.store
-        new = urls_to_frontier(batch_df, self.url_col, depth=0, wave_id=0)
-        cur = store.read("frontier")
-        if cur is not None:
-            new = cur.select(*FRONTIER_COLS).unionByName(new)
-        # already-crawled URLs re-submitted by the stream are dropped by the
-        # wave's seen anti-join; here we only dedup within the frontier
-        self.engine._write_frontier(new.dropDuplicates(["url_hash"]))
+        """foreachBatch sink: merge the batch's seeds into the frontier with
+        :meth:`CrawlEngine.add_seeds` — a URL already queued keeps the min
+        (priority, wave_id, url_canon) row; already-crawled URLs drop at
+        the wave's seen anti-join."""
+        self.engine.add_seeds(batch_df, self.url_col)
         self.n_batches += 1
 
     def start(self, seed_dir: str, checkpoint_dir: str, available_now: bool = True):

@@ -73,57 +73,18 @@ def test_vectorized_matches_scalar(vals):
             assert a.iloc[i] == b.iloc[i], repr(vals[i])
 
 
-def test_murmur3_32_hashlong_matches_spark_hash(spark):
-    # partition-routing bit-compat: the driver-side hashLong must equal
-    # F.hash(longCol) (Murmur3 x86_32, seed 42) — the archive writer's
-    # direct-routing remap is solved against exactly this function
-    from pyspark.sql import functions as F
-
-    from httpz_spark.functions.hashing import murmur3_32_hashlong
-
-    vals = (list(range(-3, 40)) + [10**9, 2**31 - 1, -(2**31), 2**62,
-                                   -(2**62), 123456789012345, -1])
-    rows = spark.createDataFrame([(v,) for v in vals], "v long").select(
-        "v", F.hash("v").alias("h")).collect()
-    for r in rows:
-        assert murmur3_32_hashlong(r["v"]) == r["h"], r["v"]
-
-
-def test_hash_partition_remap_routes_exactly(spark):
-    # remap[i] hash-partitions to partition i for every i — the
-    # one-task-per-file writer layout with no range-sampling job
-    from pyspark.sql import functions as F
-
-    from httpz_spark.functions.hashing import (hash_partition_remap,
-                                               murmur3_32_hashlong)
-
-    for n in (1, 2, 7, 64):
-        remap = hash_partition_remap(n)
-        assert len(set(remap)) == n
-        for i, v in enumerate(remap):
-            h = murmur3_32_hashlong(v)
-            assert ((h % n) + n) % n == i
-    n = 16
-    remap = hash_partition_remap(n)
-    df = spark.createDataFrame([(i, remap[i]) for i in range(n)],
-                               "i long, route long")
-    out = df.repartition(n, "route").select(
-        "i", F.spark_partition_id().alias("p")).collect()
-    assert all(r["i"] == r["p"] for r in out)
-
-
 def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
-    # the direct-routed writer must still produce n_files files, and its
-    # route must put exactly one file's rows in each task (no 1/e-empty
-    # hash skew, no range-sampling double evaluation)
+    # the writer's own output: no exchange follows its stage, so each CDX
+    # row's spark_partition_id() is the task that wrote it — file
+    # part-<i> must be written by task i = pmod(hash(url), n_files), and
+    # 4000 urls leave no file (task) empty
     import os
 
     from pyspark.sql import functions as F
 
-    from httpz_spark.sources.warc import _file_route, write_warc
+    from httpz_spark.sources.warc import write_warc
 
-    n, n_files = 4000, 16
-    src = spark.range(n).select(
+    src = spark.range(4000).select(
         F.concat(F.lit("https://h"), (F.col("id") % 97).cast("string"),
                  F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
         F.lit("2026-01-01T00:00:00Z").alias("date"),
@@ -131,21 +92,16 @@ def test_warc_writer_layout_one_file_per_task(spark, tmp_path):
         F.lit("text/html").alias("content_type"),
         F.encode(F.col("id").cast("string"), "UTF-8").alias("body"),
     )
-    out = str(tmp_path / "warc_remap")
-    cdx = write_warc(src, out, n_files=n_files).persist()
-    assert cdx.count() == n
-    files = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
-    assert len(files) == n_files
-    cdx.unpersist()
-    # placement: the writer's own route expression sends every row of
-    # file part-<i> to partition i (spark_partition_id is gone by CDX
-    # time, so check the repartition the writer runs directly)
     for n_files in (4, 16, 64):
-        names = spark.createDataFrame(
-            [(i, f"part-{i:05d}") for i in range(n_files) for _ in range(3)],
-            "i long, warc_file string")
-        placed = names.repartition(
-            n_files, _file_route(F.col("warc_file"), n_files)
-        ).select("i", F.spark_partition_id().alias("p")).collect()
-        wrong = sorted({r["i"] for r in placed if r["i"] != r["p"]})
-        assert not wrong, (n_files, wrong)
+        out = str(tmp_path / f"warc_{n_files}")
+        rows = write_warc(src, out, n_files=n_files).select(
+            "warc_file", F.spark_partition_id().alias("task"),
+            F.pmod(F.hash("url"), F.lit(n_files)).alias("h")).collect()
+        assert len(rows) == 4000
+        wrong = [r for r in rows
+                 if r["task"] != r["h"]
+                 or r["warc_file"] != f"part-{r['task']:05d}.warc.gz"]
+        assert not wrong, (n_files, wrong[:3])
+        assert len({r["task"] for r in rows}) == n_files
+        files = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
+        assert files == [f"part-{i:05d}.warc.gz" for i in range(n_files)]

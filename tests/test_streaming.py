@@ -70,6 +70,32 @@ def test_streaming_ingest_dedups_frontier(spark, world):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_streaming_ingest_merges_like_add_seeds(spark, world):
+    # a URL queued at depth 2 by discovery and re-sent by the stream keeps
+    # the min (priority, wave_id, url_canon) row — the depth-0 seed — for
+    # any partitioning of the micro-batch (a bare dropDuplicates keeps an
+    # arbitrary one)
+    from httpz_spark.plans.frontier import urls_to_frontier
+
+    x = "https://h1.test/img00000001"
+    others = [(f"https://h2.test/img{i:08d}",) for i in range(20)]
+    for parts in (1, 7):
+        base = tempfile.mkdtemp(prefix="httpz_stream3_")
+        try:
+            eng = make_engine(spark, world, os.path.join(base, "state"))
+            queued = spark.createDataFrame([(x,)], "value string")
+            eng._write_frontier(
+                urls_to_frontier(queued, "value", depth=2, wave_id=1))
+            batch = spark.createDataFrame([(x,)] + others, "value string")
+            StreamingSeedIngest(eng).ingest_batch(batch.repartition(parts), 0)
+            fr = eng.store.read("frontier")
+            row = fr.filter(F.col("url_canon") == x).collect()
+            assert [(r["depth"], r["wave_id"]) for r in row] == [(0, 0)], parts
+            assert fr.count() == 21
+        finally:
+            shutil.rmtree(base, ignore_errors=True)
+
+
 def test_crawl_rate_metrics_watermarked(spark, tmp_path):
     """Windowed crawl telemetry over a file stream: watermark present in
     the plan, per-(host, window) counts correct across micro-batches."""

@@ -164,11 +164,10 @@ def test_plain_offsets_match_expression_cumsum(spark, tmp_path):
            for r in io_cdx.collect()}
 
     from httpz_spark.functions.warcx import surt_key as sk
-    from httpz_spark.sources.warc import warc_file_assign
     expr = src.select(
         F.col("url"), sk(F.col("url")).alias("surt"),
-        F.concat(warc_file_assign(F.col("url"), 2),
-                 F.lit(".warc")).alias("warc_file"),
+        F.format_string("part-%05d.warc",
+                        F.pmod(F.hash("url"), F.lit(2))).alias("warc_file"),
         F.octet_length(warc_record(
             F.col("url"), F.col("date"), F.col("status"),
             F.col("content_type"), F.col("body"))).cast("long")
@@ -476,6 +475,8 @@ def test_multi_capture_layout_is_deterministic(spark, tmp_path):
     # archives — the retry/resume invariant under ties
     import hashlib
 
+    from httpz_spark.sources.warc import write_wat, write_wet
+
     src = _epochs(spark).drop("u", "epoch")
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     write_warc(src.repartition(1), a, n_files=2, revisits=True).collect()
@@ -485,6 +486,18 @@ def test_multi_capture_layout_is_deterministic(spark, tmp_path):
         return {f: hashlib.md5(open(os.path.join(p, f), "rb").read())
                 .hexdigest() for f in sorted(os.listdir(p))}
     assert digests(a) == digests(b)
+
+    # WET/WAT frame below their exchange too: derived archives of a
+    # repartitioned read are byte-identical
+    records = read_warc(spark, a).persist()
+    for derive in (write_wet, write_wat):
+        outs = []
+        for parts in (1, 13):
+            out = str(tmp_path / f"{derive.__name__}_{parts}")
+            derive(records.repartition(parts), out, n_files=2).collect()
+            outs.append(digests(out))
+        assert outs[0] == outs[1] and len(outs[0]) == 2, derive.__name__
+    records.unpersist()
 
 
 # ------------------------------------------------------------------- wat
@@ -752,6 +765,20 @@ def test_compact_warc_streaming_batches(spark, tmp_path):
 
     cdx = batch_cdx_with_paths(spark, arch)
     assert cdx.count() == 55
+
+    # placement: no exchange follows the copy stage, so each new CDX row's
+    # spark_partition_id() is the task that wrote its file — file
+    # part-<i> is written by task i = pmod(hash(url), n_files), no task idle
+    for n in (2, 4):
+        rows = compact_warc(cdx, str(tmp_path / f"placed{n}"), n_files=n) \
+            .select("warc_file", F.spark_partition_id().alias("task"),
+                    F.pmod(F.hash("url"), F.lit(n)).alias("h")).collect()
+        assert len(rows) == 55
+        wrong = [r for r in rows
+                 if r["task"] != r["h"]
+                 or r["warc_file"] != f"part-{r['task']:05d}.warc.gz"]
+        assert not wrong, (n, wrong[:3])
+        assert len({r["task"] for r in rows}) == n
 
     dst = str(tmp_path / "compacted")
     new_cdx = spark.createDataFrame(
