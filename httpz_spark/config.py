@@ -90,9 +90,9 @@ class EngineConfig:
                                      # invalidation vs O(seen) bloom rebuild)
     bloom_min_seen: int = 5_000_000  # build + probe the seen filter once the
                                      # seen table reaches this (measured: the
-                                     # plain JVM anti-join wins below ~10^7
-                                     # keys; the filter's value is avoiding
-                                     # seen-table scans when seen >> wave)
+                                     # plain anti-join is faster at every
+                                     # size up to 64M rows; the filter's
+                                     # anti-join still scans all of seen)
     include_payload: bool = True     # carry image payload columns into results
     trap_max_urls: int | None = None  # crawler-trap guard: cumulative
                                      # distinct fetched URLs per (host,

@@ -1,16 +1,19 @@
-"""The vectorized fetch stage — ``mapInPandas`` over Arrow batches.
+"""The vectorized fetch stages — ``mapInPandas`` over Arrow batches.
 
-This is the engine's replacement for the reference's asyncio scan loop
-(``/root/reference/httpz_scanner/scanner.py:206-379``): each executor task
-receives Arrow record batches of scheduled URLs (+ joined payload columns),
-runs the retry/fallback state machine per row, performs enrichment
-(title/body/favicon/TLS via the batched kernels), and emits result batches.
+The page fetch (:func:`make_fetch_stage`) replaces the reference's asyncio
+scan loop (``httpz_scanner/scanner.py:206-379``): each executor task
+receives Arrow batches of scheduled URLs (+ joined payload columns), runs
+the retry/fallback state machine per row, performs enrichment
+(title/body/favicon/TLS via the batched kernels), and emits result
+batches; batches carrying ``etag`` / ``last_modified`` are conditional
+revalidation waves.  The first-200 document fetch
+(:func:`make_document_fetch_stage`) serves robots.txt and sitemap fetches.
 
 Scale properties:
 
-* Parallelism = partitions × per-partition concurrency.  The per-row scan
-  state machine is sans-IO (a generator yielding fetch requests): with the
-  CPU-bound synthetic fabric rows run sequentially per task, while
+* Parallelism = partitions × per-partition concurrency.  Rows are sans-IO
+  generators run by the one row driver (``sources/transport.drive_rows``):
+  on the CPU-bound synthetic fabric rows run sequentially per task, while
   real-network transports exposing ``fetch_many`` drive ALL rows of the
   batch as interleaved coroutines under an asyncio semaphore
   (concurrent_limit in flight per task — scanner.py:430-440's analogue), so
@@ -20,20 +23,22 @@ Scale properties:
 * No driver round-trips: config + fabric rules travel in the closure;
   payload rows ride the batch (the sandbox substitute for the network).
 * Certs are parsed once per distinct DER per batch (hosts share certs).
-* ONE transport per task (not per batch or row), closed when the batch
-  iterator is exhausted: real transports own an event loop (and a session/
-  connector for aiohttp), so construction stays out of the hot loop and
-  nothing leaks on long-running tasks.  The record provider is a mutable
-  pointer swapped per row.
+* ONE transport per task (``sources/transport.drive_task``), closed when
+  the batch iterator ends or raises: real transports own an event loop
+  (and a session/connector for aiohttp), so construction stays out of the
+  hot loop and nothing leaks on long-running tasks.  The record provider
+  is a mutable pointer swapped per row.
 * Batch columns are unpacked once into python lists (``to_dict("records")``
   builds a dict per row and measured ~2× slower); output is assembled
   column-wise.
-* A UDF exception never kills the Spark task: every row is wrapped and
-  errors become taxonomy rows — scanner.py:409-414 (PROCESS) semantics.
+* A UDF exception never kills the Spark task: a row whose logic raised
+  becomes a containment row — scanner.py:409-414 (PROCESS) semantics.
 """
 
 from __future__ import annotations
 
+import os
+import re
 import urllib.parse
 from collections.abc import Iterator
 
@@ -44,8 +49,13 @@ from httpz_spark.functions.htmlx import parse_page
 from httpz_spark.functions.tlsx import parse_cert_der
 from httpz_spark.functions.ua import ua_for
 from httpz_spark.parity import refmodel as R
-from httpz_spark.sources.fabric import FabricConfig, FabricTransport, image_record
-from httpz_spark.sources.transport import drive_scan_sync
+from httpz_spark.sources.fabric import (
+    FabricConfig,
+    FabricTransport,
+    image_record,
+    page_image_id,
+)
+from httpz_spark.sources.transport import drive_rows, drive_task
 
 RESULT_COLUMNS = (
     "url string, status int, protocol string, "
@@ -289,6 +299,42 @@ class _BatchProvider:
         return image_record(image_id, self.cfg)
 
 
+def _open_transport(transport_factory, fabric_cfg: FabricConfig, provider=None):
+    """The task's transport: ``transport_factory(provider)`` when given
+    (the production seam), else the deterministic fabric."""
+    if transport_factory is not None:
+        return transport_factory(provider)
+    return FabricTransport(fabric_cfg, record_provider=provider)
+
+
+def _until_stopped(batches, stop_file: str):
+    """Pass batches through; raise before any batch once ``stop_file``
+    exists."""
+    for pdf in batches:
+        if os.path.exists(stop_file):
+            raise RuntimeError("cooperative stop requested")
+        yield pdf
+
+
+_VALIDATORS = (("etag", "If-None-Match"), ("last_modified", "If-Modified-Since"))
+
+
+def _row_headers(pdf: pd.DataFrame, custom_headers: dict | None) -> list:
+    """Per-row request headers: the custom headers, with a row's non-null
+    ``etag`` / ``last_modified`` (when the batch has those columns) merged
+    over them as ``If-None-Match`` / ``If-Modified-Since``."""
+    validators = [(header, pdf[col].tolist()) for col, header in _VALIDATORS
+                  if col in pdf.columns]
+    if not validators:
+        return [custom_headers] * len(pdf)
+    return [
+        {**(custom_headers or {}),
+         **{h: vals[i] for h, vals in validators if not pd.isna(vals[i])}}
+        or None
+        for i in range(len(pdf))
+    ]
+
+
 def make_fetch_stage(
     cfg: ScanConfig,
     fabric_cfg: FabricConfig,
@@ -304,6 +350,9 @@ def make_fetch_stage(
     ``lambda rp: AiohttpTransport(timeout_s=cfg.timeout)`` (the provider is
     fabric-specific and real transports ignore it).
 
+    A batch carrying ``etag`` / ``last_modified`` columns is a conditional
+    wave (:func:`httpz_spark.operators.revalidate.revalidate_plan`).
+
     ``stop_file``: cooperative-stop sentinel checked before EVERY Arrow
     batch; when present the task raises, aborting the staging job before
     its commit (the engine's drain semantics — plans/frontier.py)."""
@@ -311,122 +360,164 @@ def make_fetch_stage(
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cert_cache: dict = {}
         custom_headers = dict(cfg.custom_headers) if cfg.custom_headers else None
-        # ONE transport per task, shared across all Arrow batches and closed
-        # when the batch iterator is exhausted — real transports own an event
-        # loop (+ ClientSession/TCPConnector for aiohttp), so per-batch
-        # construction without close() leaked loops and FDs on long tasks
-        # (round-3 review finding; the transports' own docstrings promise
-        # "one instance per executor task").  Batch schemas are constant
-        # within a task, so the payload-provider decision made on the first
-        # non-empty batch holds for all of them.
-        transport = None
+        # batch schemas are constant within a task, so the payload-provider
+        # decision made on the first non-empty batch holds for all of them
         provider = None
 
-        try:
-            for pdf in batches:
-                if stop_file is not None:
-                    import os
+        def open_transport(pdf):
+            nonlocal provider
+            if "image_id" in pdf.columns and "caption" in pdf.columns:
+                provider = _BatchProvider(fabric_cfg)
+            return _open_transport(transport_factory, fabric_cfg, provider)
 
-                    if os.path.exists(stop_file):
-                        raise RuntimeError("cooperative stop requested")
-                n = len(pdf)
-                if n == 0:
-                    continue
-                cols = set(pdf.columns)
-                has_payload = "image_id" in cols and "caption" in cols
-                if transport is None:
-                    provider = _BatchProvider(fabric_cfg) if has_payload else None
-                    if transport_factory is not None:
-                        transport = transport_factory(provider)
-                    else:
-                        transport = FabricTransport(fabric_cfg, record_provider=provider)
-
-                # unpack columns ONCE (python lists beat per-row .loc/dict access)
-                targets = pdf["scan_target"].tolist()
-                ports = [None if pd.isna(p) else int(p) for p in pdf["port"].tolist()]
-                p1s = pdf["proto_first"].tolist()
-                p2s = pdf["proto_second"].tolist()
-                if has_payload:
-                    iids = pdf["image_id"].tolist()
-                    caps = pdf["caption"].tolist()
-                    ws = pdf["w"].tolist()
-                    hs = pdf["h"].tolist()
-                    fmts = pdf["fmt"].tolist()
-                    byts = pdf["bytes"].tolist() if "bytes" in cols else None
-                    phs = pdf["phash"].tolist() if "phash" in cols else None
-                    if "host" in cols and "path" in cols:
-                        # frontier rows resolve page-path image ids natively and
-                        # leave root/odd paths NULL — resolve those here (rare)
-                        # so the emitted image_id column is complete; their
-                        # payload record regenerates in-transport either way
-                        from httpz_spark.sources.fabric import page_image_id
-
-                        hosts = pdf["host"].tolist()
-                        paths = pdf["path"].tolist()
-                        fixed = False
-                        for i in range(n):
-                            if iids[i] is None and hosts[i] is not None:
-                                hp = hosts[i]
-                                bare = (
-                                    hp.rsplit(":", 1)[0]
-                                    if ":" in hp and hp.rsplit(":", 1)[1].isdigit()
-                                    else hp
-                                )
-                                iids[i] = page_image_id(
-                                    bare, paths[i] or "/", fabric_cfg
-                                )
-                                fixed = True
-                        if fixed and "image_id" in passthrough_cols:
-                            pdf = pdf.assign(image_id=iids)
-
-                if hasattr(transport, "fetch_many"):
-                    # batched-async seam: the transport drives ALL row state
-                    # machines concurrently (asyncio semaphore inside the task —
-                    # scanner.py:430-440's concurrent_limit analogue).  Such
-                    # transports talk to a real network and ignore the payload
-                    # provider; per-row containment comes back as exception
-                    # objects in the ordered result list.
-                    gens = [
-                        scan_row_gen(targets[i], ports[i], p1s[i], p2s[i],
-                                     cfg, cert_cache, custom_headers)
-                        for i in range(n)
-                    ]
-                    results = [
-                        _process_row(r) if isinstance(r, BaseException) else r
-                        for r in transport.fetch_many(gens)
-                    ]
-                else:
-                    results = []
-                    append = results.append
+        def fetch_batch(pdf, transport):
+            n = len(pdf)
+            cols = set(pdf.columns)
+            # unpack columns ONCE (python lists beat per-row .loc/dict access)
+            targets = pdf["scan_target"].tolist()
+            ports = [None if pd.isna(p) else int(p) for p in pdf["port"].tolist()]
+            p1s = pdf["proto_first"].tolist()
+            p2s = pdf["proto_second"].tolist()
+            headers = _row_headers(pdf, custom_headers)
+            if provider is not None:
+                iids = pdf["image_id"].tolist()
+                caps = pdf["caption"].tolist()
+                ws = pdf["w"].tolist()
+                hs = pdf["h"].tolist()
+                fmts = pdf["fmt"].tolist()
+                byts = pdf["bytes"].tolist() if "bytes" in cols else None
+                phs = pdf["phash"].tolist() if "phash" in cols else None
+                if "host" in cols and "path" in cols:
+                    # frontier rows resolve page-path image ids natively and
+                    # leave root/odd paths NULL — resolve those here (rare)
+                    # so the emitted image_id column is complete; their
+                    # payload record regenerates in-transport either way
+                    hosts = pdf["host"].tolist()
+                    paths = pdf["path"].tolist()
+                    fixed = False
                     for i in range(n):
-                        if has_payload and iids[i] is not None:
-                            provider.rec = {
-                                "image_id": iids[i],
-                                "bytes": byts[i] if byts is not None else None,
-                                "w": ws[i], "h": hs[i], "fmt": fmts[i],
-                                "caption": caps[i],
-                                "phash": phs[i] if phs is not None else None,
-                            }
-                        elif provider is not None:
-                            provider.rec = None
-                        try:
-                            result = drive_scan_sync(
-                                scan_row_gen(targets[i], ports[i], p1s[i], p2s[i],
-                                             cfg, cert_cache, custom_headers),
-                                transport,
+                        if iids[i] is None and hosts[i] is not None:
+                            hp = hosts[i]
+                            bare = (
+                                hp.rsplit(":", 1)[0]
+                                if ":" in hp and hp.rsplit(":", 1)[1].isdigit()
+                                else hp
                             )
-                        except Exception as e:  # containment — scanner.py:409-414
-                            result = _process_row(e)
-                        append(result)
+                            iids[i] = page_image_id(
+                                bare, paths[i] or "/", fabric_cfg
+                            )
+                            fixed = True
+                    if fixed and "image_id" in passthrough_cols:
+                        pdf = pdf.assign(image_id=iids)
 
-                # column-wise assembly: passthrough columns copy as whole arrays
-                # (row order is preserved 1:1), result columns gather per key
-                data = {c: pdf[c].values for c in passthrough_cols}
-                for key in _RESULT_KEYS:
-                    data[key] = [r[key] for r in results]
-                yield pd.DataFrame(data)
-        finally:
-            if transport is not None and hasattr(transport, "close"):
-                transport.close()
+            def row_gen(i):
+                # points the payload provider at this row's record before
+                # the row's first fetch; under fetch_many rows interleave,
+                # and an off-row image id regenerates its identical record
+                if provider is not None:
+                    provider.rec = None if iids[i] is None else {
+                        "image_id": iids[i],
+                        "bytes": byts[i] if byts is not None else None,
+                        "w": ws[i], "h": hs[i], "fmt": fmts[i],
+                        "caption": caps[i],
+                        "phash": phs[i] if phs is not None else None,
+                    }
+                return (yield from scan_row_gen(
+                    targets[i], ports[i], p1s[i], p2s[i],
+                    cfg, cert_cache, headers[i],
+                ))
+
+            results = [
+                _process_row(r) if isinstance(r, BaseException) else r
+                for r in drive_rows(transport, [row_gen(i) for i in range(n)])
+            ]
+            # column-wise assembly: passthrough columns copy as whole arrays
+            # (row order is preserved 1:1), result columns gather per key
+            data = {c: pdf[c].values for c in passthrough_cols}
+            for key in _RESULT_KEYS:
+                data[key] = [r[key] for r in results]
+            return pd.DataFrame(data)
+
+        if stop_file is not None:
+            batches = _until_stopped(batches, stop_file)
+        return drive_task(batches, open_transport, fetch_batch)
+
+    return fetch_batches
+
+
+# ---------------------------------------------------------------------------
+# first-200 document fetch (robots.txt, sitemaps)
+# ---------------------------------------------------------------------------
+
+DOCUMENT_COLUMNS = "fetch_status int, body string, error_type string"
+
+_URL_RE = re.compile(r"(?i)^(https?)://([^/?#]*)(.*)$")
+
+
+def document_row_gen(url: str, max_bytes: int):
+    """Sans-IO state machine for one document fetch: the URL's own scheme
+    first, the other second — any transport error OR any non-200 status
+    falls through (a cert-terminating frontend 404ing https must not mask
+    a plain-http document).  The first 200 body wins, capped at
+    ``max_bytes`` and decoded with the response charset (UTF-8 when the
+    label is unknown).  If no 200 arrives the FIRST status is reported; if
+    no response arrives, the LAST error.  A malformed URL is a PROCESS
+    row."""
+    m = _URL_RE.match(url) if isinstance(url, str) else None
+    if m is None:
+        return {"fetch_status": -1, "body": None, "error_type": "PROCESS"}
+    scheme, hostport, path = m.group(1).lower(), m.group(2), m.group(3) or "/"
+    first_status = None
+    last_error = None
+    for proto in (scheme, "http" if scheme == "https" else "https"):
+        resp, err = yield (f"{proto}://{hostport}{path}", proto, {
+            "attempt": 0, "follow_redirects": True, "max_redirects": 5,
+            "method": "GET", "request_headers": None,
+        })
+        if err is not None:
+            last_error = err.error_type
+        elif resp.status == 200:
+            raw = resp.body[:max_bytes]
+            try:
+                body = raw.decode(resp.charset or "utf-8", errors="replace")
+            except LookupError:  # unknown charset label
+                body = raw.decode("utf-8", errors="replace")
+            return {"fetch_status": 200, "body": body, "error_type": None}
+        elif first_status is None:
+            first_status = resp.status
+    if first_status is not None:
+        return {"fetch_status": first_status, "body": None, "error_type": None}
+    return {"fetch_status": -1, "body": None, "error_type": last_error}
+
+
+def make_document_fetch_stage(
+    fabric_cfg: FabricConfig,
+    url_col: str,
+    passthrough_cols: list,
+    max_bytes: int,
+    transport_factory=None,
+):
+    """mapInPandas function running :func:`document_row_gen` over
+    ``url_col``: output = ``passthrough_cols`` (copied verbatim) +
+    :data:`DOCUMENT_COLUMNS`.  A row whose logic raised is a PROCESS row."""
+
+    def fetch_batch(pdf, transport):
+        gens = [document_row_gen(u, max_bytes) for u in pdf[url_col].tolist()]
+        results = [
+            {"fetch_status": -1, "body": None, "error_type": "PROCESS"}
+            if isinstance(r, BaseException) else r
+            for r in drive_rows(transport, gens)
+        ]
+        data = {c: pdf[c].values for c in passthrough_cols}
+        for key in ("fetch_status", "body", "error_type"):
+            data[key] = [r[key] for r in results]
+        return pd.DataFrame(data)
+
+    def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return drive_task(
+            batches,
+            lambda pdf: _open_transport(transport_factory, fabric_cfg),
+            fetch_batch,
+        )
 
     return fetch_batches

@@ -7,20 +7,24 @@ Scale shape (the 10^10-frontier design):
   ``pmod(url_hash, P)`` partition, stored next to the state tables and
   OR-updated with each wave's *newly seen* keys only — the full seen table
   is never re-read or re-shipped after wave 0.
-* Probing partitions the (small) candidate side on pid so each task loads
-  exactly one bloom file; bloom-absent rows are **definitely unseen** and
-  bypass the exact check; bloom-maybe rows (true hits + ~1% FPs) flow into
-  a JVM ``left_anti`` join whose probe side has shrunk accordingly.
+* Probing partitions the candidate side on pid so each task loads exactly
+  one bloom file and tags every row ``maybe_seen``.  The exact check is ONE
+  JVM ``left_anti`` join on ``key match AND maybe_seen``: bloom-absent rows
+  (definitely unseen) can never match and pass through it, but every
+  candidate and every seen key still enter that join — the filter shrinks
+  neither of its sides.
 * OR-updates are idempotent, so a re-run wave (resume path) converges to
   the same index; missing/corrupt bloom files degrade to the plain
   anti-join (correctness never depends on the bloom).
 
 Correctness invariant (tested): output == plain left_anti(candidates, seen).
 
-Measured note (BENCH): below ~10^7 seen keys the plain JVM anti-join wins
-outright — the bloom path's value is avoiding seen-table scans when seen
-is orders of magnitude larger than the per-wave candidate set.  Engine
-callers pick via ``EngineConfig.bloom_min_seen``.
+Measured (BENCH/BASELINE.md): the filter path is SLOWER than the plain
+anti-join at every size measured — sample #9, 8M rows at ``local[8]``:
+plain 4.60 Mops/s, bloom 1.54, cuckoo 1.92; the round-7 64M ladder at
+``local[32]``: plain 11.46 Mops/s, bloom 4.01.  No measurement shows a
+crossover.  Engine callers switch to the filter once the seen table
+reaches ``EngineConfig.bloom_min_seen`` keys.
 
 Two interchangeable filter structures (``EngineConfig.seen_filter``):
 **BloomIndex** (smaller: 10 bits/key vs the cuckoo's ~19, idempotent OR
@@ -522,14 +526,15 @@ def dedup_unseen(
 ) -> DataFrame:
     """Rows of ``candidates`` whose key is NOT in ``seen`` — exact semantics.
 
-    Without an index this is the plain JVM ``left_anti`` (fastest below
-    ~10^7 seen keys, measured); with one (BloomIndex or CuckooIndex — same
-    probe contract), index-absent rows bypass the join and only maybe-seen
-    rows are re-checked exactly.
+    Without an index this is the plain JVM ``left_anti`` (the faster path
+    at every size measured, up to 64M rows — see the module docstring);
+    with one (BloomIndex or CuckooIndex — same probe contract) the
+    candidates are probed first and index-absent rows can never match in
+    the anti-join, though they, and every seen key, still enter it.
 
     Plan shape: ONE anti-join whose condition is ``key match AND
     maybe_seen`` — maybe_seen=False rows can never match, so they pass
-    through the same join (exact bypass semantics) without the
+    through the same join (exact semantics) without the
     union-of-two-branches form, which evaluated the probe stage TWICE
     (two full candidate scans + shuffles + Arrow probes; AQE does not
     reuse the exchange across union branches — measured 3.48→2.67 s at 4M

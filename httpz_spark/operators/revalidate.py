@@ -10,108 +10,25 @@ unchanged majority is exactly the traffic this removes; the reference
 scanner is one-shot and has no revalidation surface, so this is new
 engine capability, not a port.
 
-Spark shape: ONE ``mapInPandas`` stage per wave, the same sans-IO
-``scan_row_gen`` state machine as the crawl fetch (retry ladder, protocol
-fallback, UA rotation, error containment all inherited) with the per-row
-conditional headers merged over the config's custom headers.  Everything
-downstream of the stage — the ``not_modified`` flag and the refreshed
-validators for the seen-meta table — is native column work over the
-result map, so the wave stays at exactly one python stage.
+Spark shape: ONE ``mapInPandas`` stage per wave, and it IS the crawl's
+page fetch (:func:`~httpz_spark.operators.fetch.make_fetch_stage`): the
+candidate batch carries ``etag`` / ``last_modified`` columns, which that
+stage merges over the config's custom headers as ``If-None-Match`` /
+``If-Modified-Since`` (retry ladder, protocol fallback, UA rotation, error
+containment all shared).  Everything downstream of the stage — the
+``not_modified`` flag and the refreshed validators for the seen-meta table
+— is native column work over the result map, so the wave stays at exactly
+one python stage.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from httpz_spark.config import ScanConfig
-from httpz_spark.operators.fetch import (
-    _RESULT_KEYS,
-    _process_row,
-    fetch_output_schema,
-    scan_row_gen,
-)
-from httpz_spark.sources.fabric import FabricConfig, FabricTransport
-from httpz_spark.sources.transport import drive_scan_sync
-
-
-def make_revalidate_stage(
-    cfg: ScanConfig,
-    fabric_cfg: FabricConfig,
-    passthrough_cols: list,
-    transport_factory=None,
-):
-    """mapInPandas function for a conditional wave.  Input columns:
-    ``scan_target, port, proto_first, proto_second, etag, last_modified``
-    plus ``passthrough_cols`` (copied verbatim); output =
-    passthrough + the standard fetch RESULT_COLUMNS.  A row with NULL
-    validators degrades to an ordinary unconditional fetch."""
-
-    def reval_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cert_cache: dict = {}
-        base_headers = dict(cfg.custom_headers) if cfg.custom_headers else {}
-        transport = None
-        try:
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                if transport is None:
-                    if transport_factory is not None:
-                        transport = transport_factory(None)
-                    else:
-                        transport = FabricTransport(fabric_cfg)
-                targets = pdf["scan_target"].tolist()
-                ports = [None if pd.isna(p) else int(p)
-                         for p in pdf["port"].tolist()]
-                p1s = pdf["proto_first"].tolist()
-                p2s = pdf["proto_second"].tolist()
-                etags = pdf["etag"].tolist()
-                lms = pdf["last_modified"].tolist()
-
-                def row_headers(i: int) -> dict | None:
-                    hdrs = dict(base_headers)
-                    if etags[i] is not None and not pd.isna(etags[i]):
-                        hdrs["If-None-Match"] = etags[i]
-                    if lms[i] is not None and not pd.isna(lms[i]):
-                        hdrs["If-Modified-Since"] = lms[i]
-                    return hdrs or None
-
-                if hasattr(transport, "fetch_many"):
-                    gens = [
-                        scan_row_gen(targets[i], ports[i], p1s[i], p2s[i],
-                                     cfg, cert_cache, row_headers(i))
-                        for i in range(n)
-                    ]
-                    results = [
-                        _process_row(r) if isinstance(r, BaseException) else r
-                        for r in transport.fetch_many(gens)
-                    ]
-                else:
-                    results = []
-                    for i in range(n):
-                        try:
-                            results.append(drive_scan_sync(
-                                scan_row_gen(targets[i], ports[i], p1s[i],
-                                             p2s[i], cfg, cert_cache,
-                                             row_headers(i)),
-                                transport,
-                            ))
-                        except Exception as e:  # containment
-                            results.append(_process_row(e))
-
-                data = {c: pdf[c].values for c in passthrough_cols}
-                for key in _RESULT_KEYS:
-                    data[key] = [r[key] for r in results]
-                yield pd.DataFrame(data)
-        finally:
-            if transport is not None and hasattr(transport, "close"):
-                transport.close()
-
-    return reval_batches
+from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+from httpz_spark.sources.fabric import FabricConfig
 
 
 def revalidate_plan(
@@ -122,7 +39,8 @@ def revalidate_plan(
 ) -> DataFrame:
     """Conditional wave over ``candidates`` (``host, path, etag,
     last_modified`` — the recrawl output joined with the seen-meta
-    validators).  Adds the fetch result columns plus:
+    validators; a row with NULL validators is an ordinary unconditional
+    fetch).  Adds the fetch result columns plus:
 
     * ``not_modified`` — True iff the origin answered 304 (skip re-parse,
       keep the stored payload);
@@ -143,7 +61,7 @@ def revalidate_plan(
                    ("etag", "string"), ("last_modified", "string")]
     pass_names = [n for n, _t in passthrough]
     pass_schema = ", ".join(f"{n} {t}" for n, t in passthrough)
-    stage = make_revalidate_stage(
+    stage = make_fetch_stage(
         cfg, fabric_cfg, pass_names, transport_factory=transport_factory,
     )
     out = df.select(

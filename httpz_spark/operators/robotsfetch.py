@@ -3,17 +3,19 @@ the politeness table the wave planner consumes.
 
 The engine's politeness layer (``operators/politeness.py``) enforces a
 ``robots`` table of ``host, crawl_delay_ms, per_wave_budget, disallow``;
-until now that table was synthesized (``sources/synthetic.robots_df``).
+the synthetic table (``sources/synthetic.robots_df``) is the test stand-in.
 This module is the production builder: one fetch per DISTINCT host (a
-vanishing fraction of crawl traffic) through the same transport seam as
-the page fetch stage, then a fully-native parse
+vanishing fraction of crawl traffic) through the engine's first-200
+document fetch
+(:func:`~httpz_spark.operators.fetch.make_document_fetch_stage` over
+``https://<host>/robots.txt``, http fallback on any error or non-200,
+512 KiB cap), then a fully-native parse
 (:mod:`httpz_spark.functions.robotsx`).
 
-Scale shape: ``hosts.distinct()`` -> repartition -> one mapInPandas fetch
-stage (https with http fallback, batched-async when the transport exposes
-``fetch_many``) -> native parse projection.  No shuffle beyond the
-distinct; the result is broadcast-joined by the wave planner exactly like
-the synthetic table was.
+Scale shape: ``hosts.distinct()`` -> repartition -> the one document
+fetch stage -> native parse projection.  No shuffle beyond the distinct;
+the result is broadcast-joined by the wave planner exactly like the
+synthetic table was.
 
 Status semantics (documented subset): only a 200 body contributes rules;
 missing/4xx/5xx/unreachable hosts get the allow-all default row with
@@ -25,108 +27,32 @@ The reference scanner has no robots handling (north_rule-new surface).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from httpz_spark.functions.robotsx import robots_columns
-from httpz_spark.sources.fabric import FabricConfig, FabricTransport
-from httpz_spark.sources.transport import drive_scan_sync
+from httpz_spark.operators.fetch import DOCUMENT_COLUMNS, make_document_fetch_stage
+from httpz_spark.sources.fabric import FabricConfig
 
 MAX_ROBOTS_BYTES = 512 * 1024  # RFC 9309 requires parsers to accept >=500 KiB
 
 ROBOTS_FETCH_SCHEMA = "host string, fetch_status int, robots_txt string, error_type string"
 
 
-def _robots_row_gen(host: str):
-    """Sans-IO state machine for one host's robots fetch: https first,
-    http fallback on any transport error OR any non-200 https status (a
-    cert-terminating frontend 404ing https must not mask a plain-http
-    robots.txt; ADVICE r04).  The first 200 body wins; if neither
-    protocol yields 200, the FIRST response's status is reported (same
-    generator contract as ``scan_row_gen``, so both sync and
-    batched-async drivers apply)."""
-    first_status = None
-    last_error = None
-    for proto in ("https", "http"):
-        resp, err = yield (f"{proto}://{host}/robots.txt", proto, {
-            "attempt": 0, "follow_redirects": True, "max_redirects": 5,
-            "method": "GET", "request_headers": None,
-        })
-        if err is None:
-            if resp.status == 200:
-                raw = resp.body[:MAX_ROBOTS_BYTES]
-                body = raw.decode(resp.charset or "utf-8", errors="replace")
-                return {"fetch_status": 200, "robots_txt": body,
-                        "error_type": None}
-            if first_status is None:
-                first_status = resp.status
-        else:
-            last_error = err.error_type
-    if first_status is not None:
-        return {"fetch_status": first_status, "robots_txt": None,
-                "error_type": None}
-    return {"fetch_status": -1, "robots_txt": None, "error_type": last_error}
-
-
-def make_robots_fetch_stage(fabric_cfg: FabricConfig, transport_factory=None):
-    """mapInPandas stage: ``host`` in, ``ROBOTS_FETCH_SCHEMA`` out.  One
-    transport per task, closed on exhaustion (the fetch stage's lifecycle
-    contract)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = None
-        try:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if transport is None:
-                    if transport_factory is not None:
-                        transport = transport_factory(None)
-                    else:
-                        transport = FabricTransport(fabric_cfg)
-                hosts = pdf["host"].tolist()
-                gens = [_robots_row_gen(h) for h in hosts]
-                if hasattr(transport, "fetch_many"):
-                    raw = transport.fetch_many(gens)
-                    results = [
-                        {"fetch_status": -1, "robots_txt": None,
-                         "error_type": "PROCESS"}
-                        if isinstance(r, BaseException) else r
-                        for r in raw
-                    ]
-                else:
-                    results = []
-                    for g in gens:
-                        try:
-                            results.append(drive_scan_sync(g, transport))
-                        except Exception:
-                            results.append({"fetch_status": -1,
-                                            "robots_txt": None,
-                                            "error_type": "PROCESS"})
-                yield pd.DataFrame({
-                    "host": hosts,
-                    "fetch_status": [r["fetch_status"] for r in results],
-                    "robots_txt": [r["robots_txt"] for r in results],
-                    "error_type": [r["error_type"] for r in results],
-                })
-        finally:
-            if transport is not None and hasattr(transport, "close"):
-                transport.close()
-
-    return run
-
-
 def fetch_robots(hosts: DataFrame, fabric_cfg: FabricConfig,
                  host_col: str = "host", transport_factory=None,
                  partitions: int = 32) -> DataFrame:
     """One robots fetch per distinct host -> ``ROBOTS_FETCH_SCHEMA``."""
-    h = hosts.select(F.col(host_col).alias("host")).distinct()
-    return h.repartition(partitions).mapInPandas(
-        make_robots_fetch_stage(fabric_cfg, transport_factory),
-        schema=ROBOTS_FETCH_SCHEMA,
+    stage = make_document_fetch_stage(fabric_cfg, "robots_url", ["host"],
+                                      MAX_ROBOTS_BYTES, transport_factory)
+    return (
+        hosts.select(F.col(host_col).alias("host")).distinct()
+        .repartition(partitions)
+        .withColumn("robots_url",
+                    F.concat(F.lit("https://"), F.col("host"),
+                             F.lit("/robots.txt")))
+        .mapInPandas(stage, schema=f"host string, {DOCUMENT_COLUMNS}")
+        .withColumnRenamed("body", "robots_txt")
     )
 
 

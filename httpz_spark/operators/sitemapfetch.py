@@ -5,9 +5,10 @@ The reference scanner has no seed discovery at all (it is handed a flat
 domain list); production crawls at north_rule scale start from sitemaps —
 this module is that path, built on the same seams as the robots builder:
 
-* one fetch per DISTINCT (host, sitemap_url) through the transport seam
-  (https-first with http fallback, non-200 fallthrough, batched-async
-  when the transport exposes ``fetch_many``, one transport per task);
+* one fetch per DISTINCT (host, sitemap_url) through the engine's
+  first-200 document fetch
+  (:func:`~httpz_spark.operators.fetch.make_document_fetch_stage`: the
+  URL's own scheme first, the other on any error or non-200, 10 MiB cap);
 * a single level of ``<sitemapindex>`` recursion (the protocol forbids
   index-of-index nesting), as a SECOND fetch stage — two stages total,
   never a driver loop over hosts;
@@ -22,10 +23,6 @@ explode/filter; output is ``(host, loc)`` seed rows.
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,9 +33,9 @@ from httpz_spark.functions.sitemapx import (
     sitemap_is_index,
     sitemap_locs,
 )
+from httpz_spark.operators.fetch import make_document_fetch_stage
 from httpz_spark.operators.robotsfetch import fetch_robots
-from httpz_spark.sources.fabric import FabricConfig, FabricTransport
-from httpz_spark.sources.transport import drive_scan_sync
+from httpz_spark.sources.fabric import FabricConfig
 from httpz_spark.storage import release_local_checkpoint
 
 MAX_SITEMAP_BYTES = 10 * 1024 * 1024  # sitemaps.org caps documents at 50 MB
@@ -49,100 +46,19 @@ SITEMAP_FETCH_SCHEMA = (
     "error_type string"
 )
 
-_URL_RE = re.compile(r"(?i)^(https?)://([^/?#]*)(.*)$")
-
-
-def _sitemap_row_gen(url: str):
-    """Sans-IO state machine for one sitemap fetch: the URL's own scheme
-    first, the other as fallback; first 200 body wins; if neither is 200
-    the FIRST response's status is reported (same contract as
-    ``_robots_row_gen``, so both sync and batched-async drivers apply)."""
-    m = _URL_RE.match(url)
-    if m is None:
-        return {"fetch_status": -1, "body": None, "error_type": "PROCESS"}
-    scheme, hostport, path = m.group(1).lower(), m.group(2), m.group(3) or "/"
-    order = (scheme, "http" if scheme == "https" else "https")
-    first_status = None
-    last_error = None
-    for proto in order:
-        resp, err = yield (f"{proto}://{hostport}{path}", proto, {
-            "attempt": 0, "follow_redirects": True, "max_redirects": 5,
-            "method": "GET", "request_headers": None,
-        })
-        if err is None:
-            if resp.status == 200:
-                raw = resp.body[:MAX_SITEMAP_BYTES]
-                return {"fetch_status": 200,
-                        "body": raw.decode(resp.charset or "utf-8",
-                                           errors="replace"),
-                        "error_type": None}
-            if first_status is None:
-                first_status = resp.status
-        else:
-            last_error = err.error_type
-    if first_status is not None:
-        return {"fetch_status": first_status, "body": None,
-                "error_type": None}
-    return {"fetch_status": -1, "body": None, "error_type": last_error}
-
-
-def make_sitemap_fetch_stage(fabric_cfg: FabricConfig, transport_factory=None):
-    """mapInPandas stage: ``(host, sitemap_url)`` in,
-    ``SITEMAP_FETCH_SCHEMA`` out.  One transport per task, closed on
-    exhaustion (the fetch stage's lifecycle contract)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = None
-        try:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if transport is None:
-                    if transport_factory is not None:
-                        transport = transport_factory(None)
-                    else:
-                        transport = FabricTransport(fabric_cfg)
-                urls = pdf["sitemap_url"].tolist()
-                gens = [_sitemap_row_gen(u) for u in urls]
-                if hasattr(transport, "fetch_many"):
-                    raw = transport.fetch_many(gens)
-                    results = [
-                        {"fetch_status": -1, "body": None,
-                         "error_type": "PROCESS"}
-                        if isinstance(r, BaseException) else r
-                        for r in raw
-                    ]
-                else:
-                    results = []
-                    for g in gens:
-                        try:
-                            results.append(drive_scan_sync(g, transport))
-                        except Exception:
-                            results.append({"fetch_status": -1, "body": None,
-                                            "error_type": "PROCESS"})
-                yield pd.DataFrame({
-                    "host": pdf["host"].tolist(),
-                    "sitemap_url": urls,
-                    "fetch_status": [r["fetch_status"] for r in results],
-                    "body": [r["body"] for r in results],
-                    "error_type": [r["error_type"] for r in results],
-                })
-        finally:
-            if transport is not None and hasattr(transport, "close"):
-                transport.close()
-
-    return run
-
 
 def fetch_sitemap_urls(sm: DataFrame, fabric_cfg: FabricConfig,
                        transport_factory=None,
                        partitions: int = 32) -> DataFrame:
     """One fetch per distinct (host, sitemap_url) -> SITEMAP_FETCH_SCHEMA."""
+    stage = make_document_fetch_stage(
+        fabric_cfg, "sitemap_url", ["host", "sitemap_url"],
+        MAX_SITEMAP_BYTES, transport_factory,
+    )
     return (
         sm.select("host", "sitemap_url").distinct()
         .repartition(partitions)
-        .mapInPandas(make_sitemap_fetch_stage(fabric_cfg, transport_factory),
-                     schema=SITEMAP_FETCH_SCHEMA)
+        .mapInPandas(stage, schema=SITEMAP_FETCH_SCHEMA)
     )
 
 

@@ -1,20 +1,21 @@
-"""The transport seam — how the fetch stage talks to "the network".
+"""The transport seam — how every fetch stage talks to "the network".
 
-The fetch stage (:mod:`httpz_spark.operators.fetch`) is transport-agnostic:
-it consumes the :class:`Transport` protocol below.  Two implementations:
+The fetch stages (:mod:`httpz_spark.operators.fetch`: the page fetch, which
+also runs conditional revalidation waves, and the first-200 document fetch
+behind robots.txt and sitemap discovery) are transport-agnostic: each is
+a row generator plus an output projection, run by the ONE row driver
+below.  Three implementations of the :class:`Transport` contract:
 
 * :class:`httpz_spark.sources.fabric.FabricTransport` — the deterministic
-  synthetic web used for tests/parity/benchmarks in this sandbox.
-* :class:`AiohttpTransport` — a real-network adapter mirroring the
-  reference's aiohttp fetch (``/root/reference/httpz_scanner/scanner.py:
-  206-309``).  aiohttp is not installed in this container, so the class is
-  import-gated; its exception→taxonomy mapping (:func:`classify_exception`,
-  mirroring ``scanner.py:189-203``) is pure logic and fully unit-tested
-  against synthetic exception classes (tests/test_error_taxonomy.py).
-
+  synthetic web used for tests/parity/benchmarks (the default).
 * :class:`httpz_spark.sources.nettransport.AsyncioTransport` — a pure-stdlib
   real-network HTTP/1.1 client (asyncio + ssl) with live cert capture,
-  integration-tested in-container against a localhost TLS server.
+  integration-tested against a localhost TLS server.
+* :class:`AiohttpTransport` — a real-network adapter mirroring the
+  reference's aiohttp fetch (``scanner.py:206-309``).  Import-gated
+  (aiohttp is optional); its exception→taxonomy mapping
+  (:func:`classify_exception`, mirroring ``scanner.py:189-203``) is pure
+  logic, unit-tested against synthetic exception classes.
 
 Contract (duck-typed; all transports satisfy it):
 
@@ -23,28 +24,30 @@ request_headers) -> response`` where the response has ``.url .status
 .headers .body .cert_der .history .charset .latency_ms`` attributes, and
 failures raise :class:`TransportError` carrying the reference's error
 taxonomy (TIMEOUT / CERT / SSL / CONN / HTTP / UNKNOWN — transient-vs-
-fallback retry policy is the fetch stage's job, not the transport's).
+fallback retry policy is the row generator's job, not the transport's).
 
-Sans-IO scan driving
---------------------
+Sans-IO row driving
+-------------------
 
-The per-row scan state machine (retries, protocol fallback, favicon second
-fetch — :func:`httpz_spark.operators.fetch.scan_row_gen`) is a GENERATOR
-that yields ``(url, protocol, kwargs)`` fetch requests and receives
-``(response, transport_error)``; its StopIteration value is the result
-dict.  :func:`drive_scan_sync` runs one row to completion against a sync
-transport (the fabric path — zero behavior change), while
-:func:`drive_scans_concurrent` runs MANY rows as interleaved coroutines
-under an ``asyncio.Semaphore(concurrent_limit)`` — the in-task analogue of
-the reference's bounded task pool (scanner.py:430-440: ``len(tasks) <
-concurrent_limit`` + ``asyncio.wait(FIRST_COMPLETED)``).  Because both
-drivers execute the IDENTICAL state machine, results are equal by
-construction; only the I/O overlap differs.
+A row's fetch logic (retries, protocol fallback, favicon second fetch —
+:func:`httpz_spark.operators.fetch.scan_row_gen`; or the first-200
+document fetch) is a GENERATOR that yields ``(url, protocol, kwargs)``
+fetch requests and receives ``(response, transport_error)``; its
+StopIteration value is the row's result.
 
-A transport that exposes ``fetch_many(row_gens) -> ordered results`` opts
-into the concurrent driver (AiohttpTransport and AsyncioTransport do);
-per-row failures come back as exception objects in the result list (the
-fetch stage converts them to PROCESS taxonomy rows).
+:func:`drive_task` is the per-task loop of every ``mapInPandas`` fetch
+stage: it opens ONE transport on the task's first non-empty batch and
+closes it exactly once when the batch iterator ends or raises.
+:func:`drive_rows` runs one batch of row generators: a transport that
+exposes ``fetch_many(row_gens) -> ordered results`` (AiohttpTransport,
+AsyncioTransport) gets the whole batch and drives it as interleaved
+coroutines under an ``asyncio.Semaphore(concurrent_limit)``
+(:func:`drive_scans_concurrent` — the in-task analogue of scanner.py:
+430-440's bounded task pool); any other transport gets the rows one by
+one through :func:`drive_scan_sync`.  Both paths execute the IDENTICAL
+state machines, so results are equal by construction; only the I/O
+overlap differs.  On both paths a row whose own logic raised comes back
+as the exception object — the stage turns it into its containment row.
 """
 
 from __future__ import annotations
@@ -99,6 +102,44 @@ def drive_scan_sync(gen, transport):
             send = (transport.fetch(url, protocol, **kw), None)
         except TransportError as e:
             send = (None, e)
+
+
+def drive_rows(transport, gens) -> list:
+    """Ordered results for one batch of row generators: the transport's
+    ``fetch_many`` when it has one, else :func:`drive_scan_sync` row by row.
+    A row whose own logic raised comes back as the exception object (the
+    ``fetch_many`` contract) on both paths."""
+    if hasattr(transport, "fetch_many"):
+        return transport.fetch_many(gens)
+    results = []
+    for gen in gens:
+        try:
+            results.append(drive_scan_sync(gen, transport))
+        except Exception as e:  # containment happens in the stage
+            results.append(e)
+    return results
+
+
+def drive_task(batches, open_transport, fetch_batch):
+    """The per-task loop of every ``mapInPandas`` fetch stage.
+
+    ``open_transport(pdf)`` builds the task's ONE transport from its first
+    non-empty batch (real transports own an event loop and a connection
+    pool, so construction stays out of the batch loop); ``fetch_batch(pdf,
+    transport)`` turns each non-empty batch into its output frame, driving
+    the rows through :func:`drive_rows`.  The transport is closed exactly
+    once, when the batch iterator is exhausted or raises."""
+    transport = None
+    try:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            if transport is None:
+                transport = open_transport(pdf)
+            yield fetch_batch(pdf, transport)
+    finally:
+        if transport is not None and hasattr(transport, "close"):
+            transport.close()
 
 
 async def drive_scan_async(gen, fetch_async, sem):

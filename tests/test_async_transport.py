@@ -124,17 +124,48 @@ def test_row_logic_exception_surfaces_as_exception_object():
     assert not isinstance(out[2], BaseException)
 
 
+def _page_stage(factory):
+    from httpz_spark.operators.fetch import make_fetch_stage
+
+    return make_fetch_stage(ScanConfig.all_on(retries=0), WORLD, ["url_hash"],
+                            transport_factory=factory)
+
+
+def _document_stage(factory):
+    from httpz_spark.operators.fetch import make_document_fetch_stage
+
+    return make_document_fetch_stage(WORLD, "url", ["url_hash"], 1 << 20,
+                                     transport_factory=factory)
+
+
+def _page_batch(lo, hi):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"url_hash": range(lo, hi),
+         "scan_target": [f"h{i}.test" for i in range(lo, hi)],
+         "port": [None] * (hi - lo),
+         "proto_first": ["https"] * (hi - lo),
+         "proto_second": ["http"] * (hi - lo)}
+    )
+
+
+def _document_batch(lo, hi):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {"url_hash": range(lo, hi),
+         "url": [f"https://h{i}.test/robots.txt" for i in range(lo, hi)]}
+    )
+
+
 def test_fetch_stage_one_transport_per_task_and_closed():
     """Round-3 review finding: the stage built a transport per Arrow batch
     and never closed it — real transports leak an event loop (+ session)
     each time.  The stage function is a plain generator, so drive it
     directly with several batches: exactly ONE construction for the whole
-    task, close() exactly once, after the iterator is exhausted."""
-    import pandas as pd
-
-    from httpz_spark.operators.fetch import make_fetch_stage
-
-    cfg = ScanConfig.all_on(retries=0)
+    task, close() exactly once, after the iterator is exhausted.  Every
+    fetch stage runs the same task driver; both stages are checked."""
     events = []
 
     class RecordingTransport:
@@ -148,62 +179,40 @@ def test_fetch_stage_one_transport_per_task_and_closed():
         def close(self):
             events.append("close")
 
-    stage = make_fetch_stage(cfg, WORLD, ["url_hash"],
-                             transport_factory=lambda rp: RecordingTransport())
+    for make_stage, batch in ((_page_stage, _page_batch),
+                              (_document_stage, _document_batch)):
+        events.clear()
+        stage = make_stage(lambda rp: RecordingTransport())
+        outs = list(stage(iter([batch(0, 4), batch(4, 4), batch(4, 8),
+                                batch(8, 12)])))
+        assert len(outs) == 3 and sum(len(o) for o in outs) == 12
+        assert events == ["create", "close"], make_stage
 
-    def batch(lo, hi):
-        return pd.DataFrame(
-            {"url_hash": range(lo, hi),
-             "scan_target": [f"h{i}.test" for i in range(lo, hi)],
-             "port": [None] * (hi - lo),
-             "proto_first": ["https"] * (hi - lo),
-             "proto_second": ["http"] * (hi - lo)}
-        )
+        # close() runs even when a batch raises (e.g. the cooperative-stop
+        # path)
+        events.clear()
+        stage2 = make_stage(lambda rp: RecordingTransport())
 
-    outs = list(stage(iter([batch(0, 4), batch(4, 8), batch(8, 12)])))
-    assert len(outs) == 3 and sum(len(o) for o in outs) == 12
-    assert events == ["create", "close"]
+        def boom_batches():
+            yield batch(0, 2)
+            raise RuntimeError("mid-task failure")
 
-    # close() runs even when a batch raises (e.g. the cooperative-stop path)
-    events.clear()
-    stage2 = make_fetch_stage(cfg, WORLD, ["url_hash"],
-                              transport_factory=lambda rp: RecordingTransport())
-
-    def boom_batches():
-        yield batch(0, 2)
-        raise RuntimeError("mid-task failure")
-
-    it = stage2(boom_batches())
-    next(it)
-    try:
+        it = stage2(boom_batches())
         next(it)
-    except RuntimeError:
-        pass
-    it.close()
-    assert events == ["create", "close"]
+        try:
+            next(it)
+        except RuntimeError:
+            pass
+        it.close()
+        assert events == ["create", "close"], make_stage
 
 
-def test_fetch_stage_dispatches_to_fetch_many(spark):
-    """End-to-end through mapInPandas: a transport advertising fetch_many is
-    driven batched; the emitted rows equal the sequential fabric path's."""
-    import pandas as pd
+def _batched_factory(world):
+    """Transport factory whose transport only has ``fetch_many``: an async
+    facade over the fabric via the engine's own concurrent driver.
+    Self-contained, because executors can't import the test module."""
 
-    from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
-
-    rows = [
-        {"url_hash": i, "scan_target": f"h{i}.test", "port": None,
-         "proto_first": "https", "proto_second": "http"}
-        for i in range(24)
-    ]
-    sdf = spark.createDataFrame(pd.DataFrame(rows))
-    cfg = ScanConfig.all_on(retries=1)
-    schema = fetch_output_schema("url_hash long")
-
-    world = WORLD
-
-    def batched_factory(rp):
-        # self-contained (executors can't import the test module): async
-        # facade over the fabric via the engine's own concurrent driver
+    def factory(rp):
         import asyncio
 
         from httpz_spark.sources import fabric as FB2
@@ -227,9 +236,28 @@ def test_fetch_stage_dispatches_to_fetch_many(spark):
 
         return BatchedFake()
 
+    return factory
+
+
+def test_fetch_stage_dispatches_to_fetch_many(spark):
+    """End-to-end through mapInPandas: a transport advertising fetch_many is
+    driven batched; the emitted rows equal the sequential fabric path's."""
+    import pandas as pd
+
+    from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+
+    rows = [
+        {"url_hash": i, "scan_target": f"h{i}.test", "port": None,
+         "proto_first": "https", "proto_second": "http"}
+        for i in range(24)
+    ]
+    sdf = spark.createDataFrame(pd.DataFrame(rows))
+    cfg = ScanConfig.all_on(retries=1)
+    schema = fetch_output_schema("url_hash long")
+
     batched = sdf.mapInPandas(
         make_fetch_stage(cfg, WORLD, ["url_hash"],
-                         transport_factory=batched_factory),
+                         transport_factory=_batched_factory(WORLD)),
         schema=schema,
     ).toPandas().sort_values("url_hash").reset_index(drop=True)
     sequential = sdf.mapInPandas(
@@ -237,3 +265,34 @@ def test_fetch_stage_dispatches_to_fetch_many(spark):
         schema=schema,
     ).toPandas().sort_values("url_hash").reset_index(drop=True)
     pd.testing.assert_frame_equal(batched, sequential)
+
+
+def test_document_stage_dispatches_to_fetch_many(spark):
+    """The first-200 document stage runs the same row driver: batched rows
+    equal the sequential fabric path's, over hosts that answer 200, non-200
+    and transport errors (robots.txt and sitemap URLs)."""
+    import pandas as pd
+
+    from httpz_spark.operators.fetch import (
+        DOCUMENT_COLUMNS,
+        make_document_fetch_stage,
+    )
+
+    hosts = FB.all_hosts(WORLD)[:24]
+    urls = ([f"https://{h}/robots.txt" for h in hosts]
+            + [f"http://{h}/sitemap.xml" for h in hosts] + ["nonsense"])
+    sdf = spark.createDataFrame(
+        pd.DataFrame({"url_hash": range(len(urls)), "url": urls}))
+    schema = f"url_hash long, url string, {DOCUMENT_COLUMNS}"
+
+    def run(factory):
+        stage = make_document_fetch_stage(WORLD, "url", ["url_hash", "url"],
+                                          1 << 20, transport_factory=factory)
+        return (sdf.mapInPandas(stage, schema=schema).toPandas()
+                .sort_values("url_hash").reset_index(drop=True))
+
+    batched = run(_batched_factory(WORLD))
+    sequential = run(None)
+    pd.testing.assert_frame_equal(batched, sequential)
+    assert set(sequential["fetch_status"]) >= {200, -1}
+    assert (sequential["error_type"] == "PROCESS").sum() == 1

@@ -143,3 +143,69 @@ def test_revalidate_single_python_stage(spark):
     )
     assert plan.count("MapInPandas") == 1
     assert "BatchEvalPython" not in plan
+
+
+def _echo_factory():
+    """Factory of a fetch-only transport that records each request's
+    headers in the response headers.  Returned as a closure so it ships to
+    executors by value (they can't import the test module)."""
+
+    def factory(_rp):
+        from httpz_spark.sources.transport import Response
+
+        class EchoHeadersTransport:
+            def fetch(self, url, protocol, *, request_headers=None, **kw):
+                sent = dict(request_headers or {})
+                headers = {f"X-Sent-{k}": v for k, v in sent.items()}
+                headers["X-Sent"] = ",".join(sorted(sent))
+                status = 304 if "If-None-Match" in sent else 200
+                return Response(url=url, status=status, headers=headers,
+                                body=b"<title>t</title>", cert_der=None,
+                                history=[], charset="utf-8", latency_ms=1.0)
+
+        return EchoHeadersTransport()
+
+    return factory
+
+
+def test_revalidate_sends_row_validators_over_custom_headers(spark):
+    """The revalidation wave is the page fetch: a row's etag goes out as
+    If-None-Match, its last_modified as If-Modified-Since, both over the
+    config's custom headers; a row with NULL validators sends neither and
+    its result equals the same row run through make_fetch_stage."""
+    from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+
+    lm = "Wed, 01 Jan 2025 00:00:00 GMT"
+    cand = spark.createDataFrame(
+        [("h.test", "/a", '"e1"', None), ("h.test", "/b", None, lm),
+         ("h.test", "/c", None, None)],
+        "host string, path string, etag string, last_modified string")
+    cfg = ScanConfig(fetch_headers=True, fetch_title=True, retries=0,
+                     custom_headers=(("X-Custom", "1"),))
+    out = revalidate_plan(cand, cfg, WORLD, transport_factory=_echo_factory())
+    by = {r["path"]: r for r in out.collect()}
+
+    a, b, c = (by[p]["response_headers"] for p in ("/a", "/b", "/c"))
+    assert a["X-Sent-If-None-Match"] == '"e1"'
+    assert a["X-Sent"] == "If-None-Match,User-Agent,X-Custom"
+    assert by["/a"]["not_modified"]
+    assert b["X-Sent-If-Modified-Since"] == lm
+    assert b["X-Sent"] == "If-Modified-Since,User-Agent,X-Custom"
+    assert c["X-Sent"] == "User-Agent,X-Custom"
+    assert c["X-Sent-X-Custom"] == "1"
+
+    plain = (
+        cand.filter(F.col("path") == "/c").select("host", "path")
+        .withColumn("scan_target", F.concat("host", "path"))
+        .withColumn("port", F.lit(None).cast("int"))
+        .withColumn("proto_first", F.lit("https"))
+        .withColumn("proto_second", F.lit("http"))
+        .mapInPandas(
+            make_fetch_stage(cfg, WORLD, ["host", "path"],
+                             transport_factory=_echo_factory()),
+            schema=fetch_output_schema("host string, path string"))
+        .collect()
+    )
+    assert len(plain) == 1
+    got = by["/c"].asDict()
+    assert {k: got[k] for k in plain[0].asDict()} == plain[0].asDict()

@@ -16,7 +16,10 @@ from httpz_spark.functions.robotsx import (
     robots_pattern_regex,
     robots_rules,
 )
+from httpz_spark.operators.fetch import document_row_gen
 from httpz_spark.operators.robotsfetch import (
+    MAX_ROBOTS_BYTES,
+    ROBOTS_FETCH_SCHEMA,
     build_robots_table,
     fetch_robots,
     robots_from_texts,
@@ -296,7 +299,10 @@ def test_fetch_stage_contains_failures_per_row(spark):
     hosts = spark.createDataFrame(
         [(h,) for h in FB.all_hosts(WORLD)[:16]], "host string"
     )
-    fetched = fetch_robots(hosts, WORLD, partitions=2).collect()
+    fetched_df = fetch_robots(hosts, WORLD, partitions=2)
+    assert fetched_df.schema == spark.createDataFrame(
+        [], ROBOTS_FETCH_SCHEMA).schema
+    fetched = fetched_df.collect()
     assert len(fetched) == 16
     for r in fetched:
         if r["fetch_status"] == -1:
@@ -304,33 +310,36 @@ def test_fetch_stage_contains_failures_per_row(spark):
             assert r["robots_txt"] is None
 
 
+class _Resp:
+    def __init__(self, status, body=b"", charset="utf-8"):
+        self.status, self.body, self.charset = status, body, charset
+
+
+def _drive_robots(responses):
+    """Run the document generator over h.test's robots URL, answering each
+    request from ``responses[protocol]``."""
+    g = document_row_gen("https://h.test/robots.txt", MAX_ROBOTS_BYTES)
+    req = g.send(None)
+    try:
+        while True:
+            url = req[0]
+            proto = "https" if url.startswith("https:") else "http"
+            req = g.send(responses[proto])
+    except StopIteration as s:
+        return s.value
+
+
 def test_https_non200_falls_through_to_http():
     """ADVICE r04: an https 404 (e.g. cert-terminating frontend) must not
     mask a plain-http robots.txt — drive the generator directly."""
-    from httpz_spark.operators.robotsfetch import _robots_row_gen
-
-    class _Resp:
-        def __init__(self, status, body=b"", charset="utf-8"):
-            self.status, self.body, self.charset = status, body, charset
-
-    def drive(responses):
-        g = _robots_row_gen("h.test")
-        req = g.send(None)
-        try:
-            while True:
-                url = req[0]
-                proto = "https" if url.startswith("https:") else "http"
-                req = g.send(responses[proto])
-        except StopIteration as s:
-            return s.value
-
     body = b"User-agent: *\nDisallow: /r/\n"
     # https 404, http 200 -> the http body wins
-    out = drive({"https": (_Resp(404), None), "http": (_Resp(200, body), None)})
+    out = _drive_robots({"https": (_Resp(404), None),
+                         "http": (_Resp(200, body), None)})
     assert out == {"fetch_status": 200,
-                   "robots_txt": body.decode(), "error_type": None}
+                   "body": body.decode(), "error_type": None}
     # https 200 -> returns immediately (http never attempted)
-    g = _robots_row_gen("h.test")
+    g = document_row_gen("https://h.test/robots.txt", MAX_ROBOTS_BYTES)
     req = g.send(None)
     assert req[0].startswith("https://")
     try:
@@ -339,9 +348,47 @@ def test_https_non200_falls_through_to_http():
     except StopIteration as s:
         assert s.value["fetch_status"] == 200
     # neither is 200 -> FIRST response's status reported, no error
-    out = drive({"https": (_Resp(404), None), "http": (_Resp(500), None)})
-    assert out == {"fetch_status": 404, "robots_txt": None,
+    out = _drive_robots({"https": (_Resp(404), None),
+                         "http": (_Resp(500), None)})
+    assert out == {"fetch_status": 404, "body": None,
                    "error_type": None}
+
+
+_BOGUS_BODY = "User-agent: *\nDisallow: /café/\n".encode()
+
+
+def test_document_gen_unknown_charset_falls_back_to_utf8():
+    """A 200 served with an unknown charset label decodes as UTF-8 (the
+    page fetch's fallback) instead of raising LookupError, which turned
+    the host into a PROCESS row with the allow-all default."""
+    out = _drive_robots({"https": (_Resp(200, _BOGUS_BODY, "x-bogus"), None),
+                         "http": (_Resp(404), None)})
+    assert out == {"fetch_status": 200, "body": _BOGUS_BODY.decode("utf-8"),
+                   "error_type": None}
+
+
+def test_robots_table_keeps_rules_under_unknown_charset(spark):
+    """End to end: a fetch-only transport serving robots.txt with
+    ``charset="x-bogus"`` still yields the host's Disallow rule."""
+    body = _BOGUS_BODY
+
+    def factory(_rp):
+        from httpz_spark.sources.transport import Response
+
+        class BogusCharsetTransport:
+            def fetch(self, url, protocol, **kw):
+                return Response(url=url, status=200, headers={}, body=body,
+                                cert_der=None, history=[],
+                                charset="x-bogus", latency_ms=1.0)
+
+        return BogusCharsetTransport()
+
+    hosts = spark.createDataFrame([("h.test",)], "host string")
+    rows = build_robots_table(hosts, WORLD, transport_factory=factory,
+                              partitions=2).collect()
+    assert len(rows) == 1
+    assert rows[0]["fetch_status"] == 200
+    assert list(rows[0]["disallow"]) == ["/café/"]
 
 
 def test_parse_projection_is_native(spark):

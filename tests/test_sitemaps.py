@@ -13,8 +13,9 @@ from httpz_spark.functions.sitemapx import (
     sitemap_is_index,
     sitemap_locs,
 )
+from httpz_spark.operators.fetch import document_row_gen
 from httpz_spark.operators.sitemapfetch import (
-    _sitemap_row_gen,
+    MAX_SITEMAP_BYTES,
     sitemap_seed_frame,
 )
 from httpz_spark.sources import fabric as FB
@@ -72,13 +73,14 @@ def test_loc_host_scope_rule(spark):
 
 
 def test_sitemap_gen_scheme_order_and_fallback():
-    """The generator tries the URL's own scheme first, the other second;
-    non-200 falls through, first 200 wins (same contract as robots)."""
+    """The document generator tries the URL's own scheme first, the other
+    second; non-200 falls through, first 200 wins (the robots fetch runs
+    the same generator)."""
     class _Resp:
         def __init__(self, status, body=b"", charset="utf-8"):
             self.status, self.body, self.charset = status, body, charset
 
-    g = _sitemap_row_gen("http://h.test/sitemap.xml")
+    g = document_row_gen("http://h.test/sitemap.xml", MAX_SITEMAP_BYTES)
     req = g.send(None)
     assert req[0].startswith("http://") and req[1] == "http"
     req = g.send((_Resp(404), None))
@@ -90,7 +92,7 @@ def test_sitemap_gen_scheme_order_and_fallback():
         assert s.value == {"fetch_status": 200, "body": "<urlset/>",
                            "error_type": None}
     # malformed URL -> contained PROCESS row, not an exception
-    g = _sitemap_row_gen("nonsense")
+    g = document_row_gen("nonsense", MAX_SITEMAP_BYTES)
     try:
         g.send(None)
         raise AssertionError("must stop immediately")
