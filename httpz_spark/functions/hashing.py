@@ -132,19 +132,6 @@ def hash64_str_batch(s: pd.Series, seed: int = 0) -> pd.Series:
     return pd.Series(out, dtype="Int64")
 
 
-def favicon_hash_batch(s: pd.Series) -> pd.Series:
-    """Reference favicon-hash semantics (``parsers.py:247-250``):
-    empty/None content -> None; hash value 0 -> None; else str(signed int64)."""
-    out = []
-    for v in s:
-        if v is None or len(v) == 0:
-            out.append(None)
-            continue
-        h = hash64_low(bytes(v))
-        out.append(str(h) if h != 0 else None)
-    return pd.Series(out, dtype="object")
-
-
 def smhasher_verification(hashbytes: int = 16) -> int:
     """SMHasher VerificationTest for MurmurHash3_x64_128.
 

@@ -11,8 +11,11 @@ Four families, each chosen for a different scale/recall trade-off:
   pairs come from an equi self-join on the bucket — no pairwise n² work.
 * :func:`simhash64` — 64-bit SimHash via per-bit vote aggregation (native
   bit ops, no UDF); near-dups = band-equal + hamming<=k verify.
-* :func:`ngram_jaccard_pairs` — exact word-k-gram Jaccard via explode +
-  equi-join + count ratio; doubles as the verifier for MinHash candidates.
+* :func:`ngram_jaccard_pairs` / :func:`winnow_dup_pairs` — word-k-gram
+  Jaccard and shared winnowing fingerprints.  Both draw candidates from
+  one counter (:func:`_rare_pair_counts`: df-capped equi self-join on the
+  token, counted per pair); ngram and MinHash share one exact verify
+  (:func:`verify_jaccard`: per-doc token arrays, native intersection).
 
 All operators shuffle only on equi-keys (shingle / bucket / pair), so they
 survive 100× scale-up with partitions scaled accordingly.
@@ -24,6 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from httpz_spark.functions.text import normalize_ws_ascii
+from httpz_spark.operators.textstats import winnow_fingerprints
 from httpz_spark.storage import release_local_checkpoint
 
 # deterministic universal-hash parameters (Carter-Wegman over a Mersenne
@@ -85,29 +89,40 @@ def word_shingles(docs: DataFrame, text_col: str, id_col: str, k: int = 3) -> Da
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 64, shingle_k: int = 3, shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig array<long>) — min over permuted shingle hashes, computed as
-    NUM_HASHES native min-aggregations of ``(a*h + b) % P`` where
-    h = xxhash64(shingle).  One shuffle (groupBy id).  ``shingles``: an
-    already-materialized :func:`word_shingles` frame to reuse."""
-    sh = shingles if shingles is not None else word_shingles(docs, text_col, id_col, shingle_k)
-    h = F.pmod(F.xxhash64("shingle"), F.lit(_P))
+def _shingle_hashes(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id, t = xxhash64(shingle)) — the one hashed shingle frame every
+    shingle pair operator persists.  8-byte hashes ride every downstream
+    shuffle instead of ~25-byte gram strings; rows stay one per distinct
+    shingle, and an xxhash64 collision only perturbs a count with the
+    2^-64-class probability the md5-keyed operators already accept."""
+    return word_shingles(docs, text_col, id_col, k).select(
+        "id", F.xxhash64("shingle").alias("t"))
+
+
+def _signatures(tok: DataFrame, num_hashes: int) -> DataFrame:
+    h = F.pmod(F.col("t"), F.lit(_P))
     aggs = [
         F.min(F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P))).alias(f"mh{i}")
         for i, (a, b) in enumerate(_hash_params(num_hashes))
     ]
-    sig = sh.groupBy("id").agg(*aggs)
+    sig = tok.groupBy("id").agg(*aggs)
     return sig.select("id", F.array(*[f"mh{i}" for i in range(num_hashes)]).alias("sig"))
 
 
-def _finish_pairs(out: DataFrame, sh: DataFrame, eager: bool,
-                  owns: bool = True) -> DataFrame:
+def minhash_signatures(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+    num_hashes: int = 64, shingle_k: int = 3,
+) -> DataFrame:
+    """(id, sig array<long>) — min over permuted shingle hashes, computed as
+    NUM_HASHES native min-aggregations of ``(a*h + b) % P`` where
+    h = xxhash64(shingle) % P.  One shuffle (groupBy id)."""
+    return _signatures(_shingle_hashes(docs, text_col, id_col, shingle_k), num_hashes)
+
+
+def _finish_pairs(out: DataFrame, caches: list, eager: bool) -> DataFrame:
     """Storage-lifecycle tail shared by the pair generators: eagerly
-    materialize the (small — near-dup pairs only) output, then release the
-    big exploded-shingle cache.  Without the eager barrier there is no
+    materialize the (small — near-dup pairs only) output, then release
+    every cache the operator made.  Without the eager barrier there is no
     moment at which the operator could unpersist — the caller's terminal
     action happens after we return, and Spark's ContextCleaner does NOT
     reliably reclaim driver-referenced caches (measured: a GC'd lazy
@@ -116,44 +131,76 @@ def _finish_pairs(out: DataFrame, sh: DataFrame, eager: bool,
     life of the session (round-3 review finding).  What remains persisted
     after return is only the output's own checkpoint blocks: O(pairs), not
     O(corpus × shingles).  ``eager=False`` skips both the barrier and the
-    internal persist — the fully-lazy plan for callers that own their
-    caching.  ``owns=False`` (caller passed ``shingles=``) HONORS the
-    eager barrier but skips only the unpersist of the caller-owned frame
-    (ADVICE r04: eager=True must mean materialized-before-return on every
-    path)."""
+    internal persists — the fully-lazy plan for callers that own their
+    caching."""
     if not eager:
         return out
     out = out.localCheckpoint(eager=True)
-    if owns:
-        sh.unpersist(blocking=False)
+    for c in caches:
+        c.unpersist(blocking=False)
     return out
+
+
+def _rare_pair_counts(tok: DataFrame, max_df: int | None) -> DataFrame:
+    """The candidate counter: ``(a, b, n)`` for id pairs (a < b) sharing
+    ``n`` rows of token ``t``, counting only tokens whose df (rows per
+    token) is at most ``max_df``.  A token shared by d documents
+    contributes d²/2 self-join rows, so one stop-phrase trigram with
+    df=10^6 would explode to 10^12 rows; ``max_df=None`` counts every
+    token.  One equi self-join on ``t`` — never a pairwise product.
+
+    Each join side re-runs the df aggregation over the (cached) token
+    frame: persisting the filtered frame, and the verify's per-doc
+    arrays, measured no faster at 2.5k and 10k documents (local[4])."""
+    if max_df is not None:
+        rare = (tok.groupBy("t").agg(F.count("*").alias("_df"))
+                .filter(F.col("_df") <= max_df).select("t"))
+        tok = tok.join(rare, "t")
+    a, b = tok.alias("a"), tok.alias("b")
+    return (
+        a.join(b, (F.col("a.t") == F.col("b.t")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
+        .agg(F.count("*").alias("n"))
+    )
+
+
+def verify_jaccard(pairs: DataFrame, tok: DataFrame) -> DataFrame:
+    """Exact jaccard ``(a, b, jaccard)`` for candidate (a, b) pairs over the
+    ``(id, t)`` token frame (one row per distinct token of a document):
+    each document's tokens collect into one array, joined onto the pairs
+    once per side, and the intersection is counted natively."""
+    sets = tok.groupBy("id").agg(F.collect_list("t").alias("s"))
+    n = F.size(F.array_intersect("sa", "sb"))
+    return (
+        pairs.select("a", "b")
+        .join(sets.select(F.col("id").alias("a"), F.col("s").alias("sa")), "a")
+        .join(sets.select(F.col("id").alias("b"), F.col("s").alias("sb")), "b")
+        .select("a", "b", (n.cast("double")
+                           / (F.size("sa") + F.size("sb") - n).cast("double")).alias("jaccard"))
+    )
 
 
 def minhash_lsh_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = 64, bands: int = 16, shingle_k: int = 3,
-    jaccard_threshold: float = 0.5, shingles: DataFrame | None = None,
-    eager: bool = True,
+    jaccard_threshold: float = 0.5, eager: bool = True,
 ) -> DataFrame:
     """Near-dup pairs (a < b) via LSH banding + exact Jaccard verification.
     Candidate generation never does n² work: pairs come from an equi
     self-join on (band, band_hash).
 
     Storage contract: with ``eager=True`` (default) the result is
-    materialized before return and the internal shingle cache is released
+    materialized before return and the internal caches are released
     (see :func:`_finish_pairs`); with ``eager=False`` the plan is fully
-    lazy and nothing is persisted here — pass a cached ``shingles`` frame
-    you own, or accept the explode being recomputed per consumer."""
+    lazy and nothing is persisted here."""
     rows_per_band = num_hashes // bands
     # ONE normalize+split+explode pass over the corpus, shared by signature
-    # building AND the exact-Jaccard verify (sizes + common counts) — the
-    # round-2 plan recomputed it three times (round-2 review finding)
-    owns = shingles is None
-    sh = shingles if shingles is not None else word_shingles(docs, text_col, id_col, shingle_k)
-    if owns and eager:
-        sh = sh.persist()
-    sig = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k,
-                             shingles=sh)
+    # building AND the exact-Jaccard verify — the round-2 plan recomputed
+    # it three times (round-2 review finding)
+    tok = _shingle_hashes(docs, text_col, id_col, shingle_k)
+    if eager:
+        tok = tok.persist()
+    sig = _signatures(tok, num_hashes)
     band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
     banded = sig.select(
         "id",
@@ -186,26 +233,20 @@ def minhash_lsh_pairs(
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
         .distinct()
     )
-    verified = verify_jaccard(cand, docs, text_col, id_col, shingle_k,
-                              shingles=sh)
-    out = verified.filter(F.col("jaccard") >= jaccard_threshold)
-    out = _finish_pairs(out, sh, eager, owns)
-    if eager:  # _finish_pairs materialized the output; the cache is dead
-        banded.unpersist(blocking=False)
-    return out
+    out = verify_jaccard(cand, tok).filter(F.col("jaccard") >= jaccard_threshold)
+    return _finish_pairs(out, [tok, banded], eager)
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     shingle_k: int = 3, threshold: float = 0.8, max_df: int | None = 1000,
-    shingles: DataFrame | None = None, eager: bool = True,
+    eager: bool = True,
 ) -> DataFrame:
-    """Word-k-gram Jaccard pairs: candidates from an equi self-join on
-    shingles, exact Jaccard verify over ALL shingles of each candidate.
+    """Word-k-gram Jaccard pairs: candidates from the df-capped shingle
+    self-join (:func:`_rare_pair_counts`), exact Jaccard verify over ALL
+    shingles of each candidate (:func:`verify_jaccard`).
 
-    ``max_df`` is the hot-shingle guard: a shingle shared by d documents
-    contributes d²/2 candidate join rows, so one stop-phrase trigram with
-    df=10^6 would explode to 10^12 rows.  Shingles with df > max_df are
+    ``max_df`` is the hot-shingle guard: shingles with df > max_df are
     excluded from CANDIDATE GENERATION only — the verify step still counts
     them, so reported jaccard values are exact.  Semantics: pairs that
     share at least one shingle with df <= max_df (standard LSH-style
@@ -213,97 +254,14 @@ def ngram_jaccard_pairs(
     ``max_df=None`` for the exhaustive all-co-shingled-pairs behavior.
 
     Storage contract: same as :func:`minhash_lsh_pairs` — eager barrier +
-    shingle-cache release by default; ``eager=False``/``shingles=`` for
-    caller-owned lifecycles."""
-    # ONE shingle pass, persisted, and NO separate verify double-join: the
-    # candidate self-join's rows ARE the per-(a,b,rare-shingle)
-    # co-occurrences, so grouping them yields the rare-shingle common count
-    # at the same shuffle cost the old .distinct() already paid.  The hot
-    # shingles (df > max_df, excluded from the join to avoid the d² blowup)
-    # contribute |hot(a) ∩ hot(b)| — computed NATIVELY from tiny per-doc
-    # hot-shingle sets (each doc holds at most the few distinct hot
-    # shingles), never via a join explosion.  n_common is exact:
-    # every (id, shingle) is unique (word_shingles array_distinct) and
-    # every shingle is either rare or hot.  Measured at sf0.1: the old
-    # cand->distinct->verify plan spent ~17s re-joining 1.1M pairs against
-    # the full shingle table; this shape removes that entirely.
-    owns = shingles is None
-    sh = shingles if shingles is not None else word_shingles(docs, text_col, id_col, shingle_k)
-    # 8-byte shingle HASHES ride every downstream shuffle (df table,
-    # rare/hot split, candidate self-join, hot-set arrays) instead of
-    # ~25-byte gram strings — the jaccard path never needs the string
-    # back, the per-doc row counts are unchanged (rows stay distinct
-    # strings), and an xxhash64 collision only perturbs n_common with
-    # the same 2^-64-class probability the md5-keyed operators already
-    # accept.  Minhash keeps the string frame (its signatures hash the
-    # text itself).
-    sh = sh.select("id", F.xxhash64("shingle").alias("shingle"))
-    if owns and eager:
-        sh = sh.persist()
-    extra_caches = []
-    if max_df is not None:
-        df_tbl = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        if eager:
-            # df_tbl feeds rare (once per self-join side) AND hot/doc_hot
-            # (twice more below) — four evaluations of the df aggregation
-            # without a cache; aliased join sides get no exchange reuse
-            df_tbl = df_tbl.persist()
-            extra_caches.append(df_tbl)
-        rare = df_tbl.filter(F.col("_df") <= max_df).select("shingle")
-        cand_sh = sh.join(rare, "shingle")
-        if eager:
-            # the rare-filter join sits under BOTH candidate self-join
-            # sides; persist so the df-join runs once, not per side
-            cand_sh = cand_sh.persist()
-            extra_caches.append(cand_sh)
-        hot = df_tbl.filter(F.col("_df") > max_df).select("shingle")
-        # per-doc hot-shingle sets; rows only for docs that HAVE hot
-        # shingles (left joins below treat absence as the empty set)
-        doc_hot = (
-            sh.join(hot, "shingle")
-            .groupBy("id").agg(F.collect_set("shingle").alias("_hot"))
-        )
-        if eager:
-            # joined below once for the ``a`` side and once for ``b``
-            doc_hot = doc_hot.persist()
-            extra_caches.append(doc_hot)
-    else:
-        cand_sh, doc_hot = sh, None
-    a, b = cand_sh.alias("a"), cand_sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .groupBy("a", "b").agg(F.count("*").alias("_nc"))
-    )
-    if doc_hot is not None:
-        common = (
-            common
-            .join(doc_hot.select(F.col("id").alias("a"), F.col("_hot").alias("_ha")), "a", "left")
-            .join(doc_hot.select(F.col("id").alias("b"), F.col("_hot").alias("_hb")), "b", "left")
-            .withColumn(
-                "_nc",
-                F.col("_nc") + F.when(
-                    F.col("_ha").isNotNull() & F.col("_hb").isNotNull(),
-                    F.size(F.array_intersect("_ha", "_hb")),
-                ).otherwise(F.lit(0)),
-            )
-        )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    out = (
-        common
-        .join(sizes.select(F.col("id").alias("a"), F.col("n_sh").alias("_na")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("n_sh").alias("_nb")), "b")
-        .withColumn(
-            "jaccard",
-            F.col("_nc").cast("double")
-            / (F.col("_na") + F.col("_nb") - F.col("_nc")).cast("double"),
-        )
-    )
-    out = out.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
-    out = _finish_pairs(out, sh, eager, owns)
-    for c in extra_caches:  # dead after the eager barrier materialized out
-        c.unpersist(blocking=False)
-    return out
+    shingle-cache release by default; ``eager=False`` for caller-owned
+    lifecycles."""
+    tok = _shingle_hashes(docs, text_col, id_col, shingle_k)
+    if eager:
+        tok = tok.persist()
+    cand = _rare_pair_counts(tok, max_df)
+    out = verify_jaccard(cand, tok).filter(F.col("jaccard") >= threshold)
+    return _finish_pairs(out, [tok], eager)
 
 
 def winnow_dup_pairs(
@@ -332,73 +290,22 @@ def winnow_dup_pairs(
     dedup should ignore (documented semantics: overlap IN NON-BOILERPLATE
     SPANS; set ``None`` for exhaustive counts).
 
-    Scale shape: explode -> (optional) df-filter equi-join -> candidate
-    equi self-join on fp -> count aggregation.  Same storage contract as
-    the other pair generators (eager barrier + cache release)."""
-    from httpz_spark.operators.textstats import winnow_fingerprints
-
+    Scale shape: explode -> the candidate counter
+    (:func:`_rare_pair_counts`) -> ``n_common >= min_common`` filter.
+    Same storage contract as the other pair generators (eager barrier +
+    cache release)."""
     fps = docs.select(
         F.col(id_col).alias("id"),
         F.explode(
             winnow_fingerprints(F.col(text_col), k, window, max_chars)
-        ).alias("fp"),
+        ).alias("t"),
     )
     if eager:
         fps = fps.persist()
-    use = fps
-    rare_cache = None
-    if max_df is not None:
-        rare = (
-            fps.groupBy("fp").agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select("fp")
-        )
-        use = fps.join(rare, "fp")
-        if eager:
-            # the df-filter join sits under both candidate self-join
-            # sides; without a cache each side re-runs the df aggregation
-            # and the join (no exchange reuse across aliased sides)
-            use = rare_cache = use.persist()
-    a, b = use.alias("a"), use.alias("b")
-    out = (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-    )
-    out = _finish_pairs(out, fps, eager)
-    if rare_cache is not None:
-        rare_cache.unpersist(blocking=False)
-    return out
-
-
-def verify_jaccard(pairs: DataFrame, docs: DataFrame, text_col: str,
-                   id_col: str, k: int, shingles: DataFrame | None = None) -> DataFrame:
-    """Exact jaccard for given candidate (a,b) pairs via shingle joins.
-    ``shingles``: an already-materialized :func:`word_shingles` frame —
-    callers that derived candidates from shingles pass it so sizes and
-    common-counts reuse the cached explode instead of recomputing it."""
-    sh = shingles if shingles is not None else word_shingles(docs, text_col, id_col, k)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    common = (
-        pairs.select("a", "b")
-        .join(sh.withColumnRenamed("id", "a").withColumnRenamed("shingle", "s1"), "a")
-        .join(sh.withColumnRenamed("id", "b").withColumnRenamed("shingle", "s2"), "b")
-        .filter(F.col("s1") == F.col("s2"))  # merged into the join by Catalyst
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        common.join(sizes.withColumnRenamed("id", "a").withColumnRenamed("n_sh", "na"), "a")
-        .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("n_sh", "nb"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")).cast("double"),
-        )
-        .select("a", "b", "jaccard")
-    )
+    out = (_rare_pair_counts(fps, max_df)
+           .filter(F.col("n") >= min_common)
+           .withColumnRenamed("n", "n_common"))
+    return _finish_pairs(out, [fps], eager)
 
 
 def connected_components(
@@ -651,6 +558,12 @@ def dedup_clusters(
     ``stats`` (optional dict) receives ``{"rounds": total, "algorithm":
     <path taken>, "probe_rounds": n, "n_edges": count-if-measured}`` for
     observability.  Identical output on every path (property-tested)."""
+    if algorithm not in ("auto", "minlabel", "star"):
+        # an unknown name must not silently pick an algorithm of another
+        # cost class (min-label is O(diameter) rounds, star O(log n))
+        raise ValueError(
+            f"algorithm={algorithm!r} must be one of 'auto', 'minlabel', 'star'"
+        )
     if algorithm == "auto":
         # Persist the pair frame BEFORE the dispatch count: the count is a
         # full evaluation of the (often expensive — banded joins, shingle
@@ -787,7 +700,7 @@ def hash_near_pairs(df: DataFrame, hash_col: str, id_col: str = "id",
         .distinct()
     )
     return _finish_pairs(cand.filter(F.col("hamming") <= max_hamming),
-                         chunks, eager)
+                         [chunks], eager)
 
 
 def simhash_near_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -191,8 +191,7 @@ def dsir_logweights(
     the corpus gram explode (the q-fit collect is one action, the
     scoring join another; nothing is persisted implicitly).  Callers who
     can afford the storage pass a precomputed/persisted feature frame
-    via ``feats`` (``hashed_ngram_features(docs, ...)`` — the same
-    ``shingles=`` escape hatch minhash_signatures offers), reducing the
+    via ``feats`` (``hashed_ngram_features(docs, ...)``), reducing the
     heavy explode to ONE evaluation."""
     raw = docs if raw_docs is None else raw_docs
     if feats is None:

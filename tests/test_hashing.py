@@ -5,7 +5,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from httpz_spark.functions.hashing import (
-    favicon_hash_batch,
     hash64_low,
     hash64_pair,
     hash64_str_batch,
@@ -47,10 +46,15 @@ def test_batch_matches_scalar():
 
 
 def test_favicon_hash_semantics():
-    # parsers.py:247-250 — empty -> None; value is str(signed 64-bit).
-    out = favicon_hash_batch(pd.Series([None, b"", b"\x89PNG fake icon"]))
-    assert out[0] is None and out[1] is None
-    assert out[2] == str(hash64_low(b"\x89PNG fake icon"))
+    # parsers.py:238-250 — empty -> None; value is str(signed 64-bit);
+    # content is capped at FAVICON_MAX_BYTES before hashing.
+    from httpz_spark.parity.refmodel import FAVICON_MAX_BYTES, favicon_hash
+
+    assert favicon_hash(None) is None and favicon_hash(b"") is None
+    assert favicon_hash(b"\x89PNG fake icon") == str(hash64_low(b"\x89PNG fake icon"))
+    big = bytes(range(256)) * (FAVICON_MAX_BYTES // 256 + 64)
+    assert favicon_hash(big) == str(hash64_low(big[:FAVICON_MAX_BYTES]))
+    assert favicon_hash(big) != str(hash64_low(big))
 
 
 @given(

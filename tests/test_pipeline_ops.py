@@ -63,6 +63,11 @@ def _persistent_rdd_ids(spark):
     return ids
 
 
+def _plans_as_checkpoint(df):
+    """A localCheckpoint(eager=True) frame plans as one LogicalRDD scan."""
+    return df._jdf.queryExecution().optimizedPlan().toString().startswith("LogicalRDD")
+
+
 def test_pair_generators_release_shingle_cache(spark):
     """Round-3 review finding: the pair generators persisted the exploded
     shingle frame and never unpersisted it.  Now the (small) output is
@@ -71,12 +76,17 @@ def test_pair_generators_release_shingle_cache(spark):
     in storage, never the O(corpus × shingles) explode."""
     docs = dup_docs(spark)
     before = _persistent_rdd_ids(spark)
-    D.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    D.minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
+    outs = [D.ngram_jaccard_pairs(docs, threshold=0.5),
+            D.minhash_lsh_pairs(docs, jaccard_threshold=0.5),
+            D.winnow_dup_pairs(docs, min_common=1)]
+    for out in outs:
+        # eager=True (default) returns a materialized result
+        assert _plans_as_checkpoint(out)
+        out.collect()
     new = _persistent_rdd_ids(spark) - before
-    # one eager output-checkpoint RDD per operator is allowed; the two
-    # shingle caches would make this 4
-    assert len(new) <= 2, f"leaked persistent RDDs: {sorted(new)}"
+    # one eager output-checkpoint RDD per operator is allowed; the three
+    # token caches would make this 6
+    assert len(new) <= 3, f"leaked persistent RDDs: {sorted(new)}"
 
 
 def test_pair_generators_lazy_mode_persists_nothing(spark):
@@ -84,6 +94,7 @@ def test_pair_generators_lazy_mode_persists_nothing(spark):
     docs = dup_docs(spark)
     before = _persistent_rdd_ids(spark)
     out = D.ngram_jaccard_pairs(docs, threshold=0.5, eager=False)
+    assert not _plans_as_checkpoint(out)
     rows = {(r["a"], r["b"]) for r in out.collect()}
     assert (1, 2) in rows
     # no NEW persistent entries (earlier tests' async unpersists may still
@@ -330,6 +341,29 @@ def test_ngram_df_cap_hot_shingle(spark):
     assert capped == full
 
 
+def test_ngram_jaccard_counts_hot_shingles_exactly(spark):
+    """A pair whose only rare shared shingle is one trigram still gets the
+    exact set Jaccard over ALL its shingles: the hot ones (df > max_df)
+    are excluded from candidate generation, never from the verify."""
+    hot = "hot one two three four"
+    rows = [(i, f"{hot} filler{i} x{i} y{i}") for i in range(5)]
+    rows += [(100, f"{hot} q1 rare alpha beta"),
+             (101, f"{hot} q2 rare alpha beta")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def grams(t):
+        w = t.split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    sa, sb = grams(rows[-2][1]), grams(rows[-1][1])
+    assert len(sa & sb) == 4  # three hot trigrams + "rare alpha beta"
+    want = len(sa & sb) / len(sa | sb)
+    got = {(r["a"], r["b"]): r["jaccard"]
+           for r in D.ngram_jaccard_pairs(docs, threshold=0.0, max_df=3).collect()}
+    # filler pairs share only hot shingles: never candidates under the cap
+    assert got == {(100, 101): want}
+
+
 def test_ivf_ann_topk(spark, emb):
     import numpy as np
 
@@ -504,6 +538,15 @@ def test_dedup_clusters_star_algorithm_identical(spark):
                                     10: 10, 11: 10, 12: 10}
 
 
+def test_dedup_clusters_rejects_unknown_algorithm(spark):
+    """An unknown name must not silently run min-label (another cost
+    class than star)."""
+    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
+    for bad in ("Star", "min-label", ""):
+        with pytest.raises(ValueError, match="algorithm"):
+            D.dedup_clusters(pairs, algorithm=bad)
+
+
 def test_dedup_clusters_auto_falls_back_on_long_chains(spark):
     """algorithm='auto': a 200-node chain exceeds min-label's round cap, and
     the star fallback must complete it instead of raising.  Round-4
@@ -579,26 +622,6 @@ def test_minlabel_releases_superseded_label_checkpoints(spark):
     # nodes + final edge frame (+ their union stage) may remain; superseded
     # per-round edge frames must not
     assert len(new_star) <= 3, f"star leaked: {sorted(new_star)}"
-
-
-def test_eager_barrier_honored_with_caller_shingles(spark):
-    """ADVICE r04: eager=True must materialize the result before return
-    even when the caller passes its own shingles= frame (only the
-    unpersist of the caller-owned cache is skipped)."""
-    docs = dup_docs(spark)
-    sh = D.word_shingles(docs, "text", "doc_id", 3).persist()
-    try:
-        out = D.minhash_lsh_pairs(docs, jaccard_threshold=0.5, shingles=sh,
-                                  eager=True)
-        # a localCheckpoint(eager=True) result plans as a LogicalRDD scan
-        assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
-        # the caller-owned cache must still be cached
-        assert sh.storageLevel.useMemory or sh.storageLevel.useDisk
-        lazy = D.minhash_lsh_pairs(docs, jaccard_threshold=0.5, shingles=sh,
-                                   eager=False)
-        assert "LogicalRDD" not in lazy._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        sh.unpersist()
 
 
 def test_pq_encode_shapes_and_determinism(spark, emb):

@@ -104,11 +104,16 @@ def test_dedup_pair_plan_shapes_lazy(spark, sf_dir):
     """The pair generators' interesting plan (hidden behind the eager
     barrier in the default path): candidates come from equi self-joins —
     never a cartesian/nested-loop product."""
-    from httpz_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from httpz_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        winnow_dup_pairs,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for fn, kw in ((ngram_jaccard_pairs, {"threshold": 0.2}),
-                   (minhash_lsh_pairs, {"jaccard_threshold": 0.2})):
+                   (minhash_lsh_pairs, {"jaccard_threshold": 0.2}),
+                   (winnow_dup_pairs, {"min_common": 50})):
         p = plan_of(fn(docs, eager=False, **kw))
         assert "CartesianProduct" not in p, fn.__name__
         assert "BroadcastNestedLoopJoin" not in p, fn.__name__
