@@ -24,7 +24,14 @@ Exactly-once resume (north_rule "a killed job resumes exactly"):
   byte-identical to an uninterrupted run (tested in tests/test_frontier.py).
 
 Deterministic crawl order = (wave_id, priority, url_hash); priority = depth
-(BFS).  All per-wave metrics land in the ``lineage`` table.
+(BFS).  All per-wave metrics land in the ``lineage`` table, including the
+driver wall seconds of the wave's phases (``phase_secs``: ``commit`` — the
+commit check's lineage read, ``sched``, ``fetch``, ``merge``).
+
+The robots table is resolved ONCE per engine, at construction, into a
+driver-local relation (it is broadcast-sized, politeness.py): a wave's
+schedule uses it twice and would otherwise re-run its source — for
+``build_robots_table``, every host's robots.txt fetch — on each use.
 """
 
 from __future__ import annotations
@@ -144,7 +151,10 @@ class CrawlEngine:
         self.spark = spark
         self.images = images
         self.dns = dns
-        self.robots = robots
+        # one evaluation of the robots source per engine, never inside a
+        # wave: an Arrow-built frame plans as a LocalRelation
+        self.robots = (None if robots is None
+                       else spark.createDataFrame(robots.toArrow(), robots.schema))
         self.scan_cfg = scan_cfg
         self.engine_cfg = engine_cfg
         self.fabric_cfg = fabric_cfg
@@ -228,6 +238,7 @@ class CrawlEngine:
 
     # -- one wave ---------------------------------------------------------------
     def run_wave(self, wave_id: int) -> dict:
+        t0, p0 = time.time(), time.perf_counter()
         # one lineage read per wave: the commit check and the seen-table
         # size the dedup gate dispatches on (no table scan)
         lineage = self.store.read("lineage")
@@ -235,9 +246,9 @@ class CrawlEngine:
                 else lineage.select("wave_id", "n_fetched").collect())
         if any(r["wave_id"] == wave_id for r in done):
             return {"n_ready": -1, "skipped": True, "wave_id": wave_id}
+        phases = {"commit": time.perf_counter() - p0}
 
         ecfg, scfg = self.engine_cfg, self.scan_cfg
-        t0 = time.time()
         stopped = {"n_ready": -1, "stopped": True, "wave_id": wave_id}
         if self.stop_requested():
             return stopped
@@ -247,10 +258,13 @@ class CrawlEngine:
             # re-executes the fetch exactly; a stop after staging returns
             # before the merges, which the resumed run applies idempotently
             return stopped
+        phases.update(counts.pop("phase_secs"))
         staging_sched, staging_out = f"wave{wave_id}_sched", f"wave{wave_id}_out"
         staging_budgets = f"wave{wave_id}_budgets"
         if counts["n_ready"] == 0:
-            return self._commit_lineage(wave_id, counts, t0)
+            return self._commit_lineage(wave_id, counts, t0, phases)
+
+        p_merge = time.perf_counter()
 
         out = self.store.read(staging_out)
         deferred = (self.store.read(staging_sched)
@@ -340,8 +354,9 @@ class CrawlEngine:
         # a URL that is BOTH deferred and freshly discovered keeps the
         # shallowest row
         self._write_frontier(_merge_frontier(next_frontier))
+        phases["merge"] = time.perf_counter() - p_merge
 
-        stats = self._commit_lineage(wave_id, counts, t0)
+        stats = self._commit_lineage(wave_id, counts, t0, phases)
         # lineage row committed = wave durable; staging served its purpose
         # (idempotent re-run) and is GC'd so state-dir disk stays O(corpus),
         # not O(waves x corpus).  wave<k>_deferred/_meta: staging an older
@@ -357,8 +372,10 @@ class CrawlEngine:
         tail overwrites, and counts n_deferred), then ``wave<k>_out`` (the
         fetch of its scheduled rows; counts n_fetched and each error
         class) — reusing a table a killed run committed, and return the
-        counters.  None: a cooperative stop aborted the fetch uncommitted."""
+        counters with the two steps' driver seconds (``phase_secs``).
+        None: a cooperative stop aborted the fetch uncommitted."""
         sched, out = f"wave{wave_id}_sched", f"wave{wave_id}_out"
+        p0 = time.perf_counter()
         if not self.store.exists(sched):
             if self.store.exists(out):
                 raise RuntimeError(
@@ -374,11 +391,13 @@ class CrawlEngine:
             if n_ready is None:  # a frontier committed by an older build
                 n_ready = frontier.count()
             if n_ready == 0:
-                return {"n_ready": 0}
+                return {"n_ready": 0,
+                        "phase_secs": {"sched": time.perf_counter() - p0}}
             obs = Observation()
             ranked = self._schedule(frontier, seen_size).observe(
                 obs, F.count_if(~F.col("scheduled")).alias("n_deferred"))
             self.store.write(sched, ranked, summary=({"n_ready": n_ready}, obs))
+        p1 = time.perf_counter()
         if not self.store.exists(out):
             obs = Observation()
             scheduled = self.store.read(sched).filter(F.col("scheduled"))
@@ -392,7 +411,9 @@ class CrawlEngine:
                 if self.stop_requested():
                     return None  # in-UDF cooperative abort: nothing committed
                 raise
-        return {**self.store.summary(sched), **self.store.summary(out)}
+        secs = {"sched": p1 - p0, "fetch": time.perf_counter() - p1}
+        return {**self.store.summary(sched), **self.store.summary(out),
+                "phase_secs": secs}
 
     # -- stages -------------------------------------------------------------------
     def _bloom(self, create: bool = True) -> "BloomIndex | CuckooIndex | None":
@@ -590,26 +611,31 @@ class CrawlEngine:
             )
         return out.withColumn("wave_id", F.lit(wave_id).cast("int"))
 
-    def _commit_lineage(self, wave_id: int, counts: dict, t0: float) -> dict:
+    def _commit_lineage(self, wave_id: int, counts: dict, t0: float,
+                        phases: dict) -> dict:
         """Append the wave's lineage row — its commit marker — from the
         staged counters (every scheduled row is fetched: n_scheduled =
-        n_fetched); returns the wave's stats."""
+        n_fetched) and the phases' driver seconds (0 for a phase the wave
+        skipped); returns the wave's stats.  The row is literals over a
+        one-row range: no Python job."""
         n_ready, n_deferred = counts["n_ready"], counts.get("n_deferred", 0)
         n_fetched = counts.get("n_fetched", 0)
         errs = {t: counts[t] for t in ERROR_TYPES if counts.get(t)}
         t1 = time.time()
-        row = [
-            (
-                int(wave_id), n_ready, n_fetched, n_deferred, n_fetched, errs,
-                float(t0), float(t1),
-                float(n_fetched / (t1 - t0)) if t1 > t0 else 0.0,
-            )
+        cols = [
+            ("wave_id", "int", wave_id), ("n_ready", "long", n_ready),
+            ("n_scheduled", "long", n_fetched), ("n_deferred", "long", n_deferred),
+            ("n_fetched", "long", n_fetched),
+            ("errors_by_type", "map<string,long>", errs),
+            ("t_start", "double", t0), ("t_end", "double", t1),
+            ("urls_per_sec", "double", n_fetched / (t1 - t0) if t1 > t0 else 0.0),
+            ("phase_secs", "map<string,double>",
+             {p: phases.get(p, 0.0) for p in ("commit", "sched", "fetch", "merge")}),
         ]
-        schema = (
-            "wave_id int, n_ready long, n_scheduled long, n_deferred long, "
-            "n_fetched long, errors_by_type map<string,long>, t_start double, "
-            "t_end double, urls_per_sec double"
-        )
-        self.store.append("lineage", self.spark.createDataFrame(row, schema))
+        row = self.spark.range(0, 1, 1, 1).select(*[
+            (F.create_map(*[F.lit(x) for kv in v.items() for x in kv])
+             if isinstance(v, dict) else F.lit(v)).cast(t).alias(n)
+            for n, t, v in cols])
+        self.store.append("lineage", row)
         return {"wave_id": wave_id, "n_ready": n_ready, "n_fetched": n_fetched,
                 "n_deferred": n_deferred, "errors": errs, "secs": t1 - t0}

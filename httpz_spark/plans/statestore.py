@@ -24,7 +24,16 @@ story:
   bounded and write amplification is amortized O(total / compact_every);
 * superseded delta dirs and manifests are garbage-collected after the
   pointer swap, keeping the PREVIOUS version intact for crash safety and
-  for lazy DataFrames still referencing it.
+  for lazy DataFrames still referencing it;
+* the manifest records the snapshot's **schema**, as Iceberg's snapshot
+  metadata does: a full write or a compaction records the written frame's
+  schema, a merge/append the previous snapshot's with the new delta's new
+  columns appended (a ``merge_delete`` adds ``_tomb``).  ``read`` hands it
+  to the parquet reader, so resolving a snapshot opens no data file and
+  launches no Spark job; a delta that lacks a column reads it as NULL.
+  Only a manifest an older build wrote (no ``schema``) falls back to
+  merging the deltas' parquet footers (``mergeSchema``, one job per read);
+  its next commit records the schema.
 
 Swap-in note: every call site goes through this class, so pointing the
 engine at Iceberg replaces ``merge_upsert`` with ``MERGE INTO`` (or a
@@ -40,6 +49,7 @@ import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class StateStore:
@@ -121,18 +131,16 @@ class StateStore:
 
     def read(self, name: str) -> DataFrame | None:
         """Current snapshot: union of live deltas, newest-key-wins when the
-        table has a merge key (merge-on-read resolution)."""
+        table has a merge key (merge-on-read resolution).  The deltas are
+        read by the schema the manifest records — no Spark job; a manifest
+        without one (older build) merges the deltas' footers instead."""
         v = self.latest_version(name)
         if v is None:
             return None
         manifest = self._read_manifest(name, v)
-        paths = [os.path.join(self.root, name, d) for d in manifest["deltas"]]
-        # mergeSchema: deltas written under different configs (e.g. a resume
-        # with include_payload toggled) must union their columns, not silently
-        # adopt one footer's schema
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._scan(name, manifest)
         key = manifest.get("key")
-        if key and len(paths) > 1:
+        if key and len(manifest["deltas"]) > 1:
             # newest delta wins; _seq alone is a total order because a key
             # appears at most once per delta (waves are in-wave deduped) and
             # every delta carries a distinct _seq — map/array columns keep
@@ -145,35 +153,50 @@ class StateStore:
             )
         return self._drop_tombstones(df).drop("_seq")
 
+    def _scan(self, name: str, manifest: dict) -> DataFrame:
+        """The union of the manifest's deltas, ``_seq`` included.  Deltas
+        written under different configs (e.g. a resume with include_payload
+        toggled) union their columns: the recorded schema holds every
+        column in ``mergeSchema``'s order, and a manifest an older build
+        wrote without one is read with ``mergeSchema`` itself."""
+        paths = [os.path.join(self.root, name, d) for d in manifest["deltas"]]
+        schema = manifest.get("schema")
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+
     @staticmethod
     def _drop_tombstones(df: DataFrame) -> DataFrame:
         """merge_delete writes ``_tomb=true`` rows; after newest-wins
         resolution a key whose latest delta is a tombstone is dropped here
         (merge-on-read delete, the Iceberg MERGE-DELETE analogue).  Deltas
-        written before any delete have no ``_tomb`` column — mergeSchema
+        written before any delete have no ``_tomb`` column — the read
         surfaces it as NULL, coalesced to live."""
         if "_tomb" in df.columns:
             df = df.filter(~F.coalesce(F.col("_tomb"), F.lit(False))).drop("_tomb")
         return df
 
-    def _write_delta(self, name: str, df: DataFrame, version: int, tag: str) -> str:
+    def _write_delta(self, name: str, df: DataFrame, version: int,
+                     tag: str) -> tuple[str, dict]:
+        """Land ``df`` (plus ``_seq``) as one delta dir; returns its name and
+        schema (a parquet read reports every column nullable either way)."""
         d = self._delta_dir(name, version, tag)
         os.makedirs(os.path.join(self.root, name), exist_ok=True)
-        df.withColumn("_seq", F.lit(version).cast("int")).write.mode(
-            "overwrite"
-        ).parquet(d)
-        return os.path.basename(d)
+        df = df.withColumn("_seq", F.lit(version).cast("int"))
+        df.write.mode("overwrite").parquet(d)
+        return os.path.basename(d), df.schema.jsonValue()
 
     def write(self, name: str, df: DataFrame, summary=()) -> int:
         """Full snapshot write (single-delta manifest + pointer swap).
         ``summary`` (Observations on ``df``, filled by this write, and/or
         mappings) commits with the manifest — Iceberg's snapshot summary."""
         v = (self.latest_version(name) or 0) + 1
-        delta = self._write_delta(name, df, v, "base")
+        delta, schema = self._write_delta(name, df, v, "base")
         merged: dict = {}
         for s in summary:
             merged.update(s.get if isinstance(s, Observation) else s)
-        self._commit(name, v, {"deltas": [delta], "key": None, "summary": merged})
+        self._commit(name, v, {"deltas": [delta], "key": None, "schema": schema,
+                               "summary": merged})
         return v
 
     def summary(self, name: str) -> dict:
@@ -188,19 +211,9 @@ class StateStore:
         ONLY ``df`` as a delta; compacts when the delta chain exceeds
         ``compact_every``.  Idempotent: re-running the same wave re-appends
         byte-identical rows, which resolve to the same snapshot."""
-        v = (self.latest_version(name) or 0) + 1
-        cur = self.latest_version(name)
-        deltas = [] if cur is None else list(self._read_manifest(name, cur)["deltas"])
-        if len(deltas) + 1 > self.compact_every:
-            merged = self._resolved_with(name, df, key, v)
-            delta = self._write_delta(name, merged, v, "compact")
-            self._commit(name, v, {"deltas": [delta], "key": key})
-            return v
-        delta = self._write_delta(name, df, v, "merge")
-        self._commit(name, v, {"deltas": deltas + [delta], "key": key})
-        return v
+        return self._add_delta(name, df, key, "merge")
 
-    def _resolved_with(self, name: str, df: DataFrame, key: str, seq: int) -> DataFrame:
+    def _resolved_with(self, name: str, df: DataFrame, key: str) -> DataFrame:
         cur = self.read(name)
         if cur is None:
             return df
@@ -226,16 +239,34 @@ class StateStore:
 
     def append(self, name: str, df: DataFrame) -> int:
         """Pure append (no merge key — lineage-style tables)."""
-        v = (self.latest_version(name) or 0) + 1
+        return self._add_delta(name, df, None, "append")
+
+    def _add_delta(self, name: str, df: DataFrame, key: str | None, tag: str) -> int:
+        """Commit ``df`` as one more delta of the current snapshot, or —
+        once the chain would exceed ``compact_every`` — the resolved table
+        as one compacted delta.  The new manifest's schema is the previous
+        one with the delta's new columns appended (``mergeSchema``'s
+        column order over the path-sorted deltas)."""
         cur = self.latest_version(name)
-        deltas = [] if cur is None else list(self._read_manifest(name, cur)["deltas"])
-        if len(deltas) + 1 > self.compact_every:
-            merged = self.read(name).unionByName(df, allowMissingColumns=True)
-            delta = self._write_delta(name, merged, v, "compact")
-            self._commit(name, v, {"deltas": [delta], "key": None})
+        v = (cur or 0) + 1
+        prev = None if cur is None else self._read_manifest(name, cur)
+        if prev is not None and len(prev["deltas"]) + 1 > self.compact_every:
+            merged = (self._resolved_with(name, df, key) if key else
+                      self.read(name).unionByName(df, allowMissingColumns=True))
+            delta, schema = self._write_delta(name, merged, v, "compact")
+            self._commit(name, v, {"deltas": [delta], "key": key, "schema": schema})
             return v
-        delta = self._write_delta(name, df, v, "append")
-        self._commit(name, v, {"deltas": deltas + [delta], "key": None})
+        delta, schema = self._write_delta(name, df, v, tag)
+        deltas = [delta]
+        if prev is not None:
+            deltas = prev["deltas"] + deltas
+            # a manifest an older build wrote has no schema: merge its
+            # deltas' footers once, here, so every later read is job-free
+            old = prev.get("schema") or self._scan(name, prev).schema.jsonValue()
+            have = {f["name"] for f in old["fields"]}
+            schema = {**old, "fields": old["fields"] + [
+                f for f in schema["fields"] if f["name"] not in have]}
+        self._commit(name, v, {"deltas": deltas, "key": key, "schema": schema})
         return v
 
     def drop(self, name: str) -> None:

@@ -98,9 +98,6 @@ def main(argv=None) -> int:
         robots = build_robots_table(
             hosts, world, partitions=args.partitions
         ).drop("fetch_status")
-        n_robots = robots.count()
-        print(f"robots table built from /robots.txt fetches: {n_robots} hosts",
-              file=sys.stderr)
     else:
         robots = S.robots_df(spark, world)
 
@@ -111,6 +108,11 @@ def main(argv=None) -> int:
         robots,
         scan_cfg, engine_cfg, world, state_dir=args.state,
     )
+    if args.fetch_robots:
+        # counted on the engine's resolved table: counting the builder's
+        # frame would fetch every robots.txt a second time
+        print(f"robots table built from /robots.txt fetches: "
+              f"{eng.robots.count()} hosts", file=sys.stderr)
     seeds = seeds_from_text(spark, args.seeds)
     if args.sitemap_seeds:
         from pyspark.sql import functions as F

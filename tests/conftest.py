@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -23,6 +24,24 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def job_group(spark):
+    """``with job_group("id") as jobs:`` runs the body under a Spark job
+    group of its own; ``jobs()`` lists the ids of the jobs it launched."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def group(gid):
+        sc.setJobGroup(gid, gid)
+        try:
+            yield lambda: sc.statusTracker().getJobIdsForGroup(gid)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return group
 
 
 SF_DIR = os.environ.get("HTTPZ_TEST_SF_DIR", "/root/testdata/sf0.001")

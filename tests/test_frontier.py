@@ -1,5 +1,8 @@
 """Frontier engine: waves, dedup, politeness, checkpoint/resume."""
 
+import glob
+import json
+import os
 import shutil
 import tempfile
 
@@ -18,10 +21,11 @@ def world():
     return FB.FabricConfig(n_images=64, n_hosts=12).with_certs()
 
 
-def make_engine(spark, world, state_dir, **eover):
+def make_engine(spark, world, state_dir, robots=None, **eover):
     images = S.images_df(spark, world, partitions=4)
     dns = S.dns_df(spark, world)
-    robots = S.robots_df(spark, world)
+    if robots is None:
+        robots = S.robots_df(spark, world)
     scan_cfg = ScanConfig.all_on(discover_links=True)
     ecfg = EngineConfig(partitions=8, per_host_budget=4, max_depth=2,
                         state_dir=state_dir, **eover)
@@ -387,3 +391,116 @@ def test_resume_from_older_build_staging_raises(spark, world, tmp_path):
     assert eng.run_wave(0)["n_fetched"] > 0
     for name in ("wave0_deferred", "wave0_meta", "wave0_sched", "wave0_out"):
         assert not eng.store.exists(name), name
+
+
+def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
+    """Crawling 3 waves with a robots table that ``build_robots_table``
+    fetches requests each host's robots.txt as often as one evaluation of
+    that table does — once: the engine resolves the table at construction,
+    and a wave (whose schedule uses it twice) never re-runs the fetch."""
+    from httpz_spark.operators.robotsfetch import build_robots_table
+
+    def factory(log):
+        def make(_rp):
+            from httpz_spark.sources.transport import Response
+
+            class LoggingTransport:
+                def fetch(self, url, protocol, **kw):
+                    with open(log, "a") as f:
+                        f.write(url + "\n")
+                    return Response(url=url, status=200, headers={},
+                                    body=b"User-agent: *\nDisallow: /r/\n",
+                                    cert_der=None, history=[], charset="utf-8",
+                                    latency_ms=1.0)
+
+            return LoggingTransport()
+
+        return make
+
+    def requests(log):
+        with open(log) as f:
+            return sorted(f.read().split())
+
+    hosts = spark.createDataFrame([(h,) for h in FB.all_hosts(world)], "host string")
+    once = str(tmp_path / "count.log")
+    build_robots_table(hosts, world, transport_factory=factory(once),
+                       partitions=4).count()
+    want = requests(once)
+    assert len(want) == len(set(want)) == len(FB.all_hosts(world))
+
+    crawl = str(tmp_path / "crawl.log")
+    robots = build_robots_table(hosts, world, transport_factory=factory(crawl),
+                                partitions=4).drop("fetch_status")
+    eng = make_engine(spark, world, str(tmp_path / "state"), robots=robots)
+    eng.init_frontier(seed_df(spark, world))
+    for w in range(3):
+        assert eng.run_wave(w)["n_fetched"] > 0
+    assert requests(crawl) == want
+    assert eng.store.read("results").filter(F.col("path").startswith("/r/")).count() == 0
+
+
+# Spark jobs of one steady-state wave (wave 1) on this module's world,
+# counted under a job group the test sets.  The build before the schema-
+# recording manifests, the once-per-engine robots table and the literal
+# lineage row ran 26 here, measured the same way: a mergeSchema footer job
+# per StateStore read, the robots source run twice in the schedule write,
+# and the lineage row through a PythonRDD.
+WAVE_JOBS = 20
+
+
+def test_steady_state_wave_job_budget(spark, world, tmp_path, job_group):
+    eng = make_engine(spark, world, str(tmp_path / "state"))
+    eng.init_frontier(seed_df(spark, world))
+    eng.run_wave(0)
+    with job_group("frontier-wave-1") as jobs:
+        assert eng.run_wave(1)["n_fetched"] > 0
+        n_jobs = len(jobs())
+    assert n_jobs == WAVE_JOBS, n_jobs
+
+
+def test_lineage_phase_secs(spark, world, tmp_path):
+    """Each lineage row carries the driver seconds of the wave's four
+    phases, which lie inside the wave's [t_start, t_end]."""
+    eng = make_engine(spark, world, str(tmp_path / "state"))
+    eng.init_frontier(seed_df(spark, world))
+    eng.crawl(max_waves=2)
+    rows = eng.store.read("lineage").collect()
+    assert sorted(r["wave_id"] for r in rows) == [0, 1]
+    for r in rows:
+        secs = r["phase_secs"]
+        assert sorted(secs) == ["commit", "fetch", "merge", "sched"], secs
+        assert all(v >= 0 for v in secs.values()), secs
+        assert sum(secs.values()) <= r["t_end"] - r["t_start"], r
+
+
+def test_resume_across_schema_upgrade_is_exact(spark, world, tmp_path):
+    """State written by a build whose manifests record no schema (every
+    ``schema`` key deleted after 2 waves) resumes to the results and
+    lineage counters of an uninterrupted crawl, and the tables it commits
+    record a schema again."""
+    full = make_engine(spark, world, str(tmp_path / "full"))
+    full.init_frontier(seed_df(spark, world))
+    full.crawl(max_waves=4)
+    cols = ["url_hash", "status", "title", "wave_id"]
+
+    state = str(tmp_path / "up")
+    eng = make_engine(spark, world, state)
+    eng.init_frontier(seed_df(spark, world))
+    eng.crawl(max_waves=2)
+    manifests = glob.glob(os.path.join(state, "*", "v=*.json"))
+    assert manifests
+    for path in manifests:
+        with open(path) as f:
+            m = json.load(f)
+        del m["schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    eng2 = make_engine(spark, world, state)
+    eng2.crawl(max_waves=4)
+    assert table_fingerprint(eng2.store.read("results"), cols) == \
+        table_fingerprint(full.store.read("results"), cols)
+    assert lineage_counters(eng2) == lineage_counters(full)
+    for name in ("results", "seen", "frontier", "lineage"):
+        m = eng2.store._read_manifest(name, eng2.store.latest_version(name))
+        assert "schema" in m, name
