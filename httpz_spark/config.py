@@ -76,11 +76,6 @@ class EngineConfig:
     partitions: int = 32             # url_hash shuffle width (cluster: cores*2+)
     per_host_budget: int = 100       # politeness: max URLs per host per wave
     max_depth: int = 3               # frontier link-following depth cap
-    hot_host_threshold: int = 64     # rows/host above which fetch salting kicks in
-    politeness_pre_salt: int = 16    # salted local top-k fan-out before the
-                                     # exact per-host window (hot-host guard;
-                                     # `scheduled` stays exact — see
-                                     # operators/politeness.py docstring)
     bloom_bits_per_key: int = 10     # per-partition bloom sizing (~1% FP)
     bloom_capacity_per_part: int = 1_000_000  # sizing assumption per pid
     seen_filter: str = "bloom"       # which index structure: "bloom" (10

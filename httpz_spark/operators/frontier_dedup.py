@@ -178,17 +178,6 @@ class BloomIndex:
     def _path(self, pid: int) -> str:
         return os.path.join(self.root, f"pid={pid}.npy")
 
-    def _load(self, pid: int) -> np.ndarray:
-        try:
-            return np.load(self._path(pid))
-        except (FileNotFoundError, ValueError):
-            return np.zeros(self.m // 8, dtype=np.uint8)
-
-    def _store(self, pid: int, bits: np.ndarray) -> None:
-        tmp = self._path(pid) + f".tmp{os.getpid()}"
-        np.save(open(tmp, "wb"), bits)
-        os.replace(tmp, self._path(pid))
-
     # -- update (driver-coordinated, executor-parallel) ------------------------
     def update(self, new_keys: DataFrame, key_col: str = "url_hash") -> None:
         """OR the new keys into their partition blooms.  Idempotent (pure
@@ -520,7 +509,6 @@ def dedup_unseen(
     candidates: DataFrame,
     seen: DataFrame | None,
     partitions: int = 32,
-    bits_per_key: int = 10,
     key_col: str = "url_hash",
     bloom: "BloomIndex | CuckooIndex | None" = None,
 ) -> DataFrame:

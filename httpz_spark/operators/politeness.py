@@ -5,15 +5,15 @@ The reference's politeness story is just a global in-flight cap
 queue with robots budgets.  Spark-first shape:
 
 * robots is a small per-host table -> **broadcast join** (no shuffle);
-* the per-host budget is a **window top-k**:
-  ``row_number() over (partition by host order by priority, url_hash)``
-  — deterministic crawl order (wave, priority, url_hash) falls out of the
-  same window;
-* hot-host skew in the *fetch* stage is handled by salted repartitioning:
-  ``repartition(P, host, pmod(url_hash, salt))`` spreads a hot host across
-  ``salt`` partitions while keeping unrelated hosts co-located (SURVEY §4
-  O12).  The dedup join's skew is AQE's job (skewJoin enabled in the
-  session factory).
+* the per-host budget is an exact **two-phase window top-k** equal to
+  ``row_number() over (partition by host order by priority, url_hash)
+  <= budget`` — deterministic crawl order (wave, priority, url_hash) —
+  without sorting a hot host's whole pending set in one task
+  (``politeness_schedule``);
+* hot-host skew in the *fetch* stage is handled by salted repartitioning
+  on the politeness rank: a host's scheduled rows split into runs of
+  ``HOT_HOST_ROWS`` (``salted_repartition``).  The dedup join's skew is
+  AQE's job (skewJoin enabled in the session factory).
 """
 
 from __future__ import annotations
@@ -24,6 +24,10 @@ from pyspark.sql.window import Window
 
 from httpz_spark.functions.robotsx import robots_path_allowed, robots_rules
 
+# scheduled rows per (host, salt) fetch partition; a host with at most this
+# many rows in a wave stays in one partition (salted_repartition)
+HOT_HOST_ROWS = 64
+
 
 def politeness_schedule(
     df: DataFrame,
@@ -31,25 +35,35 @@ def politeness_schedule(
     default_budget: int,
     host_col: str = "host",
     path_col: str = "path",
-    pre_salt: int = 16,
     host_budgets: DataFrame | None = None,
 ) -> DataFrame:
-    """Adds ``sched_rank`` (1-based per-host rank in crawl order) and
-    ``scheduled`` (rank <= budget); drops robots-disallowed paths.
+    """Adds ``scheduled`` (the row is among its host's first ``budget``
+    rows in (priority, url_hash) order) and ``sched_rank`` (that 1-based
+    per-host rank on scheduled rows, NULL on deferred ones); drops
+    robots-disallowed paths.
 
     Callers split on ``scheduled``: selected rows fetch this wave, the rest
     stay in the frontier (budget-deferred, re-ranked next wave).
 
-    Hot-host scale shape (``pre_salt > 1``): a single window over
-    ``partitionBy(host)`` sorts one hot host's 10^8 pending URLs in ONE
-    task.  Instead, ranks are computed DISTRIBUTED and stay exact: rows
-    bucket by the high ``log2(pre_salt)`` bits of ``url_hash`` (an
-    arithmetic shift, so bucket order == url_hash order), each (host,
-    priority, bucket) ranks locally in parallel, and a prefix sum over the
-    tiny per-bucket counts table converts local ranks to exact global
-    per-host ranks.  Output is identical to the single-window path row for
-    row, including deferred rows' ranks (property-tested); the largest
-    sort anywhere is ~1/pre_salt of the hottest host.
+    Two-phase exact top-k, one read of ``df``:
+
+    1. rows bucket by the top 4 bits of ``url_hash`` (``_hb``, 16 buckets)
+       and rank locally, ``_lr`` over (host, ``_hb``).  A row is a
+       *candidate* when ``_lr <= budget``.  A row's local rank never
+       exceeds its global rank, so every row of global rank <= budget is a
+       candidate, and so is every row ahead of such a row;
+    2. candidates rank again over (host) alone, non-candidates stay split
+       by bucket.  Among candidates a row of global rank <= budget keeps
+       exactly that rank (every row ahead of it is a candidate) and every
+       other candidate ranks above ``budget`` — so ``scheduled`` and the
+       scheduled rows' ``sched_rank`` equal the single host window's.
+
+    Cost bound: phase 1 sorts ~1/16 of a host per window partition; phase
+    2 sorts at most 16 x budget candidates per host (non-candidates stay
+    split by bucket).  So a host sorts all its pending rows in one
+    partition only when they number at most 16 x budget; when its budget
+    covers them all, they are the rows the wave then fetches for that host
+    anyway.
     """
     if robots is not None:
         # RFC 9309 enforcement: patterns (prefix + '*'/'$' wildcards) are
@@ -84,46 +98,18 @@ def politeness_schedule(
         df = df.join(ab, df[host_col] == F.col("_abhost"), "left").drop("_abhost")
         budget = F.least(budget, F.coalesce(F.col("_abudget"), budget))
 
-    order = [F.col("priority"), F.col("url_hash")]
-    if pre_salt and pre_salt > 1:
-        # distributed EXACT per-host rank, no full-host sort anywhere:
-        # 1. bucket rows by the high bits of url_hash — an arithmetic
-        #    shift preserves signed order, so (priority, bucket, url_hash)
-        #    sorts identically to (priority, url_hash);
-        # 2. rank locally within (host, priority, bucket) — each window
-        #    partition holds ~1/S of the host, fully parallel;
-        # 3. prefix-sum the bucket counts per host (a window over the TINY
-        #    per-bucket counts table) to get each bucket's rank offset;
-        # 4. exact global rank = offset + local rank.
-        bits = max(1, (pre_salt - 1).bit_length())
-        bucket = F.shiftright(F.col("url_hash"), 64 - bits)
-        df = df.withColumn("_pb", F.col("priority")).withColumn("_hb", bucket)
-        # counts first (they don't need ranks) so the rank window below is
-        # computed exactly once — the offsets join broadcasts the tiny
-        # counts table onto the windowed side
-        cnt = df.groupBy(host_col, "_pb", "_hb").agg(F.count("*").alias("_n"))
-        woff = (
-            Window.partitionBy(host_col)
-            .orderBy("_pb", "_hb")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off = cnt.withColumn("_off", F.coalesce(F.sum("_n").over(woff), F.lit(0)))
-        wl = Window.partitionBy(F.col(host_col), F.col("_pb"), F.col("_hb")).orderBy(
-            F.col("url_hash")
-        )
-        df = df.withColumn("_lr", F.row_number().over(wl))
-        df = df.join(off.select(host_col, "_pb", "_hb", "_off"),
-                     [host_col, "_pb", "_hb"])
-        df = df.withColumn(
-            "sched_rank", (F.col("_off") + F.col("_lr")).cast("int")
-        )
-        df = df.withColumn("scheduled", F.col("sched_rank") <= budget)
-        df = df.drop("_pb", "_hb", "_lr", "_off")
-    else:
-        w = Window.partitionBy(host_col).orderBy(*order)
-        df = df.withColumn("sched_rank", F.row_number().over(w))
-        df = df.withColumn("scheduled", F.col("sched_rank") <= budget)
-    return df.drop("_budget", "_rules", "_abudget")
+    host, order = F.col(host_col), [F.col("priority"), F.col("url_hash")]
+    df = df.withColumn("_hb", F.shiftright(F.col("url_hash"), 60))
+    df = df.withColumn("_lr", F.row_number().over(
+        Window.partitionBy(host, F.col("_hb")).orderBy(*order)))
+    cand = F.col("_lr") <= budget
+    df = df.withColumn("sched_rank", F.row_number().over(
+        Window.partitionBy(host, cand, F.when(~cand, F.col("_hb")))
+        .orderBy(*order)))
+    df = df.withColumn("scheduled", cand & (F.col("sched_rank") <= budget))
+    df = df.withColumn("sched_rank",
+                       F.when(F.col("scheduled"), F.col("sched_rank")))
+    return df.drop("_hb", "_lr", "_budget", "_rules", "_abudget")
 
 
 def aimd_host_budgets(
@@ -169,17 +155,18 @@ def aimd_host_budgets(
     return agg.select("host", new.cast("int").alias("budget"))
 
 
-def salted_repartition(df: DataFrame, partitions: int, target: int) -> DataFrame:
+def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
     """Fetch-stage layout: co-locate by host but fan hot hosts out over
     salt partitions (politeness budgets were already applied upstream, so
     spreading a host does not break them).
 
     The politeness window already assigned every scheduled row its
-    per-host rank ``sched_rank``, so ``floor((rank-1)/target)`` is a FREE, deterministic,
-    perfectly-balanced salt — each (host, salt) bucket holds at most
-    ``target`` rows exactly (no hash variance, no extra pass, no per-host
-    count agg; a fixed hash fan-out measured fetch-stage 4→16-core
-    efficiency 0.48 vs 0.85 uniform).  Cold hosts (≤ target rows) stay
-    whole for a real transport's connection reuse."""
-    salt = F.floor((F.col("sched_rank") - 1) / F.lit(target))
+    per-host rank ``sched_rank``, so ``floor((rank-1)/HOT_HOST_ROWS)`` is a
+    FREE, deterministic, perfectly-balanced salt — each (host, salt) bucket
+    holds at most ``HOT_HOST_ROWS`` rows exactly (no hash variance, no
+    extra pass, no per-host count agg; a fixed hash fan-out measured
+    fetch-stage 4→16-core efficiency 0.48 vs 0.85 uniform).  Cold hosts
+    (≤ HOT_HOST_ROWS rows) stay whole for a real transport's connection
+    reuse."""
+    salt = F.floor((F.col("sched_rank") - 1) / F.lit(HOT_HOST_ROWS))
     return df.repartition(partitions, F.col("host"), salt)

@@ -494,9 +494,9 @@ class CrawlEngine:
 
     def _schedule(self, frontier: DataFrame, seen_size: int) -> DataFrame:
         """The wave's one ranked frame: seen-gated rows with the politeness
-        window's ``scheduled`` and ``sched_rank``, plus the trap guard's
-        overflow rows with ``scheduled=false``.  ``seen_size`` (from
-        lineage) picks the dedup path."""
+        schedule's ``scheduled`` and ``sched_rank`` (NULL when deferred),
+        plus the trap guard's overflow rows with ``scheduled=false``.
+        ``seen_size`` (from lineage) picks the dedup path."""
         ecfg = self.engine_cfg
         # the frontier is unique by url_hash BY CONSTRUCTION (init_frontier
         # dedupes; next_frontier is a groupBy(url_hash) output) — a per-wave
@@ -505,10 +505,7 @@ class CrawlEngine:
         # adaptive dedup path: plain JVM anti-join until the seen table is
         # big enough that skipping its scan pays for the bloom probe
         bloom = self._bloom() if seen_size >= ecfg.bloom_min_seen else None
-        unseen = dedup_unseen(
-            frontier, seen, ecfg.partitions,
-            bits_per_key=ecfg.bloom_bits_per_key, bloom=bloom,
-        )
+        unseen = dedup_unseen(frontier, seen, ecfg.partitions, bloom=bloom)
         # crawler-trap guard: templates whose CUMULATIVE fetched-URL count
         # (template_counts state, maintained by run_wave from actually
         # fetched rows) crossed the cap trickle at most trap_keep new URLs
@@ -531,12 +528,12 @@ class CrawlEngine:
                 )
         ranked = politeness_schedule(
             unseen, self.robots, default_budget=ecfg.per_host_budget,
-            pre_salt=ecfg.politeness_pre_salt,
             host_budgets=(self.store.read("host_budgets")
                           if ecfg.adaptive_politeness else None),
         )
         # sched_rank rides along: _fetch salts hot hosts by
-        # floor((rank-1)/target) — free, perfectly balanced (politeness.py)
+        # floor((rank-1)/HOT_HOST_ROWS) — free, perfectly balanced
+        # (politeness.py)
         ranked = ranked.select(*FRONTIER_COLS, "scheduled", "sched_rank")
         if trap_overflow is not None:
             ranked = ranked.unionByName(
@@ -588,7 +585,7 @@ class CrawlEngine:
         pass_names = [n for n, _t in passthrough]
         pass_schema = ", ".join(f"{n} {t}" for n, t in passthrough)
 
-        df = salted_repartition(df, ecfg.partitions, ecfg.hot_host_threshold)
+        df = salted_repartition(df, ecfg.partitions)
         stage = make_fetch_stage(
             scfg, self.fabric_cfg, pass_names, stop_file=self._stop_file()
         )

@@ -55,24 +55,25 @@ def test_aimd_update_rule(spark):
 def test_politeness_schedule_applies_host_budgets(spark):
     """The adaptive cap composes with the robots/default budget via
     least() — it can only shrink a host's wave, never exceed the default
-    — and the plan still carries exactly ONE rank window."""
+    — and the plan still carries exactly the two rank windows of the
+    two-phase top-k (the budgets join adds none)."""
     rows = [("a.test", f"/p{i}", i, i * 7 + 1) for i in range(6)] + \
            [("b.test", f"/p{i}", i, i * 11 + 2) for i in range(6)]
     df = spark.createDataFrame(
         rows, "host string, path string, priority long, url_hash long")
     hb = spark.createDataFrame(
         [("a.test", 2), ("b.test", 99)], "host string, budget int")
-    ranked = politeness_schedule(df, None, default_budget=4, pre_salt=1,
+    ranked = politeness_schedule(df, None, default_budget=4,
                                  host_budgets=hb)
     sched = {h: n for h, n in
              ranked.filter("scheduled").groupBy("host").count().collect()}
     assert sched == {"a.test": 2, "b.test": 4}  # least(default, adaptive)
     plan = ranked._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Window") == 1
+    assert plan.count("Window") == 2
     # hosts absent from the budgets table fall back to the default
     df2 = df.withColumn("host", F.concat(F.col("host"), F.lit(".x")))
     sched2 = {h: n for h, n in
-              politeness_schedule(df2, None, default_budget=4, pre_salt=1,
+              politeness_schedule(df2, None, default_budget=4,
                                   host_budgets=hb)
               .filter("scheduled").groupBy("host").count().collect()}
     assert sched2 == {"a.test.x": 4, "b.test.x": 4}

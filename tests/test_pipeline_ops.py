@@ -261,59 +261,80 @@ def test_decode_stub_poison_row(spark):
 
 
 # ---------------------------------------------------------------------------
-# politeness: salted pre-prune == single-window (hot-host skew guard)
+# politeness: two-phase top-k == one window per host (hot-host skew guard)
 # ---------------------------------------------------------------------------
 
-def _skewed_frontier(spark, n=60_000):
+def _skewed_frontier(spark, n=60_000, seed=0):
     # 95% of rows on one hot host, the rest across 50 cold hosts
     return spark.range(n).select(
         F.when(F.col("id") % 20 < 19, F.lit("hot.test"))
         .otherwise(F.concat(F.lit("h"), (F.col("id") % 50).cast("string"),
                             F.lit(".test"))).alias("host"),
         F.concat(F.lit("/p/"), F.col("id").cast("string")).alias("path"),
-        F.xxhash64(F.col("id")).alias("url_hash"),
-        (F.col("id") % 3).cast("long").alias("priority"),
+        F.xxhash64(F.col("id"), F.lit(seed)).alias("url_hash"),
+        F.pmod(F.xxhash64(F.col("id"), F.lit(seed + 1)), F.lit(3))
+        .alias("priority"),
     )
 
 
-def test_politeness_pre_salt_scheduled_set_exact(spark):
+def _assert_matches_host_window(df, out, budgets, default):
+    """``out`` (politeness_schedule over ``df``) against the plain
+    reference: one ``row_number()`` window per host, rank <= the host's
+    budget (``budgets`` dict, else ``default``)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("host").orderBy("priority", "url_hash")
+    ref = df.withColumn("rank", F.row_number().over(w)).select(
+        "host", "url_hash", "rank").collect()
+    want_sched = sorted((r["host"], r["url_hash"], r["rank"]) for r in ref
+                        if r["rank"] <= budgets.get(r["host"], default))
+    want_def = sorted((r["host"], r["url_hash"]) for r in ref
+                      if r["rank"] > budgets.get(r["host"], default))
+    got = out.select("host", "url_hash", "sched_rank", "scheduled").collect()
+    assert sorted((r["host"], r["url_hash"], r["sched_rank"])
+                  for r in got if r["scheduled"]) == want_sched
+    assert sorted((r["host"], r["url_hash"])
+                  for r in got if not r["scheduled"]) == want_def
+    assert all(r["sched_rank"] is None for r in got if not r["scheduled"])
+
+
+def test_politeness_schedule_matches_host_window(spark):
+    """Scheduled set, its ranks and the deferred set equal the single
+    per-host window's, over two hash seeds and an unlimited budget."""
     from httpz_spark.operators.politeness import politeness_schedule
 
-    df = _skewed_frontier(spark)
-    base = politeness_schedule(df, None, default_budget=7, pre_salt=0)
-    salted = politeness_schedule(df, None, default_budget=7, pre_salt=16)
-
-    # the distributed-rank path is exact for EVERY row (scheduled AND
-    # deferred), not just the scheduled set
-    key = ["host", "url_hash", "sched_rank", "scheduled"]
-    a = sorted(map(tuple, base.select(*key).collect()))
-    b = sorted(map(tuple, salted.select(*key).collect()))
-    assert a == b
-    # no rows lost: deferred + scheduled partitions the frontier
-    assert salted.count() == df.count()
-    assert salted.filter("scheduled").count() + salted.filter("NOT scheduled").count() == df.count()
+    for seed, budget in ((0, 7), (1, 7), (0, 10**9)):
+        df = _skewed_frontier(spark, seed=seed)
+        out = politeness_schedule(df, None, default_budget=budget)
+        _assert_matches_host_window(df, out, {}, budget)
 
 
-def test_politeness_pre_salt_with_robots_budgets(spark):
+def test_politeness_schedule_matches_host_window_with_budgets(spark):
+    """Robots budgets (one of 10^9), a robots Disallow and AIMD host
+    budgets compose as least(robots or default, adaptive), and the
+    schedule still equals the single per-host window's."""
     from httpz_spark.operators.politeness import politeness_schedule
 
-    df = _skewed_frontier(spark, n=20_000)
     robots = spark.createDataFrame(
-        [("hot.test", 3, ["/p/1"]), ("h7.test", 1, [])],
+        [("hot.test", 3, ["/p/1"]), ("h7.test", 1, []),
+         ("h9.test", 10**9, [])],
         "host string, per_wave_budget int, disallow array<string>",
     )
-    base = politeness_schedule(df, robots, default_budget=5, pre_salt=0)
-    salted = politeness_schedule(df, robots, default_budget=5, pre_salt=8)
-    key = ["host", "url_hash", "sched_rank"]
-    a = sorted(map(tuple, base.filter("scheduled").select(*key).collect()))
-    b = sorted(map(tuple, salted.filter("scheduled").select(*key).collect()))
-    assert a == b
-    # per-host budget respected
-    per_host = {r["host"]: r["n"] for r in
-                salted.filter("scheduled").groupBy("host").agg(F.count("*").alias("n")).collect()}
-    assert per_host["hot.test"] == 3
-    assert per_host.get("h7.test", 0) <= 1
-    assert base.count() == salted.count()
+    hb = spark.createDataFrame(
+        [("hot.test", 2), ("h3.test", 1), ("h9.test", 2)],
+        "host string, budget int")
+    for seed in (0, 1):
+        df = _skewed_frontier(spark, n=20_000, seed=seed)
+        allowed = df.filter(~((F.col("host") == "hot.test")
+                              & F.col("path").startswith("/p/1")))
+        out = politeness_schedule(df, robots, default_budget=5)
+        _assert_matches_host_window(
+            allowed, out, {"hot.test": 3, "h7.test": 1, "h9.test": 10**9}, 5)
+        out = politeness_schedule(df, robots, default_budget=5,
+                                  host_budgets=hb)
+        _assert_matches_host_window(
+            allowed, out, {"hot.test": 2, "h7.test": 1, "h3.test": 1,
+                           "h9.test": 2}, 5)
 
 
 def test_ngram_df_cap_hot_shingle(spark):

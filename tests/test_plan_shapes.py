@@ -20,6 +20,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 import pytest
@@ -153,8 +154,6 @@ def crawl_frames(spark, tmp_path_factory):
         spark, images, dns=None, robots=S.robots_df(spark, world),
         scan_cfg=ScanConfig.all_on(),
         engine_cfg=EngineConfig(partitions=8, per_host_budget=4,
-                                politeness_pre_salt=8,
-                                hot_host_threshold=4,
                                 include_payload=True),
         fabric_cfg=world, state_dir=state,
     )
@@ -234,15 +233,21 @@ def test_payload_join_sits_after_fetch_stage(spark, crawl_frames):
 
 def test_politeness_window_input_is_salted(spark, crawl_frames):
     """The per-host ranking must never sort one hot host in a single task:
-    with pre_salt > 1 the rank window partitions on (host, priority
-    bucket, hash bucket) — the _pb/_hb salt columns — and an exact-offset
-    join restores global ranks."""
+    no rank window partitions on ``host`` alone — phase 1 partitions on
+    (host, hash bucket ``_hb``), phase 2 on (host, candidate, bucket of
+    non-candidates).  And the ``wave<k>_sched`` write evaluates the
+    seen-gated frontier ONCE: one frontier scan, one anti-join."""
     s, _o = crawl_frames
-    p = plan_of(s)
-    w = [ln for ln in p.splitlines() if "row_number" in ln
-         and "windowspecdefinition" in ln]
-    assert w, p
-    assert all("_hb" in ln and "_pb" in ln for ln in w), w
+    # formatted Window arguments: [exprs AS name], [partition keys], [order]
+    keys = re.findall(r"row_number\(\) windowspecdefinition.*? AS \w+#\d+\], "
+                      r"\[([^\]]*)\]", plan_of(s))
+    assert len(keys) == 2, keys
+    for k in keys:
+        cols = [c.split("#")[0] for c in k.split(", ")]
+        assert cols[0] == "host" and len(cols) > 1, keys
+    ex = s._jdf.queryExecution().executedPlan().toString()
+    assert ex.count("LeftAnti") == 1, ex
+    assert len(re.findall(r"Scan \w+ .*frontier", ex)) == 1, ex
 
 
 def test_fetch_stage_input_salted_by_rank(spark, crawl_frames):

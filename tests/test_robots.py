@@ -212,7 +212,7 @@ def test_politeness_schedule_enforces_wildcards(spark):
     robots = spark.createDataFrame(
         [("h1", 100, 10, ["/r/", "/*.php$"], ["/r/public/"])],
         S.ROBOTS_SCHEMA)
-    out = politeness_schedule(df, robots, default_budget=10, pre_salt=0)
+    out = politeness_schedule(df, robots, default_budget=10)
     kept = {(r["host"], r["path"]) for r in out.collect()}
     assert kept == {("h1", "/keep"), ("h1", "/r/public/ok"),
                     ("h2", "/x.php")}
@@ -230,7 +230,7 @@ def test_politeness_schedule_without_allow_column(spark):
         [("h1", 100, 10, ["/r/"])],
         "host string, crawl_delay_ms int, per_wave_budget int, "
         "disallow array<string>")
-    out = politeness_schedule(df, robots, default_budget=10, pre_salt=0)
+    out = politeness_schedule(df, robots, default_budget=10)
     assert [r["path"] for r in out.collect()] == ["/ok"]
 
 
