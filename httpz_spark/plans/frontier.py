@@ -6,32 +6,50 @@ DataFrame waves (SURVEY.md §3.4):
 
     wave k:  frontier --in-wave dedup--> bloom+anti-join vs seen
              --politeness window (broadcast robots)--> scheduled | deferred
-             --salted repartition--> mapInPandas fetch
-             --> MERGE results/seen, frontier(k+1) = deferred + discovered
+             --salted repartition--> mapInPandas fetch        (staged)
+             --> merge tail, its independent writes CONCURRENT:
+                   results  (+ payload: broadcast wave ids -> left-semi
+                             slice of images -> equi join)
+                   seen (+ seen-filter index) | partition_lineage
+                   frontier(k+1) = deferred + discovered
+                   [host_budgets (AIMD)] [template_counts (trap guard)]
+             --> lineage row (commit marker)
 
 Exactly-once resume (north_rule "a killed job resumes exactly"):
 
 * each wave first stages two atomic snapshots — ``wave<k>_sched`` (the
   seen-gated, politeness-ranked frontier: scheduled rows plus deferred
   ones) and ``wave<k>_out`` (the fetch of its scheduled rows, read back
-  from ``wave<k>_sched``) — THEN applies merges *from the staging*;
+  from ``wave<k>_sched``; no payload columns) — THEN applies merges *from
+  the staging*;
+* the merge tail's writes read only the staging, never each other's
+  output, so they run on one thread each; the wave waits for all of them
+  and re-raises the first failure before its lineage row, so a failed
+  tail commits nothing a resume would skip;
 * the wave's counters are ``Observation``s on writes that run anyway,
   committed in each table's manifest summary — no counting job;
 * the lineage row for wave k is the commit marker — written last;
 * a kill at any point re-runs wave k: each staged table is reused if it
   was committed, else rebuilt (the fetch fabric is deterministic);
-  merge_upsert on url_hash is idempotent, so the final tables are
-  byte-identical to an uninterrupted run (tested in tests/test_frontier.py).
+  every tail write is idempotent (merge_upsert on its key, a full
+  frontier rewrite), so the final tables are byte-identical to an
+  uninterrupted run (tested in tests/test_frontier.py).
+
+Payload bytes never ride a corpus-sized shuffle: the results write joins
+them to the wave's fetched rows through a left-semi slice of the images
+table built from the wave's broadcast ``image_id`` set — O(wave), not
+O(corpus).
 
 Deterministic crawl order = (wave_id, priority, url_hash); priority = depth
 (BFS).  All per-wave metrics land in the ``lineage`` table, including the
 driver wall seconds of the wave's phases (``phase_secs``: ``commit`` — the
-commit check's lineage read, ``sched``, ``fetch``, ``merge``).
+commit check's lineage read, ``sched``, ``fetch``, ``merge`` — the wall
+time of the concurrent tail).
 
 The robots table is resolved ONCE per engine, at construction, into a
-driver-local relation (it is broadcast-sized, politeness.py): a wave's
-schedule uses it twice and would otherwise re-run its source — for
-``build_robots_table``, every host's robots.txt fetch — on each use.
+driver-local relation (it is broadcast-sized, politeness.py): otherwise
+every wave's schedule would re-run its source — for
+``build_robots_table``, every host's robots.txt fetch.
 """
 
 from __future__ import annotations
@@ -39,9 +57,11 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from httpz_spark.config import EngineConfig, ScanConfig
 from httpz_spark.functions import urls as U
@@ -267,23 +287,86 @@ class CrawlEngine:
         p_merge = time.perf_counter()
 
         out = self.store.read(staging_out)
-        deferred = (self.store.read(staging_sched)
-                    .filter(~F.col("scheduled")).select(*FRONTIER_COLS))
+        # the merge tail: each closure builds and writes its own table(s)
+        # from the staging alone, so they run concurrently and the tail
+        # costs its longest write, not their sum.  Building a frame costs
+        # driver time too (urls_to_frontier's expression tree), so that
+        # happens inside the closures, and the long poles (results with
+        # its payload join, the frontier rebuild) are submitted first.
+
+        # MERGE results, like seen below, is idempotent on url_hash;
+        # fetch_part is a lineage-only column — results keep their
+        # established schema
+        def results():
+            self.store.merge_upsert(
+                "results", self._with_payload(out), key="url_hash")
+
+        # frontier(k+1) = deferred + discovered (depth-capped, in-wave
+        # deduped); a URL that is BOTH deferred and freshly discovered
+        # keeps the shallowest row
+        def frontier():
+            next_frontier = (self.store.read(staging_sched)
+                             .filter(~F.col("scheduled")).select(*FRONTIER_COLS))
+            if scfg.discover_links:
+                discovered = (
+                    out.filter(F.col("discovered").isNotNull()
+                               & (F.col("depth") < ecfg.max_depth))
+                    .select(F.col("depth").alias("_pd"),
+                            F.explode("discovered").alias("u"))
+                )
+                next_frontier = next_frontier.unionByName(urls_to_frontier(
+                    discovered, "u", depth=F.col("_pd") + 1, wave_id=wave_id + 1))
+            self._write_frontier(_merge_frontier(next_frontier))
+
+        def seen():
+            seen_rows = out.select(
+                "url_hash", "url_canon", F.lit(wave_id).alias("first_wave"))
+            self.store.merge_upsert("seen", seen_rows, key="url_hash")
+            # OR this wave's keys into the seen-filter index, once one
+            # exists (_schedule builds it when seen reaches bloom_min_seen),
+            # BEFORE the lineage commit: a kill anywhere re-runs the wave
+            # and re-ORs, so the index never has false negatives vs the
+            # seen table
+            index = self._bloom(create=False)
+            if index is not None:
+                index.update(seen_rows)
+
+        # per-partition fetch lineage (north rule: partition-granular
+        # metrics checkpoint next to the wave-level lineage): derived from
+        # the STAGED wave output, so a crash-rerun re-derives byte-equal
+        # rows and the MERGE on (wave, partition) is idempotent
+        def partition_lineage():
+            plineage = (
+                out.groupBy("fetch_part")
+                .agg(F.count(F.lit(1)).alias("n_rows"),
+                     F.count("error_type").alias("n_errors"),
+                     F.sum("latency_ms").alias("latency_ms_sum"),
+                     F.max("latency_ms").alias("latency_ms_max"))
+                .withColumn("wave_id", F.lit(wave_id).cast("int"))
+                .withColumn("wp_key", F.concat_ws(
+                    "\x00", F.lit(str(wave_id)),
+                    F.col("fetch_part").cast("string")))
+            )
+            self.store.merge_upsert("partition_lineage", plineage, key="wp_key")
+
+        tail = [results, frontier, seen, partition_lineage]
 
         # AIMD politeness update — STAGED before the state merge so a
         # crash-rerun replays the same (host, budget) rows instead of
         # recomputing from the already-updated state (which would halve a
         # slow host twice for one observed wave)
         if ecfg.adaptive_politeness:
-            if not self.store.exists(staging_budgets):
-                self.store.write(staging_budgets, aimd_host_budgets(
-                    out, self.store.read("host_budgets"),
-                    default_budget=ecfg.per_host_budget,
-                    slow_latency_ms=ecfg.slow_latency_ms,
-                    min_budget=ecfg.min_host_budget,
-                ))
-            self.store.merge_upsert(
-                "host_budgets", self.store.read(staging_budgets), key="host")
+            def budgets():
+                if not self.store.exists(staging_budgets):
+                    self.store.write(staging_budgets, aimd_host_budgets(
+                        out, self.store.read("host_budgets"),
+                        default_budget=ecfg.per_host_budget,
+                        slow_latency_ms=ecfg.slow_latency_ms,
+                        min_budget=ecfg.min_host_budget,
+                    ))
+                self.store.merge_upsert(
+                    "host_budgets", self.store.read(staging_budgets), key="host")
+            tail.append(budgets)
 
         # trap-guard bookkeeping: this wave's fetched-URL counts per (host,
         # path-template), keyed by (host, template, wave_id) so a crash
@@ -292,68 +375,32 @@ class CrawlEngine:
         # grain keeps the table small (distinct templates x waves, StateStore
         # compaction applies); _schedule sums it into the cumulative view.
         if ecfg.trap_max_urls is not None:
-            tpl = (
-                out.select(
-                    "host",
-                    url_path_template(F.col("url_canon")).alias("template"),
+            def template_counts():
+                tpl = (
+                    out.select(
+                        "host",
+                        url_path_template(F.col("url_canon")).alias("template"),
+                    )
+                    .groupBy("host", "template")
+                    .agg(F.count(F.lit(1)).alias("n_urls"))  # frontier rows
+                    #                 are unique by url_hash -> count = distinct
+                    .withColumn("wave_id", F.lit(wave_id))
+                    .withColumn("tpl_key", F.concat_ws(
+                        "\x00", F.col("host"), F.col("template"),
+                        F.lit(str(wave_id))))
                 )
-                .groupBy("host", "template")
-                .agg(F.count(F.lit(1)).alias("n_urls"))  # frontier rows are
-                #                       unique by url_hash -> count = distinct
-                .withColumn("wave_id", F.lit(wave_id))
-                .withColumn("tpl_key", F.concat_ws(
-                    "\x00", F.col("host"), F.col("template"),
-                    F.lit(str(wave_id))))
-            )
-            self.store.merge_upsert("template_counts", tpl, key="tpl_key")
+                self.store.merge_upsert("template_counts", tpl, key="tpl_key")
+            tail.append(template_counts)
 
-        # per-partition fetch lineage (north rule: partition-granular
-        # metrics checkpoint next to the wave-level lineage): derived from
-        # the STAGED wave output, so a crash-rerun re-derives byte-equal
-        # rows and the MERGE on (wave, partition) is idempotent
-        plineage = (
-            out.groupBy("fetch_part")
-            .agg(F.count(F.lit(1)).alias("n_rows"),
-                 F.count("error_type").alias("n_errors"),
-                 F.sum("latency_ms").alias("latency_ms_sum"),
-                 F.max("latency_ms").alias("latency_ms_max"))
-            .withColumn("wave_id", F.lit(wave_id).cast("int"))
-            .withColumn("wp_key", F.concat_ws(
-                "\x00", F.lit(str(wave_id)),
-                F.col("fetch_part").cast("string")))
-        )
-        self.store.merge_upsert("partition_lineage", plineage, key="wp_key")
-        out = out.drop("fetch_part")
-
-        # MERGE results + seen (idempotent on url_hash); fetch_part is a
-        # lineage-only column — results keep their established schema
-        self.store.merge_upsert("results", out, key="url_hash")
-        seen_rows = out.select(
-            "url_hash", "url_canon", F.lit(wave_id).alias("first_wave")
-        )
-        self.store.merge_upsert("seen", seen_rows, key="url_hash")
-        # OR this wave's keys into the seen-filter index, once one exists
-        # (_schedule builds it when seen reaches bloom_min_seen), BEFORE the
-        # lineage commit: a kill anywhere re-runs the wave and re-ORs, so
-        # the index never has false negatives vs the seen table
-        index = self._bloom(create=False)
-        if index is not None:
-            index.update(seen_rows)
-
-        # frontier(k+1) = deferred + discovered (depth-capped, in-wave deduped)
-        next_frontier = deferred
-        if scfg.discover_links:
-            discovered = (
-                out.filter(F.col("discovered").isNotNull() & (F.col("depth") < ecfg.max_depth))
-                .select(F.col("depth").alias("_pd"), F.explode("discovered").alias("u"))
-            )
-            disc_frontier = urls_to_frontier(
-                discovered, "u", depth=F.col("_pd") + 1, wave_id=wave_id + 1
-            )
-            next_frontier = next_frontier.unionByName(disc_frontier)
-        # a URL that is BOTH deferred and freshly discovered keeps the
-        # shallowest row
-        self._write_frontier(_merge_frontier(next_frontier))
+        # each closure inherits this thread's local properties (job group,
+        # tags), so its jobs are billed to the caller; every future is
+        # read, and a failed write raises HERE — before the lineage row,
+        # so the resumed wave re-applies the whole (idempotent) tail
+        with ThreadPoolExecutor(max_workers=len(tail)) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(f))
+                       for f in tail]
+        for f in futures:
+            f.result()
         phases["merge"] = time.perf_counter() - p_merge
 
         stats = self._commit_lineage(wave_id, counts, t0, phases)
@@ -568,7 +615,7 @@ class CrawlEngine:
         is_page = (~F.col("path").isin("", "/")) & tail.rlike("^img[0-9]+$")
         df = df.withColumn("image_id", F.when(is_page, tail))
         # pre-fetch join carries LIGHT metadata only (AQE broadcasts);
-        # heavy bytes join post-fetch so they never ride this shuffle
+        # heavy bytes join in the results write, never this shuffle
         meta_names = [n for n, _t in META]
         df = df.join(self.images.select("image_id", *meta_names), "image_id", "left")
 
@@ -576,7 +623,8 @@ class CrawlEngine:
         # (whole-array copies in the batch loop — measured cheaper than the
         # former JVM rejoin, which shuffled the FAT fetch output rows; at
         # 100 TB the post-fetch shuffle of body-bearing rows is the one to
-        # avoid).  Payload BYTES still join post-fetch only.
+        # avoid).  Payload BYTES join only in the results write
+        # (_with_payload), over the wave's own image ids.
         passthrough = [
             ("url_hash", "long"), ("image_id", "string"),
             ("url_canon", "string"), ("host", "string"), ("path", "string"),
@@ -594,19 +642,30 @@ class CrawlEngine:
             "scan_target", "port", "proto_first", "proto_second",
         )
         out = fetch_in.mapInPandas(stage, schema=fetch_output_schema(pass_schema))
-        # partition id of the FETCH task, captured before the payload join
-        # can move rows — feeds the per-partition lineage table; the value
-        # lands in the staged wave output, so resume reads the recorded
-        # ids instead of recomputing them
+        # partition id of the FETCH task — feeds the per-partition lineage
+        # table; the value lands in the staged wave output, so resume reads
+        # the recorded ids instead of recomputing them
         out = out.withColumn("fetch_part", F.spark_partition_id())
-        if ecfg.include_payload:
-            out = out.join(
-                self.images.select(
-                    "image_id", *[n for n, _t in META], *[n for n, _t in PAYLOAD]
-                ),
-                "image_id", "left",
-            )
         return out.withColumn("wave_id", F.lit(wave_id).cast("int"))
+
+    def _with_payload(self, out: DataFrame) -> DataFrame:
+        """The results rows of a staged wave output: ``fetch_part`` dropped
+        and, under ``include_payload``, the image META + PAYLOAD columns
+        joined on the fetch stage's emitted ``image_id`` (root paths
+        resolve only inside the stage).  The images side is a left-semi
+        slice built from the wave's broadcast id set, so the join moves
+        the wave's payload bytes, never the corpus'.  Columns an older
+        build staged with the payload are dropped and re-joined (equal
+        values); the column order stays that build's, ``wave_id`` last."""
+        payload = [n for n, _t in META + PAYLOAD]
+        res = out.drop("fetch_part", *payload)
+        if not self.engine_cfg.include_payload:
+            return res
+        ids = res.select("image_id").distinct()
+        images = (self.images.select("image_id", *payload)
+                  .join(F.broadcast(ids), "image_id", "left_semi"))
+        res = res.join(images, "image_id", "left")
+        return res.select(*[c for c in res.columns if c != "wave_id"], "wave_id")
 
     def _commit_lineage(self, wave_id: int, counts: dict, t0: float,
                         phases: dict) -> dict:

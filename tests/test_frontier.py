@@ -5,6 +5,7 @@ import json
 import os
 import shutil
 import tempfile
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from httpz_spark.config import EngineConfig, ScanConfig
 from httpz_spark.operators.frontier_dedup import dedup_unseen
 from httpz_spark.plans.frontier import CrawlEngine, urls_to_frontier
+from httpz_spark.plans.scan import META, PAYLOAD
 from httpz_spark.sources import fabric as FB
 from httpz_spark.sources import synthetic as S
 
@@ -397,7 +399,7 @@ def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
     """Crawling 3 waves with a robots table that ``build_robots_table``
     fetches requests each host's robots.txt as often as one evaluation of
     that table does — once: the engine resolves the table at construction,
-    and a wave (whose schedule uses it twice) never re-runs the fetch."""
+    and a wave's schedule never re-runs the fetch."""
     from httpz_spark.operators.robotsfetch import build_robots_table
 
     def factory(log):
@@ -446,18 +448,108 @@ def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
 # per StateStore read, the robots source run twice in the schedule write,
 # and the lineage row through a PythonRDD.  The bucket-offset politeness
 # rank, which evaluated the seen-gated frontier twice (a counts branch and
-# a rank branch), ran 20.
-WAVE_JOBS = 17
+# a rank branch), ran 20; the build whose fetch write joined the payload
+# (a shuffle of the whole images table) ran 17.  The wave-sized payload
+# join adds two: the wave's distinct image ids and their broadcast.  The
+# merge tail's jobs run concurrently, on threads of their own; they are
+# counted here only because each tail thread inherits the caller's job
+# group.
+WAVE_JOBS = 19
 
 
 def test_steady_state_wave_job_budget(spark, world, tmp_path, job_group):
     eng = make_engine(spark, world, str(tmp_path / "state"))
     eng.init_frontier(seed_df(spark, world))
     eng.run_wave(0)
-    with job_group("frontier-wave-1") as jobs:
-        assert eng.run_wave(1)["n_fetched"] > 0
-        n_jobs = len(jobs())
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with job_group("frontier-wave-1") as jobs:
+            assert eng.run_wave(1)["n_fetched"] > 0
+            n_jobs = len(jobs())
     assert n_jobs == WAVE_JOBS, n_jobs
+    # a tail thread wrapped without the session warns that tags are lost
+    util = os.path.join("pyspark", "util.py")
+    assert not [str(w.message) for w in caught
+                if issubclass(w.category, UserWarning)
+                and w.filename.endswith(util)]
+
+
+PAYLOAD_COLS = [n for n, _t in META + PAYLOAD]
+
+
+def results_fingerprint(df):
+    """The results columns a resume must reproduce, the payload bytes by
+    digest."""
+    return table_fingerprint(df, [
+        "url_hash", "image_id", "status", "title", "depth", "wave_id",
+        "w", "h", "fmt", "caption", "phash", F.md5("bytes").alias("bytes")])
+
+
+@pytest.fixture(scope="module")
+def full_crawl(spark, world, tmp_path_factory):
+    """An uninterrupted 4-wave crawl: the reference the resume tests
+    below compare with."""
+    eng = make_engine(spark, world, str(tmp_path_factory.mktemp("full")))
+    eng.init_frontier(seed_df(spark, world))
+    eng.crawl(max_waves=4)
+    return eng
+
+
+def test_failed_tail_write_commits_no_lineage(spark, world, tmp_path, full_crawl):
+    """A merge-tail write that raises fails its wave after every other
+    (concurrent) tail write finished, and before the lineage row: the
+    wave stays uncommitted, and a fresh engine re-applies the whole
+    idempotent tail — the crawl equals an uninterrupted one."""
+    state = str(tmp_path / "state")
+    eng = make_engine(spark, world, state)
+    eng.init_frontier(seed_df(spark, world))
+    eng.run_wave(0)
+    merge = eng.store.merge_upsert
+
+    def failing(name, df, key):
+        if name == "seen":
+            raise RuntimeError("seen merge failed")
+        return merge(name, df, key)
+
+    eng.store.merge_upsert = failing
+    with pytest.raises(RuntimeError, match="seen merge failed"):
+        eng.run_wave(1)
+    assert eng.committed_waves() == {0}
+    assert eng.store.exists("wave1_out")  # staging kept for the resume
+
+    eng2 = make_engine(spark, world, state)
+    eng2.crawl(max_waves=4)
+    assert results_fingerprint(eng2.store.read("results")) == \
+        results_fingerprint(full_crawl.store.read("results"))
+    assert table_fingerprint(eng2.store.read("seen"), ["url_hash", "first_wave"]) == \
+        table_fingerprint(full_crawl.store.read("seen"), ["url_hash", "first_wave"])
+    assert lineage_counters(eng2) == lineage_counters(full_crawl)
+
+
+def test_resume_from_output_staged_with_payload(spark, world, tmp_path, full_crawl):
+    """A ``wave<k>_out`` staged by a build that joined the payload in the
+    fetch write (the staged output left-joined with the images' META and
+    PAYLOAD columns, ``wave_id`` last) resumes to the results of an
+    uninterrupted run, each payload column present once."""
+    eng = make_engine(spark, world, str(tmp_path / "state"))
+    eng.init_frontier(seed_df(spark, world))
+    s0 = eng.run_wave(0)
+    assert eng._stage(1, s0["n_fetched"])["n_fetched"] > 0
+    staged = eng.store.read("wave1_out")
+    summary = eng.store.summary("wave1_out")
+    old = (staged.drop("wave_id")
+           .join(eng.images.select("image_id", *PAYLOAD_COLS), "image_id", "left")
+           .withColumn("wave_id", F.lit(1)))
+    eng.store.write("wave1_out", old, summary=(summary,))
+    assert set(PAYLOAD_COLS) <= set(eng.store.read("wave1_out").columns)
+
+    assert eng.run_wave(1)["n_fetched"] == summary["n_fetched"]
+    got, want = eng.store.read("results"), full_crawl.store.read("results")
+    assert got.columns == want.columns
+    for c in PAYLOAD_COLS:
+        assert got.columns.count(c) == 1, got.columns
+    assert results_fingerprint(got) == results_fingerprint(
+        want.filter(F.col("wave_id") <= 1))
 
 
 def test_lineage_phase_secs(spark, world, tmp_path):

@@ -127,11 +127,12 @@ def test_dedup_pair_plan_shapes_lazy(spark, sf_dir):
 # interesting ones — are pinned here on the exact frames _stage wrote.
 # ---------------------------------------------------------------------------
 
-@pytest.fixture(scope="module")
-def crawl_frames(spark, tmp_path_factory):
-    """(sched, fetch_out): the lazy frames one engine wave writes as
-    ``wave0_sched`` and ``wave0_out`` over a small fabric, with part of the
-    seeds already seen — staged once, asserted on by the tests below."""
+def _plan_engine(spark, state):
+    """An engine over a small fabric, its frontier seeded and part of the
+    seeds already seen.  The images table is persisted, as in production
+    where `images` is a STORED table — the synthetic builder's own
+    MapInPandas must not masquerade as a wave python stage, and its scans
+    plan as ``InMemoryTableScan``."""
     from pyspark.sql import functions as F
 
     from httpz_spark.config import EngineConfig, ScanConfig
@@ -140,10 +141,6 @@ def crawl_frames(spark, tmp_path_factory):
     from httpz_spark.sources import synthetic as S
 
     world = FB.FabricConfig(n_images=64, n_hosts=12).with_certs()
-    state = str(tmp_path_factory.mktemp("plan_state"))
-    # persisted, as in production where `images` is a STORED table — the
-    # synthetic builder's own MapInPandas must not masquerade as a wave
-    # python stage in the assertions below
     images = S.images_df(spark, world, partitions=4).persist()
     images.count()
     seeds = S.seeds_df(spark, [
@@ -160,6 +157,15 @@ def crawl_frames(spark, tmp_path_factory):
     eng.init_frontier(seeds)
     eng.store.write("seen", eng.store.read("frontier").limit(8).select(
         "url_hash", "url_canon", F.lit(0).alias("first_wave")))
+    return eng
+
+
+@pytest.fixture(scope="module")
+def crawl_frames(spark, tmp_path_factory):
+    """(sched, fetch_out): the lazy frames one engine wave writes as
+    ``wave0_sched`` and ``wave0_out`` — staged once, asserted on by the
+    tests below."""
+    eng = _plan_engine(spark, str(tmp_path_factory.mktemp("plan_state")))
     written = {}
     write = eng.store.write
 
@@ -170,6 +176,26 @@ def crawl_frames(spark, tmp_path_factory):
     eng.store.write = spy
     eng._stage(0, seen_size=8)
     return written["wave0_sched"], written["wave0_out"]
+
+
+def _images_joins(df):
+    """For each scan of the persisted images table in ``df``'s physical
+    plan (AQE's current plan, not its wrapper): the first join above it —
+    where images rows meet the wave's — and the nodes between the two."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+
+    def walk(node, path=()):
+        path = path + (node,)
+        if node.nodeName() == "InMemoryTableScan":
+            up = path[::-1]
+            join = next(n for n in up if "Join" in n.nodeName())
+            yield join, up[:up.index(join)]
+        for i in range(node.children().size()):
+            yield from walk(node.children().apply(i), path)
+
+    return list(walk(root))
 
 
 def test_wave_has_exactly_one_python_stage(spark, crawl_frames):
@@ -193,42 +219,72 @@ def test_wave_has_exactly_one_python_stage(spark, crawl_frames):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
 
 
-def test_payload_join_sits_after_fetch_stage(spark, crawl_frames):
-    """Heavy payload BYTES join only the fetched rows: in the plan tree the
-    payload join is an ANCESTOR of the MapInPandas fetch stage (parents
-    print before children in explain output), while the light-meta join
-    rides below it — bytes never cross the pre-fetch shuffle."""
+def test_payload_joins_only_the_waves_images(spark, crawl_frames, tmp_path):
+    """Payload bytes move O(wave), never O(corpus): (a) the ``wave0_out``
+    write carries no payload column and shuffles no images; (b) the
+    results delta scans images only under a left-semi join whose build
+    side is the wave's own ``image_id`` set; (c) its payload equals an
+    inline ``out.join(images, "image_id", "left")`` on every fetched row,
+    NULL for a NULL or unknown ``image_id``."""
+    from pyspark.sql import functions as F
+
+    from httpz_spark.plans.scan import META, PAYLOAD
+
     _s, out = crawl_frames
+    assert "bytes" not in out.columns, out.columns
+    joins = _images_joins(out)
+    assert joins  # the light META join
+    for join, below in joins:
+        assert "Exchange" not in [n.nodeName() for n in below], join.toString()
+        scan = below[0].output()
+        read = {scan.apply(i).name() for i in range(scan.size())}
+        assert not read & {n for n, _t in PAYLOAD}, read
 
-    def walk(node):
-        yield node
-        for i in range(node.children().size()):
-            yield from walk(node.children().apply(i))
+    eng = _plan_engine(spark, str(tmp_path / "state"))
+    try:
+        eng._stage(0, seen_size=8)
+        staged = eng.store.read("wave0_out")
+        # (c) the staged rows plus a NULL and an unknown image_id
+        one = staged.limit(1)
+        extra = one.withColumn("url_hash", F.lit(-1).cast("long")).withColumn(
+            "image_id", F.lit(None).cast("string")).unionByName(
+            one.withColumn("url_hash", F.lit(-2).cast("long")).withColumn(
+                "image_id", F.lit("img_nope")))
+        frame = staged.unionByName(extra)
+        cols = ["image_id", *[n for n, _t in META], "phash",
+                F.md5("bytes").alias("bytes")]
+        got = {r["url_hash"]: tuple(r)[1:] for r in
+               eng._with_payload(frame).select("url_hash", *cols).collect()}
+        want = {r["url_hash"]: tuple(r)[1:] for r in
+                frame.join(eng.images, "image_id", "left")
+                .select("url_hash", *cols).collect()}
+        assert got == want and len(got) == staged.count() + 2
+        assert got[-1][1:] == got[-2][1:] == (None,) * 6, (got[-1], got[-2])
+        assert any(v[-1] is not None for v in got.values())
 
-    def out_names(node):
-        return {node.output().apply(i).name()
-                for i in range(node.output().size())}
+        # (b) the plan of the results delta the merge tail commits
+        plans = {}
+        merge = eng.store.merge_upsert
 
-    root = out._jdf.queryExecution().optimizedPlan()
-    fetch_nodes = [n for n in walk(root)
-                   if n.nodeName() == "MapInPandas"
-                   and "fetch_batches" in n.toString().splitlines()[0]]
-    assert len(fetch_nodes) == 1, [n.nodeName() for n in walk(root)]
-    # the fetch INPUT carries no payload bytes, and no shuffle under the
-    # fetch stage moves them (the cached images relation itself lists its
-    # full schema at the logical level — pruning lands in the physical
-    # InMemoryTableScan — so assert on the exchanges and the stage input,
-    # which is the actual "bytes never ride the pre-fetch shuffle" claim)
-    fetch_input = fetch_nodes[0].children().apply(0)
-    assert "bytes" not in out_names(fetch_input), fetch_input.toString()
-    for n in walk(fetch_nodes[0]):
-        if "Repartition" in n.nodeName() or "Exchange" in n.nodeName():
-            assert "bytes" not in out_names(n), n.toString().splitlines()[0]
-    # ...but the wave OUTPUT has them: the payload join is an ancestor of
-    # the fetch stage (include_payload post-fetch join)
-    assert "bytes" in out_names(root)
-    # and the light meta (caption) DOES ride into the fetch stage
-    assert any("caption" in out_names(n) for n in walk(fetch_nodes[0]))
+        def spy(name, df, key):
+            plans[name] = df
+            return merge(name, df, key)
+
+        eng.store.merge_upsert = spy
+        eng.run_wave(0)
+        joins = _images_joins(plans["results"])
+        assert joins
+        for join, below in joins:
+            assert join.joinType().toString() == "LeftSemi", join.toString()
+            assert "Exchange" not in [n.nodeName() for n in below], join.toString()
+            ids = join.children().apply(1)  # the build side
+            leaves = ids.collectLeaves()
+            roots = [leaves.apply(i).relation().location().rootPaths().mkString()
+                     for i in range(leaves.size())]
+            assert roots and all("wave0_out" in r for r in roots), roots
+            assert ids.output().apply(0).name() == "image_id", ids.toString()
+    finally:
+        eng.images.unpersist()
 
 
 def test_politeness_window_input_is_salted(spark, crawl_frames):
