@@ -505,10 +505,8 @@ def _mp_fetch_work(args):
     for i in range(lo, hi):
         iid = FB.image_id_at(i % CRAWL_IMAGES)
         host = FB.host_for_image(iid, world)
-        w, h, fmt = FB.image_meta(iid, world)
         rows.append({
-            "url_hash": i, "image_id": iid, "w": w, "h": h, "fmt": fmt,
-            "caption": FB.caption_for(iid, world),
+            "url_hash": i, "image_id": iid,
             "scan_target": f"{host}/d0/{iid}", "port": None,
             "proto_first": "https", "proto_second": "http",
         })

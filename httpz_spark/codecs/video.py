@@ -61,13 +61,3 @@ def video_index(data: bytes) -> tuple[int, int, list[tuple[int, int]]]:
     if pos > len(data):
         raise ValueError("truncated SPKV frame data")
     return fps, n_frames, spans
-
-
-def extract_frame(data: bytes, idx: int) -> bytes:
-    """Encoded bytes of frame ``idx`` (decode with
-    :func:`httpz_spark.codecs.images.decode_image`)."""
-    _fps, n, spans = video_index(data)
-    if not 0 <= idx < n:
-        raise IndexError(f"frame {idx} out of range 0..{n - 1}")
-    off, ln = spans[idx]
-    return data[off:off + ln]

@@ -104,12 +104,6 @@ def _to_signed64(u: int) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def hash64_pair(data: bytes, seed: int = 0) -> tuple[int, int]:
-    """Bit-compatible with ``mmh3.hash64(data, seed)`` (signed=True default)."""
-    h1, h2 = murmur3_x64_128(data, seed)
-    return _to_signed64(h1), _to_signed64(h2)
-
-
 def hash64_low(data: bytes, seed: int = 0) -> int:
     """``mmh3.hash64(data)[0]`` — the favicon-hash / url_hash primitive
     (reference usage: ``parsers.py:249``)."""
@@ -130,23 +124,6 @@ def hash64_str_batch(s: pd.Series, seed: int = 0) -> pd.Series:
         for v in s
     ]
     return pd.Series(out, dtype="Int64")
-
-
-def smhasher_verification(hashbytes: int = 16) -> int:
-    """SMHasher VerificationTest for MurmurHash3_x64_128.
-
-    Hash keys of the form [0,1,...,len-1] for len 0..255, seeded with
-    256-len; hash the concatenated 256*16 result bytes with seed 0; the
-    verification value is the low 32 bits of the first 8-byte word.
-    Expected: 0x6384BA69.
-    """
-    buf = bytearray()
-    for i in range(256):
-        key = bytes(range(i))
-        h1, h2 = murmur3_x64_128(key, 256 - i)
-        buf += h1.to_bytes(8, "little") + h2.to_bytes(8, "little")
-    f1, _ = murmur3_x64_128(bytes(buf), 0)
-    return f1 & 0xFFFFFFFF
 
 
 # ---------------------------------------------------------------------------

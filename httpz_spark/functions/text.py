@@ -48,12 +48,6 @@ def tokens_of(c: Column) -> Column:
     )
 
 
-def truncate_chars(c: Column, n: int) -> Column:
-    """First n characters (reference caps titles/body_clean at 1024 chars,
-    parsers.py:100,146)."""
-    return F.substring(c, 1, n)
-
-
 def status_isin(status: Column, codes: set[int] | list[int]) -> Column:
     """match_codes filter — scanner.py:450-451; set literal from
     parse_status_codes (parsers.py:257-274)."""

@@ -61,18 +61,6 @@ def domain_parts(c: Column) -> Column:
     )
 
 
-def scan_url(parts: Column, protocol: Column) -> Column:
-    """f'{protocol}://{host}[:port]' — scanner.py:355-357."""
-    host = parts.getField("base_domain")
-    port = parts.getField("port")
-    return F.concat(
-        protocol,
-        F.lit("://"),
-        host,
-        F.when(port.isNotNull(), F.concat(F.lit(":"), port.cast("string"))).otherwise(F.lit("")),
-    )
-
-
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 
 
@@ -116,12 +104,3 @@ def canonicalize_url(c: Column, default_scheme: str = "https") -> Column:
 def url_host(canon: Column) -> Column:
     """Host (incl. port) of a canonical URL — politeness partitioning key."""
     return F.regexp_extract(canon, r"^[a-z][a-z0-9+.\-]*://([^/?#]*)", 1)
-
-
-def url_depth(canon: Column) -> Column:
-    """Path depth of a canonical URL (number of '/'-segments) — a frontier
-    priority signal."""
-    path = F.regexp_extract(canon, r"^[a-z][a-z0-9+.\-]*://[^/?#]*(/[^?#]*)", 1)
-    return F.when(path == "", F.lit(0)).otherwise(
-        F.size(F.filter(F.split(path, "/"), lambda x: x != ""))
-    )

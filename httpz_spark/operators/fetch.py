@@ -2,7 +2,7 @@
 
 The page fetch (:func:`make_fetch_stage`) replaces the reference's asyncio
 scan loop (``httpz_scanner/scanner.py:206-379``): each executor task
-receives Arrow batches of scheduled URLs (+ joined payload columns), runs
+receives Arrow batches of scheduled URLs (+ passthrough columns), runs
 the retry/fallback state machine per row, performs enrichment
 (title/body/favicon/TLS via the batched kernels), and emits result
 batches; batches carrying ``etag`` / ``last_modified`` are conditional
@@ -21,13 +21,14 @@ Scale properties:
   state machine either way ⇒ identical results by construction (tested with
   a latency-injecting fake transport).
 * No driver round-trips: config + fabric rules travel in the closure;
-  payload rows ride the batch (the sandbox substitute for the network).
+  the fabric (the sandbox substitute for the network) builds each page
+  from the URL alone, as an origin would, so no payload column rides the
+  batch.
 * Certs are parsed once per distinct DER per batch (hosts share certs).
 * ONE transport per task (``sources/transport.drive_task``), closed when
   the batch iterator ends or raises: real transports own an event loop
   (and a session/connector for aiohttp), so construction stays out of the
-  hot loop and nothing leaks on long-running tasks.  The record provider
-  is a mutable pointer swapped per row.
+  hot loop and nothing leaks on long-running tasks.
 * Batch columns are unpacked once into python lists (``to_dict("records")``
   builds a dict per row and measured ~2× slower); output is assembled
   column-wise.
@@ -49,12 +50,7 @@ from httpz_spark.functions.htmlx import parse_page
 from httpz_spark.functions.tlsx import parse_cert_der
 from httpz_spark.functions.ua import ua_for
 from httpz_spark.parity import refmodel as R
-from httpz_spark.sources.fabric import (
-    FabricConfig,
-    FabricTransport,
-    image_record,
-    page_image_id,
-)
+from httpz_spark.sources.fabric import FabricConfig, FabricTransport, page_image_id
 from httpz_spark.sources.transport import drive_rows, drive_task
 
 RESULT_COLUMNS = (
@@ -77,9 +73,24 @@ _RESULT_KEYS = (
 )
 
 
+SCAN_COLUMNS = ("scan_target", "port", "proto_first", "proto_second")
+
+
 def fetch_output_schema(passthrough: str) -> str:
     """Full mapInPandas output schema: passthrough columns + result columns."""
     return f"{passthrough}, {RESULT_COLUMNS}"
+
+
+def apply_fetch_stage(df, passthrough: list, stage):
+    """``df``'s ``passthrough`` columns (``(name, type)`` pairs) and its
+    :data:`SCAN_COLUMNS` through ``stage`` (a :func:`make_fetch_stage`
+    function built with those names): the passthrough columns followed by
+    the fetch result columns.  Partitioning is the caller's — the stage
+    runs one task per input partition."""
+    names = [n for n, _t in passthrough]
+    schema = ", ".join(f"{n} {t}" for n, t in passthrough)
+    return df.select(*names, *SCAN_COLUMNS).mapInPandas(
+        stage, schema=fetch_output_schema(schema))
 
 
 def _process_row(e: BaseException) -> dict:
@@ -280,31 +291,24 @@ def scan_row_gen(
     return final
 
 
-class _BatchProvider:
-    """record_provider with a mutable per-row pointer: ONE instance serves a
-    whole Arrow batch (the loop swaps ``rec`` before each row's fetch).
-    Falls back to deterministic regeneration for off-row pages (favicon
-    neighbors, redirect targets — identical bytes by construction)."""
-
-    __slots__ = ("rec", "cfg")
-
-    def __init__(self, fabric_cfg: FabricConfig):
-        self.rec = None
-        self.cfg = fabric_cfg
-
-    def __call__(self, image_id: str) -> dict:
-        rec = self.rec
-        if rec is not None and image_id == rec["image_id"] and rec.get("caption") is not None:
-            return rec
-        return image_record(image_id, self.cfg)
-
-
-def _open_transport(transport_factory, fabric_cfg: FabricConfig, provider=None):
-    """The task's transport: ``transport_factory(provider)`` when given
-    (the production seam), else the deterministic fabric."""
+def _open_transport(transport_factory, fabric_cfg: FabricConfig):
+    """The task's transport: ``transport_factory()`` when given (the
+    production seam), else the deterministic fabric."""
     if transport_factory is not None:
-        return transport_factory(provider)
-    return FabricTransport(fabric_cfg, record_provider=provider)
+        return transport_factory()
+    return FabricTransport(fabric_cfg)
+
+
+def _page_ids(pdf: pd.DataFrame, fabric_cfg: FabricConfig) -> list:
+    """The batch's ``image_id`` column, each NULL resolved as the fabric
+    serves the row's ``host`` (port stripped) and ``path``."""
+    iids = pdf["image_id"].tolist()
+    for i, (hp, path) in enumerate(zip(pdf["host"].tolist(), pdf["path"].tolist())):
+        if iids[i] is None and hp is not None:
+            host, sep, port = hp.rpartition(":")
+            bare = host if sep and port.isdigit() else hp
+            iids[i] = page_image_id(bare, path or "/", fabric_cfg)
+    return iids
 
 
 def _until_stopped(batches, stop_file: str):
@@ -343,12 +347,14 @@ def make_fetch_stage(
     stop_file: str | None = None,
 ):
     """Build the mapInPandas function.  ``passthrough_cols`` are copied from
-    input to output verbatim (keys, payload, cname/ips columns).
+    input to output verbatim (keys, cname/ips columns).  When ``image_id``
+    is one of them and the batch has ``host`` and ``path`` columns, a NULL
+    ``image_id`` is emitted resolved from that host (port stripped) and
+    path — frontier rows leave root paths NULL (plans/frontier.py).
 
-    ``transport_factory(record_provider) -> Transport`` is the production
-    seam: default is the deterministic fabric; a real deploy passes e.g.
-    ``lambda rp: AiohttpTransport(timeout_s=cfg.timeout)`` (the provider is
-    fabric-specific and real transports ignore it).
+    ``transport_factory() -> Transport`` is the production seam: default is
+    the deterministic fabric; a real deploy passes e.g.
+    ``lambda: AiohttpTransport(timeout_s=cfg.timeout)``.
 
     A batch carrying ``etag`` / ``last_modified`` columns is a conditional
     wave (:func:`httpz_spark.operators.revalidate.revalidate_plan`).
@@ -360,87 +366,39 @@ def make_fetch_stage(
     def fetch_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cert_cache: dict = {}
         custom_headers = dict(cfg.custom_headers) if cfg.custom_headers else None
-        # batch schemas are constant within a task, so the payload-provider
-        # decision made on the first non-empty batch holds for all of them
-        provider = None
-
-        def open_transport(pdf):
-            nonlocal provider
-            if "image_id" in pdf.columns and "caption" in pdf.columns:
-                provider = _BatchProvider(fabric_cfg)
-            return _open_transport(transport_factory, fabric_cfg, provider)
 
         def fetch_batch(pdf, transport):
-            n = len(pdf)
-            cols = set(pdf.columns)
             # unpack columns ONCE (python lists beat per-row .loc/dict access)
             targets = pdf["scan_target"].tolist()
             ports = [None if pd.isna(p) else int(p) for p in pdf["port"].tolist()]
             p1s = pdf["proto_first"].tolist()
             p2s = pdf["proto_second"].tolist()
             headers = _row_headers(pdf, custom_headers)
-            if provider is not None:
-                iids = pdf["image_id"].tolist()
-                caps = pdf["caption"].tolist()
-                ws = pdf["w"].tolist()
-                hs = pdf["h"].tolist()
-                fmts = pdf["fmt"].tolist()
-                byts = pdf["bytes"].tolist() if "bytes" in cols else None
-                phs = pdf["phash"].tolist() if "phash" in cols else None
-                if "host" in cols and "path" in cols:
-                    # frontier rows resolve page-path image ids natively and
-                    # leave root/odd paths NULL — resolve those here (rare)
-                    # so the emitted image_id column is complete; their
-                    # payload record regenerates in-transport either way
-                    hosts = pdf["host"].tolist()
-                    paths = pdf["path"].tolist()
-                    fixed = False
-                    for i in range(n):
-                        if iids[i] is None and hosts[i] is not None:
-                            hp = hosts[i]
-                            bare = (
-                                hp.rsplit(":", 1)[0]
-                                if ":" in hp and hp.rsplit(":", 1)[1].isdigit()
-                                else hp
-                            )
-                            iids[i] = page_image_id(
-                                bare, paths[i] or "/", fabric_cfg
-                            )
-                            fixed = True
-                    if fixed and "image_id" in passthrough_cols:
-                        pdf = pdf.assign(image_id=iids)
-
-            def row_gen(i):
-                # points the payload provider at this row's record before
-                # the row's first fetch; under fetch_many rows interleave,
-                # and an off-row image id regenerates its identical record
-                if provider is not None:
-                    provider.rec = None if iids[i] is None else {
-                        "image_id": iids[i],
-                        "bytes": byts[i] if byts is not None else None,
-                        "w": ws[i], "h": hs[i], "fmt": fmts[i],
-                        "caption": caps[i],
-                        "phash": phs[i] if phs is not None else None,
-                    }
-                return (yield from scan_row_gen(
-                    targets[i], ports[i], p1s[i], p2s[i],
-                    cfg, cert_cache, headers[i],
-                ))
-
+            gens = [
+                scan_row_gen(targets[i], ports[i], p1s[i], p2s[i],
+                             cfg, cert_cache, headers[i])
+                for i in range(len(pdf))
+            ]
             results = [
                 _process_row(r) if isinstance(r, BaseException) else r
-                for r in drive_rows(transport, [row_gen(i) for i in range(n)])
+                for r in drive_rows(transport, gens)
             ]
             # column-wise assembly: passthrough columns copy as whole arrays
             # (row order is preserved 1:1), result columns gather per key
             data = {c: pdf[c].values for c in passthrough_cols}
+            if "image_id" in data and {"host", "path"} <= set(pdf.columns):
+                data["image_id"] = _page_ids(pdf, fabric_cfg)
             for key in _RESULT_KEYS:
                 data[key] = [r[key] for r in results]
             return pd.DataFrame(data)
 
         if stop_file is not None:
             batches = _until_stopped(batches, stop_file)
-        return drive_task(batches, open_transport, fetch_batch)
+        return drive_task(
+            batches,
+            lambda pdf: _open_transport(transport_factory, fabric_cfg),
+            fetch_batch,
+        )
 
     return fetch_batches
 

@@ -142,14 +142,3 @@ def ppl_buckets(scored: DataFrame, head_max: float, middle_max: float,
         .when(p <= F.lit(float(middle_max)), F.lit("middle"))
         .otherwise(F.lit("tail")),
     )
-
-
-def ppl_cutoffs(scored: DataFrame, ppl_col: str = "ppl") -> tuple[float, float]:
-    """Exact corpus tertile cutoffs (driver scalars) for
-    :func:`ppl_buckets` — run once on a sample/epoch, applied as
-    constants (exact ``percentile``, not approx, for reproducibility)."""
-    row = scored.agg(
-        F.percentile(F.col(ppl_col), F.lit(1.0 / 3)).alias("c1"),
-        F.percentile(F.col(ppl_col), F.lit(2.0 / 3)).alias("c2"),
-    ).collect()[0]
-    return float(row["c1"]), float(row["c2"])

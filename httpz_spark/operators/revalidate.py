@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from httpz_spark.config import ScanConfig
-from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+from httpz_spark.operators.fetch import apply_fetch_stage, make_fetch_stage
 from httpz_spark.sources.fabric import FabricConfig
 
 
@@ -59,14 +59,11 @@ def revalidate_plan(
     )
     passthrough = [("host", "string"), ("path", "string"),
                    ("etag", "string"), ("last_modified", "string")]
-    pass_names = [n for n, _t in passthrough]
-    pass_schema = ", ".join(f"{n} {t}" for n, t in passthrough)
     stage = make_fetch_stage(
-        cfg, fabric_cfg, pass_names, transport_factory=transport_factory,
+        cfg, fabric_cfg, [n for n, _t in passthrough],
+        transport_factory=transport_factory,
     )
-    out = df.select(
-        *pass_names, "scan_target", "port", "proto_first", "proto_second",
-    ).mapInPandas(stage, schema=fetch_output_schema(pass_schema))
+    out = apply_fetch_stage(df, passthrough, stage)
     return (
         out
         .withColumn("not_modified", F.col("status") == 304)

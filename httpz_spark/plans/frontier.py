@@ -65,7 +65,7 @@ from pyspark.util import inheritable_thread_target
 
 from httpz_spark.config import EngineConfig, ScanConfig
 from httpz_spark.functions import urls as U
-from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+from httpz_spark.operators.fetch import apply_fetch_stage, make_fetch_stage
 from httpz_spark.operators.frontier_dedup import (
     BloomIndex,
     CuckooIndex,
@@ -607,41 +607,30 @@ class CrawlEngine:
         # image_id resolves NATIVELY from the path tail for page URLs (the
         # dominant shape); root/odd paths get NULL here and are resolved
         # inside the fetch stage's batch loop (operators/fetch.py) — this
-        # keeps the wave at exactly ONE python stage.  The image_id column
-        # is only the payload-lookup key: a NULL just misses the meta join
-        # and the transport regenerates the record in-stage, so results are
-        # identical either way (the fetch stage emits the resolved id).
+        # keeps the wave at exactly ONE python stage.  The column is the
+        # payload key of the results write; the fetch itself needs no
+        # image columns (the fabric builds each page from its URL).
         tail = F.regexp_extract(F.col("path"), r"([^/]*)$", 1)
         is_page = (~F.col("path").isin("", "/")) & tail.rlike("^img[0-9]+$")
         df = df.withColumn("image_id", F.when(is_page, tail))
-        # pre-fetch join carries LIGHT metadata only (AQE broadcasts);
-        # heavy bytes join in the results write, never this shuffle
-        meta_names = [n for n, _t in META]
-        df = df.join(self.images.select("image_id", *meta_names), "image_id", "left")
 
         # the slim frontier columns ride the python stage as passthrough
         # (whole-array copies in the batch loop — measured cheaper than the
         # former JVM rejoin, which shuffled the FAT fetch output rows; at
         # 100 TB the post-fetch shuffle of body-bearing rows is the one to
-        # avoid).  Payload BYTES join only in the results write
+        # avoid).  Image META + PAYLOAD join only in the results write
         # (_with_payload), over the wave's own image ids.
         passthrough = [
             ("url_hash", "long"), ("image_id", "string"),
             ("url_canon", "string"), ("host", "string"), ("path", "string"),
             ("depth", "int"), ("priority", "long"),
         ]
-        pass_names = [n for n, _t in passthrough]
-        pass_schema = ", ".join(f"{n} {t}" for n, t in passthrough)
-
-        df = salted_repartition(df, ecfg.partitions)
         stage = make_fetch_stage(
-            scfg, self.fabric_cfg, pass_names, stop_file=self._stop_file()
+            scfg, self.fabric_cfg, [n for n, _t in passthrough],
+            stop_file=self._stop_file(),
         )
-        fetch_in = df.select(
-            *pass_names, *[n for n, _t in META],
-            "scan_target", "port", "proto_first", "proto_second",
-        )
-        out = fetch_in.mapInPandas(stage, schema=fetch_output_schema(pass_schema))
+        out = apply_fetch_stage(
+            salted_repartition(df, ecfg.partitions), passthrough, stage)
         # partition id of the FETCH task — feeds the per-partition lineage
         # table; the value lands in the staged wave output, so resume reads
         # the recorded ids instead of recomputing them

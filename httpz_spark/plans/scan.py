@@ -7,9 +7,11 @@ metadata?" (``/root/reference/README.md:39``), composing:
    Catalyst-codegen'd, pushdown-visible;
 2. CNAME chain via two unrolled broadcast self-joins + A/AAAA broadcast
    join (DNS ∥ HTTP for free — independent columns, SURVEY §4 O6);
-3. payload equi-join against the images table (the sandbox stand-in for
-   the network — at 100 TB this is the only shuffle, on image_id);
-4. the vectorized fetch stage (mapInPandas, Arrow batches);
+3. the vectorized fetch stage (mapInPandas, Arrow batches) — the fetch
+   fabric, the sandbox stand-in for the network, builds each page from
+   its URL, so no images column enters it;
+4. under ``include_payload``, the image META + PAYLOAD equi-join on the
+   fetched rows' ``image_id`` (the only read of the images table);
 5. post-fetch match/exclude filters — native, preserving the reference's
    post-scan filter semantics (scanner.py:450-453).
 """
@@ -25,7 +27,7 @@ from httpz_spark.config import ScanConfig
 from httpz_spark.functions import text as T
 from httpz_spark.functions import urls as U
 from httpz_spark.operators import dnsresolve as DNS
-from httpz_spark.operators.fetch import fetch_output_schema, make_fetch_stage
+from httpz_spark.operators.fetch import apply_fetch_stage, make_fetch_stage
 from httpz_spark.sources.fabric import FabricConfig, _split_url, root_image_id
 
 
@@ -67,14 +69,13 @@ PASSTHROUGH = [
     ("ips", "array<string>"),
     ("image_id", "string"),
 ]
-# light payload metadata the fetch fabric actually consumes (page bodies
-# embed captions + dimensions; the image BYTES are only referenced by URL)
+# light payload metadata and heavy payload columns of the images table —
+# both joined AFTER the fetch stage, so no image column rides the pre-fetch
+# shuffle (scan of a 100 TB payload table stays columnar and the join only
+# touches fetched rows)
 META = [
     ("w", "int"), ("h", "int"), ("fmt", "string"), ("caption", "string"),
 ]
-# heavy payload columns — joined AFTER the fetch stage, so image bytes never
-# ride the pre-fetch shuffle (scan of a 100 TB payload table stays columnar
-# and the join only touches fetched rows)
 PAYLOAD = [("bytes", "binary"), ("phash", "long")]
 
 
@@ -90,8 +91,10 @@ def scan_plan(
     transport_factory=None,
 ) -> DataFrame:
     """seeds(line_num, raw) -> result DataFrame (SURVEY §1.2 schema +
-    engine columns).  ``transport_factory`` swaps the deterministic fabric
-    for a real-network transport (scripts/httpz_cli.py --transport)."""
+    engine columns).  ``images`` is read only under ``include_payload``,
+    for the META + PAYLOAD columns of the fetched rows.
+    ``transport_factory`` swaps the deterministic fabric for a
+    real-network transport (scripts/httpz_cli.py --transport)."""
     df = seeds.filter(T.nonblank(F.col("raw")))
     if cfg.shard is not None:
         idx, total = cfg.shard
@@ -131,42 +134,25 @@ def scan_plan(
         "image_id": root_image_udf(F.col("scan_target"), F.col("port")),
     })
 
-    # pre-fetch join carries only the LIGHT metadata columns (captions +
-    # dims, ~100 B/row -> AQE broadcasts); image bytes join post-fetch
-    meta_names = [n for n, _t in META]
-    df = df.join(images.select("image_id", *meta_names), "image_id", "left")
-
     # the slim pre-fetch columns (keys, domain, cname/ips arrays) ride the
     # python stage as Arrow passthrough — same design as the frontier path
     # (plans/frontier.py): whole-array copies in the batch loop measured
     # cheaper than the former localCheckpoint + JVM rejoin, which
     # materialized the pre-fetch frame AND shuffled every fetch-output row
     # a second time.  At 100 TB the post-fetch shuffle of body-bearing
-    # rows is the one to avoid; only the payload BYTES join post-fetch.
-    pass_names = [n for n, _t in PASSTHROUGH]
-    pass_schema = ", ".join(f"{n} {t}" for n, t in PASSTHROUGH)
-    stage = make_fetch_stage(cfg, fabric_cfg, pass_names,
+    # rows is the one to avoid; only the payload join runs post-fetch.
+    stage = make_fetch_stage(cfg, fabric_cfg, [n for n, _t in PASSTHROUGH],
                              transport_factory=transport_factory)
-    fetch_in = df.select(
-        *pass_names, *[n for n, _t in META],
-        "scan_target", "port", "proto_first", "proto_second",
-    )
     # shuffle boundary before the fetch stage (mirrors the frontier path's
     # salted repartition): separates the two python stages into distinct
     # Spark stages — without it one task pipelines both python workers and
     # local[N] runs 2N python processes concurrently
-    fetch_in = fetch_in.repartition(partitions, F.pmod(F.col("line_num"), F.lit(partitions)))
-    out = fetch_in.mapInPandas(stage, schema=fetch_output_schema(pass_schema))
+    fetch_in = df.repartition(partitions, F.pmod(F.col("line_num"), F.lit(partitions)))
+    out = apply_fetch_stage(fetch_in, PASSTHROUGH, stage)
     if include_payload:
-        # heavy columns attach to fetched rows only (post-politeness/dedup);
-        # META re-attaches here too — the fetch stage consumes but does not
-        # emit it (the values are identical: same images table, same key)
-        out = out.join(
-            images.select(
-                "image_id", *meta_names, *[n for n, _t in PAYLOAD]
-            ),
-            "image_id", "left",
-        )
+        # image columns attach to fetched rows only (post-politeness/dedup)
+        payload = [n for n, _t in META + PAYLOAD]
+        out = out.join(images.select("image_id", *payload), "image_id", "left")
 
     if cfg.match_codes is not None:
         out = out.filter(T.status_isin(F.col("status"), cfg.match_codes))

@@ -235,6 +235,15 @@ def image_record(image_id: str, cfg: FabricConfig) -> dict:
     }
 
 
+def page_record(image_id: str, cfg: FabricConfig) -> dict:
+    """What a page body shows of its image (:func:`page_html`): id, size,
+    format and caption — :func:`image_record` without the pixels, their
+    encoding and the phash."""
+    w, height, fmt = image_meta(image_id, cfg)
+    return {"image_id": image_id, "w": w, "h": height, "fmt": fmt,
+            "caption": caption_for(image_id, cfg)}
+
+
 def video_id_at(idx: int) -> str:
     return f"vid{idx}"
 
@@ -587,13 +596,13 @@ def _split_url(url: str) -> tuple:
 
 
 class FabricTransport:
-    """Deterministic fetch.  ``record_provider(image_id) -> dict`` supplies
-    the payload row (from the joined images columns in the Spark path, or
-    computed on the fly in the driver-side parity model)."""
+    """Deterministic fetch.  Every response derives from ``cfg`` and the
+    request alone: a page body is built from its :func:`page_record`, so
+    the fabric, like a real origin, needs nothing from the caller's
+    tables."""
 
-    def __init__(self, cfg: FabricConfig, record_provider=None):
+    def __init__(self, cfg: FabricConfig):
         self.cfg = cfg
-        self.record_provider = record_provider or (lambda iid: image_record(iid, cfg))
 
     def fetch(
         self,
@@ -685,8 +694,7 @@ class FabricTransport:
             if image_id is None:
                 status, body, ctype = 404, b"<html><body>404</body></html>", "text/html"
             else:
-                rec = self.record_provider(image_id)
-                body = page_html(host, rec, cfg)
+                body = page_html(host, page_record(image_id, cfg), cfg)
                 ctype = content_type_for(host, cur_path, cfg)
                 if ctype == "application/json":
                     body = b'{"synthetic": true, "image": "' + image_id.encode() + b'"}'

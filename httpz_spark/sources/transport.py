@@ -245,8 +245,8 @@ class AiohttpTransport:
     second TLS handshake (A27).
 
     Import-gated: constructing it raises ImportError in environments
-    without aiohttp (this container), but the class exists so production
-    deploys swap it in via ``make_fetch_stage(transport_factory=...)``
+    without aiohttp, but the class exists so production deploys swap it in
+    via ``make_fetch_stage(transport_factory=lambda: AiohttpTransport())``
     without touching the engine.  The stdlib
     :class:`~httpz_spark.sources.nettransport.AsyncioTransport` is the
     dependency-free alternative and IS integration-tested here.

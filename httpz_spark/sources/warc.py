@@ -394,23 +394,6 @@ def wat_from_warc(records: DataFrame) -> DataFrame:
     return src.mapInArrow(_extract, WAT_STAGE_SCHEMA)
 
 
-def wat_outlink_edges(wat: DataFrame) -> DataFrame:
-    """Host-graph edges from a WAT frame (:func:`wat_from_warc` output or
-    a read-back WAT archive's decoded JSON): explode each capture's
-    ``Links`` into ``(src, dst)`` host pairs, self-loops dropped — the
-    input :func:`httpz_spark.operators.linkrank.host_pagerank` ranks and
-    ``rank_priority`` turns into frontier priorities.  Native
-    ``from_json`` + explode; no Python."""
-    host = lambda c: F.regexp_extract(c, r"^https?://([^/]+)", 1)  # noqa: E731
-    return (wat.select(
-                host(F.col("url")).alias("src"),
-                F.explode(F.from_json(
-                    "meta", "struct<Links:array<string>>")
-                    .getField("Links")).alias("link"))
-            .select("src", host(F.col("link")).alias("dst"))
-            .filter((F.col("dst") != "") & (F.col("src") != F.col("dst"))))
-
-
 def write_wat(records: DataFrame, path: str, n_files: int = 8,
               compress: bool = True) -> DataFrame:
     """Derive and write the WAT companion archive (JSON ``metadata``

@@ -51,52 +51,11 @@ class StreamingSeedIngest:
         return writer.start()
 
 
-def ingest_and_crawl(
-    engine: CrawlEngine, seed_dir: str, checkpoint_dir: str, max_waves: int = 10
-) -> DataFrame:
-    """One micro-batch cycle: drain available seed files into the frontier,
-    then run waves until drained — the streaming analogue of scan()."""
-    q = StreamingSeedIngest(engine).start(seed_dir, checkpoint_dir, available_now=True)
-    q.awaitTermination()
-    if not engine.store.exists("frontier"):
-        raise RuntimeError("no seeds ingested")
-    return engine.crawl(max_waves=max_waves)
-
-
 # ---------------------------------------------------------------------------
-# watermarked windowed metrics + custom stateful dedup (SURVEY §2 Part B
-# streaming/stateful rows): the two Structured-Streaming shapes the batch
-# engine doesn't need internally but a production deployment watches.
+# custom stateful dedup (SURVEY §2 Part B streaming/stateful rows): the
+# Structured-Streaming shape the batch engine doesn't need internally but a
+# production deployment runs.
 # ---------------------------------------------------------------------------
-
-def crawl_rate_metrics(
-    events: DataFrame,
-    window_secs: int = 60,
-    slide_secs: int | None = None,
-    watermark_secs: int = 120,
-) -> DataFrame:
-    """Per-(host, time-window) crawl telemetry over a stream of fetch events
-    ``(ts timestamp, host string, status int, latency_ms double)``.
-
-    Late events are handled with an event-time watermark: rows later than
-    ``watermark_secs`` behind the max seen event time are dropped and the
-    window state is evicted — bounded state at any stream length (the
-    streaming analogue of the batch lineage table)."""
-    win = F.window(
-        F.col("ts"),
-        f"{window_secs} seconds",
-        f"{slide_secs or window_secs} seconds",
-    )
-    return (
-        events.withWatermark("ts", f"{watermark_secs} seconds")
-        .groupBy(win.alias("win"), F.col("host"))
-        .agg(
-            F.count("*").alias("n_fetched"),
-            F.sum(F.when(F.col("status") < 0, 1).otherwise(0)).alias("n_errors"),
-            F.avg("latency_ms").alias("avg_latency_ms"),
-        )
-    )
-
 
 def streaming_unseen_flagged(
     stream_df: DataFrame,

@@ -148,13 +148,13 @@ def transport_factory_of(args):
             dres = DnspythonResolver(servers, timeout_s=args.dns_timeout)
             resolver = lambda host: ((dres(host)["a"] or [host])[0])  # noqa: E731
         timeout, limit = float(args.timeout), args.concurrent
-        return lambda rp: AsyncioTransport(
+        return lambda: AsyncioTransport(
             timeout_s=timeout, concurrent_limit=limit, resolver=resolver
         )
     from httpz_spark.sources.transport import AiohttpTransport
 
     timeout, limit = float(args.timeout), args.concurrent
-    return lambda rp: AiohttpTransport(
+    return lambda: AiohttpTransport(
         timeout_s=timeout, concurrent_limit=limit, capture_certs=True
     )
 

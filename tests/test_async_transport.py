@@ -182,7 +182,7 @@ def test_fetch_stage_one_transport_per_task_and_closed():
     for make_stage, batch in ((_page_stage, _page_batch),
                               (_document_stage, _document_batch)):
         events.clear()
-        stage = make_stage(lambda rp: RecordingTransport())
+        stage = make_stage(lambda: RecordingTransport())
         outs = list(stage(iter([batch(0, 4), batch(4, 4), batch(4, 8),
                                 batch(8, 12)])))
         assert len(outs) == 3 and sum(len(o) for o in outs) == 12
@@ -191,7 +191,7 @@ def test_fetch_stage_one_transport_per_task_and_closed():
         # close() runs even when a batch raises (e.g. the cooperative-stop
         # path)
         events.clear()
-        stage2 = make_stage(lambda rp: RecordingTransport())
+        stage2 = make_stage(lambda: RecordingTransport())
 
         def boom_batches():
             yield batch(0, 2)
@@ -212,7 +212,7 @@ def _batched_factory(world):
     facade over the fabric via the engine's own concurrent driver.
     Self-contained, because executors can't import the test module."""
 
-    def factory(rp):
+    def factory():
         import asyncio
 
         from httpz_spark.sources import fabric as FB2

@@ -403,7 +403,7 @@ def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
     from httpz_spark.operators.robotsfetch import build_robots_table
 
     def factory(log):
-        def make(_rp):
+        def make():
             from httpz_spark.sources.transport import Response
 
             class LoggingTransport:
@@ -441,6 +441,57 @@ def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
     assert eng.store.read("results").filter(F.col("path").startswith("/r/")).count() == 0
 
 
+def test_fabric_is_the_pages_only_source(world):
+    """The fetch stage serves every page from the fabric alone: a batch
+    whose ``w/h/fmt/caption`` columns disagree with the fabric (the shape
+    an in-process re-fetch of stored results passes) fetches the same
+    pages as one without them.  The emitted ``image_id`` is the page the
+    fabric serves at the row's bare host and path on every row — root rows
+    arrive NULL, as ``CrawlEngine._fetch`` leaves them."""
+    import pandas as pd
+
+    from httpz_spark.operators.fetch import make_fetch_stage
+
+    rows = [  # (host, path, image_id as _fetch resolves it natively)
+        ("h1.test", "/", None),
+        ("h2.test:8080", "/", None),
+        ("h3.test", "/li/img00000005", "img00000005"),
+        ("h4.test", "/li/img00000017", "img00000017"),
+        ("h5.test", "/d0/img00000029", "img00000029"),
+        ("h6.test", "/about", None),
+    ]
+    n = len(rows)
+    batch = pd.DataFrame({
+        "url_hash": range(n),
+        "image_id": [iid for _h, _p, iid in rows],
+        "host": [h for h, _p, _i in rows],
+        "path": [p for _h, p, _i in rows],
+        "scan_target": [h + p for h, p, _i in rows],
+        "port": [None] * n,
+        "proto_first": ["https"] * n,
+        "proto_second": ["http"] * n,
+    })
+    stage = make_fetch_stage(ScanConfig.all_on(discover_links=True), world,
+                             ["url_hash", "image_id", "host", "path"])
+
+    def fetch(pdf):
+        return pd.concat(list(stage(iter([pdf]))), ignore_index=True)
+
+    want = fetch(batch)
+    got = fetch(batch.assign(w=1, h=1, fmt="gif", caption="not the real caption"))
+    for c in ("title", "body_preview", "body_clean"):
+        assert got[c].tolist() == want[c].tolist(), c
+    assert not got["body_clean"].str.contains("not the real caption").any()
+    ids = [FB.page_image_id(h.split(":")[0], p, world) for h, p, _i in rows]
+    assert ids[0] and ids[1] and ids[-1] is None
+    assert got["image_id"].tolist() == want["image_id"].tolist() == ids
+    # every page row was served, titled from the fabric's own record
+    for i, iid in enumerate(ids[:-1]):
+        rec = FB.page_record(iid, world)
+        assert got["status"][i] == 200, i
+        assert got["title"][i] == f"Image {iid} [{rec['w']}x{rec['h']} {rec['fmt']}]"
+
+
 # Spark jobs of one steady-state wave (wave 1) on this module's world,
 # counted under a job group the test sets.  The build before the schema-
 # recording manifests, the once-per-engine robots table and the literal
@@ -450,11 +501,12 @@ def test_robots_txt_fetched_once_per_engine(spark, world, tmp_path):
 # rank, which evaluated the seen-gated frontier twice (a counts branch and
 # a rank branch), ran 20; the build whose fetch write joined the payload
 # (a shuffle of the whole images table) ran 17.  The wave-sized payload
-# join adds two: the wave's distinct image ids and their broadcast.  The
-# merge tail's jobs run concurrently, on threads of their own; they are
-# counted here only because each tail thread inherits the caller's job
-# group.
-WAVE_JOBS = 19
+# join adds two: the wave's distinct image ids and their broadcast; with
+# them, the fetch write's pre-fetch META join (a broadcast of every image's
+# light columns) ran 19.  The merge tail's jobs run concurrently, on
+# threads of their own; they are counted here only because each tail
+# thread inherits the caller's job group.
+WAVE_JOBS = 18
 
 
 def test_steady_state_wave_job_budget(spark, world, tmp_path, job_group):

@@ -48,20 +48,6 @@ def test_domain_parts_matches_reference_model(spark):
         assert [r["proto_first"], r["proto_second"]] == protos, r["domain"]
 
 
-def test_scan_url_format(spark):
-    df = spark.createDataFrame(
-        [("example.com:8080",), ("http://x.org",)], "domain string"
-    ).select(
-        "domain",
-        U.domain_parts(F.col("domain")).alias("p"),
-    )
-    out = df.select(
-        U.scan_url(F.col("p"), F.col("p.proto_first")).alias("u")
-    ).collect()
-    assert out[0]["u"] == "https://example.com:8080"
-    assert out[1]["u"] == "http://x.org"
-
-
 WS_CASES = [
     "",
     "   ",
@@ -105,15 +91,13 @@ def test_canonicalize_idempotent(spark):
         assert r["c2"] == r["c"]
 
 
-def test_url_host_and_depth(spark):
+def test_url_host_keeps_port(spark):
     df = spark.createDataFrame(
         [("https://h1.test:8080/a/b/c?q=1",), ("https://h2.test/",)], "c string"
     )
-    rows = df.select(
-        U.url_host(F.col("c")).alias("h"), U.url_depth(F.col("c")).alias("d")
-    ).collect()
-    assert rows[0]["h"] == "h1.test:8080" and rows[0]["d"] == 3
-    assert rows[1]["h"] == "h2.test" and rows[1]["d"] == 0
+    rows = df.select(U.url_host(F.col("c")).alias("h")).collect()
+    assert rows[0]["h"] == "h1.test:8080"
+    assert rows[1]["h"] == "h2.test"
 
 
 def test_status_code_sets():
@@ -166,12 +150,6 @@ def test_human_size(spark):
     for c, r in zip(cases, rows):
         want = R.human_size(c) if c is not None else "0B"
         assert r["h"] == want, c
-
-
-def test_truncate(spark):
-    df = spark.createDataFrame([("x" * 2000,)], "s string")
-    out = df.select(F.length(T.truncate_chars(F.col("s"), 1024)).alias("n")).collect()
-    assert out[0]["n"] == 1024
 
 
 def test_canonicalize_url_strips_userinfo(spark):

@@ -10,7 +10,6 @@ from httpz_spark.operators.lmfilter import (
     lm_perplexity,
     lm_train,
     ppl_buckets,
-    ppl_cutoffs,
 )
 
 SF_DIR = os.environ.get("HTTPZ_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -74,7 +73,9 @@ def test_buckets_and_cutoffs(lm):
     d, _, bg, cx, V = lm
     rest = d.filter(F.pmod("doc_id", F.lit(10)) != 3)
     scored = lm_perplexity(rest, bg, cx, V).localCheckpoint()
-    c1, c2 = ppl_cutoffs(scored)
+    # exact corpus tertiles, applied as constants
+    c1, c2 = scored.agg(F.percentile("ppl", F.lit(1.0 / 3)),
+                        F.percentile("ppl", F.lit(2.0 / 3))).collect()[0]
     assert c1 < c2
     out = ppl_buckets(scored, c1, c2)
     counts = {r["ppl_bucket"]: r["n"] for r in

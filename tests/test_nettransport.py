@@ -361,7 +361,7 @@ def test_full_fetch_stage_over_real_tls(spark, tls_server):
     out = sdf.mapInPandas(
         make_fetch_stage(
             cfg, FabricConfig(), ["url_hash"],
-            transport_factory=lambda rp: AsyncioTransport(timeout_s=10.0),
+            transport_factory=lambda: AsyncioTransport(timeout_s=10.0),
         ),
         schema=fetch_output_schema("url_hash long"),
     ).toPandas().sort_values("url_hash")

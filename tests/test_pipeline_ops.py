@@ -201,7 +201,7 @@ def test_frame_sample_real_container(spark):
     right, and each frame decodes to the fabric's frame pixels (exact for
     png, quantized for the fake-lossy fmt)."""
     from httpz_spark.codecs.images import decode_image, quantize_lossy
-    from httpz_spark.codecs.video import extract_frame
+    from httpz_spark.codecs.video import video_index
 
     world = FB.FabricConfig(n_images=8, n_hosts=4)
     videos = S.videos_df(spark, world, n_videos=6, partitions=2)
@@ -217,9 +217,11 @@ def test_frame_sample_real_container(spark):
         w, h, fps, n_frames, fmt = FB.video_meta(mid, world)
         assert all(r["fps"] == fps and r["n_frames"] == n_frames for r in rs)
         assert sorted(r["frame_idx"] for r in rs) == list(range(0, n_frames, 2))
+        spans = video_index(raw[mid])[2]
         for r in rs:
             blob = bytes(r["frame"])
-            assert blob == extract_frame(raw[mid], r["frame_idx"])
+            off, ln = spans[r["frame_idx"]]
+            assert blob == raw[mid][off:off + ln]
             px = decode_image(blob, fmt)
             want = FB.video_frame_pixels(mid, r["frame_idx"], world)
             if fmt == "jpeg":

@@ -178,10 +178,10 @@ def crawl_frames(spark, tmp_path_factory):
     return written["wave0_sched"], written["wave0_out"]
 
 
-def _images_joins(df):
+def _images_scans(df):
     """For each scan of the persisted images table in ``df``'s physical
-    plan (AQE's current plan, not its wrapper): the first join above it —
-    where images rows meet the wave's — and the nodes between the two."""
+    plan (AQE's current plan, not its wrapper): the nodes from that scan
+    up to the plan's root."""
     root = df._jdf.queryExecution().executedPlan()
     if root.nodeName() == "AdaptiveSparkPlan":
         root = root.executedPlan()
@@ -189,13 +189,22 @@ def _images_joins(df):
     def walk(node, path=()):
         path = path + (node,)
         if node.nodeName() == "InMemoryTableScan":
-            up = path[::-1]
-            join = next(n for n in up if "Join" in n.nodeName())
-            yield join, up[:up.index(join)]
+            yield path[::-1]
         for i in range(node.children().size()):
             yield from walk(node.children().apply(i), path)
 
     return list(walk(root))
+
+
+def _images_joins(df):
+    """For each scan of the images table in ``df``'s plan: the first join
+    above it — where images rows meet the wave's — and the nodes between
+    the two."""
+    out = []
+    for up in _images_scans(df):
+        join = next(n for n in up if "Join" in n.nodeName())
+        out.append((join, up[:up.index(join)]))
+    return out
 
 
 def test_wave_has_exactly_one_python_stage(spark, crawl_frames):
@@ -220,25 +229,20 @@ def test_wave_has_exactly_one_python_stage(spark, crawl_frames):
 
 
 def test_payload_joins_only_the_waves_images(spark, crawl_frames, tmp_path):
-    """Payload bytes move O(wave), never O(corpus): (a) the ``wave0_out``
-    write carries no payload column and shuffles no images; (b) the
+    """Image columns move O(wave), never O(corpus): (a) the ``wave0_out``
+    write carries no payload column and scans no images — the fetch
+    fabric builds each page from its URL; (b) the
     results delta scans images only under a left-semi join whose build
     side is the wave's own ``image_id`` set; (c) its payload equals an
     inline ``out.join(images, "image_id", "left")`` on every fetched row,
     NULL for a NULL or unknown ``image_id``."""
     from pyspark.sql import functions as F
 
-    from httpz_spark.plans.scan import META, PAYLOAD
+    from httpz_spark.plans.scan import META
 
     _s, out = crawl_frames
     assert "bytes" not in out.columns, out.columns
-    joins = _images_joins(out)
-    assert joins  # the light META join
-    for join, below in joins:
-        assert "Exchange" not in [n.nodeName() for n in below], join.toString()
-        scan = below[0].output()
-        read = {scan.apply(i).name() for i in range(scan.size())}
-        assert not read & {n for n, _t in PAYLOAD}, read
+    assert _images_scans(out) == []
 
     eng = _plan_engine(spark, str(tmp_path / "state"))
     try:
@@ -285,6 +289,33 @@ def test_payload_joins_only_the_waves_images(spark, crawl_frames, tmp_path):
             assert ids.output().apply(0).name() == "image_id", ids.toString()
     finally:
         eng.images.unpersist()
+
+
+def test_scan_plan_reads_images_only_after_the_fetch(spark):
+    """``scan_plan`` reads the images table only under ``include_payload``,
+    and then only in the post-fetch payload join: no images scan feeds the
+    fetch stage (the fabric builds each page from its URL)."""
+    from httpz_spark.config import ScanConfig
+    from httpz_spark.plans.scan import scan_plan
+    from httpz_spark.sources import fabric as FB
+    from httpz_spark.sources import synthetic as S
+
+    world = FB.FabricConfig(n_images=24, n_hosts=6).with_certs()
+    images = S.images_df(spark, world, 2).persist()
+    try:
+        for include_payload in (False, True):
+            out = scan_plan(
+                spark, S.seeds_df(spark, S.seed_domain_lines(world)), images,
+                S.dns_df(spark, world), ScanConfig.all_on(), world,
+                include_payload=include_payload, partitions=4,
+            )
+            assert plan_of(out, mode="simple").count("MapInPandas fetch_batches") == 1
+            scans = _images_scans(out)
+            assert bool(scans) == include_payload, include_payload
+            for up in scans:
+                assert "MapInPandas" not in [n.nodeName() for n in up], up[-1].toString()
+    finally:
+        images.unpersist()
 
 
 def test_politeness_window_input_is_salted(spark, crawl_frames):

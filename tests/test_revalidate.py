@@ -150,7 +150,7 @@ def _echo_factory():
     headers in the response headers.  Returned as a closure so it ships to
     executors by value (they can't import the test module)."""
 
-    def factory(_rp):
+    def factory():
         from httpz_spark.sources.transport import Response
 
         class EchoHeadersTransport:

@@ -372,7 +372,7 @@ def test_robots_table_keeps_rules_under_unknown_charset(spark):
     ``charset="x-bogus"`` still yields the host's Disallow rule."""
     body = _BOGUS_BODY
 
-    def factory(_rp):
+    def factory():
         from httpz_spark.sources.transport import Response
 
         class BogusCharsetTransport:

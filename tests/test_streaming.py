@@ -11,7 +11,7 @@ from httpz_spark.config import EngineConfig, ScanConfig
 from httpz_spark.plans.frontier import CrawlEngine
 from httpz_spark.sources import fabric as FB
 from httpz_spark.sources import synthetic as S
-from httpz_spark.streaming.micro import StreamingSeedIngest, ingest_and_crawl
+from httpz_spark.streaming.micro import StreamingSeedIngest
 
 
 @pytest.fixture(scope="module")
@@ -26,6 +26,13 @@ def make_engine(spark, world, state_dir):
         EngineConfig(partitions=8, per_host_budget=8, max_depth=1),
         world, state_dir=state_dir,
     )
+
+
+def ingest_and_crawl(eng, seed_dir, checkpoint_dir, max_waves):
+    """One micro-batch cycle: drain the available seed files into the
+    frontier, then crawl until drained."""
+    StreamingSeedIngest(eng).start(seed_dir, checkpoint_dir).awaitTermination()
+    return eng.crawl(max_waves=max_waves)
 
 
 def test_streaming_ingest_then_crawl(spark, world):
@@ -94,48 +101,6 @@ def test_streaming_ingest_merges_like_add_seeds(spark, world):
             assert fr.count() == 21
         finally:
             shutil.rmtree(base, ignore_errors=True)
-
-
-def test_crawl_rate_metrics_watermarked(spark, tmp_path):
-    """Windowed crawl telemetry over a file stream: watermark present in
-    the plan, per-(host, window) counts correct across micro-batches."""
-    import json
-    import time as _time
-
-    from httpz_spark.streaming.micro import crawl_rate_metrics
-
-    src = tmp_path / "events"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def write_batch(name, rows):
-        p = src / name
-        p.write_text("\n".join(json.dumps(r) for r in rows))
-
-    write_batch("b0.json", [
-        {"ts": "2026-01-01T00:00:05", "host": "h0.test", "status": 200, "latency_ms": 10.0},
-        {"ts": "2026-01-01T00:00:25", "host": "h0.test", "status": -1, "latency_ms": 0.0},
-        {"ts": "2026-01-01T00:00:45", "host": "h1.test", "status": 200, "latency_ms": 30.0},
-        {"ts": "2026-01-01T00:01:10", "host": "h0.test", "status": 200, "latency_ms": 20.0},
-    ])
-    stream = (
-        spark.readStream.schema("ts timestamp, host string, status int, latency_ms double")
-        .json(str(src))
-    )
-    agg = crawl_rate_metrics(stream, window_secs=60, watermark_secs=120)
-    assert "eventTimeWatermark" in agg._jdf.queryExecution().logical().toString() or \
-           "EventTimeWatermark" in agg._jdf.queryExecution().logical().toString()
-    q = (
-        agg.writeStream.format("memory").queryName("rates")
-        .outputMode("complete").trigger(availableNow=True)
-        .option("checkpointLocation", ckpt).start()
-    )
-    q.awaitTermination()
-    rows = {(r["host"], r["win"]["start"].minute): (r["n_fetched"], r["n_errors"])
-            for r in spark.sql("SELECT * FROM rates").collect()}
-    assert rows[("h0.test", 0)] == (2, 1)
-    assert rows[("h1.test", 0)] == (1, 0)
-    assert rows[("h0.test", 1)] == (1, 0)
 
 
 def test_streaming_unseen_dedup_across_batches(spark, tmp_path):

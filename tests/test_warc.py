@@ -563,10 +563,13 @@ def test_wat_links_feed_host_pagerank(spark, tmp_path):
     warc_p = str(tmp_path / "warc")
     write_warc(df, warc_p, n_files=1).collect()
 
-    from httpz_spark.sources.warc import wat_outlink_edges
-
     wat = wat_from_warc(read_warc(spark, warc_p))
-    edges = wat_outlink_edges(wat)
+    host = lambda c: F.regexp_extract(c, r"^https?://([^/]+)", 1)  # noqa: E731
+    links = F.from_json("meta", "struct<Links:array<string>>").getField("Links")
+    edges = (wat.select(host(F.col("url")).alias("src"),
+                        F.explode(links).alias("link"))
+             .select("src", host(F.col("link")).alias("dst"))
+             .filter((F.col("dst") != "") & (F.col("src") != F.col("dst"))))
 
     ranks = host_pagerank(edges, iters=3).collect()
     top = max(ranks, key=lambda r: r["rank"])
