@@ -25,8 +25,6 @@ Scale notes
 
 from __future__ import annotations
 
-import pandas as pd
-
 _MASK64 = (1 << 64) - 1
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F
@@ -108,22 +106,6 @@ def hash64_low(data: bytes, seed: int = 0) -> int:
     """``mmh3.hash64(data)[0]`` — the favicon-hash / url_hash primitive
     (reference usage: ``parsers.py:249``)."""
     return _to_signed64(murmur3_x64_128(data, seed)[0])
-
-
-# ---------------------------------------------------------------------------
-# Batched (pandas-UDF-friendly) variants.  These receive whole Arrow batches;
-# the per-key loop is Python but amortized over the batch (no per-row UDF
-# dispatch, no JVM<->Python row churn).
-# ---------------------------------------------------------------------------
-
-def hash64_str_batch(s: pd.Series, seed: int = 0) -> pd.Series:
-    """Series[str|None] -> Series[int64]: signed mmh3-compatible 64-bit hash
-    of the UTF-8 encoding.  Nulls hash to null."""
-    out = [
-        None if v is None else hash64_low(v.encode("utf-8"), seed)
-        for v in s
-    ]
-    return pd.Series(out, dtype="Int64")
 
 
 # ---------------------------------------------------------------------------
@@ -233,8 +215,9 @@ def murmur3_x64_128_np(offsets: np.ndarray, data: np.ndarray, seed: int = 0):
 
 
 def hash64_str_batch_np(s, seed: int = 0):
-    """Vectorized drop-in for :func:`hash64_str_batch` (signed low half).
-    Accepts a pandas Series of strings; nulls hash to null."""
+    """Series[str|None] -> Series[Int64]: the signed low half of the
+    UTF-8 encoding's hash, element-wise equal to :func:`hash64_low`
+    (mmh3-compatible).  Nulls hash to null."""
     import pandas as pd
     import pyarrow as pa
 

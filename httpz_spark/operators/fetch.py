@@ -26,9 +26,9 @@ Scale properties:
   batch.
 * Certs are parsed once per distinct DER per batch (hosts share certs).
 * ONE transport per task (``sources/transport.drive_task``), closed when
-  the batch iterator ends or raises: real transports own an event loop
-  (and a session/connector for aiohttp), so construction stays out of the
-  hot loop and nothing leaks on long-running tasks.
+  the batch iterator ends or raises: a real transport owns an event loop,
+  so construction stays out of the hot loop and nothing leaks on
+  long-running tasks.
 * Batch columns are unpacked once into python lists (``to_dict("records")``
   builds a dict per row and measured ~2× slower); output is assembled
   column-wise.
@@ -354,7 +354,7 @@ def make_fetch_stage(
 
     ``transport_factory() -> Transport`` is the production seam: default is
     the deterministic fabric; a real deploy passes e.g.
-    ``lambda: AiohttpTransport(timeout_s=cfg.timeout)``.
+    ``lambda: AsyncioTransport(timeout_s=cfg.timeout)``.
 
     A batch carrying ``etag`` / ``last_modified`` columns is a conditional
     wave (:func:`httpz_spark.operators.revalidate.revalidate_plan`).

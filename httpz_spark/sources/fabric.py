@@ -561,8 +561,7 @@ def content_type_for(host: str, path: str, cfg: FabricConfig) -> str:
 # identical web; parity failures then isolate scan-semantics bugs.
 # --------------------------------------------------------------------------
 
-from httpz_spark.sources.transport import Response as SynthResponseBase
-from httpz_spark.sources.transport import TransportError
+from httpz_spark.sources.transport import Response, TransportError
 
 
 class FabricError(TransportError):
@@ -577,10 +576,6 @@ _FAIL_MESSAGES = {
     "CONN": "Connection Failed: synthetic connection refused",
     "HTTP": "HTTP Error: SyntheticClientError: injected transient",
 }
-
-
-# the fabric returns the shared transport response shape
-SynthResponse = SynthResponseBase
 
 
 def _split_url(url: str) -> tuple:
@@ -613,7 +608,7 @@ class FabricTransport:
         max_redirects: int = 10,
         method: str = "GET",
         request_headers: dict | None = None,
-    ) -> SynthResponse:
+    ) -> Response:
         cfg = self.cfg
         scheme, hostport, host, path = _split_url(url)
         cls = url_class(host, path, cfg)
@@ -642,54 +637,30 @@ class FabricTransport:
                 )
             cur_path = cur_cls["redirect_to"]
 
-        final_cls = url_class(host, cur_path, cfg)
         final_url = f"{protocol}://{hostport}{cur_path}"
-        status = final_cls["status"]
+        status = url_class(host, cur_path, cfg)["status"]
+        cert_der = None
+        if protocol == "https" and cfg.certs:
+            cert_der = cfg.certs[h64(f"{cfg.seed}:cert:{host}") % len(cfg.certs)]
 
-        # body + content-type
+        # body + content-type: a document (sitemap / robots.txt), an icon or
+        # a page
+        is_doc = True
         if re.match(r"^/sitemap(-\d+)?\.xml$", cur_path):
             body = sitemap_xml_bytes(host, cur_path, cfg)
             ctype = "application/xml; charset=utf-8"
-            headers = {"Server": "fabric/1.0", "Content-Type": ctype,
-                       "Content-Length": str(len(body))}
-            if _conditional_not_modified(host, cur_path, cfg, status,
-                                         headers, request_headers):
-                status, body = 304, b""
-                headers.pop("Content-Length", None)
-            cert_der = None
-            if protocol == "https" and cfg.certs:
-                cert_der = cfg.certs[h64(f"{cfg.seed}:cert:{host}") % len(cfg.certs)]
-            return SynthResponse(
-                url=final_url, status=status, headers=headers, body=body,
-                cert_der=cert_der,
-                history=(history + [final_url]) if history else [],
-                charset="utf-8", latency_ms=latency,
-            )
-        if cur_path == "/robots.txt":
+        elif cur_path == "/robots.txt":
             body = robots_txt_bytes(host, cfg)
             ctype = "text/plain; charset=utf-8"
-            headers = {"Server": "fabric/1.0", "Content-Type": ctype,
-                       "Content-Length": str(len(body))}
-            if _conditional_not_modified(host, cur_path, cfg, status,
-                                         headers, request_headers):
-                status, body = 304, b""
-                headers.pop("Content-Length", None)
-            cert_der = None
-            if protocol == "https" and cfg.certs:
-                cert_der = cfg.certs[h64(f"{cfg.seed}:cert:{host}") % len(cfg.certs)]
-            return SynthResponse(
-                url=final_url, status=status, headers=headers, body=body,
-                cert_der=cert_der,
-                history=(history + [final_url]) if history else [],
-                charset="utf-8", latency_ms=latency,
-            )
-        fav = favicon_bytes(host, cur_path, cfg)
-        if cur_path.endswith(".ico"):
+        elif cur_path.endswith(".ico"):
+            is_doc = False
+            fav = favicon_bytes(host, cur_path, cfg)
             if fav is None:
                 status, body, ctype = 404, b"not found", "text/plain"
             else:
                 body, ctype = fav, "image/x-icon"
         else:
+            is_doc = False
             image_id = page_image_id(host, cur_path, cfg)
             if image_id is None:
                 status, body, ctype = 404, b"<html><body>404</body></html>", "text/html"
@@ -700,43 +671,38 @@ class FabricTransport:
                     body = b'{"synthetic": true, "image": "' + image_id.encode() + b'"}'
 
         headers = {"Server": "fabric/1.0", "Content-Type": ctype}
-        # echo the request envelope so tests/parity can observe UA rotation,
-        # custom headers, and GET/POST method semantics (A15/A24/A25)
-        headers["X-Echo-Method"] = method
-        for hk, hv in (request_headers or {}).items():
-            if hk == "User-Agent":
-                headers["X-Echo-UA"] = hv
-            else:
-                headers[f"X-Echo-H-{hk}"] = hv
-        hcl = h64(f"{cfg.seed}:cl:{host}{cur_path}") % 10
-        if hcl == 0:
-            pass  # Content-Length absent
-        elif hcl == 1:
-            headers["Content-Length"] = "unknown"  # int/str union (scanner.py:246-252)
-        else:
+        if is_doc:
             headers["Content-Length"] = str(len(body))
+        else:
+            # echo the request envelope so tests/parity can observe UA
+            # rotation, custom headers, and GET/POST method semantics
+            # (A15/A24/A25)
+            headers["X-Echo-Method"] = method
+            for hk, hv in (request_headers or {}).items():
+                if hk == "User-Agent":
+                    headers["X-Echo-UA"] = hv
+                else:
+                    headers[f"X-Echo-H-{hk}"] = hv
+            hcl = h64(f"{cfg.seed}:cl:{host}{cur_path}") % 10
+            if hcl == 0:
+                pass  # Content-Length absent
+            elif hcl == 1:
+                headers["Content-Length"] = "unknown"  # int/str union (scanner.py:246-252)
+            else:
+                headers["Content-Length"] = str(len(body))
 
         if _conditional_not_modified(host, cur_path, cfg, status,
                                      headers, request_headers):
             status, body = 304, b""
             headers.pop("Content-Length", None)
 
-        charset = "utf-8" if "charset=utf-8" in ctype else None
-        cert_der = None
-        if protocol == "https" and cfg.certs:
-            cert_der = cfg.certs[h64(f"{cfg.seed}:cert:{host}") % len(cfg.certs)]
-
-        if history:
-            history_and_final = history + [final_url]
-        else:
-            history_and_final = []
-        return SynthResponse(
+        return Response(
             url=final_url,
             status=status,
             headers=headers,
             body=body,
             cert_der=cert_der,
-            history=history_and_final,
-            charset=charset,
+            history=(history + [final_url]) if history else [],
+            charset="utf-8" if "charset=utf-8" in ctype else None,
             latency_ms=latency,
         )

@@ -1,9 +1,8 @@
 """Pure-stdlib real-network transport — asyncio + ssl HTTP/1.1 client.
 
-The production half of the transport seam that is actually TESTABLE in this
-container: aiohttp is absent here, so :class:`AiohttpTransport`
-(transport.py) stays import-gated, while this class provides the same
-contract on asyncio streams with zero third-party dependencies:
+The engine's one real-network transport: it implements the transport seam's
+contract (transport.py) on asyncio streams with zero third-party
+dependencies:
 
 * **batched-async driving** — exposes ``fetch_many``, so the fetch stage
   hands it the whole Arrow batch of sans-IO row state machines and

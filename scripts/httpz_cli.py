@@ -12,9 +12,9 @@ Flag-for-flag mirror: field toggles (-b -cl -cn -ct -f -hr -i -sc -ti -tls /
 (-hd -pd), output (-j JSONL to stdout, -o JSONL file, default = the colored
 console formatter), -d debug (error rows shown), -p running progress
 counter prefixed to console rows.  ``--transport`` selects
-the deterministic fabric (default — this sandbox has no outbound network),
-the stdlib AsyncioTransport, or the import-gated AiohttpTransport; both
-real transports run batched-async (fetch_many) inside each Spark task.
+the deterministic fabric (default — no outbound network needed) or the
+stdlib AsyncioTransport, which runs batched-async (fetch_many) inside each
+Spark task.
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ def parse_args(argv=None):
     ap.add_argument("-sh", "--shard", help="Shard index/total (e.g. 1/3)")
     ap.add_argument("-hd", "--headers", help='Custom headers ("H1: v1,H2: v2")')
     # engine-side knobs (no reference analogue)
-    ap.add_argument("--transport", choices=("fabric", "asyncio", "aiohttp"),
+    ap.add_argument("--transport", choices=("fabric", "asyncio"),
                     default="fabric")
     ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--master", default=None,
@@ -135,27 +135,20 @@ def show_fields_of(args) -> dict:
 def transport_factory_of(args):
     if args.transport == "fabric":
         return None
-    if args.transport == "asyncio":
-        from httpz_spark.sources.nettransport import AsyncioTransport
+    from httpz_spark.sources.nettransport import AsyncioTransport
 
-        resolver = None
-        if args.resolvers:
-            # custom resolvers need dnspython; stdlib path resolves via OS
-            from httpz_spark.operators.dnslive import DnspythonResolver
+    resolver = None
+    if args.resolvers:
+        # custom resolvers need dnspython; stdlib path resolves via OS
+        from httpz_spark.operators.dnslive import DnspythonResolver
 
-            with open(args.resolvers) as f:
-                servers = [ln.strip() for ln in f if ln.strip()]
-            dres = DnspythonResolver(servers, timeout_s=args.dns_timeout)
-            resolver = lambda host: ((dres(host)["a"] or [host])[0])  # noqa: E731
-        timeout, limit = float(args.timeout), args.concurrent
-        return lambda: AsyncioTransport(
-            timeout_s=timeout, concurrent_limit=limit, resolver=resolver
-        )
-    from httpz_spark.sources.transport import AiohttpTransport
-
+        with open(args.resolvers) as f:
+            servers = [ln.strip() for ln in f if ln.strip()]
+        dres = DnspythonResolver(servers, timeout_s=args.dns_timeout)
+        resolver = lambda host: ((dres(host)["a"] or [host])[0])  # noqa: E731
     timeout, limit = float(args.timeout), args.concurrent
-    return lambda: AiohttpTransport(
-        timeout_s=timeout, concurrent_limit=limit, capture_certs=True
+    return lambda: AsyncioTransport(
+        timeout_s=timeout, concurrent_limit=limit, resolver=resolver
     )
 
 

@@ -34,7 +34,7 @@ def main(argv=None) -> int:
     ap.add_argument("--partitions", type=int, default=32)
     ap.add_argument("--n-images", type=int, default=4096,
                     help="synthetic web size (sandbox fabric; a real "
-                         "deployment replaces the fabric transport with aiohttp)")
+                         "deployment replaces the fabric transport with AsyncioTransport)")
     ap.add_argument("--n-hosts", type=int, default=64)
     ap.add_argument("--match-codes", default=None, help="e.g. 200,301-399")
     ap.add_argument("--fetch-robots", action="store_true",

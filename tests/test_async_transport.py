@@ -5,8 +5,8 @@ actually overlap I/O waits inside one task (wall-clock << sum of latencies).
 The transport here is a latency-injecting fake that answers from the
 deterministic fabric — so correctness is checked against the real fabric
 semantics, and the injected latency isolates the overlap property from CPU
-noise.  The real-network implementations (AiohttpTransport /
-AsyncioTransport) reuse the exact same ``drive_scans_concurrent`` driver.
+noise.  The real-network AsyncioTransport reuses the exact same
+``drive_scans_concurrent`` driver.
 """
 
 from __future__ import annotations

@@ -48,6 +48,23 @@ def test_all_flags_turns_everything_on():
     assert all(cli.show_fields_of(args).values())
 
 
+def test_transport_selection():
+    from httpz_spark.sources.nettransport import AsyncioTransport
+
+    assert cli.transport_factory_of(
+        cli.parse_args(["doms.txt", "--transport", "fabric"])) is None
+    factory = cli.transport_factory_of(cli.parse_args(
+        ["doms.txt", "--transport", "asyncio", "-to", "7", "-c", "13"]))
+    t = factory()  # construction opens no socket
+    try:
+        assert isinstance(t, AsyncioTransport)
+        assert t.timeout_s == 7.0 and t.concurrent_limit == 13
+    finally:
+        t.close()
+    with pytest.raises(SystemExit):
+        cli.parse_args(["doms.txt", "--transport", "aiohttp"])
+
+
 def test_cli_end_to_end_console_and_jsonl(spark, tmp_path, capsys):
     seeds = tmp_path / "doms.txt"
     seeds.write_text("h1.test\nh2.test\n\nh3.test\n")

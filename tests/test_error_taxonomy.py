@@ -144,9 +144,9 @@ def test_match_codes_drop_error_rows():
 # exception -> taxonomy classifier (transport seam; scanner.py:189-203)
 # ---------------------------------------------------------------------------
 
-# synthetic hierarchy mirroring aiohttp's subclass relationships:
-# ClientConnectorCertificateError < ClientSSLError < ClientConnectorError
-# < ClientError — the ladder must pick the MOST specific rung.
+# synthetic hierarchy with the reference client's subclass relationships
+# (cert error < SSL error < connection error < client error) — the ladder
+# must pick the MOST specific rung.
 class _ClientError(Exception):
     pass
 
@@ -198,22 +198,6 @@ def test_classifier_ordering_most_specific_wins():
     # must classify it CERT, not any of its ancestors (reference ordering)
     got_type, _ = classify_exception(_CertError("x"), classes=_CLASSES)
     assert got_type == "CERT"
-
-
-def test_connector_hygiene_kwargs():
-    """Connection-hygiene surface matching scanner.py:149-156: pool limit =
-    2x in-flight concurrency, no per-host cap, force_close, DNS cache."""
-    from httpz_spark.sources.transport import connector_kwargs
-
-    kw = connector_kwargs(concurrent_limit=100)
-    assert kw == {
-        "ssl": False, "limit": 200, "limit_per_host": 0,
-        "ttl_dns_cache": 300, "use_dns_cache": True, "force_close": True,
-    }
-    kw2 = connector_kwargs(concurrent_limit=25, force_close=False,
-                           limit_per_host=4)
-    assert kw2["limit"] == 50 and kw2["limit_per_host"] == 4
-    assert kw2["force_close"] is False
 
 
 def test_error_types_cover_every_emitted_class():

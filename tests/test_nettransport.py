@@ -2,8 +2,8 @@
 an in-process asyncio TLS server (EC certs generated the same way as the
 fabric's) serves HTML/favicon/redirect/chunked routes, and the stdlib
 transport is checked for cert round-trip into the tls struct, redirect
-history, taxonomy rows, in-task concurrency overlap, and a full
-``make_fetch_stage`` run through Spark."""
+history, taxonomy rows, in-task concurrency overlap, the raw request head
+it puts on the wire, and a full ``make_fetch_stage`` run through Spark."""
 
 from __future__ import annotations
 
@@ -75,6 +75,8 @@ class LocalHttpServer:
         self.answer_anything = answer_anything  # reply to ANY bytes (even a
         # TLS ClientHello) with plain HTTP — triggers the client's SSL rung
         self.n_requests = 0
+        self.n_connections = 0
+        self.heads: list[bytes] = []  # raw request heads, arrival order
         self._ssl_ctx = None
         if certfile:
             ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
@@ -97,6 +99,7 @@ class LocalHttpServer:
         self._loop.run_forever()
 
     async def _handle(self, reader, writer):
+        self.n_connections += 1
         try:
             if self.answer_anything:
                 await reader.read(1)
@@ -104,6 +107,7 @@ class LocalHttpServer:
                 await writer.drain()
                 return
             head = await reader.readuntil(b"\r\n\r\n")
+            self.heads.append(head)
             line = head.split(b"\r\n", 1)[0].decode("latin-1")
             method, path, _ = line.split(" ", 2)
             self.n_requests += 1
@@ -266,6 +270,44 @@ def test_blocking_resolver_runs_off_loop():
         # 8 x 0.3s serial = 2.4s; off-loop resolution should be ~0.3-0.6s
         assert wall < 1.5, wall
         t.close()
+    finally:
+        plain.stop()
+
+
+def _head_fields(head: bytes) -> tuple:
+    line, *rest = head.decode("latin-1").split("\r\n")
+    return line, dict(h.split(": ", 1) for h in rest if h)
+
+
+def test_wire_request_head_and_one_connection_per_fetch(monkeypatch):
+    """Connection hygiene (the reference's force_close): every request asks
+    for ``Connection: close`` and an identity body on its own connection,
+    and ``Host`` carries the port only off the scheme default."""
+    plain = LocalHttpServer()
+    real_open = asyncio.open_connection
+    dialed = []
+
+    async def open_connection(host, port, **kw):
+        # the URL's default port 80 is served by the test server's port
+        dialed.append((host, port))
+        return await real_open(host, plain.port if port == 80 else port, **kw)
+
+    monkeypatch.setattr(asyncio, "open_connection", open_connection)
+    try:
+        t = AsyncioTransport(timeout_s=5.0, resolver=lambda host: "127.0.0.1")
+        assert t.fetch(f"http://127.0.0.1:{plain.port}/", "http").status == 200
+        assert t.fetch("http://site.test/favicon.ico", "http").status == 200
+        t.close()
+        assert dialed == [("127.0.0.1", plain.port), ("127.0.0.1", 80)]
+        assert plain.n_connections == 2 and len(plain.heads) == 2
+        (line1, h1), (line2, h2) = map(_head_fields, plain.heads)
+        assert line1 == "GET / HTTP/1.1"
+        assert line2 == "GET /favicon.ico HTTP/1.1"
+        assert h1["Host"] == f"127.0.0.1:{plain.port}"
+        assert h2["Host"] == "site.test"
+        for h in (h1, h2):
+            assert h["Connection"] == "close"
+            assert h["Accept-Encoding"] == "identity"
     finally:
         plain.stop()
 
