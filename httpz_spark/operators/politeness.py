@@ -18,7 +18,7 @@ queue with robots budgets.  Spark-first shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -36,6 +36,7 @@ def politeness_schedule(
     host_col: str = "host",
     path_col: str = "path",
     host_budgets: DataFrame | None = None,
+    held: Column | None = None,
 ) -> DataFrame:
     """Adds ``scheduled`` (the row is among its host's first ``budget``
     rows in (priority, url_hash) order) and ``sched_rank`` (that 1-based
@@ -44,6 +45,13 @@ def politeness_schedule(
 
     Callers split on ``scheduled``: selected rows fetch this wave, the rest
     stay in the frontier (budget-deferred, re-ranked next wave).
+
+    ``held`` (a boolean predicate over ``df``; NULL counts as not held)
+    marks rows the caller defers outright — the engine's crawler-trap
+    overflow.  Held rows pass through unranked: ``scheduled=false``, NULL
+    ``sched_rank``, exempt from the robots filter (they are not fetched
+    this wave), and they take no host-budget slot — the budget goes to the
+    host's first non-held rows.  ``held=None`` plans exactly as without it.
 
     Two-phase exact top-k, one read of ``df``:
 
@@ -65,6 +73,10 @@ def politeness_schedule(
     covers them all, they are the rows the wave then fetches for that host
     anyway.
     """
+    if held is not None:
+        # materialized before the robots join: a held row must survive the
+        # Disallow filter and rank in a window of its own
+        df = df.withColumn("_held", F.coalesce(held, F.lit(False)))
     if robots is not None:
         # RFC 9309 enforcement: patterns (prefix + '*'/'$' wildcards) are
         # COMPILED on the tiny robots side before the broadcast (one struct
@@ -84,7 +96,8 @@ def politeness_schedule(
             )
         )
         df = df.join(r, df[host_col] == F.col("_rhost"), "left").drop("_rhost")
-        df = df.filter(robots_path_allowed(F.col(path_col), F.col("_rules")))
+        allowed = robots_path_allowed(F.col(path_col), F.col("_rules"))
+        df = df.filter(allowed if held is None else allowed | F.col("_held"))
         budget = F.coalesce(F.col("_budget"), F.lit(default_budget))
     else:
         budget = F.lit(default_budget)
@@ -99,17 +112,22 @@ def politeness_schedule(
         budget = F.least(budget, F.coalesce(F.col("_abudget"), budget))
 
     host, order = F.col(host_col), [F.col("priority"), F.col("url_hash")]
+    # held rows rank apart in phase 1 (so they never push a non-held row's
+    # local rank past its budget) and are never candidates
+    local = [host, F.col("_hb")] + ([] if held is None else [F.col("_held")])
     df = df.withColumn("_hb", F.shiftright(F.col("url_hash"), 60))
     df = df.withColumn("_lr", F.row_number().over(
-        Window.partitionBy(host, F.col("_hb")).orderBy(*order)))
+        Window.partitionBy(*local).orderBy(*order)))
     cand = F.col("_lr") <= budget
+    if held is not None:
+        cand = cand & ~F.col("_held")
     df = df.withColumn("sched_rank", F.row_number().over(
         Window.partitionBy(host, cand, F.when(~cand, F.col("_hb")))
         .orderBy(*order)))
     df = df.withColumn("scheduled", cand & (F.col("sched_rank") <= budget))
     df = df.withColumn("sched_rank",
                        F.when(F.col("scheduled"), F.col("sched_rank")))
-    return df.drop("_hb", "_lr", "_budget", "_rules", "_abudget")
+    return df.drop("_hb", "_lr", "_budget", "_rules", "_abudget", "_held")
 
 
 def aimd_host_budgets(

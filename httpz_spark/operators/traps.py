@@ -23,10 +23,15 @@ Design (all native expressions — no Python in the hot path):
    scale this is map-side combinable and shuffles only (host, template)
    pairs — far smaller than the frontier itself.
 3. ``frontier_detrap`` keeps every URL of healthy templates untouched and
-   caps trapped templates at ``keep`` URLs.  The trap list is tiny by
-   construction (it is the HAVING > max_urls tail), so it rides a
-   broadcast join; the rank window runs ONLY over rows of trapped
-   templates (a vanishing fraction of the frontier), never globally.
+   caps trapped templates at ``keep`` URLs, dropping the rest: the
+   one-shot batch operator.  The trap list is tiny by construction (it
+   is the HAVING > max_urls tail), so it rides a broadcast join; the
+   rank window runs ONLY over rows of trapped templates (a vanishing
+   fraction of the frontier), never globally.
+4. The crawl engine (``EngineConfig.trap_max_urls``) throttles instead of
+   dropping: ``CrawlEngine._schedule`` flags a trapped template's rows
+   beyond its ``keep`` smallest URLs as ``held``, and
+   ``politeness_schedule`` defers them (they stay in the frontier) unranked.
 
 Deterministic: the per-template survivors are the ``keep`` smallest URLs
 in lexicographic order — reproducible across runs and engines, which the
@@ -91,51 +96,12 @@ def trap_templates(
     )
 
 
-def frontier_trap_split(
-    frontier: DataFrame,
-    traps: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-    keep: int = 64,
-) -> tuple:
-    """(passed, overflow) against a PRECOMPUTED trap list (host,
-    template): rows of trapped templates beyond the first ``keep``
-    (lexicographic URL order — deterministic) land in ``overflow`` with
-    the frontier's ORIGINAL columns, so an engine can DEFER them to the
-    next wave (throttle) instead of dropping them (blackhole); everything
-    else passes.  Same plan shape as :func:`frontier_detrap`: broadcast
-    trap join, rank window over the trapped subset only."""
-    cols = frontier.columns
-    t = frontier.withColumn("_tpl", url_path_template(F.col(url_col)))
-    tr = F.broadcast(
-        traps.select(F.col("host").alias("_th"),
-                     F.col("template").alias("_ttpl"))
-        .withColumn("_trap", F.lit(True))
-    )
-    j = t.join(
-        tr,
-        (t[host_col] == F.col("_th")) & (F.col("_tpl") == F.col("_ttpl")),
-        "left",
-    )
-    passed_healthy = j.filter(F.col("_trap").isNull()).select(*cols)
-    w = Window.partitionBy(host_col, "_tpl").orderBy(F.col(url_col))
-    trapped = (
-        j.filter(F.col("_trap").isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-    )
-    passed = passed_healthy.unionByName(
-        trapped.filter(F.col("_rn") <= keep).select(*cols))
-    overflow = trapped.filter(F.col("_rn") > keep).select(*cols)
-    return passed, overflow
-
-
 def frontier_detrap(
     frontier: DataFrame,
     url_col: str = "url",
     host_col: str = "host",
     max_urls: int = 1000,
     keep: int = 64,
-    traps: DataFrame | None = None,
 ) -> DataFrame:
     """Frontier with trapped templates capped at the ``keep``
     lexicographically-smallest DISTINCT URLs each (all rows of a
@@ -152,72 +118,49 @@ def frontier_detrap(
     ``url <= threshold`` in ONE pass over the frontier with a single
     broadcast join of the merged trap+threshold guard table.  A trapped
     template with fewer than ``keep`` distinct URLs has a NULL threshold
-    and keeps everything.  The window never touches the
-    healthy majority.  Callers that already hold a trap list from a
-    previous wave (streaming) pass it via ``traps`` and skip the
-    aggregation entirely.
+    and keeps everything.  The window never touches the healthy majority.
     """
     t = frontier.withColumn("template", url_path_template(F.col(url_col)))
     wd = Window.partitionBy("host", "template").orderBy(F.col("_u"))
-    if traps is None:
-        # ONE materialized distinct pass feeds BOTH the trap counts and
-        # the thresholds.  The lazy formulation planned the identical
-        # distinct subtree under two broadcast subqueries plus the count
-        # — and because broadcast-subquery jobs run on CONCURRENT driver
-        # threads, runtime exchange reuse does NOT collapse them: stage
-        # metrics at 4M rows showed the template+distinct map evaluated
-        # THREE times (~330 of ~530 total core-seconds).  Persisting the
-        # distinct triple and eagerly checkpointing the two tiny derived
-        # tables (trap list + thresholds — both bounded by
-        # |frontier|/max_urls, the size the old plan already broadcast)
-        # runs the distinct once and lets the cache release before
-        # return.  The returned plan is then a pure two-broadcast-join
-        # map over the frontier.
-        d = t.select(F.col(host_col).alias("host"), "template",
-                     F.col(url_col).alias("_u")).distinct().persist()
-        try:
-            traps = (
-                d.groupBy("host", "template")
-                .agg(F.count(F.lit(1)).alias("n_urls"))
-                .filter(F.col("n_urls") > max_urls)
-                .localCheckpoint(eager=True)
-            )
-            thr = (
-                d.join(F.broadcast(traps.select("host", "template")),
-                       ["host", "template"])
-                .withColumn("_rn", F.row_number().over(wd))
-                .filter(F.col("_rn") == keep)
-                .select("host", "template", F.col("_u").alias("_thr"))
-            )
-            # one guard table instead of two: every trapped template, with
-            # its keep-th-smallest distinct URL where one exists (NULL =
-            # fewer than ``keep`` distinct URLs -> keep everything).  The
-            # frontier pass below then pays ONE broadcast join, not two.
-            guard = (
-                traps.select("host", "template")
-                .join(F.broadcast(thr), ["host", "template"], "left")
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            d.unpersist(blocking=False)
-    else:
-        thr_src = (
-            t.join(F.broadcast(traps.select("host", "template")),
-                   ["host", "template"])
-            .select("host", "template", F.col(url_col).alias("_u"))
-            .distinct()
+    # ONE materialized distinct pass feeds BOTH the trap counts and the
+    # thresholds.  The lazy formulation planned the identical distinct
+    # subtree under two broadcast subqueries plus the count — and because
+    # broadcast-subquery jobs run on CONCURRENT driver threads, runtime
+    # exchange reuse does NOT collapse them: stage metrics at 4M rows
+    # showed the template+distinct map evaluated THREE times (~330 of ~530
+    # total core-seconds).  Persisting the distinct triple and eagerly
+    # checkpointing the two tiny derived tables (trap list + thresholds —
+    # both bounded by |frontier|/max_urls, the size the old plan already
+    # broadcast) runs the distinct once and lets the cache release before
+    # return.  The returned plan is then a pure two-broadcast-join map
+    # over the frontier.
+    d = t.select(F.col(host_col).alias("host"), "template",
+                 F.col(url_col).alias("_u")).distinct().persist()
+    try:
+        traps = (
+            d.groupBy("host", "template")
+            .agg(F.count(F.lit(1)).alias("n_urls"))
+            .filter(F.col("n_urls") > max_urls)
+            .localCheckpoint(eager=True)
         )
         thr = (
-            thr_src.join(F.broadcast(traps.select("host", "template")),
-                         ["host", "template"])
+            d.join(F.broadcast(traps.select("host", "template")),
+                   ["host", "template"])
             .withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == keep)
             .select("host", "template", F.col("_u").alias("_thr"))
         )
+        # one guard table instead of two: every trapped template, with
+        # its keep-th-smallest distinct URL where one exists (NULL =
+        # fewer than ``keep`` distinct URLs -> keep everything).  The
+        # frontier pass below then pays ONE broadcast join, not two.
         guard = (
             traps.select("host", "template")
             .join(F.broadcast(thr), ["host", "template"], "left")
+            .localCheckpoint(eager=True)
         )
+    finally:
+        d.unpersist(blocking=False)
     guard_b = F.broadcast(guard.withColumn("_trap", F.lit(True)))
     return (
         t.join(guard_b, ["host", "template"], "left")

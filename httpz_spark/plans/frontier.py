@@ -4,7 +4,8 @@ Replaces the reference's bounded asyncio queue + FIRST_COMPLETED pump
 (``/root/reference/httpz_scanner/scanner.py:382-464``) with checkpointed
 DataFrame waves (SURVEY.md §3.4):
 
-    wave k:  frontier --in-wave dedup--> bloom+anti-join vs seen
+    wave k:  frontier --bloom+anti-join vs seen-->
+             [trap flag: broadcast trap list -> held]
              --politeness window (broadcast robots)--> scheduled | deferred
              --salted repartition--> mapInPandas fetch        (staged)
              --> merge tail, its independent writes CONCURRENT:
@@ -61,6 +62,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 from pyspark.util import inheritable_thread_target
 
 from httpz_spark.config import EngineConfig, ScanConfig
@@ -71,7 +73,7 @@ from httpz_spark.operators.frontier_dedup import (
     CuckooIndex,
     dedup_unseen,
 )
-from httpz_spark.operators.traps import frontier_trap_split, url_path_template
+from httpz_spark.operators.traps import url_path_template
 from httpz_spark.operators.politeness import (
     aimd_host_budgets,
     politeness_schedule,
@@ -540,10 +542,10 @@ class CrawlEngine:
             release_local_checkpoint(keys)
 
     def _schedule(self, frontier: DataFrame, seen_size: int) -> DataFrame:
-        """The wave's one ranked frame: seen-gated rows with the politeness
-        schedule's ``scheduled`` and ``sched_rank`` (NULL when deferred),
-        plus the trap guard's overflow rows with ``scheduled=false``.
-        ``seen_size`` (from lineage) picks the dedup path."""
+        """The wave's one ranked frame: the seen-gated rows with the
+        politeness schedule's ``scheduled`` and ``sched_rank`` (NULL when
+        deferred, trap-held rows included).  ``seen_size`` (from lineage)
+        picks the dedup path."""
         ecfg = self.engine_cfg
         # the frontier is unique by url_hash BY CONSTRUCTION (init_frontier
         # dedupes; next_frontier is a groupBy(url_hash) output) — a per-wave
@@ -556,38 +558,39 @@ class CrawlEngine:
         # crawler-trap guard: templates whose CUMULATIVE fetched-URL count
         # (template_counts state, maintained by run_wave from actually
         # fetched rows) crossed the cap trickle at most trap_keep new URLs
-        # into this wave; the overflow DEFERS (stays in the frontier) —
-        # throttle, never blackhole.  One broadcast join + a window over
-        # only the trapped subset (operators/traps.py).
-        trap_overflow = None
+        # (smallest url_canon first) into this wave; the rest are HELD —
+        # deferred, they stay in the frontier: throttle, never blackhole.
+        # One broadcast join onto the seen-gated frame and one window whose
+        # sort only trapped rows share (a healthy row partitions alone on
+        # its url_hash, so a hot host never sorts in one task).
+        held = None
         if ecfg.trap_max_urls is not None:
             tpl_counts = self.store.read("template_counts")
             if tpl_counts is not None:
                 traps = (
-                    tpl_counts.groupBy("host", "template")
+                    tpl_counts.groupBy("host", F.col("template").alias("_tpl"))
                     .agg(F.sum("n_urls").alias("_n"))
                     .filter(F.col("_n") > ecfg.trap_max_urls)
-                    .select("host", "template")
+                    .select("host", "_tpl", F.lit(True).alias("_trap"))
                 )
-                unseen, trap_overflow = frontier_trap_split(
-                    unseen, traps, url_col="url_canon", host_col="host",
-                    keep=ecfg.trap_keep,
-                )
+                unseen = unseen.withColumn(
+                    "_tpl", url_path_template("url_canon")
+                ).join(F.broadcast(traps), ["host", "_tpl"], "left")
+                trapped = F.col("_trap").isNotNull()
+                w = Window.partitionBy(
+                    "host", "_tpl", F.when(~trapped, F.col("url_hash"))
+                ).orderBy("url_canon")
+                held = trapped & (F.row_number().over(w) > ecfg.trap_keep)
         ranked = politeness_schedule(
             unseen, self.robots, default_budget=ecfg.per_host_budget,
             host_budgets=(self.store.read("host_budgets")
                           if ecfg.adaptive_politeness else None),
+            held=held,
         )
         # sched_rank rides along: _fetch salts hot hosts by
         # floor((rank-1)/HOT_HOST_ROWS) — free, perfectly balanced
         # (politeness.py)
-        ranked = ranked.select(*FRONTIER_COLS, "scheduled", "sched_rank")
-        if trap_overflow is not None:
-            ranked = ranked.unionByName(
-                trap_overflow.select(*FRONTIER_COLS)
-                .withColumn("scheduled", F.lit(False))
-                .withColumn("sched_rank", F.lit(None).cast("int")))
-        return ranked
+        return ranked.select(*FRONTIER_COLS, "scheduled", "sched_rank")
 
     def _fetch(self, scheduled: DataFrame, wave_id: int) -> DataFrame:
         ecfg, scfg = self.engine_cfg, self.scan_cfg

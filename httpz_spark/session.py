@@ -73,12 +73,16 @@ def get_spark(
     the package to executors."""
     master = master or os.environ.get("HTTPZ_SPARK_MASTER")
     if master is None:
-        # respect a master provided by the launch environment (spark-submit
-        # --master sets spark.master in the system properties SparkConf
-        # reads) — an unconditional .master() here would silently override
-        # the cluster with local[*] on every spark-submit deployment
-        from pyspark import SparkConf
+        # respect a master provided by the launch environment: spark-submit
+        # --master sets spark.master in the JVM's system properties, which
+        # SparkConf reads only once the driver is attached to that JVM — a
+        # detached SparkConf is empty, and an unconditional .master() here
+        # would silently override the cluster with local[*].  Attaching may
+        # launch the JVM, so it gets the launch-time options (driver memory)
+        from pyspark import SparkConf, SparkContext
 
+        SparkContext._ensure_initialized(conf=SparkConf(
+            loadDefaults=False).setAll(list((extra_conf or {}).items())))
         if not SparkConf().contains("spark.master"):
             master = "local[*]"
     builder = (

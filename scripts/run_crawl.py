@@ -72,9 +72,9 @@ def main(argv=None) -> int:
     from httpz_spark.sources import synthetic as S
     from httpz_spark.sources.seeds import seeds_from_text
 
-    # under spark-submit the session already exists (getOrCreate reuses it);
-    # standalone runs build one — get_spark ships the package zip to the
-    # executor python workers either way (the --py-files analogue)
+    # get_spark keeps a spark-submit --master (standalone runs get
+    # local[*]) and ships the package zip to the executor python workers
+    # (the --py-files analogue)
     spark = get_spark(app_name="httpz_spark-crawl")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -151,6 +151,7 @@ def main(argv=None) -> int:
 
     lineage = eng.store.read("lineage").orderBy("wave_id").collect()
     summary = {
+        "master": spark.sparkContext.master,
         "results": results.count(),
         "unique_urls": results.select("url_hash").distinct().count(),
         "warc_records": n_archived,

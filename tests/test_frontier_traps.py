@@ -1,8 +1,9 @@
 """Trap guard inside the crawl engine (EngineConfig.trap_max_urls):
 cumulative per-(host, template) fetch counts gate each wave's unseen set,
-trapped templates trickle at trap_keep new URLs per wave, overflow DEFERS
-(stays in the frontier) rather than dropping."""
+trapped templates trickle at trap_keep new URLs per wave, overflow is HELD
+(stays in the frontier) rather than dropped."""
 
+import re
 import shutil
 import tempfile
 
@@ -14,11 +15,11 @@ from httpz_spark.sources import fabric as FB
 from httpz_spark.sources import synthetic as S
 
 
-def _engine(spark, state, trap_max_urls, trap_keep=2):
+def _engine(spark, state, trap_max_urls, trap_keep=2, robots=None):
     world = FB.FabricConfig(n_images=8, n_hosts=4).with_certs()
     images = S.images_df(spark, world, partitions=2)
     return CrawlEngine(
-        spark, images, dns=None, robots=None,
+        spark, images, dns=None, robots=robots,
         scan_cfg=ScanConfig(),  # no enrichment: scheduling is under test
         engine_cfg=EngineConfig(
             partitions=4, per_host_budget=10,
@@ -64,6 +65,59 @@ def test_trap_guard_throttles_template(spark):
             ("h1.test", "/d{N}/img{H}"): 24,
             ("h2.test", "/li/img{H}"): 5,
         }
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
+
+
+def test_trap_guard_schedules_in_one_seen_gated_pass(spark):
+    """With the guard fired, the wave's schedule still gates the frontier
+    against seen ONCE: the held flag rides the one ranked frame — one
+    frontier scan, one anti-join, no union of split branches."""
+    state = tempfile.mkdtemp(prefix="httpz_trap_plan_")
+    try:
+        eng = _engine(spark, state, trap_max_urls=15, trap_keep=2)
+        eng.init_frontier(_seeds(spark))
+        fetched = [eng.run_wave(w)["n_fetched"] for w in range(3)]
+        assert fetched == [15, 10, 2], fetched  # the guard fired at wave 2
+        ranked = eng._schedule(eng.store.read("frontier"), sum(fetched))
+        assert sum(r["scheduled"] for r in ranked.collect()) == 2
+        ex = ranked._jdf.queryExecution().executedPlan().toString()
+        final = ex.split("== Initial Plan ==")[0]
+        assert "isFinalPlan=true" in final, ex
+        assert final.count("LeftAnti") == 1, final
+        assert len(re.findall(r"Scan \w+ .*frontier", final)) == 1, final
+        assert "Union" not in final, final
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
+
+
+def test_trap_guard_holds_robots_disallowed_rows(spark):
+    """Held rows skip the robots filter like any deferral: URLs of a trapped
+    template that arrive after the guard fired and match a ``Disallow``
+    stay in the frontier while they are held (a Disallowed row is dropped
+    only when the politeness pass ranks it)."""
+    state = tempfile.mkdtemp(prefix="httpz_trap_robots_")
+    try:
+        robots = spark.createDataFrame(
+            [("h1.test", 100, 6, ["/d3"], []), ("h2.test", 100, 10, [], [])],
+            S.ROBOTS_SCHEMA)
+        eng = _engine(spark, state, trap_max_urls=8, robots=robots)
+        eng.init_frontier(_seeds(spark))
+        late = [f"https://h1.test/d{p}{i}/img00000001"
+                for p in (3, 5) for i in range(10)]
+        fetched = []
+        for w in range(6):
+            if w == 2:  # the template is trapped from this wave on
+                eng.add_seeds(spark.createDataFrame(
+                    [(u,) for u in late], "raw string"))
+            fetched.append(eng.run_wave(w)["n_fetched"])
+        # wave0: h1's robots budget 6 (its 11 /d3 urls dropped) + h2's 5;
+        # wave1: 6 more (cum 12 > 8); wave2+: trickle trap_keep=2
+        assert fetched == [11, 6, 2, 2, 2, 2], fetched
+        frontier = eng.store.read("frontier")
+        assert frontier.count() == 29
+        queued = {r["url_canon"] for r in frontier.collect()}
+        assert {u for u in late if "/d3" in u} <= queued
     finally:
         shutil.rmtree(state, ignore_errors=True)
 

@@ -314,7 +314,9 @@ def test_politeness_schedule_matches_host_window(spark):
 def test_politeness_schedule_matches_host_window_with_budgets(spark):
     """Robots budgets (one of 10^9), a robots Disallow and AIMD host
     budgets compose as least(robots or default, adaptive), and the
-    schedule still equals the single per-host window's."""
+    schedule still equals the single per-host window's.  ``held`` rows
+    (some of them Disallowed) pass through unranked and unscheduled, and
+    the other rows schedule as if the held ones were absent."""
     from httpz_spark.operators.politeness import politeness_schedule
 
     robots = spark.createDataFrame(
@@ -332,11 +334,31 @@ def test_politeness_schedule_matches_host_window_with_budgets(spark):
         out = politeness_schedule(df, robots, default_budget=5)
         _assert_matches_host_window(
             allowed, out, {"hot.test": 3, "h7.test": 1, "h9.test": 10**9}, 5)
+        budgets = {"hot.test": 2, "h7.test": 1, "h3.test": 1, "h9.test": 2}
         out = politeness_schedule(df, robots, default_budget=5,
                                   host_budgets=hb)
+        _assert_matches_host_window(allowed, out, budgets, 5)
+        # a held predicate that holds nothing schedules as held=None does
+        key = ("host", "url_hash", "scheduled", "sched_rank")
+        none = politeness_schedule(df, robots, default_budget=5,
+                                   host_budgets=hb, held=F.lit(False))
+        assert (sorted(none.select(*key).collect(), key=str)
+                == sorted(out.select(*key).collect(), key=str))
+        # every 3rd url_hash is held: covers Disallowed /p/1 rows on hot.test
+        held = F.pmod(F.col("url_hash"), F.lit(3)) == 0
+        assert df.filter(held & (F.col("host") == "hot.test")
+                         & F.col("path").startswith("/p/1")).count() > 0
+        out = politeness_schedule(df, robots, default_budget=5,
+                                  host_budgets=hb, held=held)
+        got = out.filter(held).select("host", "url_hash", "scheduled",
+                                      "sched_rank").collect()
+        assert sorted((r["host"], r["url_hash"]) for r in got) == sorted(
+            (r["host"], r["url_hash"])
+            for r in df.filter(held).select("host", "url_hash").collect())
+        assert not any(r["scheduled"] or r["sched_rank"] is not None
+                       for r in got)
         _assert_matches_host_window(
-            allowed, out, {"hot.test": 2, "h7.test": 1, "h3.test": 1,
-                           "h9.test": 2}, 5)
+            allowed.filter(~held), out.filter(~held), budgets, 5)
 
 
 def test_ngram_df_cap_hot_shingle(spark):

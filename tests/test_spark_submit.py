@@ -56,6 +56,7 @@ def test_spark_submit_crawl_and_exact_resume():
         state = os.path.join(tmp, "state")
 
         s1 = _submit(seeds_file, state)
+        assert s1["master"] == "local[4]"  # the launcher's, not local[*]
         assert s1["results"] > 0
         assert s1["results"] == s1["unique_urls"]
         assert len(s1["waves"]) >= 1 and s1["waves"][0]["fetched"] > 0

@@ -76,19 +76,6 @@ def test_detrap_caps_and_flags(spark):
     assert cal == all_cal[:3]
 
 
-def test_detrap_precomputed_traps_skips_agg(spark):
-    f = _frontier(spark)
-    traps = spark.createDataFrame(
-        [("trap.test", "/s/{H}")], "host string, template string"
-    )
-    out = frontier_detrap(f, max_urls=10, keep=2, traps=traps)
-    got = {(r["host"], r["template"], r["trapped"]): r["count"]
-           for r in out.groupBy("host", "template", "trapped").count().collect()}
-    assert got[("trap.test", "/s/{H}", True)] == 2
-    # calendar NOT in the supplied list -> untouched this wave
-    assert got[("trap.test", "/cal/{N}-{N}-{N}/ev{N}", False)] == 40
-
-
 def test_detrap_plan_shape(spark):
     """Threshold formulation: the RETURNED plan is one pass over the
     frontier with two broadcast joins — no union, no cartesian, and (new
@@ -108,21 +95,6 @@ def test_detrap_plan_shape(spark):
     # pass itself carries no exchange beyond the broadcasts and no window
     assert "Window [" not in plan
     assert "Exchange hashpartitioning" not in plan
-
-
-def test_detrap_precomputed_path_keeps_window_group_limit(spark):
-    """The precomputed-traps path stays fully lazy, and its threshold
-    window keeps the rank<=keep pushdown (WindowGroupLimit below the
-    shuffle) over only the trapped subset."""
-    f = _frontier(spark)
-    traps = spark.createDataFrame(
-        [("trap.test", "/s/{H}")], "host string, template string"
-    )
-    df = frontier_detrap(f, max_urls=10, keep=2, traps=traps)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan and "Union" not in plan
 
 
 def test_template_fused_strip_matches_two_pass_reference(spark):
